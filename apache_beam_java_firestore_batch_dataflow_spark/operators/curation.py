@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..functions.timeutil import epoch_us
-from ..sources.tables import spread_scan, load_table
+from ..sources.tables import load_table, shared_kernel, spread_scan
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 from ..registry import add as _registry_add
@@ -1970,26 +1970,12 @@ def _contam_grams_sql() -> str:
     """
 
 
-# One materialized copy of the per-doc contamination hits per (session,
-# sf_dir, fixture fingerprint) — the semantic_edges / minhash_pairs
-# discipline: the audit and the funnel would otherwise each re-run the
-# eval-gram census + Bloom bit_or collect + gated probe per call (and
-# the bench would pay it per rep), the production anti-shape.
-_CONTAM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+@shared_kernel("contamination_hits", ("documents",))
 def contaminated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized, eagerly-checkpointed per-document eval-contamination
     hits ``(doc_id, n_matched)`` for every non-test document sharing
     >= 1 distinct {CONTAM_K}-gram with the test split — the shared
     kernel behind the contamination audit and the curation funnel.
-
-    Keyed by ``applicationId`` + a fixture fingerprint of the documents
-    parquet (mtime+size — a same-session fixture rewrite misses and
-    rebuilds, never serves stale checkpointed blocks); NOT invalidated
-    by ``spark.catalog.clearCache()`` — callers needing a genuinely
-    cold rebuild use ``clear_contamination_cache()`` (the bench's
-    scaling legs and fixture-mutating tests must).
 
     Scale shape (the reason this is not a plain self-join): the eval
     fixture is a FIXED-size benchmark suite, so its distinct gram set is
@@ -2004,70 +1990,27 @@ def contaminated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself.  The in-row gram build is the shingle discipline
     (zero-shuffle Generate over the scan).
     """
-    from ..sources.tables import fixture_fingerprint
-
-    fp = fixture_fingerprint(sf_dir, ("documents",))
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    cached = _CONTAM_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # evict dead-session entries AND superseded-fixture entries for this
-    # sf_dir on miss (semantic_edges discipline)
-    for k in [k for k in _CONTAM_CACHE if k[0] != key[0] or k[1] == sf_dir]:
-        del _CONTAM_CACHE[k]
-    # r17: rebalance the checkpointed hit frame to byte-sized width —
-    # 39 rows were checkpointed across 32 partitions.  Two-step (the
-    # minhash_pairs rationale: a repartition above the hits plan does
-    # not coalesce because the eval-gram checkpoint scan pins the
-    # partitioning; checkpoint first, then rebalance the clean scan,
-    # which AQE sizes by bytes).  The pinned _contamination_hits_plan
-    # itself is untouched.
-    hits = (
+    # Rebalanced to byte-sized width: 39 rows were checkpointed across
+    # 32 partitions.  Two steps (the minhash_pairs rationale: a
+    # repartition above the hits plan does not coalesce because the
+    # eval-gram checkpoint scan pins the partitioning; checkpoint first,
+    # then rebalance the clean scan, which AQE sizes by bytes).  The
+    # pinned _contamination_hits_plan itself is untouched.
+    return (
         _contamination_hits_plan(spark, sf_dir)
         .localCheckpoint(eager=True)
         .repartition("doc_id")
         .localCheckpoint(eager=True)
     )
-    _CONTAM_CACHE[key] = hits
-    return hits
 
 
-def clear_contamination_cache() -> None:
-    """Invalidation hook for the contamination family's memos — the
-    per-doc hit frame AND the eval-gram frame + Bloom words (drops
-    every session's entries; the checkpoint blocks themselves are
-    reclaimed by GC once the frames are unreferenced)."""
-    _CONTAM_CACHE.clear()
-    _EVAL_GRAM_CACHE.clear()
-
-
-# The eval side of the contamination family — the test split's per-doc
-# distinct gram frame (checkpointed, O(eval) rows) and the Bloom word
-# array built from it — memoized per (session, sf_dir, fixture
-# fingerprint): the hits kernel AND the containment screen both need
-# them, and each would otherwise re-run the eval-gram census + the
-# bounded bit_or collect per DataFrame construction (measured ~2.7 s of
-# repeated eager work per containment call at sf0.1).
-_EVAL_GRAM_CACHE: dict[tuple[str, str, str], tuple[DataFrame, list[int]]] = {}
-
-
-def _contam_gram_streams(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared gram-stream construction for the contamination family:
-    returns ``(cand, eval_grams)`` where ``eval_grams`` is the test
-    split's per-doc distinct {CONTAM_K}-gram frame (memoized +
-    checkpointed, O(eval) rows) and ``cand`` is the non-test gram
-    stream already Bloom-gated on eval-gram membership (non-matches die
-    map-side inside the scan stage; the ``bloom_build`` bit_or collect
-    runs once per session, not per construction)."""
-    from ..functions.bloom import bloom_build, bloom_member
-    from ..sources.tables import fixture_fingerprint, spread_scan
+def _contam_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, split, g)``: each document's distinct {CONTAM_K}-grams."""
     from .text import tokens_col
 
-    # r16: the 13-gram build + Bloom probe are fused into the scan
-    # stage; spread the narrow (doc_id, text) projection when the scan
-    # is unsplittable (no-op at scale).
+    # The 13-gram build + Bloom probe are fused into the scan stage;
+    # spread the narrow (doc_id, text) projection when the scan is
+    # unsplittable (no-op at scale).
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         spark, sf_dir, "documents", key="doc_id",
@@ -2084,35 +2027,55 @@ def _contam_gram_streams(
             lambda i: F.concat_ws(" ", F.slice("t", i, CONTAM_K)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    grams = tokd.select(
+    return tokd.select(
         "doc_id", "split", F.explode(F.array_distinct(gram_arr)).alias("g")
     )
-    fp = fixture_fingerprint(sf_dir, ("documents",))
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    cached = _EVAL_GRAM_CACHE.get(key)
-    if cached is None:
-        for k in [k for k in _EVAL_GRAM_CACHE if k[0] != key[0] or k[1] == sf_dir]:
-            del _EVAL_GRAM_CACHE[k]
-        # r17 (VERDICT r16 items 1+3): the eval gram frame inherited the
-        # r16 spread's 32-partition width — 14k rows checkpointed across
-        # 32 partitions, so the Bloom build, the eval_g distinct and the
-        # broadcast hash build each paid full-width task overhead on a
-        # byte-tiny frame.  Rebalance to AQE's byte-sized width before
-        # checkpointing (1 partition at sf0.1, data-proportional at any
-        # scale); the gram CENSUS stage above stays wide.
-        eval_grams = (
-            grams.filter(F.col("split") == "test")
-            .select("doc_id", "g")
-            .repartition("doc_id")
-            .localCheckpoint(eager=True)
-        )
-        words = bloom_build(
-            eval_grams, F.col("g"), CONTAM_BLOOM_BITS, CONTAM_BLOOM_K
-        )
-        cached = (eval_grams, words)
-        _EVAL_GRAM_CACHE[key] = cached
-    eval_grams, words = cached
-    cand = grams.filter(F.col("split") != "test").filter(
+
+
+@shared_kernel("contamination_eval_grams", ("documents",))
+def contamination_eval_grams(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[int]]:
+    """The eval side of the contamination family: the test split's
+    per-doc distinct gram frame (checkpointed, O(eval) rows) and the
+    Bloom word array built from it.  Memoized because the hits kernel
+    AND the containment screen both need them, and each would otherwise
+    re-run the eval-gram census + the bounded bit_or collect per
+    DataFrame construction (measured ~2.7 s per containment call at
+    sf0.1)."""
+    from ..functions.bloom import bloom_build
+
+    # Rebalanced to AQE's byte-sized width before checkpointing (1
+    # partition at sf0.1, data-proportional at any scale): 14k rows
+    # inherited the spread's 32-partition width, so the Bloom build, the
+    # eval_g distinct and the broadcast hash build each paid full-width
+    # task overhead on a byte-tiny frame.  The gram census stage above
+    # stays wide.
+    eval_grams = (
+        _contam_grams(spark, sf_dir)
+        .filter(F.col("split") == "test")
+        .select("doc_id", "g")
+        .repartition("doc_id")
+        .localCheckpoint(eager=True)
+    )
+    return eval_grams, bloom_build(
+        eval_grams, F.col("g"), CONTAM_BLOOM_BITS, CONTAM_BLOOM_K
+    )
+
+
+def _contam_gram_streams(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Shared gram-stream construction for the contamination family:
+    returns ``(cand, eval_grams)`` where ``eval_grams`` is the memoized
+    test-split gram frame and ``cand`` is the non-test gram stream
+    already Bloom-gated on eval-gram membership (non-matches die
+    map-side inside the scan stage; the ``bloom_build`` bit_or collect
+    runs once per session, not per construction)."""
+    from ..functions.bloom import bloom_member
+
+    eval_grams, words = contamination_eval_grams(spark, sf_dir)
+    cand = _contam_grams(spark, sf_dir).filter(F.col("split") != "test").filter(
         bloom_member(F.col("g"), words, CONTAM_BLOOM_BITS, CONTAM_BLOOM_K)
     )
     return cand, eval_grams

@@ -20,7 +20,6 @@ pipeline (including banding) has a full SQL oracle.
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +34,7 @@ from ..functions.hashing import (
     minhash_term_sql,
 )
 from ..functions.numeric import round_ratio, round_ratio_sql
-from ..sources.tables import fixture_fingerprint, load_table
+from ..sources.tables import load_table, shared_kernel
 from .text import TOKENS_SQL, tokens_col
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -332,72 +331,34 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One materialized copy of the verified near-dup pair set per (session,
-# sf_dir) — the `semantic_edges` discipline applied to the text side:
-# clusters / clusters_k3 / split-leakage / rate-by-source (and
-# transitively canonical-keep) each consumed q_dedup_minhash_lsh and so
-# re-ran the shingle+band+verify kernel per call, the production
-# anti-shape (a real pipeline materializes the pair set once, then runs
-# every dedup analytic against it).
-_PAIR_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+@shared_kernel("minhash_pairs", ("documents",))
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized, eagerly-checkpointed ``(doc_a, doc_b)`` frame of the
     verified MinHash-LSH near-dup pairs (Jaccard >= JACCARD_MIN).
 
-    The first caller in a session pays the banded kernel once; every
-    later dedup analytic reuses the checkpointed blocks.  Keyed by
-    ``applicationId`` so a new SparkSession never sees another
-    session's dead frame, and deliberately NOT invalidated by
-    ``spark.catalog.clearCache()`` (localCheckpoint blocks bypass the
-    cache manager) — callers that need a genuinely cold rebuild call
-    ``clear_minhash_pair_cache()``, which the bench's shared-kernel
-    setup and any fixture-mutating test must use.
-    ``q_dedup_minhash_lsh`` itself stays un-memoized: it IS the kernel
-    under measurement, and its registered output carries the
+    clusters / clusters_k3 / split-leakage / rate-by-source (and
+    transitively canonical-keep and the curation funnel) all read this
+    one frame: the first caller in a session pays the banded kernel
+    once.  ``q_dedup_minhash_lsh`` itself stays un-memoized: it IS the
+    kernel under measurement, and its registered output carries the
     n_common/jaccard columns this id-only frame drops.
-    The key also carries a fixture fingerprint (mtime+size of the
-    documents parquet, ADVICE r11): a same-session rewrite of the
-    fixture under the same sf_dir changes the fingerprint, so the memo
-    misses and rebuilds instead of silently serving stale checkpointed
-    blocks.
     """
-    fp = fixture_fingerprint(sf_dir, ("documents",))
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # evict dead-session entries AND superseded-fixture entries for this
-    # sf_dir on miss (semantic_edges discipline)
-    for k in [k for k in _PAIR_CACHE if k[0] != key[0] or k[1] == sf_dir]:
-        del _PAIR_CACHE[k]
-    # r17 (VERDICT r16 item 1, the semantic_edges discipline): this
-    # checkpoint held 253 rows across 32 partitions at sf0.1, so every
-    # consumer (the iterative CC clustering rounds above all) paid
-    # full-width task overhead per stage on a byte-tiny frame.  The
-    # rebalance is TWO-step: a keyed repartition directly above the LSH
-    # plan does NOT coalesce (its persisted band/shingle relations pin
-    # the cached plan's partitioning), so checkpoint first — severing
-    # the cached lineage — then rebalance the clean checkpoint scan,
-    # which AQE coalesces by bytes (1 partition at sf0.1,
-    # data-proportional at scale; +0.30 s eager, measured).
-    pairs = (
+    # Rebalanced to byte-sized width: 253 rows checkpointed across 32
+    # partitions at sf0.1 made every consumer (the iterative CC rounds
+    # above all) pay full-width task overhead per stage.  Two steps,
+    # because a keyed repartition directly above the LSH plan does NOT
+    # coalesce (its persisted band/shingle relations pin the cached
+    # plan's partitioning): checkpoint first, severing the cached
+    # lineage, then rebalance the clean checkpoint scan, which AQE
+    # coalesces by bytes (1 partition at sf0.1, data-proportional at
+    # scale; +0.30 s eager, measured).
+    return (
         q_dedup_minhash_lsh(spark, sf_dir)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
         .repartition("doc_a")
         .localCheckpoint(eager=True)
     )
-    _PAIR_CACHE[key] = pairs
-    return pairs
-
-
-def clear_minhash_pair_cache() -> None:
-    """Invalidation hook for ``minhash_pairs`` (drops every session's
-    memo; the checkpoint blocks themselves are reclaimed by GC once the
-    frames are unreferenced)."""
-    _PAIR_CACHE.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -407,7 +368,6 @@ def clear_minhash_pair_cache() -> None:
 
 def connected_components(
     vertices: DataFrame, edges: DataFrame, max_iter: int = 20,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """(doc_id, cluster_id): min-doc-id label propagation to fixpoint.
 
@@ -436,9 +396,7 @@ def connected_components(
       (4.7 s), whose intra-group double-consumption outweighed the
       saved action.  A 100 TB run keeps the same shape; on a real
       cluster prefer reliable ``checkpoint()`` to survive executor
-      loss during long iterations.  ``checkpoint_every`` is retained
-      for API compatibility only — every round checkpoints, any other
-      value warns and is ignored (ADVICE r10).
+      loss during long iterations.
 
     Block reclamation (ADVICE r10; reworked closing r11):
     ``DataFrame.unpersist()`` is a no-op on a checkpointed frame (its
@@ -456,13 +414,6 @@ def connected_components(
     but the superseded generation.  The final round's blocks back the
     returned frame and are reclaimed by GC after the caller drops it.
     """
-    if checkpoint_every not in (None, 1):
-        warnings.warn(
-            "connected_components localCheckpoints EVERY round; "
-            f"checkpoint_every={checkpoint_every} is ignored "
-            "(parameter retained for API compatibility)",
-            stacklevel=2,
-        )
     both = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     both = both.persist()
     handle = vertices.select("doc_id", F.col("doc_id").alias("cluster_id")).persist()

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_ratio, round_ratio_sql
-from ..sources.tables import fixture_fingerprint, load_table
+from ..sources.tables import load_table, shared_kernel
 from .similarity import SEM_GRAPH_TAU, semantic_edges
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -104,66 +104,29 @@ _PAGERANK_ORACLE = f"""
 """
 
 
-# One materialized copy of the distinct customer–supplier co-purchase
-# adjacency per (session, sf_dir) — the semantic_edges / minhash_pairs
-# discipline applied to the TPC-H-derived graph: pagerank / kcore / LPA
-# (via _pr_edges), HITS, Jaccard, Adamic-Adar and assortativity each
-# used to re-run the SAME orders⋈lineitem + distinct kernel and
-# re-materialize it independently (the production anti-shape — a real
-# pipeline extracts the graph once, then runs every analytic on it).
-_ADJ_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+@shared_kernel("copurchase_adj", ("orders", "lineitem"))
 def copurchase_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized, eagerly-checkpointed distinct ``(c, s)`` co-purchase
     adjacency (customer c bought from supplier s in ≥1 order).
 
-    The first graph analytic in a session pays the fact join + distinct
-    once; every later caller reuses the checkpointed blocks and derives
-    its own arc shape (doubled-id undirected, directed bipartite, plain
-    bipartite) as a narrow projection over them.  Keyed by
-    ``applicationId`` so a new SparkSession never sees another
-    session's dead frame; NOT invalidated by
-    ``spark.catalog.clearCache()`` (localCheckpoint blocks bypass the
-    cache manager) — callers needing a genuinely cold rebuild use
-    ``clear_copurchase_cache()`` (the bench's scaling legs and the
-    tests' teardown do).  The key also carries a fixture fingerprint
-    (mtime+size of the orders/lineitem parquet, ADVICE r11): a
-    same-session rewrite of the fixture under the same sf_dir changes
-    the fingerprint, so the memo misses and rebuilds instead of
-    silently serving stale checkpointed blocks."""
-    fp = fixture_fingerprint(sf_dir, ("orders", "lineitem"))
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    cached = _ADJ_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # evict dead-session entries AND superseded-fixture entries for this
-    # sf_dir on miss (semantic_edges discipline)
-    for k in [k for k in _ADJ_CACHE if k[0] != key[0] or k[1] == sf_dir]:
-        del _ADJ_CACHE[k]
+    pagerank / kcore / LPA (via _pr_edges), HITS, Jaccard, Adamic-Adar
+    and assortativity all read this one frame: the first graph analytic
+    in a session pays the fact join + distinct once, and every caller
+    derives its own arc shape (doubled-id undirected, directed
+    bipartite, plain bipartite) as a narrow projection over it."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    # r16 note: an A/B tried re-widening this checkpoint (AQE coalesces
-    # the distinct to ~5 byte-sized partitions) with repartition(32, c)
-    # before the checkpoint — jaccard was flat (2.67 -> 2.84 s isolated)
-    # and pagerank REGRESSED ~2x (more tasks per iterative round on a
-    # tiny frame); reverted.  The coalesced width is the right call for
-    # this frame's byte size; at scale AQE sizes it to the data.
-    adj = (
+    # Left at AQE's coalesced width (~5 byte-sized partitions): an A/B
+    # re-widening it with repartition(32, c) before the checkpoint left
+    # jaccard flat (2.67 -> 2.84 s isolated) and REGRESSED pagerank ~2x
+    # (more tasks per iterative round on a tiny frame).  At scale AQE
+    # sizes it to the data.
+    return (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _ADJ_CACHE[key] = adj
-    return adj
-
-
-def clear_copurchase_cache() -> None:
-    """Invalidation hook for ``copurchase_adj`` (drops every session's
-    memo; the checkpoint blocks themselves are reclaimed by GC once the
-    frames are unreferenced)."""
-    _ADJ_CACHE.clear()
 
 
 def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -925,14 +888,13 @@ def q_graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted Jaccard is exact, not blocked.  No (pair x customer)
     exploded shuffle exists anywhere.
 
-    Cache lifetime (closing r11): ``adj`` is the session-memoized
-    ``copurchase_adj`` checkpoint shared with the whole graph family —
-    its three consumers here (neighbor arrays, DF census, candidate
-    pairs) are narrow reads of the checkpoint blocks.
-    ``spark.catalog.clearCache()`` does NOT release or rebuild it
-    (localCheckpoint blocks bypass the cache manager); a genuinely
-    cold rebuild requires ``clear_copurchase_cache()`` — the bench's
-    scaling legs and the memoization tests call it."""
+    Cache lifetime: ``adj`` is the session-memoized ``copurchase_adj``
+    checkpoint shared with the whole graph family — its three consumers
+    here (neighbor arrays, DF census, candidate pairs) are narrow reads
+    of the checkpoint blocks.  ``spark.catalog.clearCache()`` does NOT
+    release or rebuild it (localCheckpoint blocks bypass the cache
+    manager); a genuinely cold rebuild requires
+    ``clear_shared_kernels()``."""
     adj = copurchase_adj(spark, sf_dir)
     nbrs = adj.groupBy("s").agg(
         F.array_sort(F.collect_list("c")).alias("cs"),

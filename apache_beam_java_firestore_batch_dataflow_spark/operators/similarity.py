@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..functions.vectors import dot, dot_sql, hyperplane_signs, norm, norm_sql
-from ..sources.tables import fixture_fingerprint, load_table
+from ..sources.tables import load_table, shared_kernel
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 from ..registry import add as _registry_add
@@ -694,83 +694,39 @@ def cosine_threshold_pairs(
     )
 
 
-# One materialized copy of the semantic-graph edge set per (session,
-# sf_dir, tau) — VERDICT r10 item 2: triangles / components / BFS /
-# (transitively) every graph-family caller used to rebuild and
-# re-checkpoint the SAME cosine_threshold_pairs frame, ~10 s of
-# repeated kernel work per bench true_total and the production
-# anti-shape (a real pipeline materializes the graph once, then runs
-# every graph analytic against it).
 # Semantic-graph edge threshold shared by the WHOLE graph family
 # (triangles / components / BFS / kcore / LPA callers in graph.py, which
 # re-exports it as TRI_TAU) and the label-conflict audit below: ONE
-# definition, because the memo is keyed by float tau — two hand-synced
-# constants drifting apart would silently split the cache into two
+# definition, because the memo is keyed by tau — two hand-synced
+# constants drifting apart would silently split the memo into two
 # independently rebuilt O(n²/blocks) kernels.
 SEM_GRAPH_TAU = 0.25
 
-_EDGE_CACHE: dict[tuple[str, str, str, float], DataFrame] = {}
 
-
-def semantic_edges(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
+@shared_kernel("semantic_edges", ("embeddings",))
+def semantic_edges(spark: SparkSession, sf_dir: str, tau: float = SEM_GRAPH_TAU) -> DataFrame:
     """Memoized, eagerly-checkpointed ``(vec_a, vec_b)`` edge frame of
     the cosine >= tau similarity graph.
 
-    The first caller in a session pays the block-pair kernel once;
-    every later caller (any graph analytic at the same tau) reuses the
-    checkpointed blocks.  Keyed by ``applicationId`` so a new
-    SparkSession never sees another session's dead frame, and
-    deliberately NOT invalidated by ``spark.catalog.clearCache()``
-    (localCheckpoint blocks bypass the cache manager) — callers that
-    need a genuinely cold rebuild call ``clear_semantic_edge_cache()``,
-    which the bench's scaling legs and the tests' session teardown use.
-    The key also carries a fixture fingerprint (mtime+size of the
-    embeddings parquet, ADVICE r11): a same-session rewrite of the
-    fixture under the same sf_dir changes the fingerprint, so the memo
-    misses and rebuilds instead of silently serving stale checkpointed
-    blocks.
+    Triangles / components / BFS / label conflicts all read this one
+    frame: the graph is materialized once, then every analytic runs
+    against it, instead of each re-running the block-pair kernel.
     """
-    fp = fixture_fingerprint(sf_dir, ("embeddings",))
-    key = (spark.sparkContext.applicationId, sf_dir, fp, float(tau))
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # evict entries of dead SparkSessions (closing-r11 review: a process
-    # cycling sessions would otherwise accumulate one stale frame + py4j
-    # handle per dead session for the process lifetime) AND
-    # superseded-fixture entries for this sf_dir on miss
-    for k in [k for k in _EDGE_CACHE if k[0] != key[0] or (k[1] == sf_dir and k[2] != fp)]:
-        del _EDGE_CACHE[k]
-    # r17 (VERDICT r16 item 1): the r16 width pin on the block-pair
-    # kernel's exchange leaves the kernel OUTPUT at pinned width (32
-    # locally) — every downstream analytic then runs its per-branch /
-    # per-round stages over a byte-tiny checkpoint at full width, the
-    # exact "more tasks per round on a tiny frame" pathology the r16
-    # copurchase A/B reverted (graph.py:146).  Rebalance the checkpoint
-    # back to byte-sized width with an AQE-coalescible keyed repartition
-    # (no explicit numPartitions => REPARTITION_BY_COL, which AQE sizes
-    # by bytes — at 100 TB the same exchange yields a data-proportional
-    # width, never a constant).  The kernel stage itself stays at pinned
-    # width; only its tiny (vec_a, vec_b) output crosses this exchange.
-    # A/B isolated (r17 host, in-band): triangles med 1.88 -> 1.02 s,
-    # label_conflicts 0.52 -> 0.21 s, components eager 2.37 -> 1.81 s;
-    # BFS/dedup_semantic flat.  AQE sizes the 44k-row frame to 1
-    # partition at sf0.1 (the copurchase width class).
-    edges = (
+    # The block-pair kernel's exchange is width-pinned, so its output
+    # would come back at core width and every downstream per-round stage
+    # would run that many tasks over a byte-tiny frame.  The keyed
+    # repartition (no explicit numPartitions => REPARTITION_BY_COL, which
+    # AQE sizes by bytes) rebalances only the (vec_a, vec_b) output; the
+    # kernel stage stays wide.  Measured in isolation: triangles med
+    # 1.88 -> 1.02 s, label_conflicts 0.52 -> 0.21 s, components eager
+    # 2.37 -> 1.81 s; BFS/dedup_semantic flat.  AQE sizes the 44k-row
+    # frame to 1 partition at sf0.1.
+    return (
         cosine_threshold_pairs(spark, sf_dir, tau=tau)
         .select("vec_a", "vec_b")
         .repartition("vec_a")
         .localCheckpoint(eager=True)
     )
-    _EDGE_CACHE[key] = edges
-    return edges
-
-
-def clear_semantic_edge_cache() -> None:
-    """Invalidation hook for ``semantic_edges`` (drops every session's
-    memo; the checkpoint blocks themselves are reclaimed by GC once the
-    frames are unreferenced)."""
-    _EDGE_CACHE.clear()
 
 
 @register("q_dedup_embedding_cosine", oracle=_EMB_DEDUP_ORACLE)
@@ -1576,55 +1532,18 @@ def _pq_lloyd_refine(u: DataFrame, cb):
     return refined
 
 
-# One trained PQ codebook per (session, sf_dir, fixture) — VERDICT r13
-# "what's wrong" item 1: the Lloyd refinement is a full-corpus
-# mapInPandas pass whose cost landed un-ledgered at DataFrame
-# construction time and made q_ann_pq_trained the noisiest headline leg
-# (0.36 -> 2.00 -> 0.68 s across same-code runs).  The codebook is a
-# PQ_K x PQ_M x PQ_SUB_D int64 array (~16 KiB — pure driver state, no
-# py4j handles), memoized exactly like ``semantic_edges``: keyed by
-# applicationId + fixture fingerprint, evicted on session death or
-# fixture rewrite, cleared explicitly by the bench's cold-path legs via
-# :func:`clear_pq_codebook_cache`.  bench.py prebuilds it timed under
-# ``eager_build_sec["pq_trained_codebook_shared"]``.
-_PQ_CB_CACHE: dict[tuple[str, str, str], "object"] = {}
-# Max distinct (session, sf_dir, fingerprint) codebooks held at once —
-# covers the dual-SF bench/sweep pattern (sf0.001/sf0.01/sf0.1) with
-# headroom; beyond that FIFO eviction retrains on next touch.
-_PQ_CB_MAX = 4
-
-
+@shared_kernel("pq_trained_codebook", ("embeddings",))
 def pq_trained_codebook(spark: SparkSession, sf_dir: str):
-    """Memoized seed+one-Lloyd-step PQ codebook (cb[k, m, d] int64)."""
-    fp = fixture_fingerprint(sf_dir, ("embeddings",))
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    cached = _PQ_CB_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Evict dead-session keys and this-sf_dir stale fingerprints as
-    # before; _PQ_CB_MAX additionally bounds the dict so entries for
-    # OTHER sf_dirs touched in the same session (one ~16 KiB array per
-    # fixture directory) cannot accumulate without limit (r14 ADVICE
-    # item 4).  FIFO eviction: dicts preserve insertion order and the
-    # oldest entry is the least likely live fixture.
-    for k in [
-        k
-        for k in _PQ_CB_CACHE
-        if k[0] != key[0] or (k[1] == sf_dir and k[2] != fp)
-    ]:
-        del _PQ_CB_CACHE[k]
-    while len(_PQ_CB_CACHE) >= _PQ_CB_MAX:
-        del _PQ_CB_CACHE[next(iter(_PQ_CB_CACHE))]
+    """Memoized seed+one-Lloyd-step PQ codebook (cb[k, m, d] int64).
+
+    The Lloyd refinement is a full-corpus mapInPandas pass; memoized, it
+    runs once per session and fixture instead of at every
+    q_ann_pq_trained construction.  The codebook is a
+    PQ_K x PQ_M x PQ_SUB_D int64 array (~16 KiB of driver state).
+    q_ann_pq's seed codebook stays un-memoized: its O(1) seed collect is
+    the thing under measurement."""
     u = _vecs_spread(spark, sf_dir).select("vec_id", "embedding")
-    cb = _pq_lloyd_refine(u, _pq_seed_codebook(u))
-    _PQ_CB_CACHE[key] = cb
-    return cb
-
-
-def clear_pq_codebook_cache() -> None:
-    """Invalidation hook for :func:`pq_trained_codebook` (bench scaling
-    legs / tests needing a genuinely cold retrain)."""
-    _PQ_CB_CACHE.clear()
+    return _pq_lloyd_refine(u, _pq_seed_codebook(u))
 
 
 def _pq_adc_scored(spark: SparkSession, sf_dir: str, trained: bool = False):

@@ -3,11 +3,17 @@
 Parquet scans get predicate pushdown + column pruning from Catalyst for
 free; callers should select/filter *before* wide ops so the scan node
 shows ``PushedFilters``/narrow ``ReadSchema`` (see plans/explain.py).
+
+Also home of :func:`shared_kernel`, the one session memo behind every
+kernel whose materialized result several queries share.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,17 +35,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def fixture_fingerprint(sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> str:
     """Cheap driver-side fingerprint of the fixture files under ``sf_dir``
-    (path, mtime_ns, size per parquet file/dir-member).
-
-    Used as a component of the shared-kernel memo keys
-    (``semantic_edges`` / ``minhash_pairs`` / ``copurchase_adj``): those
-    memos hold ``localCheckpoint`` blocks that bypass
-    ``spark.catalog.clearCache()``, so without this a same-session
-    fixture rewrite under the same ``sf_dir`` would silently serve stale
-    checkpointed data (ADVICE r11).  A rewrite changes mtime/size, the
-    key misses, and the kernel rebuilds from the new files.  O(tables)
-    ``os.stat`` calls — never reads data.
-    """
+    (path, mtime_ns, size per parquet file/dir-member).  O(tables)
+    ``os.stat`` calls — never reads data.  A rewrite of any of ``names``
+    changes mtime/size and hence the fingerprint, which is how a
+    :func:`shared_kernel` memo notices a stale fixture."""
     parts: list[tuple[str, int, int]] = []
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
@@ -51,6 +50,74 @@ def fixture_fingerprint(sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> st
             st = os.stat(path)
             parts.append((name, st.st_mtime_ns, st.st_size))
     return repr(parts)
+
+
+# Entries held per kernel: covers the sf0.001/sf0.01/sf0.1 pattern of one
+# session with headroom; beyond it the oldest entry is dropped and
+# rebuilt on its next use.
+SHARED_KERNEL_CAP = 4
+# name -> memoized kernel; each kernel's entries are in its ``memo`` dict.
+SHARED_KERNELS: dict[str, Callable] = {}
+
+
+def shared_kernel(name: str, tables: tuple[str, ...]):
+    """Memoize ``build(spark, sf_dir, *params)`` — a shared kernel whose
+    eagerly materialized result several queries consume — once per
+    session, fixture and parameter set.
+
+    Contract:
+
+    * key ``(applicationId, sf_dir, fixture_fingerprint(sf_dir, tables),
+      *params)`` with defaults applied, so a kernel's parameters key it
+      and a new SparkSession never sees another session's dead frame;
+    * a hit returns the very object built on the miss;
+    * results usually hold ``localCheckpoint`` blocks, which
+      ``spark.catalog.clearCache()`` does not release — so a same-session
+      rewrite of ``tables`` must change the fingerprint, miss and
+      rebuild rather than serve stale blocks;
+    * on a miss, entries of other sessions and this sf_dir's entries
+      with a stale fingerprint are evicted, then the oldest entries until
+      fewer than ``SHARED_KERNEL_CAP`` remain;
+    * :func:`clear_shared_kernels` drops every entry (cold rebuilds);
+    * the kernel is registered in ``SHARED_KERNELS[name]``.  A kernel
+      built inside another's build must be registered after it (defined
+      later in its module), so a registry-order prebuild times it inside
+      its parent.
+    """
+
+    def register(build: Callable) -> Callable:
+        sig = inspect.signature(build)
+        memo: dict[tuple, object] = {}
+
+        @functools.wraps(build)
+        def kernel(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            app = spark.sparkContext.applicationId
+            fp = fixture_fingerprint(sf_dir, tables)
+            key = (app, sf_dir, fp, *list(bound.arguments.values())[2:])
+            hit = memo.get(key)
+            if hit is not None:
+                return hit
+            for k in [k for k in memo if k[0] != app or (k[1] == sf_dir and k[2] != fp)]:
+                del memo[k]
+            while len(memo) >= SHARED_KERNEL_CAP:
+                del memo[next(iter(memo))]
+            memo[key] = value = build(*bound.args, **bound.kwargs)
+            return value
+
+        kernel.memo = memo
+        SHARED_KERNELS[name] = kernel
+        return kernel
+
+    return register
+
+
+def clear_shared_kernels() -> None:
+    """Drop every shared-kernel entry; the checkpoint blocks are reclaimed
+    by GC once the frames are unreferenced."""
+    for kernel in SHARED_KERNELS.values():
+        kernel.memo.clear()
 
 
 _SPLIT_CACHE: dict[tuple, int] = {}

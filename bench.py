@@ -31,18 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from apache_beam_java_firestore_batch_dataflow_spark.operators.curation import (  # noqa: E402
-    clear_contamination_cache,
-)
-from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (  # noqa: E402
-    clear_minhash_pair_cache,
-)
-from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (  # noqa: E402
-    clear_copurchase_cache,
-)
-from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (  # noqa: E402
-    clear_pq_codebook_cache,
-    clear_semantic_edge_cache,
+from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (  # noqa: E402
+    SHARED_KERNELS,
+    clear_shared_kernels,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -555,54 +546,14 @@ SCALING_QUERIES = [
 ]
 
 
-# Headline queries whose DataFrame CONSTRUCTION executes real Spark
-# jobs before the timed noop write (ADVICE r7): iterative
-# localCheckpoint loops (pagerank, triangles' oriented-edge frame, the
-# semantic components' per-round convergence reads), eager signature-
-# kernel checkpoints (the 1-bit Hamming family), and the SemDeDup
-# codebook-sizing count.  Their "queries" timing covers the action
-# only; the JSON's eager_build_sec records the construction median so
-# consumers see the full cost and the boundary.  Audit source: grep
-# for localCheckpoint(eager=True) / .count() in operators/*.py.
-EAGER_BUILD_QUERIES = {
-    "q_graph_pagerank",
-    "q_graph_triangles",
-    "q_graph_components_semantic",
-    "q_dedup_semantic",
-    "q_ann_hamming_rank",
-    "q_ann_hamming_rerank",
-    # bpe_train: each round's one-row winner checkpoints eagerly, so the
-    # k census jobs run at construction time
-    "q_text_bpe_train_k4",
-    # hits: the distinct purchase-edge frame localCheckpoints eagerly
-    # (feeds two plan branches per round)
-    "q_graph_hits",
-    # bfs: frontier frames persist per round; the shared semantic edge
-    # set itself is built once per session (semantic_edges memo, r11)
-    # and accounted under eager_build_sec["semantic_edges_shared"]
-    "q_graph_bfs_khop",
-    # label conflicts: construction touches the same shared
-    # semantic_edges memo (free if any graph query already built it)
-    "q_embedding_label_conflicts",
-    # adamic-adar / assortativity: construction touches the shared
-    # copurchase_adj memo (closing r11) — an eager checkpoint job when
-    # the memo is cold, ~0 when main()'s prebuild already paid it;
-    # listed so the accounting survives any reordering of the prebuild
-    "q_graph_adamic_adar",
-    "q_graph_degree_assortativity",
-    # round-12 contamination pair: construction runs the eval-gram
-    # census + the Bloom bit_or collect (bloom_build); the funnel
-    # additionally touches the shared minhash_pairs memo (~0 when
-    # main()'s prebuild already paid it)
-    "q_contamination_eval_13gram",
-    "q_curation_funnel_yield",
-    "q_contamination_containment",
-    # r16: recall's ground truth (the interpreted exact-oracle twin)
-    # localCheckpoints eagerly at construction — several seconds of
-    # real Spark work that the timed action excludes; ledger it like
-    # the other eager builders so true_total sees it.
-    "q_ann_recall",
-}
+# A headline leg's "queries" timing covers the action only.  When its
+# median DataFrame construction exceeds this, the construction median is
+# ledgered in eager_build_sec and counted in true_total: above it sit the
+# legs that run Spark jobs while building (iterative checkpoint loops,
+# eager kernel checkpoints, codebook-sizing counts) and the heaviest lazy
+# plans (0.1-0.4 s each on a 4-core host), both real seconds outside the
+# timed action.
+EAGER_BUILD_MIN_SEC = 0.25
 
 
 def _session_floor_sec(spark) -> float:
@@ -627,10 +578,8 @@ def scaling_bench(spark, registry) -> dict:
     if not os.path.isdir(small_dir) or os.path.samefile(small_dir, SF_DIR):
         return {}
     floor = _session_floor_sec(spark)
-    # _protocol scaling-v2 (closing r11): legs time construction+action
-    # with all kernel memos cleared BEFORE each rep — earlier rounds'
-    # scaling series excluded construction-eager work and are not
-    # directly comparable for queries with eager kernels.
+    # _protocol scaling-v2: legs time construction+action with every
+    # shared-kernel memo cleared BEFORE each rep.
     out: dict[str, dict] = {
         "_floor_sec": round(floor, 3),
         "_protocol": "scaling-v2",
@@ -638,38 +587,24 @@ def scaling_bench(spark, registry) -> dict:
     for name in SCALING_QUERIES:
         fn = registry[name]
         times: dict[str, float] = {}
-        # (reps, reducer): min on BOTH legs — cache is cleared per rep so
-        # every rep is cold, making min the least-contended estimate of
-        # the true cold cost.  The large leg was median-of-3 until round
-        # 10, when sustained multi-minute host-contention windows were
-        # observed to poison 2 of 3 reps (a 0.95 s leg read 23.8 s),
-        # flipping one query's ratio to 29x while an isolated re-run
-        # reproduced the honest curve; min-of-3 survives any window
-        # shorter than the three reps.
+        # (reps, reducer): min on BOTH legs — every rep is cold, so min
+        # is the least-contended estimate of the cold cost.  Multi-minute
+        # host-contention windows can poison 2 of 3 reps (a 0.95 s leg
+        # read 23.8 s, a 29x ratio an isolated re-run did not
+        # reproduce); min-of-3 survives any window shorter than the reps.
         for key, sf_dir, n_reps, red in (
             ("small_sec", small_dir, 4, min),
             ("large_sec", SF_DIR, 3, min),
         ):
             reps = []
             for _ in range(n_reps):
-                # Scaling legs clear BEFORE the rep and time CONSTRUCTION
-                # + action (scaling-v2, closing r11): a scaling curve
-                # means the cold end-to-end cost at each size.  Clearing
-                # after-the-fact and timing only the action (the original
-                # shape) silently excluded any eager work done at
-                # DataFrame construction — pagerank/HITS checkpoint
-                # loops and, after the r11 kernel memos, the ENTIRE
-                # shared-kernel cost (semantic edges, MinHash pairs,
-                # co-purchase adjacency), which is exactly the
+                # A scaling curve means the cold end-to-end cost at each
+                # size, so construction is timed too: eager checkpoint
+                # loops and the shared kernels are exactly the
                 # data-proportional part the curve exists to price.
-                # Warm-cache reps remain excluded for the same r6 reason
-                # (0.36-0.79 "ratios" under warm reps).
+                # Warm reps would read 0.36-0.79 "ratios".
                 spark.catalog.clearCache()
-                clear_semantic_edge_cache()
-                clear_minhash_pair_cache()
-                clear_copurchase_cache()
-                clear_contamination_cache()
-                clear_pq_codebook_cache()
+                clear_shared_kernels()
                 start = time.monotonic()
                 df = fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
@@ -865,88 +800,26 @@ def main() -> None:
     except Exception:  # noqa: BLE001
         pass
 
-    # Median-of-3 per query: single-run timings made round-over-round
-    # comparison guesswork (VERDICT r2 flagged ~1.5x drift on untouched
-    # queries).  Three timed executions per query, median reported; the
-    # plan is rebuilt each run so no Spark-side caching hides work.
+    # Median-of-3 per query: single runs drifted ~1.5x on untouched
+    # queries.  The plan is rebuilt each run so no Spark-side caching
+    # hides work.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
     eager_build: dict[str, float] = {}
 
-    # Shared semantic-edge kernel (VERDICT r10 item 2): triangles /
-    # components / BFS now read ONE memoized tau=TRI_TAU edge frame per
-    # session instead of each rebuilding + re-checkpointing it.  Build
-    # it here, timed, so the one-time kernel cost appears explicitly in
-    # eager_build_sec (and hence true_total) — otherwise the median-of-3
-    # build accounting would drop the first graph query's rep-1 kernel
-    # cost on the floor and true_total would under-report real work.
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
-        TRI_TAU,
-    )
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
-        semantic_edges,
-    )
-
-    clear_semantic_edge_cache()
-    _b0 = time.monotonic()
-    semantic_edges(spark, SF_DIR, tau=TRI_TAU)
-    eager_build["semantic_edges_shared"] = round(time.monotonic() - _b0, 3)
-
-    # Shared MinHash near-dup pair kernel (r11, same discipline):
-    # clusters / clusters_k3 / split-leakage / rate-by-source read ONE
-    # memoized verified-pair frame per session instead of each re-running
-    # shingle+band+verify.  Timed here so the one-time kernel cost lands
-    # in eager_build_sec / true_total.  q_dedup_minhash_lsh itself stays
-    # cold — it is the kernel under measurement.
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        minhash_pairs,
-    )
-
-    clear_minhash_pair_cache()
-    _b0 = time.monotonic()
-    minhash_pairs(spark, SF_DIR)
-    eager_build["minhash_pairs_shared"] = round(time.monotonic() - _b0, 3)
-
-    # Shared co-purchase adjacency (r11, same discipline): pagerank /
-    # kcore / LPA / HITS / Jaccard / Adamic-Adar / assortativity read
-    # ONE memoized checkpointed (customer, supplier) distinct frame per
-    # session instead of each re-running the orders⋈lineitem kernel.
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
-        copurchase_adj,
-    )
-
-    clear_copurchase_cache()
-    _b0 = time.monotonic()
-    copurchase_adj(spark, SF_DIR)
-    eager_build["copurchase_adj_shared"] = round(time.monotonic() - _b0, 3)
-
-    # Shared contamination-hit kernel (r12, same discipline): the
-    # 13-gram audit and the curation funnel read ONE memoized
-    # Bloom-gated hit frame per session.
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.curation import (
-        contaminated_docs,
-    )
-
-    clear_contamination_cache()
-    _b0 = time.monotonic()
-    contaminated_docs(spark, SF_DIR)
-    eager_build["contamination_hits_shared"] = round(time.monotonic() - _b0, 3)
-
-    # Shared trained PQ codebook (r14, same discipline — VERDICT r13
-    # "what's wrong" item 1): the Lloyd refinement's full-corpus
-    # mapInPandas pass used to run un-ledgered at q_ann_pq_trained's
-    # construction time and made it the noisiest headline leg; now it
-    # is memoized per (session, sf_dir, fixture) and paid ONCE, here,
-    # timed.  q_ann_pq (seed codebook) stays cold — its O(1) seed
-    # collect is the thing under measurement.
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
-        pq_trained_codebook,
-    )
-
-    clear_pq_codebook_cache()
-    _b0 = time.monotonic()
-    pq_trained_codebook(spark, SF_DIR)
-    eager_build["pq_trained_codebook_shared"] = round(time.monotonic() - _b0, 3)
+    # Shared kernels (sources/tables.py shared_kernel) are built once per
+    # session and then read by several headline legs; build each here,
+    # timed, so its one-time cost lands in eager_build_sec / true_total
+    # instead of inside whichever leg happens to touch it first.  A
+    # kernel nested in another (registered after it) is already warm
+    # here and is timed inside its parent.
+    clear_shared_kernels()
+    for kernel_name, kernel in SHARED_KERNELS.items():
+        if kernel.memo:
+            continue
+        _b0 = time.monotonic()
+        kernel(spark, SF_DIR)
+        eager_build[f"{kernel_name}_shared"] = round(time.monotonic() - _b0, 3)
 
     for name in HEADLINE:
         fn = registry[name]
@@ -960,28 +833,19 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.monotonic() - start)
         timings[name] = round(sorted(samples)[len(samples) // 2], 3)
-        # ADVICE r7: queries that do EAGER work at DataFrame-construction
-        # time (iterative localCheckpoint loops, codebook-sizing counts)
-        # execute real Spark jobs before the timed noop write.  Surface
-        # that boundary in the JSON so per-query numbers are read
-        # against it — timings[name] alone understates those queries'
-        # cost.
-        if name in EAGER_BUILD_QUERIES:
-            eager_build[name] = round(sorted(builds)[len(builds) // 2], 3)
-        # Drop cached frames BETWEEN queries (ADVICE r5: persist()-using
-        # queries would otherwise accumulate executor storage across the
-        # sweep).  Deliberately NOT per-rep: the CacheManager matches
-        # canonicalized plans, so reps 2-3 reusing rep 1's cache is the
-        # steady-state warm measurement every round since r1 has used —
-        # clearing per rep regressed the medians ~30% (measured) while
-        # changing the protocol, not the engine.
+        build_med = round(sorted(builds)[len(builds) // 2], 3)
+        if build_med > EAGER_BUILD_MIN_SEC:
+            eager_build[name] = build_med
+        # Drop cached frames BETWEEN queries, or persist()-using queries
+        # accumulate executor storage across the sweep.  Deliberately NOT
+        # per-rep: reps 2-3 reusing rep 1's cache is the steady-state
+        # warm measurement of the protocol; clearing per rep moves the
+        # medians ~30% by changing the protocol, not the engine.
         spark.catalog.clearCache()
-        # Nudge a full GC between queries (VERDICT r6 item 5: the
-        # official r6 run recorded q_text_bpe_merge at 10.4s where two
-        # clean re-runs measured ~1.3s — a stop-the-world pause from the
-        # PREVIOUS query's garbage landing inside all three reps is the
-        # failure mode median-of-3 can't absorb).  System.gc() moves
-        # that pause into the untimed gap between queries.
+        # Nudge a full GC between queries: a stop-the-world pause from the
+        # PREVIOUS query's garbage landing inside all three reps (a 1.3 s
+        # leg read 10.4 s) is the failure median-of-3 can't absorb.
+        # System.gc() moves that pause into the untimed gap.
         try:
             spark.sparkContext._jvm.System.gc()
         except Exception:  # noqa: BLE001 — best-effort; timing still valid
@@ -1012,10 +876,9 @@ def main() -> None:
         "sink": sink,
         "scaling": scaling,
         "skew": skew,
-        # Median DataFrame-CONSTRUCTION seconds for queries with
-        # eager build-time work (iterative checkpoint loops,
-        # codebook-sizing counts); their "queries" entry times
-        # only the post-construction action (ADVICE r7).
+        # Shared-kernel build seconds plus the median construction
+        # seconds of every leg above EAGER_BUILD_MIN_SEC; their
+        # "queries" entry times only the post-construction action.
         "eager_build_sec": eager_build,
         "python_probe": python_probe,
         "host_band": host_band,

@@ -267,9 +267,9 @@ def test_connected_components_small_graph(spark):
 
 
 def test_connected_components_chain_checkpoints(spark):
-    """A 10-vertex chain needs ~9 label-propagation rounds, so with
-    checkpoint_every=2 the localCheckpoint path runs several times; the
-    result must be exact and the final plan must not nest 9 joins."""
+    """A 10-vertex chain needs ~9 label-propagation rounds, each
+    localCheckpointed; the result must be exact and the final plan must
+    not nest 9 joins."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
         connected_components,
     )
@@ -279,7 +279,7 @@ def test_connected_components_chain_checkpoints(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "src long, dst long"
     )
-    labels = connected_components(vertices, edges, checkpoint_every=2)
+    labels = connected_components(vertices, edges)
     got = {r.doc_id: r.cluster_id for r in labels.collect()}
     assert got == {i: 1 for i in range(1, n + 1)}
     # lineage truncated: without checkpointing the final plan nests one

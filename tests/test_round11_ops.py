@@ -62,9 +62,11 @@ def test_split_leakage_matches_python_replay(spark, sf_dir):
     each endpoint recomputed via hashlib — independent of the Spark
     conv/md5 expression chain."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        clear_minhash_pair_cache,
         q_dedup_minhash_lsh,
         q_dedup_split_leakage,
+    )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
     )
 
     pairs = [
@@ -84,7 +86,7 @@ def test_split_leakage_matches_python_replay(spark, sf_dir):
     assert {k: v[0] for k, v in got.items()} == expected
     for (lo, hi), (_, leak) in got.items():
         assert leak == (1 if lo != hi else 0)
-    clear_minhash_pair_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
@@ -199,33 +201,8 @@ def test_fertility_single_exchange_plan(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# semantic_edges memo (VERDICT r10 item 2)
+# semantic_edges: one memoized edge frame for the graph family
 # ---------------------------------------------------------------------------
-
-
-def test_semantic_edges_memoized_and_invalidatable(spark, sf_dir):
-    """Same (session, sf_dir, tau) returns the SAME checkpointed frame;
-    the invalidation hook forces a rebuild; different tau is a
-    different cache entry."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
-        clear_semantic_edge_cache,
-        semantic_edges,
-    )
-
-    clear_semantic_edge_cache()
-    a = semantic_edges(spark, sf_dir, tau=0.25)
-    b = semantic_edges(spark, sf_dir, tau=0.25)
-    assert a is b
-    c = semantic_edges(spark, sf_dir, tau=0.35)
-    assert c is not a
-    clear_semantic_edge_cache()
-    d = semantic_edges(spark, sf_dir, tau=0.25)
-    assert d is not a
-    # the memoized frame is checkpointed: its logical plan is a scan of
-    # materialized blocks, not the block-pair kernel
-    assert "applyInPandas" not in d._jdf.queryExecution().optimizedPlan().toString()
-    clear_semantic_edge_cache()
-    spark.catalog.clearCache()
 
 
 def test_graph_family_shares_edge_frame(spark, sf_dir):
@@ -237,34 +214,29 @@ def test_graph_family_shares_edge_frame(spark, sf_dir):
         q_graph_triangles,
     )
     from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
-        _EDGE_CACHE,
-        clear_semantic_edge_cache,
         semantic_edges,
     )
-
-    clear_semantic_edge_cache()
-    q_graph_triangles(spark, sf_dir).collect()
-    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import fixture_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        fixture_fingerprint(sf_dir, ("embeddings",)),
-        float(TRI_TAU),
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        SHARED_KERNELS,
+        clear_shared_kernels,
     )
-    assert key in _EDGE_CACHE, "triangles must populate the shared memo"
-    frame_after_triangles = _EDGE_CACHE[key]
+
+    memo = SHARED_KERNELS["semantic_edges"].memo
+    clear_shared_kernels()
+    q_graph_triangles(spark, sf_dir).collect()
+    assert len(memo) == 1, "triangles must populate the shared memo"
+    frame_after_triangles = next(iter(memo.values()))
     q_graph_components_semantic(spark, sf_dir).collect()
-    assert _EDGE_CACHE[key] is frame_after_triangles, (
+    assert len(memo) == 1 and next(iter(memo.values())) is frame_after_triangles, (
         "components must reuse, not rebuild, the memoized edge frame"
     )
     assert semantic_edges(spark, sf_dir, TRI_TAU) is frame_after_triangles
-    clear_semantic_edge_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
 # ---------------------------------------------------------------------------
-# connected_components block reclamation (ADVICE r10)
+# connected_components block reclamation
 # ---------------------------------------------------------------------------
 
 
@@ -273,8 +245,6 @@ def test_connected_components_frees_superseded_checkpoints(spark):
     every round's localCheckpoint blocks would linger in the JVM
     persistent-RDD registry.  After the run at most two generations
     (the returned frame's + the in-flight diff) may remain."""
-    import warnings as _w
-
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
         connected_components,
     )
@@ -314,11 +284,6 @@ def test_connected_components_frees_superseded_checkpoints(spark):
         f"{sorted(bystander_ids - after)}"
     )
     bystander.unpersist()
-    # the ignored parameter must WARN, not silently no-op
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        connected_components(vertices, edges, checkpoint_every=3)
-    assert any("ignored" in str(w.message) for w in rec)
     spark.catalog.clearCache()
 
 
@@ -425,9 +390,11 @@ def test_dup_rate_by_source_matches_python_replay(spark, sf_dir):
     raw documents table: flagged = docs appearing in any pair; rates
     are exact integer basis points per source."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        clear_minhash_pair_cache,
         q_dedup_minhash_lsh,
         q_dedup_rate_by_source,
+    )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
     )
 
     flagged = set()
@@ -450,7 +417,7 @@ def test_dup_rate_by_source_matches_python_replay(spark, sf_dir):
     assert got == {
         src: (n, d, (10000 * d) // n) for src, (n, d) in expected.items()
     }
-    clear_minhash_pair_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
@@ -576,8 +543,10 @@ def test_label_conflicts_matches_python_replay(spark, sf_dir):
     the tau=0.25 pair set; the flag must mark exactly the off-diagonal."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
         LABEL_EDGE_TAU,
-        clear_semantic_edge_cache,
         q_embedding_label_conflicts,
+    )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
     )
 
     vecs, pairs = _cosine_pairs_python(sf_dir, LABEL_EDGE_TAU)
@@ -595,7 +564,7 @@ def test_label_conflicts_matches_python_replay(spark, sf_dir):
     assert {k: v[0] for k, v in got.items()} == expected
     for (lo, hi), (_, conflict) in got.items():
         assert conflict == (lo != hi)
-    clear_semantic_edge_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
@@ -664,66 +633,34 @@ def test_quality_yield_curve_matches_python_replay(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# minhash_pairs memo (r11: semantic_edges discipline on the text side)
+# minhash_pairs: one memoized pair frame for the dedup family
 # ---------------------------------------------------------------------------
-
-
-def test_minhash_pairs_memoized_and_invalidatable(spark, sf_dir):
-    """Same (session, sf_dir) returns the SAME checkpointed frame; the
-    invalidation hook forces a rebuild; the memoized frame reads
-    materialized blocks, not the banded kernel."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        clear_minhash_pair_cache,
-        minhash_pairs,
-        q_dedup_minhash_lsh,
-    )
-
-    clear_minhash_pair_cache()
-    a = minhash_pairs(spark, sf_dir)
-    b = minhash_pairs(spark, sf_dir)
-    assert a is b
-    clear_minhash_pair_cache()
-    c = minhash_pairs(spark, sf_dir)
-    assert c is not a
-    # checkpointed: the plan must not contain the band join
-    assert "Join" not in c._jdf.queryExecution().optimizedPlan().toString()
-    # content identical to the cold pipeline's id pairs
-    cold = {
-        (r.doc_a, r.doc_b) for r in q_dedup_minhash_lsh(spark, sf_dir).collect()
-    }
-    assert {(r.doc_a, r.doc_b) for r in c.collect()} == cold
-    clear_minhash_pair_cache()
-    spark.catalog.clearCache()
 
 
 def test_dedup_family_shares_pair_frame(spark, sf_dir):
     """clusters_k3 and rate-by-source both consume the single memoized
     pair frame — the production build-the-pairs-once shape."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        _PAIR_CACHE,
-        clear_minhash_pair_cache,
         minhash_pairs,
         q_dedup_clusters_k3,
         q_dedup_rate_by_source,
     )
-
-    clear_minhash_pair_cache()
-    q_dedup_clusters_k3(spark, sf_dir).collect()
-    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import fixture_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        fixture_fingerprint(sf_dir, ("documents",)),
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        SHARED_KERNELS,
+        clear_shared_kernels,
     )
-    assert key in _PAIR_CACHE, "clusters_k3 must populate the shared memo"
-    frame_after = _PAIR_CACHE[key]
+
+    memo = SHARED_KERNELS["minhash_pairs"].memo
+    clear_shared_kernels()
+    q_dedup_clusters_k3(spark, sf_dir).collect()
+    assert len(memo) == 1, "clusters_k3 must populate the shared memo"
+    frame_after = next(iter(memo.values()))
     q_dedup_rate_by_source(spark, sf_dir).collect()
-    assert _PAIR_CACHE[key] is frame_after, (
+    assert len(memo) == 1 and next(iter(memo.values())) is frame_after, (
         "rate-by-source must reuse, not rebuild, the memoized pair frame"
     )
     assert minhash_pairs(spark, sf_dir) is frame_after
-    clear_minhash_pair_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
@@ -1027,22 +964,22 @@ def test_quality_dup_interaction_matches_python_replay(spark, sf_dir):
 
 def test_copurchase_adj_memoized_and_invalidatable(spark, sf_dir):
     """Same (session, sf_dir) returns the SAME checkpointed adjacency;
-    the invalidation hook forces a rebuild; the memoized frame reads
-    materialized blocks (no fact join left in its plan); content equals
-    the cold orders⋈lineitem distinct."""
+    clearing the shared-kernel memo forces a rebuild; the memoized frame
+    reads materialized blocks (no fact join left in its plan); content
+    equals the cold orders⋈lineitem distinct."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
-        clear_copurchase_cache,
         copurchase_adj,
     )
     from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
         load_table,
     )
 
-    clear_copurchase_cache()
+    clear_shared_kernels()
     a = copurchase_adj(spark, sf_dir)
     b = copurchase_adj(spark, sf_dir)
     assert a is b
-    clear_copurchase_cache()
+    clear_shared_kernels()
     c = copurchase_adj(spark, sf_dir)
     assert c is not a
     assert "Join" not in c._jdf.queryExecution().optimizedPlan().toString()
@@ -1056,7 +993,7 @@ def test_copurchase_adj_memoized_and_invalidatable(spark, sf_dir):
         .collect()
     }
     assert {(r.c, r.s) for r in c.collect()} == cold
-    clear_copurchase_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
@@ -1064,28 +1001,24 @@ def test_graph_family_shares_copurchase_frame(spark, sf_dir):
     """pagerank and adamic-adar both consume the single memoized
     adjacency — the extract-the-graph-once production shape."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
-        _ADJ_CACHE,
-        clear_copurchase_cache,
         copurchase_adj,
         q_graph_adamic_adar,
         q_graph_pagerank,
     )
-
-    clear_copurchase_cache()
-    q_graph_pagerank(spark, sf_dir).collect()
-    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import fixture_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        fixture_fingerprint(sf_dir, ("orders", "lineitem")),
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        SHARED_KERNELS,
+        clear_shared_kernels,
     )
-    assert key in _ADJ_CACHE, "pagerank must populate the shared memo"
-    frame_after = _ADJ_CACHE[key]
+
+    memo = SHARED_KERNELS["copurchase_adj"].memo
+    clear_shared_kernels()
+    q_graph_pagerank(spark, sf_dir).collect()
+    assert len(memo) == 1, "pagerank must populate the shared memo"
+    frame_after = next(iter(memo.values()))
     q_graph_adamic_adar(spark, sf_dir).collect()
-    assert _ADJ_CACHE[key] is frame_after, (
+    assert len(memo) == 1 and next(iter(memo.values())) is frame_after, (
         "adamic-adar must reuse, not rebuild, the memoized adjacency"
     )
     assert copurchase_adj(spark, sf_dir) is frame_after
-    clear_copurchase_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()

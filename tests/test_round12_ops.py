@@ -1,4 +1,4 @@
-"""Round-12 additions: fixture-fingerprint memo invalidation (ADVICE r11),
+"""Round-12 additions: the fixture fingerprint behind memo invalidation,
 the eval-set 13-gram contamination audit, the curation funnel, and the
 bench host-band contention signal (VERDICT r11 item 2).
 """
@@ -12,7 +12,7 @@ from .conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
-# fixture_fingerprint + memo invalidation on fixture rewrite (ADVICE r11)
+# fixture_fingerprint + memo invalidation on fixture rewrite
 # ---------------------------------------------------------------------------
 
 
@@ -34,12 +34,14 @@ def test_fixture_fingerprint_tracks_mtime_and_size(tmp_path):
 
 def test_copurchase_memo_invalidated_by_fixture_rewrite(spark, tmp_path):
     """A same-session rewrite of the fixture under the SAME sf_dir must
-    miss the memo and rebuild from the new files — the ADVICE r11 stale
-    checkpointed-blocks hazard (localCheckpoint bypasses
-    spark.catalog.clearCache())."""
+    miss the memo and rebuild from the new files: localCheckpoint blocks
+    survive spark.catalog.clearCache(), so a stale entry would serve the
+    old fixture."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
-        clear_copurchase_cache,
         copurchase_adj,
+    )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
     )
 
     for name in ("orders", "lineitem"):
@@ -47,7 +49,7 @@ def test_copurchase_memo_invalidated_by_fixture_rewrite(spark, tmp_path):
             os.path.join(SF_DIR, f"{name}.parquet"),
             tmp_path / f"{name}.parquet",
         )
-    clear_copurchase_cache()
+    clear_shared_kernels()
     a = copurchase_adj(spark, str(tmp_path))
     assert copurchase_adj(spark, str(tmp_path)) is a, "unchanged fixture must hit"
     target = tmp_path / "orders.parquet"
@@ -55,7 +57,7 @@ def test_copurchase_memo_invalidated_by_fixture_rewrite(spark, tmp_path):
     b = copurchase_adj(spark, str(tmp_path))
     assert b is not a, "a fixture rewrite must invalidate the memo"
     assert copurchase_adj(spark, str(tmp_path)) is b
-    clear_copurchase_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
@@ -107,12 +109,14 @@ def test_contamination_matches_bruteforce(spark, sf_dir):
     no-Bloom driver-side brute force (the Bloom is a shuffle-volume
     optimization, never a semantics change)."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.curation import (
-        clear_contamination_cache,
         contaminated_docs,
         q_contamination_eval_13gram,
     )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
+    )
 
-    clear_contamination_cache()
+    clear_shared_kernels()
     expected = _brute_contamination(spark, sf_dir)
     got = {
         r.doc_id: r.n_matched
@@ -153,25 +157,28 @@ def test_contamination_memo_shared_by_funnel_and_audit(spark, sf_dir):
     per session (the minhash_pairs discipline), and the invalidation
     hook forces a rebuild."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.curation import (
-        _CONTAM_CACHE,
-        clear_contamination_cache,
         contaminated_docs,
         q_contamination_eval_13gram,
         q_curation_funnel_yield,
     )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        SHARED_KERNELS,
+        clear_shared_kernels,
+    )
 
-    clear_contamination_cache()
+    memo = SHARED_KERNELS["contamination_hits"].memo
+    clear_shared_kernels()
     q_contamination_eval_13gram(spark, sf_dir).collect()
-    assert len(_CONTAM_CACHE) == 1, "audit must populate the shared memo"
-    frame = next(iter(_CONTAM_CACHE.values()))
+    assert len(memo) == 1, "audit must populate the shared memo"
+    frame = next(iter(memo.values()))
     q_curation_funnel_yield(spark, sf_dir).collect()
-    assert next(iter(_CONTAM_CACHE.values())) is frame, (
+    assert len(memo) == 1 and next(iter(memo.values())) is frame, (
         "funnel must reuse, not rebuild, the memoized hit frame"
     )
     assert contaminated_docs(spark, sf_dir) is frame
-    clear_contamination_cache()
+    clear_shared_kernels()
     assert contaminated_docs(spark, sf_dir) is not frame
-    clear_contamination_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 
@@ -219,17 +226,20 @@ def test_funnel_reuses_minhash_memo(spark, sf_dir):
         q_curation_funnel_yield,
     )
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        _PAIR_CACHE,
-        clear_minhash_pair_cache,
         minhash_pairs,
     )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        SHARED_KERNELS,
+        clear_shared_kernels,
+    )
 
-    clear_minhash_pair_cache()
+    memo = SHARED_KERNELS["minhash_pairs"].memo
+    clear_shared_kernels()
     q_curation_funnel_yield(spark, sf_dir).collect()
-    assert len(_PAIR_CACHE) == 1, "funnel must populate the shared memo"
-    frame = next(iter(_PAIR_CACHE.values()))
+    assert len(memo) == 1, "funnel must populate the shared memo"
+    frame = next(iter(memo.values()))
     assert minhash_pairs(spark, sf_dir) is frame
-    clear_minhash_pair_cache()
+    clear_shared_kernels()
     spark.catalog.clearCache()
 
 

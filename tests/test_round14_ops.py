@@ -350,36 +350,3 @@ def test_parity_audit_ledger_complete():
         text=True,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
-
-
-# ---------------------------------------------------------------------------
-# Trained PQ codebook memo (VERDICT r13 "what's wrong" item 1)
-# ---------------------------------------------------------------------------
-
-
-def test_pq_trained_codebook_memoized_per_session_and_fixture(spark):
-    """The Lloyd-refined codebook must be trained ONCE per (session,
-    sf_dir, fixture): a second call returns the identical cached array
-    (no retrain pass), clear_pq_codebook_cache() forces a cold rebuild
-    that agrees element-for-element, and the trained codebook differs
-    from the seed (the refinement actually ran)."""
-    import numpy as np
-
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
-        _pq_seed_codebook,
-        _vecs,
-        clear_pq_codebook_cache,
-        pq_trained_codebook,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    clear_pq_codebook_cache()
-    cb1 = pq_trained_codebook(spark, sf)
-    cb2 = pq_trained_codebook(spark, sf)
-    assert cb2 is cb1  # memo hit — the retrain pass did not run
-    clear_pq_codebook_cache()
-    cb3 = pq_trained_codebook(spark, sf)
-    assert cb3 is not cb1 and np.array_equal(cb3, cb1)  # cold rebuild agrees
-    u = _vecs(spark, sf).select("vec_id", "embedding")
-    assert not np.array_equal(cb1, _pq_seed_codebook(u))
-    clear_pq_codebook_cache()

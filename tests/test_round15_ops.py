@@ -10,8 +10,6 @@
 3. exact_substring_pairs no longer force-broadcasts the heavy-gram
    set (AQE decides; covered behaviorally by the r14 stress tests —
    here we pin that no explicit hint survives in the plan).
-4. _PQ_CB_CACHE is size-bounded: many distinct sf_dirs in one session
-   cannot accumulate codebooks without limit.
 """
 
 from __future__ import annotations
@@ -177,34 +175,6 @@ def test_exact_substring_heavy_set_not_hint_broadcast(spark):
     out = exact_substring_pairs(docs, df_cap=1)
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "UnresolvedHint" not in plan and "ResolvedHint" not in plan
-
-
-# ---------------------------------------------------------------------------
-# 4. PQ codebook cache bound (ADVICE item 4)
-# ---------------------------------------------------------------------------
-
-
-def test_pq_codebook_cache_size_bounded(spark, sf_dir):
-    """Entries for other sf_dirs in the same session must not
-    accumulate without bound: seed the cache with > _PQ_CB_MAX fake
-    same-session keys, then a real build — the dict stays <= the cap
-    and holds the fresh entry."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import similarity
-
-    app = spark.sparkContext.applicationId
-    similarity.clear_pq_codebook_cache()
-    try:
-        for i in range(similarity._PQ_CB_MAX + 3):
-            similarity._PQ_CB_CACHE[(app, f"/fake/sf-{i}", f"fp{i}")] = object()
-        cb = similarity.pq_trained_codebook(spark, sf_dir)
-        assert len(similarity._PQ_CB_CACHE) <= similarity._PQ_CB_MAX
-        fp = similarity.fixture_fingerprint(sf_dir, ("embeddings",))
-        assert (app, sf_dir, fp) in similarity._PQ_CB_CACHE
-        # memo hit: same object back, cache size unchanged
-        assert similarity.pq_trained_codebook(spark, sf_dir) is cb
-        assert len(similarity._PQ_CB_CACHE) <= similarity._PQ_CB_MAX
-    finally:
-        similarity.clear_pq_codebook_cache()
 
 
 # ---------------------------------------------------------------------------

@@ -96,11 +96,13 @@ def test_semantic_edges_checkpoint_width_is_byte_sized(spark, sf_dir):
         TRI_TAU,
     )
     from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
-        clear_semantic_edge_cache,
         semantic_edges,
     )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
+    )
 
-    clear_semantic_edge_cache()
+    clear_shared_kernels()
     try:
         e = semantic_edges(spark, sf_dir, tau=TRI_TAU)
         cores = spark.sparkContext.defaultParallelism
@@ -108,7 +110,7 @@ def test_semantic_edges_checkpoint_width_is_byte_sized(spark, sf_dir):
         # anything at or above core width means AQE coalescing was lost
         assert e.rdd.getNumPartitions() < max(cores // 2, 2)
     finally:
-        clear_semantic_edge_cache()
+        clear_shared_kernels()
 
 
 def test_shared_kernel_checkpoints_byte_sized(spark, sf_dir):
@@ -118,24 +120,23 @@ def test_shared_kernel_checkpoints_byte_sized(spark, sf_dir):
     (checkpoint, then repartition the clean scan) guards against the
     cached-plan partitioning pin regressing silently."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.curation import (
-        clear_contamination_cache,
         contaminated_docs,
     )
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        clear_minhash_pair_cache,
         minhash_pairs,
+    )
+    from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
+        clear_shared_kernels,
     )
 
     cores = spark.sparkContext.defaultParallelism
     bound = max(cores // 2, 2)
-    clear_minhash_pair_cache()
-    clear_contamination_cache()
+    clear_shared_kernels()
     try:
         assert minhash_pairs(spark, sf_dir).rdd.getNumPartitions() < bound
         assert contaminated_docs(spark, sf_dir).rdd.getNumPartitions() < bound
     finally:
-        clear_minhash_pair_cache()
-        clear_contamination_cache()
+        clear_shared_kernels()
         spark.catalog.clearCache()
 
 
