@@ -22,20 +22,10 @@ from pyspark.sql import SparkSession
 from .config import PipelineConfig, parse_config
 from .operators.wordcount import word_count_pipeline
 from .session import build_session
-from .sinks.firestore import (
-    FirestoreSinkConfig,
-    fake_client_factory,
-    write_word_counts_batch,
-    write_word_counts_naive,
-)
+from .sinks.firestore import WRITERS, FirestoreSinkConfig, fake_client_factory
 from .sources.text import read_lines
 
 logger = logging.getLogger(__name__)
-
-WRITERS: dict[str, Callable] = {
-    "naive": write_word_counts_naive,
-    "batch": write_word_counts_batch,
-}
 
 
 def run_pipeline(

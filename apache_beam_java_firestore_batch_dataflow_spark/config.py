@@ -12,12 +12,12 @@ from __future__ import annotations
 import argparse
 from dataclasses import dataclass
 
-from .sinks.firestore import DEFAULT_MAX_BATCH_SIZE, collection_path_for_input
+from .sinks.firestore import DEFAULT_MAX_BATCH_SIZE, WRITERS, collection_path_for_input
 
 # Reference default input (WordCountToFirestorePipeline.java:70).
 DEFAULT_INPUT_FILE = "gs://apache-beam-samples/shakespeare/kinglear.txt"
 
-IMPLEMENTATIONS = ("naive", "batch")  # enum Implementation (":45-55")
+IMPLEMENTATIONS = tuple(WRITERS)  # enum Implementation (":45-55")
 
 
 @dataclass(frozen=True)

@@ -8,30 +8,33 @@ real thing a 100 TB multimodal corpus needs:
 * a manifest projection (modality, byte length, content hash, fake
   width/height/sample-rate metadata) that stays fully declarative —
   oracle-checked against DuckDB;
-* a decode / feature-extract stage as an Arrow-batched ``mapInPandas``
-  operator with an explicit output schema and bounded batch size — the
-  exact shape a real decoder (PIL/ffmpeg/torchcodec) would plug into.
-  All three modalities are decoded for real with pure-python parsers
-  (no codec library needed for these uncompressed container formats):
-  **image** = binary P6 PPM (``decode_ppm``: header tokenization,
+* decode / feature-extract stages as per-document kernels run by one
+  Arrow-batched ``mapInPandas`` runner (:func:`map_docs`) with an
+  explicit output schema — the exact shape a real decoder
+  (PIL/ffmpeg/torchcodec) would plug into.  All three modalities are
+  decoded for real with one strict pure-python parser per container
+  format (no codec library needed for these uncompressed formats):
+  **image** = binary P6 PPM (``decode_ppm_raster``: header tokenization,
   comments, maxval, raster bounds); **audio** = RIFF/WAVE 16-bit PCM
-  (``decode_wav``: RIFF chunk walk with word alignment, fmt validation,
-  sample extraction); **video** = YUV4MPEG2 (``decode_y4m``: stream
-  header tags, per-FRAME markers, raw C444 planes).  Each is
-  oracle-checked value-exactly: the payload is synthesized from a
-  deterministic formula, round-tripped through the parser, and DuckDB
-  recomputes the same integer features from first principles.
+  (``parse_wav``: RIFF chunk walk with word alignment, fmt validation,
+  sample extraction); **video** = YUV4MPEG2 (``parse_y4m``: stream
+  header tags, per-FRAME markers, raw C444 planes).  Every feature
+  function is built on its format's parser, and each is oracle-checked
+  value-exactly: the payload is synthesized from a deterministic
+  formula, round-tripped through the parser, and DuckDB recomputes the
+  same integer features from first principles.
 
 Scale notes: payload bytes never pass through a shuffle — the manifest
 carries only metadata; decode is a narrow per-partition map whose
 parallelism is the scan's split count (``spark.sql.files.maxPartitionBytes``),
-and ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds decoder
-memory per Arrow batch.
+and because the runner emits one frame per input Arrow batch,
+``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds every kernel's
+memory.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -54,6 +57,40 @@ def register(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+def doc_kernel(
+    fn: Callable[..., Iterable[tuple]], schema: str
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` body that :func:`map_docs` runs.
+
+    ``fn`` is called with one input row's values in column order and
+    returns that row's output tuples — any number of them, so 1→1, 1→N
+    and 1→0 kernels all fit.  Every input Arrow batch yields exactly one
+    frame whose columns are named by the flat DDL ``schema``.  The frame
+    is ``object``-typed so Python ints reach Arrow exactly (never through
+    float64) and ``None`` becomes NULL.
+    """
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=columns, dtype=object)
+
+    return run
+
+
+def map_docs(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """Run the per-document kernel ``fn`` over ``df``'s Arrow batches;
+    see :func:`doc_kernel` for the contract."""
+    return df.mapInPandas(doc_kernel(fn, schema), schema=schema)
 
 
 def multimodal_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,15 +200,12 @@ def decode_payload(payload: bytes, modality: str) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def decode_ppm(payload: bytes) -> tuple[int, int, int, int, int]:
-    """Parse a binary P6 PPM image; returns
-    ``(width, height, raster_sum, r_sum, max_byte)``.
+def decode_ppm_raster(payload: bytes) -> tuple[int, int, bytes]:
+    """Parse a binary P6 PPM image; returns ``(width, height, raster)``.
 
-    A real decoder, not a fake: magic check, whitespace- and
-    comment-tolerant header tokenization, maxval validation, raster
-    length check.  The extracted features are integer-exact (sum of all
-    raster bytes, sum of the R channel, max byte) so the query built on
-    top is DuckDB-oracle-checkable with no float hazards.
+    The one PPM parser every image kernel builds on: magic check,
+    whitespace- and comment-tolerant header tokenization, maxval
+    validation, raster length check.
     """
     if payload[:2] != b"P6":
         raise ValueError("not a binary PPM (P6 magic missing)")
@@ -203,6 +237,17 @@ def decode_ppm(payload: bytes) -> tuple[int, int, int, int, int]:
     raster = payload[i : i + n_raster]
     if len(raster) < n_raster:
         raise ValueError(f"truncated raster: {len(raster)} < {n_raster}")
+    return width, height, raster
+
+
+def decode_ppm(payload: bytes) -> tuple[int, int, int, int, int]:
+    """``(width, height, raster_sum, r_sum, max_byte)`` of a P6 PPM image.
+
+    The features are integer-exact (sum of all raster bytes, sum of the
+    R channel, max byte) so the query built on top is DuckDB-oracle-
+    checkable with no float hazards.
+    """
+    width, height, raster = decode_ppm_raster(payload)
     return width, height, sum(raster), sum(raster[0::3]), max(raster)
 
 
@@ -253,32 +298,16 @@ def fake_decode_stats(payload: bytes) -> tuple[float, int, int]:
     return total / n, max_b, int(entropy * 10000)
 
 
-def decode_features(mm: DataFrame, use_real_decoder: bool = False) -> DataFrame:
-    """Arrow-batched decode stage: mapInPandas over (payload, modality).
-
-    Batch shape: each pandas DataFrame chunk is bounded by
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``; one decoder context
-    per partition would be initialized here (mirroring the sink's
-    client-per-partition pattern).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": pdf["doc_id"],
-                "modality": pdf["modality"],
-                "n_bytes": pdf["payload"].map(len),
-            }
-            if use_real_decoder:
-                for p, m in zip(pdf["payload"], pdf["modality"]):
-                    decode_payload(bytes(p), m)
-            stats = [fake_decode_stats(bytes(p)) for p in pdf["payload"]]
-            out["mean_byte"] = [s[0] for s in stats]
-            out["max_byte"] = [s[1] for s in stats]
-            out["byte_entropy_bp"] = [s[2] for s in stats]
-            yield pd.DataFrame(out)
-
-    return mm.mapInPandas(run, schema=DECODE_SCHEMA)
+def decode_features(mm: DataFrame) -> DataFrame:
+    """Arrow-batched decode stage over (payload, modality): byte stats
+    per document, one output frame per Arrow batch."""
+    return map_docs(
+        mm.select("doc_id", "modality", "payload"),
+        lambda doc_id, modality, payload: [
+            (doc_id, modality, len(payload), *fake_decode_stats(payload))
+        ],
+        DECODE_SCHEMA,
+    )
 
 
 RESIZE_SCHEMA = "doc_id long, out_w int, out_h int, n_out_bytes long"
@@ -290,58 +319,37 @@ MAX_FRAMES = 4
 
 
 def resize_images(mm: DataFrame) -> DataFrame:
-    """Resize stage (image modality): mapInPandas with the production
-    shape — per-batch decode→resize→re-encode; the pixel work is faked
-    as byte truncation/padding to the target raster size since no codec
+    """Resize stage (image modality) with the production shape —
+    per-document decode→resize→re-encode; the pixel work is faked as
+    byte truncation/padding to the target raster size since no codec
     library ships here, but schema, filtering, and batching are real."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = TARGET_W * TARGET_H
-        for pdf in batches:
-            pdf = pdf[pdf["modality"] == "image"]
-            if pdf.empty:
-                continue
-            n_out = pdf["payload"].map(lambda p: min(len(p), target))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "out_w": TARGET_W,
-                    "out_h": TARGET_H,
-                    "n_out_bytes": n_out,
-                }
-            )
-
-    return mm.mapInPandas(run, schema=RESIZE_SCHEMA)
+    target = TARGET_W * TARGET_H
+    return map_docs(
+        mm.filter(F.col("modality") == "image").select("doc_id", "payload"),
+        lambda doc_id, payload: [
+            (doc_id, TARGET_W, TARGET_H, min(len(payload), target))
+        ],
+        RESIZE_SCHEMA,
+    )
 
 
 def sample_frames(mm: DataFrame) -> DataFrame:
     """Frame-sampling stage (video modality): emits up to MAX_FRAMES
     "frames" per payload (1→N), each fingerprinted — the UDTF-shaped
-    mapInPandas pattern a real ffmpeg keyframe sampler plugs into."""
+    kernel a real ffmpeg keyframe sampler plugs into."""
     import hashlib
 
-    import pandas as pd
+    def frames(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        n_frames = min(MAX_FRAMES, max(1, len(payload) // FRAME_STRIDE))
+        for i in range(n_frames):
+            chunk = payload[i * FRAME_STRIDE : (i + 1) * FRAME_STRIDE]
+            yield doc_id, i, hashlib.md5(chunk).hexdigest()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["modality"] == "video"]
-            if pdf.empty:
-                continue
-            doc_ids, idxs, hashes = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                n_frames = min(MAX_FRAMES, max(1, len(raw) // FRAME_STRIDE))
-                for i in range(n_frames):
-                    chunk = raw[i * FRAME_STRIDE : (i + 1) * FRAME_STRIDE]
-                    doc_ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(hashlib.md5(chunk).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": doc_ids, "frame_idx": idxs, "frame_hash": hashes}
-            )
-
-    return mm.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_docs(
+        mm.filter(F.col("modality") == "video").select("doc_id", "payload"),
+        frames,
+        FRAME_SCHEMA,
+    )
 
 
 @register(
@@ -410,21 +418,11 @@ def q_multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only.  Payload bytes never shuffle; decode parallelism is the
     scan's split count."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_ppm(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "raster_sum": [d[2] for d in decoded],
-                    "r_sum": [d[3] for d in decoded],
-                    "max_byte": [d[4] for d in decoded],
-                }
-            )
-
-    return ppm_table(spark, sf_dir).mapInPandas(run, schema=DECODE_PPM_SCHEMA)
+    return map_docs(
+        ppm_table(spark, sf_dir),
+        lambda doc_id, payload: [(doc_id, *decode_ppm(payload))],
+        DECODE_PPM_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -477,15 +475,14 @@ def encode_wav(doc_id: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def decode_wav(payload: bytes) -> tuple[int, int, int, int, int, int]:
+def parse_wav(payload: bytes) -> tuple[int, int, list[int]]:
     """Parse a RIFF/WAVE PCM file; returns
-    ``(sample_rate, channels, n_frames, peak, abs_sum, sum_sq)``.
+    ``(sample_rate, channels, interleaved int16 samples)``.
 
-    A real parser: RIFF magic + declared size check, WAVE form type,
-    generic chunk walk with word alignment (unknown chunks skipped), fmt
-    validation (PCM, 16-bit only), and little-endian int16 sample
-    extraction.  All returned features are integers, so the query built
-    on top is DuckDB-oracle-checkable with no float hazards.
+    The one WAV parser every audio kernel builds on: RIFF magic +
+    declared size check, WAVE form type, generic chunk walk with word
+    alignment (unknown chunks skipped), fmt validation (PCM, 16-bit
+    only), and little-endian int16 sample extraction.
     """
     if payload[:4] != b"RIFF":
         raise ValueError("not a RIFF file")
@@ -529,61 +526,43 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, int, int, int]:
         raise ValueError("channel count must be >= 1")
     if len(data) % (2 * channels):
         raise ValueError("data chunk is not a whole number of frames")
-    n = len(data) // 2
     samples = [
-        int.from_bytes(data[2 * k : 2 * k + 2], "little", signed=True) for k in range(n)
-    ]
-    peak = max((abs(s) for s in samples), default=0)
-    abs_sum = sum(abs(s) for s in samples)
-    sum_sq = sum(s * s for s in samples)
-    return rate, channels, n // channels, peak, abs_sum, sum_sq
-
-
-def decode_wav_samples(payload: bytes) -> list[int]:
-    """The interleaved int16 sample stream of a RIFF/WAVE PCM file —
-    the same chunk walk as ``decode_wav`` but returning the raw samples
-    (for run-structure features the aggregate stats can't express)."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    riff_size = int.from_bytes(payload[4:8], "little")
-    i, end = 12, 8 + riff_size
-    data = None
-    while i + 8 <= end:
-        cid = payload[i : i + 4]
-        csize = int.from_bytes(payload[i + 4 : i + 8], "little")
-        if i + 8 + csize > end:
-            raise ValueError("chunk overruns RIFF container")
-        if cid == b"data":
-            data = payload[i + 8 : i + 8 + csize]
-        i += 8 + csize + (csize % 2)
-    if data is None:
-        raise ValueError("missing data chunk")
-    return [
         int.from_bytes(data[2 * k : 2 * k + 2], "little", signed=True)
         for k in range(len(data) // 2)
     ]
+    return rate, channels, samples
+
+
+def decode_wav(payload: bytes) -> tuple[int, int, int, int, int, int]:
+    """``(sample_rate, channels, n_frames, peak, abs_sum, sum_sq)`` of a
+    RIFF/WAVE PCM file.  All features are integers, so the query built
+    on top is DuckDB-oracle-checkable with no float hazards."""
+    rate, channels, samples = parse_wav(payload)
+    peak = max((abs(s) for s in samples), default=0)
+    abs_sum = sum(abs(s) for s in samples)
+    sum_sq = sum(s * s for s in samples)
+    return rate, channels, len(samples) // channels, peak, abs_sum, sum_sq
+
+
+def decode_wav_samples(payload: bytes) -> list[int]:
+    """The interleaved int16 sample stream of a RIFF/WAVE PCM file (for
+    run-structure features the aggregate stats can't express)."""
+    return parse_wav(payload)[2]
 
 
 def wav_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, payload): a REAL RIFF/WAVE PCM file per document.
 
-    Synthesis happens executor-side in ``mapInPandas`` (struct.pack); the
-    decoder is an independent byte-arithmetic parser, and the oracle
-    recomputes features from the generating formula — three separate
-    code paths that must agree.
+    Synthesis happens executor-side in a per-document kernel
+    (struct.pack); the decoder is an independent byte-arithmetic parser,
+    and the oracle recomputes features from the generating formula —
+    three separate code paths that must agree.
     """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode_wav(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return map_docs(
+        load_table(spark, sf_dir, "documents").select("doc_id"),
+        lambda doc_id: [(doc_id, encode_wav(doc_id))],
+        "doc_id long, payload binary",
+    )
 
 
 DECODE_WAV_SCHEMA = (
@@ -629,22 +608,11 @@ def q_multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     channels, frames, peak amplitude, abs-sum, energy).  Payload bytes
     never shuffle; decode parallelism is the scan's split count."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_wav(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": [d[0] for d in decoded],
-                    "channels": [d[1] for d in decoded],
-                    "n_frames": [d[2] for d in decoded],
-                    "peak": [d[3] for d in decoded],
-                    "abs_sum": [d[4] for d in decoded],
-                    "sum_sq": [d[5] for d in decoded],
-                }
-            )
-
-    return wav_table(spark, sf_dir).mapInPandas(run, schema=DECODE_WAV_SCHEMA)
+    return map_docs(
+        wav_table(spark, sf_dir),
+        lambda doc_id, payload: [(doc_id, *decode_wav(payload))],
+        DECODE_WAV_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -676,15 +644,16 @@ def encode_y4m(doc_id: int) -> bytes:
     return b"".join(out)
 
 
-def decode_y4m(payload: bytes) -> tuple[int, int, int, int, int, int]:
-    """Parse a YUV4MPEG2 stream; returns
-    ``(width, height, n_frames, y_sum, total_sum, max_byte)``.
+def parse_y4m(payload: bytes) -> tuple[int, int, list[bytes]]:
+    """Parse a YUV4MPEG2 stream; returns ``(width, height, frames)``, each
+    frame its 3*w*h raw plane bytes (Y then U then V).
 
-    A real parser: magic check, tagged stream-header parse (W/H required,
-    colourspace must be C444 — the only layout synthesized here), then a
-    frame loop validating each ``FRAME`` marker (frame-level parameters
-    tolerated) and slicing exactly 3*w*h raw plane bytes.  Trailing
-    garbage after the last frame fails loudly.
+    The one Y4M parser every video kernel builds on: magic check, tagged
+    stream-header parse (W/H required, colourspace must be C444 — the
+    only layout synthesized here), then a frame loop validating each
+    ``FRAME`` marker (frame-level parameters tolerated) and slicing
+    exactly 3*w*h raw plane bytes.  Trailing garbage after the last
+    frame and a stream with no frames fail loudly.
     """
     nl = payload.find(b"\n")
     if nl < 0:
@@ -710,8 +679,7 @@ def decode_y4m(payload: bytes) -> tuple[int, int, int, int, int, int]:
         raise ValueError(f"unsupported colourspace {colourspace!r} (only C444)")
     frame_bytes = 3 * width * height
     i = nl + 1
-    n_frames = 0
-    y_sum = total_sum = max_byte = 0
+    frames: list[bytes] = []
     while i < len(payload):
         fnl = payload.find(b"\n", i)
         if fnl < 0:
@@ -722,30 +690,35 @@ def decode_y4m(payload: bytes) -> tuple[int, int, int, int, int, int]:
         planes = payload[fnl + 1 : fnl + 1 + frame_bytes]
         if len(planes) < frame_bytes:
             raise ValueError(f"truncated frame: {len(planes)} < {frame_bytes}")
-        n_frames += 1
-        y_sum += sum(planes[: width * height])
-        total_sum += sum(planes)
-        max_byte = max(max_byte, max(planes))
+        frames.append(planes)
         i = fnl + 1 + frame_bytes
-    if n_frames == 0:
+    if not frames:
         raise ValueError("stream contains no frames")
-    return width, height, n_frames, y_sum, total_sum, max_byte
+    return width, height, frames
+
+
+def decode_y4m(payload: bytes) -> tuple[int, int, int, int, int, int]:
+    """``(width, height, n_frames, y_sum, total_sum, max_byte)`` of a
+    YUV4MPEG2 stream, folded over all frames."""
+    width, height, frames = parse_y4m(payload)
+    y_px = width * height
+    return (
+        width,
+        height,
+        len(frames),
+        sum(sum(planes[:y_px]) for planes in frames),
+        sum(sum(planes) for planes in frames),
+        max(max(planes) for planes in frames),
+    )
 
 
 def y4m_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, payload): a REAL YUV4MPEG2 stream per document."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode_y4m(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return map_docs(
+        load_table(spark, sf_dir, "documents").select("doc_id"),
+        lambda doc_id: [(doc_id, encode_y4m(doc_id))],
+        "doc_id long, payload binary",
+    )
 
 
 DECODE_Y4M_SCHEMA = (
@@ -788,22 +761,11 @@ def q_multimodal_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas``, emit per-stream integer-exact features.  Closes the
     last modality stub — image/audio/video all have genuine parsers."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_y4m(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_frames": [d[2] for d in decoded],
-                    "y_sum": [d[3] for d in decoded],
-                    "total_sum": [d[4] for d in decoded],
-                    "max_byte": [d[5] for d in decoded],
-                }
-            )
-
-    return y4m_table(spark, sf_dir).mapInPandas(run, schema=DECODE_Y4M_SCHEMA)
+    return map_docs(
+        y4m_table(spark, sf_dir),
+        lambda doc_id, payload: [(doc_id, *decode_y4m(payload))],
+        DECODE_Y4M_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -814,40 +776,6 @@ PHASH_GRID = 4      # G x G grayscale cells -> G*(G-1) = 12 gradient bits
 PHASH_HAM_MAX = 2   # pairs within this Hamming distance are near-dups
 # hamming <= 2 over 3 nibbles => >= 1 nibble identical (pigeonhole), so
 # blocking on the three 4-bit groups loses no qualifying pair.
-
-
-def decode_ppm_raster(payload: bytes) -> tuple[int, int, bytes]:
-    """Full-raster variant of :func:`decode_ppm`: same strict header
-    parse, returns (width, height, raster bytes) for pixel-level ops."""
-    if payload[:2] != b"P6":
-        raise ValueError("not a binary PPM (P6 magic missing)")
-    tokens: list[bytes] = []
-    i = 0
-    while len(tokens) < 4:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if i >= len(payload):
-            raise ValueError("truncated PPM header")
-        if payload[i : i + 1] == b"#":
-            while i < len(payload) and payload[i] != 0x0A:
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        tokens.append(payload[i:j])
-        i = j
-    i += 1
-    if tokens[0] != b"P6":
-        raise ValueError(f"malformed PPM magic token {tokens[0]!r}")
-    width, height, maxval = int(tokens[1]), int(tokens[2]), int(tokens[3])
-    if maxval != 255:
-        raise ValueError(f"unsupported maxval {maxval}")
-    n_raster = 3 * width * height
-    raster = payload[i : i + n_raster]
-    if len(raster) < n_raster:
-        raise ValueError("truncated raster")
-    return width, height, raster
 
 
 def dhash_ppm(payload: bytes, grid: int = PHASH_GRID) -> int:
@@ -933,21 +861,14 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every pixel, cell, bit, and pair from first principles
     in SQL.
     """
-    imgs = ppm_table(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "ph": [dhash_ppm(bytes(p)) for p in pdf["payload"]],
-                }
-            )
-
     # both self-join sides consume the hash frame; persist it (12 bytes
     # a row) or the Python decode kernel — the query's dominant cost —
     # runs once per side
-    hashes = imgs.mapInPandas(run, schema="doc_id long, ph long").persist()
+    hashes = map_docs(
+        ppm_table(spark, sf_dir),
+        lambda doc_id, payload: [(doc_id, dhash_ppm(payload))],
+        "doc_id long, ph long",
+    ).persist()
     blocks = hashes.select(
         "doc_id",
         "ph",
@@ -991,49 +912,31 @@ SCENE_CUT_MAD_CENTI = 12500  # flag pairs whose Y MAD exceeds 125.00/pixel
 # mid-distribution and both flag values occur in the fixture)
 
 
-def y4m_frame_diffs(payload: bytes) -> list[tuple[int, int]]:
-    """Parse a YUV4MPEG2 stream and return, for each consecutive frame
-    pair, ``(frame_idx, y_mad_centi)`` — the mean absolute Y-plane
-    difference in centi-units (floor(100 * Σ|ΔY| / (w*h))).  Reuses the
-    strict :func:`decode_y4m` header/frame contract but keeps per-frame
-    planes instead of folding them into stream totals."""
-    nl = payload.find(b"\n")
-    if nl < 0:
-        raise ValueError("missing stream-header newline")
-    fields = payload[:nl].split(b" ")
-    if fields[0] != b"YUV4MPEG2":
-        raise ValueError("not a YUV4MPEG2 stream")
-    width = height = None
-    for tag in fields[1:]:
-        if tag[:1] == b"W":
-            width = int(tag[1:])
-        elif tag[:1] == b"H":
-            height = int(tag[1:])
-    if not width or not height:
-        raise ValueError("stream header missing W/H")
-    frame_bytes = 3 * width * height
+def y4m_frame_profile(payload: bytes) -> list[tuple[int, int, int | None]]:
+    """Per-frame ``(frame_idx, y_sum, y_mad_centi_vs_prev | None)`` over
+    the strict :func:`parse_y4m` walk: each frame's own Y sum alongside
+    its Y-plane mean absolute difference to the previous frame."""
+    width, height, frames = parse_y4m(payload)
     y_px = width * height
-    i = nl + 1
     prev = None
-    frame_idx = 0
-    out: list[tuple[int, int]] = []
-    while i < len(payload):
-        fnl = payload.find(b"\n", i)
-        if fnl < 0:
-            raise ValueError("truncated FRAME header")
-        fheader = payload[i:fnl]
-        if fheader != b"FRAME" and not fheader.startswith(b"FRAME "):
-            raise ValueError(f"bad FRAME marker {fheader!r}")
-        y_plane = payload[fnl + 1 : fnl + 1 + y_px]
-        if len(payload[fnl + 1 : fnl + 1 + frame_bytes]) < frame_bytes:
-            raise ValueError("truncated frame")
+    out: list[tuple[int, int, int | None]] = []
+    for frame_idx, planes in enumerate(frames):
+        y_plane = planes[:y_px]
+        mad = None
         if prev is not None:
             sad = sum(abs(a - b) for a, b in zip(y_plane, prev))
-            out.append((frame_idx, sad * 100 // y_px))
+            mad = sad * 100 // y_px
+        out.append((frame_idx, sum(y_plane), mad))
         prev = y_plane
-        frame_idx += 1
-        i = fnl + 1 + frame_bytes
     return out
+
+
+def y4m_frame_diffs(payload: bytes) -> list[tuple[int, int]]:
+    """For each consecutive frame pair of a YUV4MPEG2 stream,
+    ``(frame_idx, y_mad_centi)`` — the mean absolute Y-plane difference
+    in centi-units (floor(100 * Σ|ΔY| / (w*h))): the
+    :func:`y4m_frame_profile` rows after the first frame."""
+    return [(f, mad) for f, _, mad in y4m_frame_profile(payload)[1:]]
 
 
 @register(
@@ -1072,25 +975,16 @@ def q_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     30-minute static shot eats the budget a 50-cut trailer needs).
 
     Scale shape: identical to the stats/phash kernels — synthesis and
-    diffing both live in ONE mapInPandas pass over the payload scan, so
+    diffing both live in per-document kernels over the payload scan, so
     the raw video bytes NEVER shuffle; only (doc, frame, centi-MAD)
     triples leave the stage (zero joins, zero exchanges before the
     sink).  Integer-exact: the synthetic Y planes replay in the DuckDB
     oracle from the generator formula, and floor-division centi-units
     avoid float entirely."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                for frame_idx, mad in y4m_frame_diffs(bytes(p)):
-                    rows.append((int(d), frame_idx, mad))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "y_mad_centi"]
-            )
-
-    diffs = y4m_table(spark, sf_dir).mapInPandas(
-        run, schema="doc_id long, frame_idx int, y_mad_centi long"
+    diffs = map_docs(
+        y4m_table(spark, sf_dir),
+        lambda doc_id, payload: [(doc_id, *row) for row in y4m_frame_diffs(payload)],
+        "doc_id long, frame_idx int, y_mad_centi long",
     )
     return diffs.select(
         "doc_id",
@@ -1162,36 +1056,27 @@ def q_multimodal_audio_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Payload bytes never shuffle (the features leave the scan stage);
     per-task memory is one clip's samples."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_samples": [], "n_silent": [],
-                   "n_runs": [], "longest_run": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples = decode_wav_samples(bytes(payload))
-                n_silent = n_runs = longest = cur = 0
-                for s in samples:
-                    if abs(s) < SILENCE_THRESH:
-                        cur += 1
-                        n_silent += 1
-                    else:
-                        if cur >= SILENCE_MIN_RUN:
-                            n_runs += 1
-                        longest = max(longest, cur)
-                        cur = 0
+    def silence(doc_id: int, payload: bytes) -> list[tuple]:
+        samples = decode_wav_samples(payload)
+        n_silent = n_runs = longest = cur = 0
+        for s in samples:
+            if abs(s) < SILENCE_THRESH:
+                cur += 1
+                n_silent += 1
+            else:
                 if cur >= SILENCE_MIN_RUN:
                     n_runs += 1
                 longest = max(longest, cur)
-                out["doc_id"].append(int(doc_id))
-                out["n_samples"].append(len(samples))
-                out["n_silent"].append(n_silent)
-                out["n_runs"].append(n_runs)
-                out["longest_run"].append(longest)
-            yield pd.DataFrame(out)
+                cur = 0
+        if cur >= SILENCE_MIN_RUN:
+            n_runs += 1
+        longest = max(longest, cur)
+        return [(doc_id, len(samples), n_silent, n_runs, longest)]
 
-    return wav_table(spark, sf_dir).mapInPandas(
-        run,
-        schema="doc_id long, n_samples long, n_silent long, "
-        "n_runs long, longest_run long",
+    return map_docs(
+        wav_table(spark, sf_dir),
+        silence,
+        "doc_id long, n_samples long, n_silent long, n_runs long, longest_run long",
     )
 
 
@@ -1235,75 +1120,24 @@ def q_multimodal_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per image, never pixels."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "bucket": [], "n": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, raster = decode_ppm_raster(bytes(payload))
-                counts = np.bincount(
-                    np.frombuffer(raster, dtype=np.uint8) >> 5,
-                    minlength=HIST_BUCKETS,
-                )
-                for b in range(HIST_BUCKETS):
-                    if counts[b]:
-                        out["doc_id"].append(int(doc_id))
-                        out["bucket"].append(b)
-                        out["n"].append(int(counts[b]))
-            yield pd.DataFrame(out)
+    def histogram(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        _, _, raster = decode_ppm_raster(payload)
+        counts = np.bincount(
+            np.frombuffer(raster, dtype=np.uint8) >> 5,
+            minlength=HIST_BUCKETS,
+        )
+        for b in range(HIST_BUCKETS):
+            if counts[b]:
+                yield doc_id, b, int(counts[b])
 
-    return ppm_table(spark, sf_dir).mapInPandas(
-        run, schema="doc_id long, bucket int, n long"
+    return map_docs(
+        ppm_table(spark, sf_dir), histogram, "doc_id long, bucket int, n long"
     )
 
 
 # ---------------------------------------------------------------------------
 # Per-shot keyframe selection (scene cuts -> one representative frame)
 # ---------------------------------------------------------------------------
-
-
-def y4m_frame_profile(payload: bytes) -> list[tuple[int, int, int | None]]:
-    """Per-frame ``(frame_idx, y_sum, y_mad_centi_vs_prev | None)`` —
-    the same strict YUV4MPEG2 walk as :func:`y4m_frame_diffs`, keeping
-    each frame's own Y sum alongside its diff to the previous frame."""
-    nl = payload.find(b"\n")
-    if nl < 0:
-        raise ValueError("missing stream-header newline")
-    fields = payload[:nl].split(b" ")
-    if fields[0] != b"YUV4MPEG2":
-        raise ValueError("not a YUV4MPEG2 stream")
-    width = height = None
-    for tag in fields[1:]:
-        if tag[:1] == b"W":
-            width = int(tag[1:])
-        elif tag[:1] == b"H":
-            height = int(tag[1:])
-    if not width or not height:
-        raise ValueError("stream header missing W/H")
-    frame_bytes = 3 * width * height
-    y_px = width * height
-    i = nl + 1
-    prev = None
-    frame_idx = 0
-    out: list[tuple[int, int, int | None]] = []
-    while i < len(payload):
-        fnl = payload.find(b"\n", i)
-        if fnl < 0:
-            raise ValueError("truncated FRAME header")
-        fheader = payload[i:fnl]
-        if fheader != b"FRAME" and not fheader.startswith(b"FRAME "):
-            raise ValueError(f"bad FRAME marker {fheader!r}")
-        y_plane = payload[fnl + 1 : fnl + 1 + y_px]
-        if len(payload[fnl + 1 : fnl + 1 + frame_bytes]) < frame_bytes:
-            raise ValueError("truncated frame")
-        mad = None
-        if prev is not None:
-            sad = sum(abs(a - b) for a, b in zip(y_plane, prev))
-            mad = sad * 100 // y_px
-        out.append((frame_idx, sum(y_plane), mad))
-        prev = y_plane
-        frame_idx += 1
-        i = fnl + 1 + frame_bytes
-    return out
 
 
 _KEYFRAME_ORACLE = f"""
@@ -1360,24 +1194,15 @@ def q_multimodal_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     shot contributes one frame however long it is, a rapid-cut segment
     contributes one per cut).
 
-    One `mapInPandas` kernel re-parses the stream and emits per-frame
+    One per-document kernel re-parses the stream and emits per-frame
     (y_sum, MAD-vs-prev) rows — bytes never shuffle; shot assignment is
     a per-doc running sum of cut flags and the keyframe a min-struct
     combiner per (doc, shot).  Output is O(shots), the frame budget a
     downstream vision encoder actually consumes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                for f, y_sum, mad in y4m_frame_profile(bytes(p)):
-                    rows.append((int(d), f, y_sum, mad))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "f", "y_sum", "mad"]
-            ).astype({"mad": "object"})
-
-    frames = y4m_table(spark, sf_dir).mapInPandas(
-        run, schema="doc_id long, f int, y_sum long, mad long"
+    frames = map_docs(
+        y4m_table(spark, sf_dir),
+        lambda doc_id, payload: [(doc_id, *row) for row in y4m_frame_profile(payload)],
+        "doc_id long, f int, y_sum long, mad long",
     )
     is_cut = (
         F.when(
@@ -1449,39 +1274,24 @@ def q_multimodal_resize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell sum — parser, kernel, and oracle are independent paths."""
     import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pool(doc_id: int, payload: bytes) -> Iterator[tuple]:
         G = RESIZE_GRID
-        for pdf in batches:
-            out = {"doc_id": [], "gy": [], "gx": [], "n_px": [], "mean_byte": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload)
-                # header: P6\n<w> <h>\n255\n — synthesized by ppm_table
-                nl2 = data.index(b"\n", data.index(b"\n") + 1)
-                w_s, h_s = data[3:nl2].split()
-                w, h = int(w_s), int(h_s)
-                start = data.index(b"\n", nl2 + 1) + 1
-                raster = np.frombuffer(
-                    data, dtype=np.uint8, count=3 * w * h, offset=start
-                ).astype(np.int64)
-                px = raster.reshape(h, w, 3).sum(axis=2)  # per-pixel byte sum
-                ys = (np.arange(h) * G) // h
-                xs = (np.arange(w) * G) // w
-                for gy in range(G):
-                    rows = px[ys == gy]
-                    for gx in range(G):
-                        cell = rows[:, xs == gx]
-                        out["doc_id"].append(int(doc_id))
-                        out["gy"].append(gy)
-                        out["gx"].append(gx)
-                        out["n_px"].append(int(cell.size))
-                        out["mean_byte"].append(
-                            round(float(cell.sum()) / (cell.size * 3), 6)
-                        )
-            yield pd.DataFrame(out)
+        w, h, raster = decode_ppm_raster(payload)
+        a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
+        px = a.reshape(h, w, 3).sum(axis=2)  # per-pixel byte sum
+        ys = (np.arange(h) * G) // h
+        xs = (np.arange(w) * G) // w
+        for gy in range(G):
+            rows = px[ys == gy]
+            for gx in range(G):
+                cell = rows[:, xs == gx]
+                mean_byte = round(float(cell.sum()) / (cell.size * 3), 6)
+                yield doc_id, gy, gx, int(cell.size), mean_byte
 
-    return ppm_table(spark, sf_dir).mapInPandas(
-        kernel,
-        schema="doc_id long, gy int, gx int, n_px long, mean_byte double",
+    return map_docs(
+        ppm_table(spark, sf_dir),
+        pool,
+        "doc_id long, gy int, gx int, n_px long, mean_byte double",
     )
 
 
@@ -1543,31 +1353,25 @@ def q_multimodal_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume; all features are exact integers replayable from the
     generating formula by the oracle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = {k: [] for k in (
-            "doc_id", "sample_rate", "channels", "factor",
-            "n_frames_out", "peak_out", "abs_sum_out", "sum_sq_out",
-        )}
-        for pdf in batches:
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, channels, _, _, _, _ = decode_wav(bytes(payload))
-                samples = decode_wav_samples(bytes(payload))
-                kept = [
-                    s
-                    for k, s in enumerate(samples)
-                    if (k // channels) % AUDIO_DECIMATE == 0
-                ]
-                rows["doc_id"].append(int(did))
-                rows["sample_rate"].append(rate)
-                rows["channels"].append(channels)
-                rows["factor"].append(AUDIO_DECIMATE)
-                rows["n_frames_out"].append(len(kept) // channels)
-                rows["peak_out"].append(max((abs(s) for s in kept), default=0))
-                rows["abs_sum_out"].append(sum(abs(s) for s in kept))
-                rows["sum_sq_out"].append(sum(s * s for s in kept))
-        yield pd.DataFrame(rows)
+    def decimate(doc_id: int, payload: bytes) -> list[tuple]:
+        rate, channels, samples = parse_wav(payload)
+        kept = [
+            s
+            for k, s in enumerate(samples)
+            if (k // channels) % AUDIO_DECIMATE == 0
+        ]
+        return [(
+            doc_id,
+            rate,
+            channels,
+            AUDIO_DECIMATE,
+            len(kept) // channels,
+            max((abs(s) for s in kept), default=0),
+            sum(abs(s) for s in kept),
+            sum(s * s for s in kept),
+        )]
 
-    return wav_table(spark, sf_dir).mapInPandas(run, schema=DECIMATE_SCHEMA)
+    return map_docs(wav_table(spark, sf_dir), decimate, DECIMATE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1621,31 +1425,26 @@ def q_multimodal_image_grayscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan per image."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = {k: [] for k in (
-            "doc_id", "w", "h", "luma_sum", "luma_min", "luma_max", "n_dark",
-        )}
-        for pdf in batches:
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, raster = decode_ppm_raster(bytes(payload))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                a = a.reshape(h * w, 3)
-                y = (299 * a[:, 0] + 587 * a[:, 1] + 114 * a[:, 2]) // 1000
-                rows["doc_id"].append(int(did))
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["luma_sum"].append(int(y.sum()))
-                rows["luma_min"].append(int(y.min()))
-                rows["luma_max"].append(int(y.max()))
-                rows["n_dark"].append(int((y < GRAY_DARK).sum()))
-        yield pd.DataFrame(rows)
+    def grayscale(doc_id: int, payload: bytes) -> list[tuple]:
+        w, h, raster = decode_ppm_raster(payload)
+        a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
+        a = a.reshape(h * w, 3)
+        y = (299 * a[:, 0] + 587 * a[:, 1] + 114 * a[:, 2]) // 1000
+        return [(
+            doc_id,
+            w,
+            h,
+            int(y.sum()),
+            int(y.min()),
+            int(y.max()),
+            int((y < GRAY_DARK).sum()),
+        )]
 
-    return ppm_table(spark, sf_dir).mapInPandas(
-        run,
-        schema=(
-            "doc_id long, w int, h int, luma_sum long, "
-            "luma_min int, luma_max int, n_dark long"
-        ),
+    return map_docs(
+        ppm_table(spark, sf_dir),
+        grayscale,
+        "doc_id long, w int, h int, luma_sum long, "
+        "luma_min int, luma_max int, n_dark long",
     )
 
 
@@ -1697,27 +1496,19 @@ def q_multimodal_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula replay.  Counting happens inside the decode kernel: bytes
     never shuffle, one row leaves the scan per clip."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        rows = {"doc_id": [], "channels": [], "n_crossings": []}
-        for pdf in batches:
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, channels, _, _, _, _ = decode_wav(bytes(payload))
-                samples = np.asarray(
-                    decode_wav_samples(bytes(payload)), dtype=np.int64
-                )
-                n = 0
-                for ch in range(channels):
-                    s = np.sign(samples[ch::channels])
-                    n += int((s[1:] * s[:-1] == -1).sum())
-                rows["doc_id"].append(int(did))
-                rows["channels"].append(channels)
-                rows["n_crossings"].append(n)
-        yield pd.DataFrame(rows)
+    def zcr(doc_id: int, payload: bytes) -> list[tuple]:
+        _, channels, samples = parse_wav(payload)
+        samples = np.asarray(samples, dtype=np.int64)
+        n = 0
+        for ch in range(channels):
+            s = np.sign(samples[ch::channels])
+            n += int((s[1:] * s[:-1] == -1).sum())
+        return [(doc_id, channels, n)]
 
-    return wav_table(spark, sf_dir).mapInPandas(
-        run, schema="doc_id long, channels int, n_crossings long"
+    return map_docs(
+        wav_table(spark, sf_dir), zcr, "doc_id long, channels int, n_crossings long"
     )
 
 
@@ -1776,7 +1567,8 @@ FLATNESS_BLOCK = 8  # within-channel samples per energy block
 )
 def q_multimodal_audio_flatness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-flatness per decoded audio clip — the cheap spectral-
-    flatness proxy and ZCR's missing sibling (VERDICT r8 item 7): the
+    flatness proxy and ZCR's companion (ZCR sees only sign changes, so
+    it cannot tell an even energy envelope from a peaky one): the
     (log-domain) ratio of the geometric to the arithmetic mean of
     short-block energies.  Near 0 micro-units = flat/noise-like energy
     envelope; strongly negative = peaky/tonal — the classic
@@ -1793,50 +1585,35 @@ def q_multimodal_audio_flatness(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffle, one row leaves the scan per clip."""
     import math
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        rows = {
-            "doc_id": [], "channels": [], "n_blocks": [],
-            "sum_e1": [], "flat_mu": [],
-        }
-        for pdf in batches:
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, channels, _, _, _, _ = decode_wav(bytes(payload))
-                samples = np.asarray(
-                    decode_wav_samples(bytes(payload)), dtype=np.int64
-                )
-                n_blocks = 0
-                sum_e1 = 0
-                sum_ln6 = 0
-                for ch in range(channels):
-                    x = samples[ch::channels]
-                    e = np.add.reduceat(x * x, range(0, len(x), FLATNESS_BLOCK))
-                    e1 = e + 1
-                    lnq = np.floor(np.log(e1.astype(np.float64)) * 1e6 + 0.5)
-                    n_blocks += len(e1)
-                    sum_e1 += int(e1.sum())
-                    sum_ln6 += int(lnq.sum())
-                flat_mu = int(
-                    math.floor(
-                        sum_ln6 / n_blocks
-                        - math.floor(math.log(sum_e1 / n_blocks) * 1e6 + 0.5)
-                        + 0.5
-                    )
-                )
-                rows["doc_id"].append(int(did))
-                rows["channels"].append(channels)
-                rows["n_blocks"].append(n_blocks)
-                rows["sum_e1"].append(sum_e1)
-                rows["flat_mu"].append(flat_mu)
-        yield pd.DataFrame(rows)
+    def flatness(doc_id: int, payload: bytes) -> list[tuple]:
+        _, channels, samples = parse_wav(payload)
+        samples = np.asarray(samples, dtype=np.int64)
+        n_blocks = 0
+        sum_e1 = 0
+        sum_ln6 = 0
+        for ch in range(channels):
+            x = samples[ch::channels]
+            e = np.add.reduceat(x * x, range(0, len(x), FLATNESS_BLOCK))
+            e1 = e + 1
+            lnq = np.floor(np.log(e1.astype(np.float64)) * 1e6 + 0.5)
+            n_blocks += len(e1)
+            sum_e1 += int(e1.sum())
+            sum_ln6 += int(lnq.sum())
+        flat_mu = int(
+            math.floor(
+                sum_ln6 / n_blocks
+                - math.floor(math.log(sum_e1 / n_blocks) * 1e6 + 0.5)
+                + 0.5
+            )
+        )
+        return [(doc_id, channels, n_blocks, sum_e1, flat_mu)]
 
-    return wav_table(spark, sf_dir).mapInPandas(
-        run,
-        schema=(
-            "doc_id long, channels int, n_blocks long, "
-            "sum_e1 long, flat_mu long"
-        ),
+    return map_docs(
+        wav_table(spark, sf_dir),
+        flatness,
+        "doc_id long, channels int, n_blocks long, sum_e1 long, flat_mu long",
     )
 
 
@@ -1903,32 +1680,20 @@ def q_multimodal_image_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the scan per image — same 100 TB shape as grayscale/phash."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = {k: [] for k in ("doc_id", "w", "h", "gx_sum", "gy_sum",
-                                "edge_energy")}
-        for pdf in batches:
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, raster = decode_ppm_raster(bytes(payload))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                y = (
-                    (299 * a[0::3] + 587 * a[1::3] + 114 * a[2::3]) // 1000
-                ).reshape(h, w)
-                gx = int(np.abs(np.diff(y, axis=1)).sum())
-                gy = int(np.abs(np.diff(y, axis=0)).sum())
-                rows["doc_id"].append(int(did))
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["gx_sum"].append(gx)
-                rows["gy_sum"].append(gy)
-                rows["edge_energy"].append(gx + gy)
-        yield pd.DataFrame(rows)
+    def edges(doc_id: int, payload: bytes) -> list[tuple]:
+        w, h, raster = decode_ppm_raster(payload)
+        a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
+        y = (
+            (299 * a[0::3] + 587 * a[1::3] + 114 * a[2::3]) // 1000
+        ).reshape(h, w)
+        gx = int(np.abs(np.diff(y, axis=1)).sum())
+        gy = int(np.abs(np.diff(y, axis=0)).sum())
+        return [(doc_id, w, h, gx, gy, gx + gy)]
 
-    return ppm_table(spark, sf_dir).mapInPandas(
-        run,
-        schema=(
-            "doc_id long, w int, h int, gx_sum long, gy_sum long, "
-            "edge_energy long"
-        ),
+    return map_docs(
+        ppm_table(spark, sf_dir),
+        edges,
+        "doc_id long, w int, h int, gx_sum long, gy_sum long, edge_energy long",
     )
 
 
@@ -1984,22 +1749,14 @@ def q_multimodal_audio_rms_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-equal without micro-unit gymnastics).  Bytes never shuffle;
     per-task memory is one clip's samples."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        rows = {"doc_id": [], "n_samples": [], "sumsq": []}
-        for pdf in batches:
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.asarray(
-                    decode_wav_samples(bytes(payload)), dtype=np.int64
-                )
-                rows["doc_id"].append(int(did))
-                rows["n_samples"].append(int(samples.size))
-                rows["sumsq"].append(int((samples * samples).sum()))
-        yield pd.DataFrame(rows)
+    def energy(doc_id: int, payload: bytes) -> list[tuple]:
+        samples = np.asarray(decode_wav_samples(payload), dtype=np.int64)
+        return [(doc_id, int(samples.size), int((samples * samples).sum()))]
 
-    stats = wav_table(spark, sf_dir).mapInPandas(
-        run, schema="doc_id long, n_samples long, sumsq long"
+    stats = map_docs(
+        wav_table(spark, sf_dir), energy, "doc_id long, n_samples long, sumsq long"
     )
     return stats.filter(F.col("sumsq") > 0).select(
         "doc_id",
@@ -2069,23 +1826,13 @@ def q_multimodal_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (the RMS-gain envelope)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "b": [], "c": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, raster = decode_ppm_raster(bytes(payload))
-                counts = np.bincount(
-                    np.frombuffer(raster, dtype=np.uint8), minlength=256
-                )
-                for b in np.nonzero(counts)[0]:
-                    out["doc_id"].append(int(doc_id))
-                    out["b"].append(int(b))
-                    out["c"].append(int(counts[b]))
-            yield pd.DataFrame(out)
+    def histogram(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        _, _, raster = decode_ppm_raster(payload)
+        counts = np.bincount(np.frombuffer(raster, dtype=np.uint8), minlength=256)
+        for b in np.nonzero(counts)[0]:
+            yield doc_id, int(b), int(counts[b])
 
-    hist = ppm_table(spark, sf_dir).mapInPandas(
-        run, schema="doc_id long, b int, c long"
-    )
+    hist = map_docs(ppm_table(spark, sf_dir), histogram, "doc_id long, b int, c long")
 
     def lnq(col):
         return F.floor(F.log(col.cast("double")) * 1_000_000 + 0.5).cast("bigint")
@@ -2182,28 +1929,25 @@ def q_multimodal_image_colorfulness(spark: SparkSession, sf_dir: str) -> DataFra
     post-scan projection (the RMS-gain envelope)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_px": [], "s_rg": [], "q_rg": [],
-                   "s_yb2": [], "q_yb2": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, raster = decode_ppm_raster(bytes(payload))
-                a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                a = a.reshape(-1, 3)
-                rg = a[:, 0] - a[:, 1]
-                yb2 = a[:, 0] + a[:, 1] - 2 * a[:, 2]
-                out["doc_id"].append(int(doc_id))
-                out["n_px"].append(int(a.shape[0]))
-                out["s_rg"].append(int(rg.sum()))
-                out["q_rg"].append(int((rg * rg).sum()))
-                out["s_yb2"].append(int(yb2.sum()))
-                out["q_yb2"].append(int((yb2 * yb2).sum()))
-            yield pd.DataFrame(out)
+    def opponent_stats(doc_id: int, payload: bytes) -> list[tuple]:
+        _, _, raster = decode_ppm_raster(payload)
+        a = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
+        a = a.reshape(-1, 3)
+        rg = a[:, 0] - a[:, 1]
+        yb2 = a[:, 0] + a[:, 1] - 2 * a[:, 2]
+        return [(
+            doc_id,
+            int(a.shape[0]),
+            int(rg.sum()),
+            int((rg * rg).sum()),
+            int(yb2.sum()),
+            int((yb2 * yb2).sum()),
+        )]
 
-    stats = ppm_table(spark, sf_dir).mapInPandas(
-        run,
-        schema="doc_id long, n_px long, s_rg long, q_rg long, "
-        "s_yb2 long, q_yb2 long",
+    stats = map_docs(
+        ppm_table(spark, sf_dir),
+        opponent_stats,
+        "doc_id long, n_px long, s_rg long, q_rg long, s_yb2 long, q_yb2 long",
     )
     n = F.col("n_px").cast("double")
     mrg = F.col("s_rg").cast("double") / n
@@ -2272,22 +2016,19 @@ def q_multimodal_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples — the audio-family envelope."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = {"doc_id": [], "n_samples": [], "n_clipped": [], "peak_abs": []}
-        for pdf in batches:
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.abs(
-                    np.asarray(decode_wav_samples(bytes(payload)), dtype=np.int64)
-                )
-                rows["doc_id"].append(int(did))
-                rows["n_samples"].append(int(samples.size))
-                rows["n_clipped"].append(int((samples >= CLIP_ABS).sum()))
-                rows["peak_abs"].append(int(samples.max()) if samples.size else 0)
-        yield pd.DataFrame(rows)
+    def clipping(doc_id: int, payload: bytes) -> list[tuple]:
+        samples = np.abs(np.asarray(decode_wav_samples(payload), dtype=np.int64))
+        return [(
+            doc_id,
+            int(samples.size),
+            int((samples >= CLIP_ABS).sum()),
+            int(samples.max()) if samples.size else 0,
+        )]
 
-    stats = wav_table(spark, sf_dir).mapInPandas(
-        run,
-        schema="doc_id long, n_samples long, n_clipped long, peak_abs long",
+    stats = map_docs(
+        wav_table(spark, sf_dir),
+        clipping,
+        "doc_id long, n_samples long, n_clipped long, peak_abs long",
     )
     return stats.select(
         "doc_id",
@@ -2375,32 +2116,27 @@ def q_multimodal_image_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the cost is the decode scan, the audio-RMS envelope."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = {"doc_id": [], "n_interior": [], "s_lap": [], "q_lap": []}
-        for pdf in batches:
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, raster = decode_ppm_raster(bytes(payload))
-                rgb = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
-                lum = (
-                    rgb[:, :, 0].astype(np.int64)
-                    + 2 * rgb[:, :, 1].astype(np.int64)
-                    + rgb[:, :, 2].astype(np.int64)
-                )
-                lap = (
-                    4 * lum[1:-1, 1:-1]
-                    - lum[:-2, 1:-1]
-                    - lum[2:, 1:-1]
-                    - lum[1:-1, :-2]
-                    - lum[1:-1, 2:]
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["n_interior"].append(int(lap.size))
-                rows["s_lap"].append(int(lap.sum()))
-                rows["q_lap"].append(int((lap * lap).sum()))
-        yield pd.DataFrame(rows)
+    def laplacian(doc_id: int, payload: bytes) -> list[tuple]:
+        w, h, raster = decode_ppm_raster(payload)
+        rgb = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
+        lum = (
+            rgb[:, :, 0].astype(np.int64)
+            + 2 * rgb[:, :, 1].astype(np.int64)
+            + rgb[:, :, 2].astype(np.int64)
+        )
+        lap = (
+            4 * lum[1:-1, 1:-1]
+            - lum[:-2, 1:-1]
+            - lum[2:, 1:-1]
+            - lum[1:-1, :-2]
+            - lum[1:-1, 2:]
+        )
+        return [(doc_id, int(lap.size), int(lap.sum()), int((lap * lap).sum()))]
 
-    stats = ppm_table(spark, sf_dir).mapInPandas(
-        run, schema="doc_id long, n_interior long, s_lap long, q_lap long"
+    stats = map_docs(
+        ppm_table(spark, sf_dir),
+        laplacian,
+        "doc_id long, n_interior long, s_lap long, q_lap long",
     )
     n = F.col("n_interior").cast("double")
     mean = F.col("s_lap").cast("double") / n

@@ -279,3 +279,11 @@ def write_word_counts_naive(
             client.close()
 
     word_counts.foreach(write_row)
+
+
+# Sink implementations by CLI name (the reference's ``enum Implementation``,
+# WordCountToFirestorePipeline.java:45-55).
+WRITERS: dict[str, Callable] = {
+    "naive": write_word_counts_naive,
+    "batch": write_word_counts_batch,
+}

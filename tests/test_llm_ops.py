@@ -24,9 +24,11 @@ from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
     shingles_df,
     simhash_signatures,
 )
+from apache_beam_java_firestore_batch_dataflow_spark.operators import multimodal
 from apache_beam_java_firestore_batch_dataflow_spark.operators.multimodal import (
     decode_features,
     decode_payload,
+    doc_kernel,
     fake_decode_stats,
     multimodal_table,
 )
@@ -166,6 +168,35 @@ def test_multimodal_decode_plumbing(spark):
         assert r.byte_entropy_bp == ent
 
 
+def test_doc_kernel_runner_contract():
+    """The per-document runner, driven without Spark: one output frame per
+    input frame, 1→N and 1→0 kernels, exact ints above 2**53, None as
+    null, and schema-named columns even for an empty batch."""
+    import pandas as pd
+    import pyarrow as pa
+
+    big = 2**53 + 1
+
+    def fan_out(doc_id, n):
+        for k in range(n):
+            yield doc_id, k, big if k == 0 else None
+
+    run = doc_kernel(fan_out, "doc_id long, k int, big long")
+    batches = [
+        pd.DataFrame({"doc_id": [7, 8], "n": [3, 0]}),
+        pd.DataFrame({"doc_id": [9], "n": [1]}),
+        pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "n": []}),
+    ]
+    out = list(run(iter(batches)))
+    assert len(out) == len(batches)
+    assert all(list(o.columns) == ["doc_id", "k", "big"] for o in out)
+    assert out[0].values.tolist() == [[7, 0, big], [7, 1, None], [7, 2, None]]
+    assert out[1].values.tolist() == [[9, 0, big]]
+    assert out[2].empty
+    arr = pa.Array.from_pandas(out[0]["big"], type=pa.int64())
+    assert arr.to_pylist() == [big, None, None]
+
+
 def test_real_decoder_dispatch():
     from apache_beam_java_firestore_batch_dataflow_spark.operators.multimodal import (
         decode_ppm,
@@ -228,6 +259,10 @@ def test_real_decoder_dispatch():
     # header comments + extra whitespace are tolerated (real PPM grammar)
     commented = b"P6\n# a comment\n 2\t1 # trailing\n255\n" + bytes(6)
     assert decode_ppm(commented)[:2] == (2, 1)
+    raster = bytes([1, 2, 3, 250, 251, 252])
+    assert multimodal.decode_ppm_raster(
+        b"P6\n# a comment\n2 1\n255\n" + raster
+    ) == multimodal.decode_ppm_raster(b"P6\n2 1\n255\n" + raster) == (2, 1, raster)
     # truncated raster and bad maxval fail loudly
     with pytest.raises(ValueError):
         decode_ppm(b"P6\n2 1\n255\n\x00\x01")
@@ -373,14 +408,13 @@ def test_ppm_magic_must_be_exact_token():
         decode_ppm(b"P69 2 1 255\n" + bytes(6 * 9))
 
 
-def test_wav_decoder_malformed_inputs():
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav,
-    )
+@pytest.mark.parametrize("entry", ["decode_wav", "decode_wav_samples", "parse_wav"])
+def test_wav_decoder_malformed_inputs(entry):
+    """Every public WAV entry point shares the one strict RIFF parser."""
     import struct
 
-    good = encode_wav(7)
+    decode_wav = getattr(multimodal, entry)
+    good = multimodal.encode_wav(7)
     with pytest.raises(ValueError, match="RIFF"):
         decode_wav(b"RIFX" + good[4:])
     with pytest.raises(ValueError, match="WAVE"):
@@ -461,19 +495,19 @@ def test_wav_roundtrip_property():
     check()
 
 
-def test_y4m_decoder_malformed_inputs():
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.multimodal import (
-        decode_y4m,
-        encode_y4m,
-    )
-
-    good = encode_y4m(5)
+@pytest.mark.parametrize(
+    "entry", ["decode_y4m", "y4m_frame_profile", "y4m_frame_diffs", "parse_y4m"]
+)
+def test_y4m_decoder_malformed_inputs(entry):
+    """Every public Y4M entry point shares the one strict frame walk."""
+    decode_y4m = getattr(multimodal, entry)
+    good = multimodal.encode_y4m(5)
     with pytest.raises(ValueError, match="YUV4MPEG2"):
         decode_y4m(b"JUNK " + good)
     with pytest.raises(ValueError, match="W/H"):
         decode_y4m(b"YUV4MPEG2 F25:1 C444\n" + b"FRAME\n" + bytes(12))
     with pytest.raises(ValueError, match="colourspace"):
-        decode_y4m(b"YUV4MPEG2 W2 H2 C420jpeg\n" + b"FRAME\n" + bytes(6))
+        decode_y4m(b"YUV4MPEG2 W2 H2 C420jpeg\n" + b"FRAME\n" + bytes(12))
     with pytest.raises(ValueError, match="truncated frame"):
         decode_y4m(b"YUV4MPEG2 W2 H2 C444\n" + b"FRAME\n" + bytes(5))
     with pytest.raises(ValueError, match="FRAME"):
