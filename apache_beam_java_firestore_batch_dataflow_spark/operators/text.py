@@ -2175,16 +2175,17 @@ def bpe_train(
         g.unpersist(blocking=False)
     # JVM VALUES relation, not createDataFrame(list): the latter routes
     # through a parallelized Python RDD, so every downstream action
-    # would pay a ~0.2 s Python-worker stage for 4 rows.  Pairs are
-    # tokenizer output ([a-z] + private-use merge symbols); the quote
-    # escape keeps the literal well-formed for any string.
+    # would pay a ~0.2 s Python-worker stage for 4 rows.  A caller's
+    # vocabulary may hold any string, and Spark SQL literals treat
+    # backslash as an escape character: backslashes are doubled first,
+    # then quotes, so the literal reads back as exactly the pair.
     if not winners:
         return spark.sql(
             "SELECT CAST(NULL AS INT) AS round, CAST(NULL AS STRING) AS pair,"
             " CAST(NULL AS BIGINT) AS n WHERE FALSE"
         )
     rows_sql = ", ".join(
-        "({r}, '{p}', {n}L)".format(r=r, p=p.replace("'", "''"), n=n)
+        "({r}, '{p}', {n}L)".format(r=r, p=p.replace("\\", "\\\\").replace("'", "''"), n=n)
         for r, p, n in winners
     )
     return spark.sql(

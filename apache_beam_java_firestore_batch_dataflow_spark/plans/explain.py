@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_text(df: DataFrame, mode: str = "formatted") -> str:
@@ -62,3 +62,16 @@ def codegen_stage_count(df: DataFrame) -> int:
     df.collect()
     ids = set(re.findall(r"\*\((\d+)\)", plan_text(df, "simple")))
     return len(ids)
+
+
+def codegen_stats(spark: SparkSession) -> dict:
+    """JVM-wide generated-code compile counters since the JVM started:
+    ``classes`` compiled by Janino (``CodegenMetrics`` compilation-time
+    histogram count — a cache hit compiles nothing and is not counted)
+    and ``compile_s`` spent compiling them (the code generator's exact
+    nanosecond total).  Take two readings and subtract to attribute a
+    span of work; shared by every session of the JVM."""
+    jvm = spark.sparkContext._jvm
+    classes = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return {"classes": int(classes), "compile_s": nanos / 1e9}

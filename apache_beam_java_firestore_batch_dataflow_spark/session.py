@@ -6,6 +6,14 @@ Arrow enabled for the Pandas-UDF slow path, and shuffle partitions sized
 to the local core count rather than Spark's default 200.  On a real
 cluster the same builder is used with ``master`` / ``shuffle_partitions``
 supplied by the deployment (e.g. 2-3x total executor cores).
+
+The JVM-wide whole-stage codegen cache is sized to the query registry
+(``CODEGEN_CACHE_ENTRIES``): Spark's default of 100 classes is smaller
+than one pass over the registry generates, so every repeated query
+evicted and recompiled its classes through Janino.  The size is a static
+conf, read once when the JVM's code generator initializes, so it only
+takes effect in sessions ``build_session`` creates; a session handed in by
+the external driver keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -13,6 +21,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# One pass over all 300 registered queries at sf0.001 compiles 3436
+# generated classes (CodegenMetrics), and Spark's default cache holds
+# 100, so a warm pass recompiled nearly everything it ran.  4096 holds a
+# full registry pass with ~19% headroom.  An entry keeps its source text
+# (~8 KB mean) and ~2.5 loaded classes (~2.8 KB of bytecode each), so a
+# full cache is on the order of 100 MB of driver heap and metaspace.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -45,6 +62,7 @@ def build_session(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

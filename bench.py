@@ -739,6 +739,7 @@ def sink_ratio_bench(spark) -> dict:
 
 
 def main() -> None:
+    from apache_beam_java_firestore_batch_dataflow_spark.plans.explain import codegen_stats
     from apache_beam_java_firestore_batch_dataflow_spark.session import build_session
     import __spark_entry__ as entrymod
 
@@ -883,6 +884,10 @@ def main() -> None:
         "python_probe": python_probe,
         "host_band": host_band,
         "true_total": true_total,
+        # Generated classes Janino compiled over the whole run and the
+        # seconds it took (plans/explain.codegen_stats); a codegen-cache
+        # thrash shows here as a jump in both.
+        "codegen": codegen_stats(spark),
         # r6 protocol bump (ADVICE r5 cache-leak fix): headline
         # queries now run cache-ISOLATED (clearCache between
         # queries — r1-r5 never cleared, so later dedup-family

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import __spark_entry__
 from apache_beam_java_firestore_batch_dataflow_spark.operators import (
     relational,
     similarity,
@@ -14,6 +15,7 @@ from apache_beam_java_firestore_batch_dataflow_spark.operators.text import (
 )
 from apache_beam_java_firestore_batch_dataflow_spark.plans.explain import (
     codegen_stage_count,
+    codegen_stats,
     num_broadcast_joins,
     num_shuffles,
     pushed_filters,
@@ -1203,3 +1205,43 @@ def test_pair_family_shared_frames_cached_once(spark, sf_dir):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("InMemoryTableScan") >= 2, name
         spark.catalog.clearCache()
+
+
+# JVM-only registered queries that consume no shared kernel.  In a fresh
+# session their first pass at sf0.001 compiles 267 generated classes,
+# more than Spark's default codegen cache of 100 holds.
+CODEGEN_REUSE_QUERIES = (
+    "q_window_analytics",
+    "q_events_burst_hours",
+    "q_window_rank",
+    "q_scd2_priority_history",
+    "q_union_except",
+    "q_agg_trimmed_mean",
+    "q_window_running",
+    "q_audit_sequence_gaps",
+    "q_agg_incremental_merge",
+    "q_events_markov_transitions",
+    "q_skyline_suppliers",
+    "q_events_user_streaks",
+    "q_profile_entropy_mi",
+)
+CODEGEN_REUSE_COLD_CLASSES = 267
+
+
+def test_codegen_cache_holds_a_repeated_query_set(spark, sf_dir):
+    """build_session sizes the codegen cache to the registry, so running
+    the same queries again reuses their generated classes: the second
+    pass recompiles at most 10% of what a cold pass compiles (4 measured;
+    with Spark's default cache it recompiled 274)."""
+    registry = __spark_entry__.queries()
+
+    def one_pass() -> int:
+        before = codegen_stats(spark)["classes"]
+        for name in CODEGEN_REUSE_QUERIES:
+            registry[name](spark, sf_dir).collect()
+        spark.catalog.clearCache()
+        return codegen_stats(spark)["classes"] - before
+
+    first = one_pass()
+    second = one_pass()
+    assert second <= CODEGEN_REUSE_COLD_CLASSES // 10, (first, second)

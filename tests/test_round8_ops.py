@@ -72,6 +72,22 @@ def test_bpe_train_k_rounds_bit_exact_vs_python(spark, sf_dir):
     spark.catalog.clearCache()
 
 
+def test_bpe_train_pairs_with_quote_and_backslash_round_trip(spark):
+    """A caller's vocabulary may hold any string: the merge table's SQL
+    VALUES literal must read back pairs holding both ``\\`` and ``'``
+    exactly (rounds 1-3 win ``\\'``, ``'\\`` and ``\\\\``), bit-exact
+    against the pure-Python trainer."""
+    from apache_beam_java_firestore_batch_dataflow_spark.operators.text import bpe_train
+
+    vocab = Counter({"\\'": 9, "'\\": 6, "a\\\\": 3})
+    sdf = spark.createDataFrame(list(vocab.items()), ["tok", "cnt"])
+    got = [(r.round, r.pair, r.n) for r in bpe_train(sdf, k=3).orderBy("round").collect()]
+    expected = _py_bpe_train(vocab, k=3)
+    assert [p for _, p, _ in expected] == ["\\'", "'\\", "\\\\"]
+    assert got == expected
+    spark.catalog.clearCache()
+
+
 def test_bpe_train_learns_compound_merges(spark, sf_dir):
     """Later rounds may merge pairs CONTAINING earlier merge symbols —
     the mechanism by which BPE grows multi-character units.  On a

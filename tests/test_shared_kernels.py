@@ -1,7 +1,9 @@
-"""The shared-kernel memo (``sources/tables.py`` ``shared_kernel``): one
+"""The session memos of ``sources/tables.py``.  ``shared_kernel``: one
 contract test per registered kernel, the per-kernel entry cap, each
 kernel's result against its un-memoized plan, and a guard that keeps
-hand-rolled memos out of the operator modules."""
+hand-rolled memos out of the operator modules.  ``load_table``'s schema
+memo: a repeat load runs no job, a rewrite is seen, and every load is a
+fresh relation.  ``clear_shared_kernels`` leaves every memo empty."""
 
 from __future__ import annotations
 
@@ -10,17 +12,21 @@ import re
 import shutil
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 import __spark_entry__
+from apache_beam_java_firestore_batch_dataflow_spark.sources import tables
 from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
     SHARED_KERNEL_CAP,
     SHARED_KERNELS,
     TABLE_NAMES,
     clear_shared_kernels,
     load_table,
+    scan_data_splits,
 )
 
 from .conftest import SF_DIR
@@ -206,3 +212,66 @@ def test_operators_define_no_hand_rolled_memo():
             offenders.append(f"{fname}: sparkContext.applicationId")
         offenders += [f"{fname}: def {m}" for m in re.findall(r"def (clear_\w*_cache)\b", src)]
     assert not offenders, offenders
+
+
+def _jobs_of(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return its result and
+    the ids of the jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        value = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return value, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_repeat_runs_no_spark_job(spark, tmp_path):
+    """The first load infers the schema with a Spark job; a repeat load
+    in the same session reads with the memoized schema and runs none."""
+    d = _copy_fixture(tmp_path, ("orders",))
+    clear_shared_kernels()
+    first, cold_jobs = _jobs_of(spark, "schema-memo-miss", lambda: load_table(spark, d, "orders"))
+    again, warm_jobs = _jobs_of(spark, "schema-memo-hit", lambda: load_table(spark, d, "orders"))
+    assert cold_jobs, "schema inference runs a job, or this test measures nothing"
+    assert warm_jobs == [], "a repeat load must not infer the schema again"
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_load_table_sees_a_rewritten_table(spark, tmp_path, scheme):
+    """Rewriting a table in the same session (here: one more column)
+    changes its fingerprint, so the next load infers the new schema.  A
+    URI that os.stat cannot fingerprint is inferred on every load."""
+    d = _copy_fixture(tmp_path, ("orders",))
+    path = os.path.join(d, "orders.parquet")
+    clear_shared_kernels()
+    assert "o_extra" not in load_table(spark, scheme + d, "orders").columns
+    t = pq.read_table(path)
+    pq.write_table(t.append_column("o_extra", pa.array(range(t.num_rows), pa.int64())), path)
+    df = load_table(spark, scheme + d, "orders")
+    assert "o_extra" in df.columns
+    assert df.agg(F.sum("o_extra")).first()[0] == t.num_rows * (t.num_rows - 1) // 2
+
+
+def test_load_table_returns_a_fresh_relation_per_call(spark, tmp_path):
+    """Only the schema is memoized: two loads are separate relations, so
+    a self-join on the key resolves and matches each order to itself."""
+    d = _copy_fixture(tmp_path, ("orders",))
+    clear_shared_kernels()
+    a = load_table(spark, d, "orders")
+    b = load_table(spark, d, "orders")
+    n = pq.ParquetFile(os.path.join(d, "orders.parquet")).metadata.num_rows
+    assert a.join(b, a["o_orderkey"] == b["o_orderkey"]).count() == n
+
+
+def test_clear_shared_kernels_empties_every_memo(spark, sf_dir):
+    """clear_shared_kernels() also drops the schema memo and the
+    row-group census, so cold state stays reachable."""
+    load_table(spark, sf_dir, "orders")
+    scan_data_splits(sf_dir, "orders")
+    assert tables._SCHEMA_MEMO and tables._SPLIT_CACHE
+    clear_shared_kernels()
+    assert tables._SCHEMA_MEMO == {} and tables._SPLIT_CACHE == {}
+    assert all(not kernel.memo for kernel in SHARED_KERNELS.values())
