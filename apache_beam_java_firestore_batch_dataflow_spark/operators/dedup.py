@@ -38,10 +38,11 @@ from ..sources.tables import load_table, shared_kernel
 from .text import TOKENS_SQL, tokens_col
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+register = registrar(QUERIES, ORACLES)
 
 NUM_HASHES = 32
 BANDS = 8
@@ -51,14 +52,6 @@ SIMHASH_BITS = 32
 NGRAM_N = 5  # character n-grams
 DF_MAX = 10  # rare-gram blocking: max docs sharing a blocking gram
 JACCARD_MIN = 0.10
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

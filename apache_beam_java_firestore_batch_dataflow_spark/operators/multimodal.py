@@ -43,20 +43,13 @@ from pyspark.sql import functions as F
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+register = registrar(QUERIES, ORACLES)
 
 MODALITIES = ("image", "audio", "video")
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
 
 
 def doc_kernel(

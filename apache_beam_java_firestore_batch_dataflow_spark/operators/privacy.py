@@ -26,21 +26,14 @@ from ..functions.numeric import round_ratio, round_ratio_sql
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+register = registrar(QUERIES, ORACLES)
 
 PHONE_RE = r"[0-9]{2}-[0-9]{3}-[0-9]{3}-[0-9]{4}"
 EMAIL_RE = r"[a-z0-9]+@[a-z]+\.[a-z]+"
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
 
 
 @register(

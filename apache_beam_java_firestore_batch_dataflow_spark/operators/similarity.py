@@ -1,23 +1,36 @@
 """Similarity search over the ``embeddings`` table.
 
-Two paths, mirroring what a 100 TB vector corpus needs:
+Every kNN/ANN query here is a candidate generator feeding one local
+prune and one global per-query top-k merge (the REPOSE shape for
+distributed top-k similarity search).  Four private primitives carry
+the shared steps:
 
-* **Brute-force cosine top-k** (`q_knn_bruteforce`): the exact baseline.
-  A bounded query set (≤ ``N_QUERIES`` rows, so the broadcast side stays
-  small at any corpus size) × full corpus join; the corpus is scanned
-  once with no shuffle; per-pair math is JVM-side
-  ``zip_with``/``aggregate``.  This is the correctness oracle for any
-  ANN variant.
+* ``_query_set(v, cap, *extra)`` — the query rows (``vec_id %
+  QUERY_MOD == 0``, optionally the ``cap`` lowest ids, which keeps any
+  broadcast or collect O(1) in corpus size) projected to ``query_id,
+  q_emb, q_norm`` plus ``extra`` columns.
+* ``_top_per_query(df, k, order, rank_col)`` — the one per-query
+  ``row_number`` window (ties by ``neighbor_id``) and its ``<= k`` cut.
+* ``_nearest_cells(v, cent)`` — every vector ranked against the
+  constant-size IVF centroid set by ``(csim desc, cent_id)``; callers
+  take the cut they need (the assigned cell or the probed cells).
+* ``_knn_prune(score, ids, q_ids, k, margin)`` — the numpy per-batch
+  prune behind every exact-kNN kernel: keep each row scoring at least
+  the query's k-th largest score minus ``margin``, never a self pair.
+  ``margin`` is 0 for raw-sim ranking (the prune is then exact) and
+  ``_UNIT_MARGIN`` for rankings by the 6-dp rounded sim, whose float
+  rounding can disagree with ``F.round`` by one unit.  ``_knn_batch``
+  applies it to one batch; ``_broadcast_knn`` owns the one bounded
+  query-matrix collect and broadcast.
 
-* **Hyperplane-LSH ANN** (`q_ann_lsh`): 8 deterministic ±1 hyperplanes
-  (md5-derived, engine-portable) → 8-bit bucket signature per vector →
-  candidates = bucket collision (equi-join) → exact cosine rerank top-3.
-  At scale the bucket join replaces the n² pair space with ~n·(bucket
-  occupancy), and the signature computation is a narrow projection.
-
-Norms are precomputed once per vector (narrow), never inside the pair
-loop.  All reductions are sequential left folds cast to double, so the
-DuckDB oracles match bit-for-bit (functions/vectors.py).
+``q_knn_bruteforce`` (interpreted JVM folds over a broadcast query set)
+is the exact reference; ``q_ann_recall`` measures the LSH, IVF and PQ
+paths against it.  Pair math is JVM-side ``zip_with``/``aggregate``
+folds, numpy kernels that replay the same sequential fold
+(``_pairwise_sims``), or BLAS matmuls where the ranking is by the
+rounded sim; norms are precomputed once per vector (narrow), never
+inside the pair loop.  The folds are sequential left folds cast to
+double, so the DuckDB oracles match bit-for-bit (functions/vectors.py).
 """
 
 from __future__ import annotations
@@ -29,13 +42,14 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..functions.vectors import dot, dot_sql, hyperplane_signs, norm, norm_sql
+from ..registry import registrar
 from ..sources.tables import load_table, shared_kernel
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-from ..registry import add as _registry_add
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+register = registrar(QUERIES, ORACLES)
 
 KNN_K = 5
 ANN_K = 3
@@ -48,28 +62,17 @@ QUERY_MOD = 10  # query subset: vec_id % QUERY_MOD == 0
 # broadcast side O(1) in corpus size; raise it only with a distributed
 # (co-grouped) query path.
 N_QUERIES = 200
-# Key-packing multiplier for the numpy batch kernel: key = -sim_units * _ID_MULT
-# + vec_id.  sim_units ∈ [-1e6-1, 1e6+1], so ids < 1e12 stay exact in int64.
-_ID_MULT = 1_000_000_000_000
-# Pruning margin for the batch kernel, in 1e-6 sim UNITS (not rows): every
-# row whose float sim_units is within _UNIT_MARGIN of the batch's k-th key
-# survives to the authoritative decimal-F.round merge.  Derivation: float
-# rounding can disagree with decimal HALF_UP by at most 1 unit (only on an
-# exact 0.5e-6 boundary), so a true decimal-top-k row has float units
-# >= d_k - 1 >= (s_k - 1) - 1, where s_k is the float k-th key's units and
-# d_k >= s_k - 1 because the k best float rows each have decimal units
-# >= s_k - 1.  A unit-based margin (unlike the previous fixed "+2 rows")
-# stays correct when MANY rows tie on a boundary — e.g. duplicate vectors
-# sharing one boundary similarity all survive, however many there are.
+# Pruning margin of the rounded-order kNN kernels, in 1e-6 sim UNITS (not
+# rows): every row whose float sim units are within _UNIT_MARGIN of the
+# batch's k-th largest survives to the authoritative decimal-F.round
+# merge.  Derivation: float rounding can disagree with decimal HALF_UP by
+# at most 1 unit (only on an exact 0.5e-6 boundary), so a true
+# decimal-top-k row has float units >= d_k - 1 >= (s_k - 1) - 1, where s_k
+# is the float k-th largest units and d_k >= s_k - 1 because the k best
+# float rows each have decimal units >= s_k - 1.  A unit margin (unlike a
+# fixed number of extra rows) stays correct when MANY rows tie on a
+# boundary — duplicate vectors sharing one boundary similarity all survive.
 _UNIT_MARGIN = 2
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
 
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,6 +96,135 @@ def _vecs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def with_norm(vecs: DataFrame) -> DataFrame:
     return vecs.withColumn("vnorm", norm(F.col("embedding")))
+
+
+def _query_set(v: DataFrame, cap: int | None, *extra) -> DataFrame:
+    """The query rows of ``v`` (``vec_id % QUERY_MOD == 0``; the ``cap``
+    lowest ids when ``cap`` is set) as ``query_id, q_emb, q_norm`` plus
+    the ``extra`` columns."""
+    q = v.filter(F.col("vec_id") % QUERY_MOD == 0)
+    if cap is not None:
+        q = q.orderBy("vec_id").limit(cap)
+    return q.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("vnorm").alias("q_norm"),
+        *extra,
+    )
+
+
+def _top_per_query(
+    df: DataFrame, k: int, order: F.Column, rank_col: str = "rank"
+) -> DataFrame:
+    """``df``'s first ``k`` rows per ``query_id`` by ``order`` (ties by
+    ``neighbor_id``), numbered 1..k in ``rank_col``."""
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
+def _cand_sim() -> F.Column:
+    """Cosine of a (query, corpus vector) candidate row."""
+    return dot(F.col("q_emb"), F.col("embedding")) / (
+        F.col("q_norm") * F.col("vnorm")
+    )
+
+
+def _sim_units(sims):
+    """Sims in 1e-6 units, rounded half away from zero like ``F.round``
+    but in binary floats — a pruning key only (see ``_UNIT_MARGIN``)."""
+    import numpy as np
+
+    return np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5)
+
+
+def _knn_prune(score, ids, q_ids, k: int, margin: float):
+    """Mask [batch row, query] of the rows that can reach a query's
+    global top-``k``: score >= the query's k-th largest batch score
+    minus ``margin``, self pairs never.  A row beaten by k strictly
+    greater scores in its own batch is beaten by them globally, so with
+    ``margin`` 0 the prune is exact and every tie at the k-th value
+    survives to the final window.  A NaN score counts as ``+inf``:
+    Spark's descending order ranks NaN first, so such rows always
+    reach the window.  Any int64 id works (only equality is used)."""
+    import numpy as np
+
+    score = np.where(np.isnan(score), np.inf, score)
+    self_pair = ids[:, None] == q_ids[None, :]
+    score[self_pair] = -np.inf
+    kth = len(ids) - min(k, len(ids))
+    kth_score = np.partition(score, kth, axis=0)[kth]
+    return (score >= kth_score - margin) & ~self_pair
+
+
+def _vec_arrays(pdf):
+    """(ids, embedding matrix, norms) of a ``vec_id, embedding, vnorm``
+    pandas batch."""
+    import numpy as np
+
+    return (
+        pdf["vec_id"].to_numpy(dtype=np.int64),
+        np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]),
+        pdf["vnorm"].to_numpy(dtype=np.float64),
+    )
+
+
+def _knn_batch(ids, x, xn, q_ids, q_mat, q_norm, k: int, rounded: bool):
+    """One batch's pruned ``query_id, neighbor_id, sim`` candidates.
+
+    ``rounded``: the final window ranks by the 6-dp rounded sim, so the
+    sims are one BLAS matmul and the prune runs on rounded units with
+    ``_UNIT_MARGIN``.  Otherwise the window ranks by the raw sim, so the
+    sims replay the oracle's sequential fold bit-identically
+    (``_pairwise_sims``) and the prune is exact on them."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    if rounded:
+        sims = (x @ q_mat.T) / np.outer(xn, q_norm)  # batch × queries
+        keep = _knn_prune(_sim_units(sims), ids, q_ids, k, _UNIT_MARGIN)
+    else:
+        sims = _pairwise_sims(x, xn, q_mat, q_norm)
+        keep = _knn_prune(sims, ids, q_ids, k, 0)
+    rows, cols = np.nonzero(keep)
+    return pd.DataFrame(
+        {
+            "query_id": q_ids[cols],
+            "neighbor_id": ids[rows],
+            # Arrow-backed: Spark's pandas conversion turns a numpy NaN
+            # into NULL (which sorts last); this column keeps it NaN.
+            "sim": pd.arrays.ArrowExtensionArray(pa.array(sims[rows, cols])),
+        }
+    )
+
+
+def _broadcast_knn(spark: SparkSession, v: DataFrame, rounded: bool) -> DataFrame:
+    """Pruned kNN candidates of the capped query set over ``v``
+    (``vec_id, embedding, vnorm``): the query matrix is collected once
+    (<= ``N_QUERIES`` rows, whatever the corpus size) and broadcast, and
+    each Arrow batch of the corpus scan runs ``_knn_batch`` — one scan,
+    no shuffle, only the pruned rows leave the executors."""
+    import numpy as np
+
+    qrows = _query_set(v, N_QUERIES).collect()
+    bq = spark.sparkContext.broadcast(
+        (
+            np.array([r["query_id"] for r in qrows], dtype=np.int64),
+            np.stack([np.asarray(r["q_emb"], dtype=np.float64) for r in qrows]),
+            np.array([r["q_norm"] for r in qrows], dtype=np.float64),
+        )
+    )
+
+    def knn_batches(batches):
+        for pdf in batches:
+            if not pdf.empty:
+                yield _knn_batch(*_vec_arrays(pdf), *bq.value, KNN_K, rounded)
+
+    return v.mapInPandas(
+        knn_batches, schema="query_id long, neighbor_id long, sim double"
+    )
 
 
 _KNN_ORACLE = f"""
@@ -128,33 +260,15 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted exact dot folds parallelize on a one-row-group input.
     """
     v = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
-    q = (
-        v.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("vnorm").alias("q_norm"),
-        )
+    q = _query_set(v, N_QUERIES)
+    pairs = v.join(F.broadcast(q), F.col("query_id") != F.col("vec_id")).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), _cand_sim().alias("sim")
     )
-    pairs = v.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-    sim = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_norm") * F.col("vnorm")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        pairs.select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("sim", 6).cast("double").alias("cosine"),
-        )
+    return _top_per_query(pairs, KNN_K, F.desc("sim")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("sim", 6).cast("double").alias("cosine"),
     )
 
 
@@ -246,15 +360,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(N_PLANES)],
     )
-    q = (
-        v.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("vnorm").alias("q_norm"),
-            F.explode(probes).alias("probe"),
-        )
-    )
+    q = _query_set(v, None, F.explode(probes).alias("probe"))
     cand = (
         v.join(
             F.broadcast(q),
@@ -263,19 +369,13 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("query_id", "q_emb", "q_norm", "vec_id", "embedding", "vnorm")
         .distinct()
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _cand_sim().alias("sim"))
     )
-    sim = dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_norm") * F.col("vnorm"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("sim", 6).cast("double").alias("cosine"),
-        )
+    return _top_per_query(cand, ANN_K, F.desc("sim")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("sim", 6).cast("double").alias("cosine"),
     )
 
 
@@ -322,87 +422,15 @@ def q_knn_bruteforce_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     reorder the result; exact-duplicate vectors tie-break identically in
     both engines.
     """
-    import numpy as np
-
     v = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
-    qrows = (
-        v.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(N_QUERIES)
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-    q_norm = np.array([r["vnorm"] for r in qrows], dtype=np.float64)
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
-    k = KNN_K
-
-    def topk_per_batch(batches):
-        import pandas as pd
-
-        q_ids, q_mat, q_norm = bq.value
-        n_q = len(q_ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            xn = pdf["vnorm"].to_numpy(dtype=np.float64)
-            sims = (x @ q_mat.T) / np.outer(xn, q_norm)  # b × q
-            # composite sort key: rounded sim (1e-6 units) desc, then id asc.
-            # Rounds half-away-from-zero like F.round/DuckDB, but via binary
-            # floats — near an exact 0.5e-6 boundary the float multiply can
-            # land on the other side of the decimal-HALF_UP result, so this
-            # key is a PRUNING heuristic only; every row within _UNIT_MARGIN
-            # sim-units of the k-th batch key survives to the final merge,
-            # which re-ranks everything with F.round's decimal semantics.
-            sim_units = (
-                np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5)
-            ).astype(np.int64)
-            # |sim_units| ≤ 1e6+1, so ids up to ID_MULT keep the key exact
-            # inside int64 (~9.2e18 headroom).
-            if ids.max() >= _ID_MULT:
-                raise ValueError(
-                    f"vec_id {ids.max()} >= {_ID_MULT}; widen _ID_MULT "
-                    "or switch the batch kernel to np.lexsort"
-                )
-            key = -sim_units * _ID_MULT + ids[:, None]
-            key[ids[:, None] == q_ids[None, :]] = np.iinfo(np.int64).max  # self
-            kk = min(k, len(ids))
-            kth_key = np.partition(key, kk - 1, axis=0)[kk - 1]  # per query
-            # exact units of the k-th key: key = -s*M + id with 0 <= id < M,
-            # so floor-div recovers s even for the sentinel self rows.
-            s_kth = -(kth_key // _ID_MULT)
-            keep = (sim_units >= (s_kth - _UNIT_MARGIN)[None, :]) & (
-                key != np.iinfo(np.int64).max
-            )
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[cols],
-                    "neighbor_id": ids[rows],
-                    "sim": sims[rows, cols],
-                }
-            )
-
-    partial = v.mapInPandas(
-        topk_per_batch, schema="query_id long, neighbor_id long, sim double"
-    )
     rounded = F.round("sim", 6)
-    w = Window.partitionBy("query_id").orderBy(
-        rounded.desc(), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            rounded.cast("double").alias("cosine"),
-        )
+    return _top_per_query(
+        _broadcast_knn(spark, v, rounded=True), KNN_K, rounded.desc()
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        rounded.cast("double").alias("cosine"),
     )
 
 
@@ -454,15 +482,25 @@ def ivf_assignments(v: DataFrame, n_cells: int = IVF_C) -> DataFrame:
     100 TB it is one corpus scan with n_cells dot products per row and
     an O(n_cells) broadcast.
     """
-    cent = ivf_centroids(v, n_cells)
-    sim = dot(F.col("embedding"), F.col("c_emb")) / (F.col("vnorm") * F.col("c_norm"))
+    return (
+        _nearest_cells(v, ivf_centroids(v, n_cells))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "embedding", "vnorm", F.col("cent_id").alias("cell"))
+    )
+
+
+def _nearest_cells(v: DataFrame, cent: DataFrame, rank_col: str = "rn") -> DataFrame:
+    """Every row of ``v`` (``vec_id, embedding, vnorm`` and any carried
+    columns) paired with every centroid of ``cent`` under a broadcast,
+    with the centroid cosine ``csim`` and the centroid's per-vector rank
+    by ``(csim desc, cent_id)`` in ``rank_col``.  Callers cut the rank:
+    ``= 1`` is the assigned cell, ``<= NPROBE`` the probed cells."""
+    csim = dot(F.col("embedding"), F.col("c_emb")) / (F.col("vnorm") * F.col("c_norm"))
     w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cent_id"))
     return (
         v.join(F.broadcast(cent))
-        .select("vec_id", "embedding", "vnorm", "cent_id", sim.alias("csim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "vnorm", F.col("cent_id").alias("cell"))
+        .select(*v.columns, "cent_id", csim.alias("csim"))
+        .withColumn(rank_col, F.row_number().over(w))
     )
 
 
@@ -524,43 +562,24 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus per query."""
     v = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
     assign = ivf_assignments(v)
-
-    cent = ivf_centroids(v)
-    qsim = dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("vnorm") * F.col("c_norm")
+    # The query filter is on the window's partition key, so Spark pushes
+    # it below the ranking: only query rows pay the centroid pass.
+    ranked = _nearest_cells(v, ivf_centroids(v), "pr")
+    probes = _query_set(
+        ranked.filter(F.col("pr") <= NPROBE), None, F.col("cent_id").alias("cell")
     )
-    wq = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cent_id"))
-    probes = (
-        v.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .join(F.broadcast(cent))
-        .select("vec_id", "embedding", "vnorm", "cent_id", qsim.alias("csim"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("vnorm").alias("q_norm"),
-            F.col("cent_id").alias("cell"),
-        )
-    )
-    sim = dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_norm") * F.col("vnorm"))
     cand = (
         assign.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", "q_emb", "q_norm", "vec_id", "embedding", "vnorm")
         .distinct()
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _cand_sim().alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("sim", 6).cast("double").alias("cosine"),
-        )
+    return _top_per_query(cand, ANN_K, F.desc("sim")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("sim", 6).cast("double").alias("cosine"),
     )
 
 
@@ -1671,18 +1690,11 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_topk(scored: DataFrame) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_units"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("adc_units").cast("bigint").alias("adc_units"),
-        )
+    return _top_per_query(scored, ANN_K, F.asc("adc_units")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.col("adc_units").cast("bigint").alias("adc_units"),
     )
 
 
@@ -1843,71 +1855,23 @@ def _knn_exact_pairs_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     different, also-oracled ordering), this kernel reproduces the RAW
     float ordering bit-identically: ``_pairwise_sims`` performs the
     oracle's sequential dimension fold (same IEEE additions, same
-    order), and per-batch pruning keeps every row whose raw sim reaches
-    its batch's k-th largest VALUE per query — a row beaten by k
-    strictly-greater sims in its own batch is beaten by those k rows
-    globally, so the prune is exact and ties at the k-th value all
-    survive to the final window, which re-ranks by (raw sim desc,
-    neighbor_id) exactly like the interpreted plan.  Equality with
-    q_knn_bruteforce is asserted by
-    tests/test_round17_perf.py::test_recall_ground_truth_matches_bruteforce
-    and by q_ann_recall's own oracle (its CTE is the brute-force SQL).
+    order), and the per-batch prune is ``_knn_prune`` with margin 0 —
+    exact, every tie at the k-th value survives, and a NaN sim is kept
+    as Spark's descending order ranks it first — so the final window
+    re-ranks by (raw sim desc, neighbor_id) exactly like the interpreted
+    plan.  Equality with q_knn_bruteforce is asserted by
+    tests/test_round17_perf.py::test_recall_ground_truth_matches_bruteforce,
+    tests/test_similarity.py (with a NaN vector) and q_ann_recall's own
+    oracle (its CTE is the brute-force SQL).
     """
-    import numpy as np
-
     v = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
-    qrows = (
-        v.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(N_QUERIES)
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-    q_norm = np.array([r["vnorm"] for r in qrows], dtype=np.float64)
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
-    k = KNN_K
-
-    def exact_topk_per_batch(batches):
-        import pandas as pd
-
-        q_ids, q_mat, q_norm = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            xn = pdf["vnorm"].to_numpy(dtype=np.float64)
-            sims = _pairwise_sims(x, xn, q_mat, q_norm)  # batch × queries
-            self_mask = ids[:, None] == q_ids[None, :]
-            neg = np.where(self_mask, np.inf, -sims)  # self-pairs last
-            kk = min(k, len(ids))
-            kth = np.partition(neg, kk - 1, axis=0)[kk - 1]  # per query
-            keep = (neg <= kth[None, :]) & ~self_mask
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[cols],
-                    "neighbor_id": ids[rows],
-                    "sim": sims[rows, cols],
-                }
-            )
-
-    partial = v.mapInPandas(
-        exact_topk_per_batch, schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("sim", 6).cast("double").alias("cosine"),
-        )
+    return _top_per_query(
+        _broadcast_knn(spark, v, rounded=False), KNN_K, F.desc("sim")
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("sim", 6).cast("double").alias("cosine"),
     )
 
 
@@ -2004,13 +1968,13 @@ def q_knn_bruteforce_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks, corpus rows to ``KNN_QB`` query blocks, and each (qb, cb)
     cogroup runs one BLAS matmul over |Q|/QB x |C|/CB rows — per-task
     memory shrinks with the block grid while total flops stay the
-    inherent Q x C.  Each cogroup emits only its per-query top-K (with
-    the `_UNIT_MARGIN` float-boundary guard); the global merge window
+    inherent Q x C.  Each cogroup emits only its pruned per-query top-K
+    (``_knn_batch``, the broadcast kernel's batch step, with the
+    `_UNIT_MARGIN` float-boundary guard); the global merge window
     re-ranks the K*CB survivors per query under decimal F.round
     semantics, so the result is bit-identical to the single-node oracle.
     Nothing is collected or broadcast at any corpus or query size.
     """
-    import numpy as np
     import pandas as pd
 
     # Two independent scans: deriving both cogroup children from ONE
@@ -2028,46 +1992,16 @@ def q_knn_bruteforce_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("cb", F.explode(F.sequence(F.lit(0), F.lit(KNN_CB - 1))))
     c_repl = v2.withColumn("cb", (F.col("vec_id") % KNN_CB).cast("int")) \
         .withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(KNN_QB - 1))))
-    k = KNN_K
 
     def block_kernel(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"),
-             "neighbor_id": pd.Series(dtype="int64"),
-             "sim": pd.Series(dtype="float64")}
-        )
         if qpdf.empty or cpdf.empty:
-            return empty
-        q_ids = qpdf["vec_id"].to_numpy(dtype=np.int64)
-        q_mat = np.stack([np.asarray(e, dtype=np.float64) for e in qpdf["embedding"]])
-        q_norm = qpdf["vnorm"].to_numpy(dtype=np.float64)
-        ids = cpdf["vec_id"].to_numpy(dtype=np.int64)
-        x = np.stack([np.asarray(e, dtype=np.float64) for e in cpdf["embedding"]])
-        xn = cpdf["vnorm"].to_numpy(dtype=np.float64)
-        sims = (x @ q_mat.T) / np.outer(xn, q_norm)  # c × q
-        # identical pruning discipline to the mapInPandas batch kernel
-        # (see topk_per_batch above): rounded-unit key, per-query k-th,
-        # margin keeps every float-boundary-ambiguous row alive for the
-        # decimal merge.
-        sim_units = (np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5)).astype(
-            np.int64
-        )
-        if ids.max() >= _ID_MULT:
-            raise ValueError(
-                f"vec_id {ids.max()} >= {_ID_MULT}; widen _ID_MULT"
+            return pd.DataFrame(
+                {"query_id": pd.Series(dtype="int64"),
+                 "neighbor_id": pd.Series(dtype="int64"),
+                 "sim": pd.Series(dtype="float64")}
             )
-        key = -sim_units * _ID_MULT + ids[:, None]
-        key[ids[:, None] == q_ids[None, :]] = np.iinfo(np.int64).max  # self
-        kk = min(k, len(ids))
-        kth_key = np.partition(key, kk - 1, axis=0)[kk - 1]
-        s_kth = -(kth_key // _ID_MULT)
-        keep = (sim_units >= (s_kth - _UNIT_MARGIN)[None, :]) & (
-            key != np.iinfo(np.int64).max
-        )
-        rows, cols = np.nonzero(keep)
-        return pd.DataFrame(
-            {"query_id": q_ids[cols], "neighbor_id": ids[rows],
-             "sim": sims[rows, cols]}
+        return _knn_batch(
+            *_vec_arrays(cpdf), *_vec_arrays(qpdf), KNN_K, rounded=True
         )
 
     partial = (
@@ -2078,16 +2012,11 @@ def q_knn_bruteforce_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     rounded = F.round("sim", 6)
-    w = Window.partitionBy("query_id").orderBy(rounded.desc(), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            rounded.cast("double").alias("cosine"),
-        )
+    return _top_per_query(partial, KNN_K, rounded.desc()).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        rounded.cast("double").alias("cosine"),
     )
 
 
@@ -2180,14 +2109,9 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible on any engine.
     """
     u, scored = _pq_adc_scored(spark, sf_dir)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_units"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("srank", F.row_number().over(ws))
-        .filter(F.col("srank") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = _top_per_query(
+        scored, PQ_SHORTLIST, F.asc("adc_units"), "srank"
+    ).select("query_id", "neighbor_id")
     # r17 (VERDICT r16 item 1): the rerank-side corpus read reverts the
     # r16 `_vecs_spread` — only O(queries x PQ_SHORTLIST) rows survive
     # these keyed joins, so the per-row work after the scan is trivial
@@ -2198,6 +2122,7 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row encode work).  At any real layout the spread is a no-op,
     # so the revert changes nothing at scale.
     v = with_norm(_vecs(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
+    # Unfiltered: the keyed join with the shortlist picks the query rows.
     qv = v.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -2221,18 +2146,11 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("sim").cast("double").alias("cosine"),
-        )
+    return _top_per_query(exact, ANN_K, F.desc("sim")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.col("sim").cast("double").alias("cosine"),
     )
 
 
@@ -2389,23 +2307,15 @@ def q_ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("rank_lsh").isNotNull(), 1).otherwise(0)
         + F.when(F.col("rank_ivf").isNotNull(), 1).otherwise(0)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        fused.select(
-            "query_id",
-            "neighbor_id",
-            score.alias("score"),
-            n_lists.alias("n_lists"),
-        )
-        .withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= ANN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("fused_rank").cast("int").alias("fused_rank"),
-            F.col("n_lists").cast("int").alias("n_lists"),
-            F.round("score", 9).cast("double").alias("rrf_score"),
-        )
+    scored = fused.select(
+        "query_id", "neighbor_id", score.alias("score"), n_lists.alias("n_lists")
+    )
+    return _top_per_query(scored, ANN_K, F.desc("score"), "fused_rank").select(
+        "query_id",
+        "neighbor_id",
+        F.col("fused_rank").cast("int").alias("fused_rank"),
+        F.col("n_lists").cast("int").alias("n_lists"),
+        F.round("score", 9).cast("double").alias("rrf_score"),
     )
 
 
@@ -2656,35 +2566,15 @@ def q_ann_filtered_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = with_norm(_vecs_spread(spark, sf_dir)).select(
         "vec_id", "embedding", "label", "vnorm"
     )
-    cent = ivf_centroids(v.select("vec_id", "embedding", "vnorm"))
-    csim = dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("vnorm") * F.col("c_norm")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("csim"), F.asc("cent_id")
-    )
-    scored = (
-        v.join(F.broadcast(cent))
-        .select("vec_id", "embedding", "label", "vnorm", "cent_id", csim.alias("csim"))
-        .withColumn("rn", F.row_number().over(w_assign))
-    )
+    scored = _nearest_cells(v, ivf_centroids(v.select("vec_id", "embedding", "vnorm")))
     assign = scored.filter(F.col("rn") == 1).select(
         "vec_id", "embedding", "label", "vnorm", F.col("cent_id").alias("cell")
     )
-    probes = (
-        scored.filter(
-            (F.col("rn") <= NPROBE) & (F.col("vec_id") % QUERY_MOD == 0)
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("label").alias("q_label"),
-            F.col("vnorm").alias("q_norm"),
-            F.col("cent_id").alias("cell"),
-        )
-    )
-    sim = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_norm") * F.col("vnorm")
+    probes = _query_set(
+        scored.filter(F.col("rn") <= NPROBE),
+        None,
+        F.col("label").alias("q_label"),
+        F.col("cent_id").alias("cell"),
     )
     cand = (
         assign.join(
@@ -2695,20 +2585,13 @@ def q_ann_filtered_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", "q_emb", "q_norm", "vec_id", "embedding", "vnorm")
         .distinct()
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _cand_sim().alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("sim", 6).cast("double").alias("cosine"),
-        )
+    return _top_per_query(cand, ANN_K, F.desc("sim")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("sim", 6).cast("double").alias("cosine"),
     )
 
 
@@ -2800,17 +2683,11 @@ def q_ann_hamming_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer distances make ties exact; (ham, neighbor_id) ordering
     pins them.  Recall quality is measured, not assumed — the same
     discipline as q_ann_recall (see test_llm_ops floors)."""
-    pairs = _hamming_pairs(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.asc("ham"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HAM_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("ham").cast("int").alias("hamming"),
-        )
+    return _top_per_query(_hamming_pairs(spark, sf_dir), HAM_K, F.asc("ham")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.col("ham").cast("int").alias("hamming"),
     )
 
 
@@ -2929,46 +2806,25 @@ def q_ann_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the embedding scan for neighbor vectors, and query
     vectors (bounded) broadcast.  Exact integer distances and
     (sim desc, neighbor_id) ordering pin every tie."""
-    short_w = Window.partitionBy("query_id").orderBy(
-        F.asc("ham"), F.asc("neighbor_id")
-    )
-    short = (
-        _hamming_pairs(spark, sf_dir)
-        .withColumn("srank", F.row_number().over(short_w))
-        .filter(F.col("srank") <= HAM_SHORTLIST)
-        .select("query_id", "neighbor_id", "ham")
-    )
+    short = _top_per_query(
+        _hamming_pairs(spark, sf_dir), HAM_SHORTLIST, F.asc("ham"), "srank"
+    ).select("query_id", "neighbor_id", "ham")
     # r17: rerank-side corpus read un-spread (the q_ann_pq_rerank
     # rationale — only O(queries x HAM_SHORTLIST) rows survive the
     # broadcast joins, so the spread's exchange was pure task overhead
     # on this path; no-op at scale either way).
     e = with_norm(_vecs(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
-    qe = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("vnorm").alias("q_norm"),
-    )
     scored = (
         e.join(F.broadcast(short), e.vec_id == short.neighbor_id)
-        .join(F.broadcast(qe), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "ham",
-            (dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_norm") * F.col("vnorm"))).alias("sim"),
-        )
+        .join(F.broadcast(_query_set(e, None)), "query_id")
+        .select("query_id", "neighbor_id", "ham", _cand_sim().alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HAM_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("sim", 9).cast("double").alias("cosine"),
-            F.col("ham").cast("int").alias("hamming"),
-        )
+    return _top_per_query(scored, HAM_K, F.desc("sim")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("sim", 9).cast("double").alias("cosine"),
+        F.col("ham").cast("int").alias("hamming"),
     )
 
 
@@ -3261,6 +3117,7 @@ def q_ann_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeatedly in one session must clear caches between calls (bench
     and the pytest atomic-schema sweep both ``spark.catalog.clearCache()``)."""
     v = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
+    # Keyed by ``qid`` (every greedy round joins on it), so projected by hand.
     q = (
         v.filter(F.col("vec_id") % QUERY_MOD == 0)
         .orderBy("vec_id")
@@ -3430,17 +3287,7 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
     corpus = v.filter(F.col("vec_id") % IVF_BATCH_MOD != IVF_BATCH_REM)
     batch = v.filter(F.col("vec_id") % IVF_BATCH_MOD == IVF_BATCH_REM)
-    cent = ivf_centroids(corpus)
-    csim = dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("vnorm") * F.col("c_norm")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cent_id"))
-    ranked = (
-        batch.join(F.broadcast(cent))
-        .select("vec_id", "cent_id", csim.alias("csim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-    )
+    ranked = _nearest_cells(batch, ivf_centroids(corpus)).filter(F.col("rn") <= 2)
     return ranked.groupBy("vec_id").agg(
         F.max(F.when(F.col("rn") == 1, F.col("cent_id")))
         .cast("bigint")
@@ -3964,44 +3811,25 @@ def q_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = with_norm(_vecs_spread(spark, sf_dir)).select(
         "vec_id", "embedding", "vnorm", "label"
     )
-    q = (
-        v.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("query_label"),
-            F.col("embedding").alias("q_emb"),
-            F.col("vnorm").alias("q_norm"),
-        )
-    )
+    q = _query_set(v, N_QUERIES, F.col("label").alias("query_label"))
     pairs = v.join(
         F.broadcast(q),
         (F.col("query_id") != F.col("vec_id"))
         & (F.col("query_label") != F.col("label")),
+    ).select(
+        "query_id",
+        F.col("query_label").cast("int").alias("query_label"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").cast("int").alias("neighbor_label"),
+        _cand_sim().alias("sim"),
     )
-    sim = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_norm") * F.col("vnorm")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        pairs.select(
-            "query_id",
-            F.col("query_label").cast("int").alias("query_label"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").cast("int").alias("neighbor_label"),
-            sim.alias("sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("sim", 6).cast("double").alias("cosine"),
-        )
+    return _top_per_query(pairs, KNN_K, F.desc("sim")).select(
+        "query_id",
+        "query_label",
+        "neighbor_id",
+        "neighbor_label",
+        F.col("rank").cast("int").alias("rank"),
+        F.round("sim", 6).cast("double").alias("cosine"),
     )
 
 

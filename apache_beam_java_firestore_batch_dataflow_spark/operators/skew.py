@@ -29,20 +29,13 @@ from ..functions.numeric import stable_sum, stable_sum_sql
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+register = registrar(QUERIES, ORACLES)
 
 N_SALT = 8
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
 
 
 def salted_join(

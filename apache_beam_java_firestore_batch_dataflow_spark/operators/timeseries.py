@@ -24,18 +24,11 @@ from ..functions.timeutil import epoch_us
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
+register = registrar(QUERIES, ORACLES)
 
 
 def asof_join(

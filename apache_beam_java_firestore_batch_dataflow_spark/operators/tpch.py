@@ -44,18 +44,11 @@ from ..functions.numeric import (
 from ..sources.tables import load_table
 from .relational import QueryFn
 
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
+register = registrar(QUERIES, ORACLES)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

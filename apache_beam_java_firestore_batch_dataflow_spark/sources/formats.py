@@ -84,10 +84,11 @@ import os
 import tempfile
 from collections.abc import Callable
 
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+_register = registrar(QUERIES, ORACLES)
 
 
 _SCRATCH_ROOT: str | None = None
@@ -106,14 +107,6 @@ def _scratch_path(tag: str, sf_dir: str) -> str:
         _SCRATCH_ROOT = tempfile.mkdtemp(prefix="spark-graft-fmt-")
     sf = os.path.basename(sf_dir.rstrip("/")) or "sf"
     return os.path.join(_SCRATCH_ROOT, f"{tag}-{sf}")
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
 
 
 _SUPPLIER_ORACLE = (

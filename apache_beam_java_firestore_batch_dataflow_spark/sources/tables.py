@@ -76,6 +76,10 @@ def shared_kernel(name: str, tables: tuple[str, ...]):
       ``spark.catalog.clearCache()`` does not release — so a same-session
       rewrite of ``tables`` must change the fingerprint, miss and
       rebuild rather than serve stale blocks;
+    * a fixture ``os.stat`` cannot see (a ``file://`` or object-store
+      URI: empty fingerprint) has nothing to notice a rewrite by, so its
+      kernel is built on every call and never memoized — the
+      ``load_table`` schema-memo rule;
     * on a miss, entries of other sessions and this sf_dir's entries
       with a stale fingerprint are evicted, then the oldest entries until
       fewer than ``SHARED_KERNEL_CAP`` remain;
@@ -96,6 +100,8 @@ def shared_kernel(name: str, tables: tuple[str, ...]):
             bound.apply_defaults()
             app = spark.sparkContext.applicationId
             fp = fixture_fingerprint(sf_dir, tables)
+            if fp == "[]":
+                return build(*bound.args, **bound.kwargs)
             key = (app, sf_dir, fp, *list(bound.arguments.values())[2:])
             hit = memo.get(key)
             if hit is not None:

@@ -6,7 +6,8 @@ tokenized with the reference tokenizer, counted per (event-time window,
 word), and upserted through the SAME chunked ≤500-writes-per-commit
 Firestore path the batch pipeline uses (``sinks.firestore``;
 FirestoreUpdateDoFn.java:17-103 is the reference's bundle-buffered
-equivalent).
+equivalent): ``streaming.sink.stream_word_counts_writer(counted, ...,
+to_item=windowed_count_item)``.
 
 Delivery contract (carried over from the reference, SURVEY.md §2):
 at-least-once micro-batch replay + idempotent upserts keyed by
@@ -22,14 +23,10 @@ while each commit stays under the 500-write API ceiling.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.text import tokens_col
-from ..sinks.firestore import FirestoreSinkConfig, write_word_counts_batch
 
 
 def kafka_windowed_wordcount(
@@ -58,7 +55,7 @@ def kafka_windowed_wordcount(
     )
 
 
-def _windowed_count_item(row) -> tuple[str, dict]:
+def windowed_count_item(row) -> tuple[str, dict]:
     # Doc id = "window_start|word": the idempotence key that makes
     # micro-batch replay converge instead of duplicate.
     return (
@@ -68,26 +65,4 @@ def _windowed_count_item(row) -> tuple[str, dict]:
             "word": row["word"],
             "count": int(row["count"]),
         },
-    )
-
-
-def stream_windowed_counts_writer(
-    counted: DataFrame,
-    config: FirestoreSinkConfig,
-    client_factory: Callable[[], object],
-    checkpoint_dir: str,
-) -> DataStreamWriter:
-    """Build (don't start) the foreachBatch writer for the windowed
-    count — each trigger's changed rows go through the chunked batch
-    path with one client per partition."""
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_word_counts_batch(
-            batch_df, config, client_factory, to_item=_windowed_count_item
-        )
-
-    return (
-        counted.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle_batch)
     )

@@ -19,22 +19,30 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..sinks.firestore import FirestoreSinkConfig, write_word_counts_batch
+from ..sinks.firestore import (
+    FirestoreSinkConfig,
+    _word_count_item,
+    write_word_counts_batch,
+)
 
 
 def stream_word_counts_writer(
-    word_counts: DataFrame,
+    counts: DataFrame,
     config: FirestoreSinkConfig,
     client_factory: Callable[[], object],
     checkpoint_dir: str,
+    to_item: Callable[[object], tuple[str, dict]] = _word_count_item,
 ) -> DataStreamWriter:
-    """Build (don't start) a foreachBatch writer for a streaming word count."""
+    """Build (don't start) the foreachBatch writer for a streaming count:
+    each trigger's changed rows go through the chunked batch path with
+    one client per partition; ``to_item`` maps a row to its
+    ``(doc_id, fields)`` upsert (default: the word-count document)."""
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_word_counts_batch(batch_df, config, client_factory)
+        write_word_counts_batch(batch_df, config, client_factory, to_item=to_item)
 
     return (
-        word_counts.writeStream.outputMode("update")
+        counts.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(handle_batch)
     )

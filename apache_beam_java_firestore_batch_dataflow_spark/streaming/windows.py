@@ -27,10 +27,11 @@ from pyspark.sql import functions as F
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-from ..registry import add as _registry_add
+from ..registry import registrar
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+register = registrar(QUERIES, ORACLES)
 
 TUMBLE = "1 hour"
 SLIDE_DUR = "1 hour"
@@ -39,14 +40,6 @@ SESSION_GAP = "15 minutes"
 TUMBLE_S = 3600
 SLIDE_STEP_S = 900
 SESSION_GAP_S = 900
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _registry_add(QUERIES, ORACLES, name, fn, oracle)
-        return fn
-
-    return deco
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,6 @@
 """The session memos of ``sources/tables.py``.  ``shared_kernel``: one
-contract test per registered kernel, the per-kernel entry cap, each
+contract test per registered kernel, the per-kernel entry cap, a
+same-session fixture rewrite (also under a ``file://`` URI), each
 kernel's result against its un-memoized plan, and a guard that keeps
 hand-rolled memos out of the operator modules.  ``load_table``'s schema
 memo: a repeat load runs no job, a rewrite is seen, and every load is a
@@ -117,6 +118,27 @@ def test_shared_kernel_entries_capped_per_kernel(spark, tmp_path):
         assert len(kernel.memo) <= SHARED_KERNEL_CAP
         assert [k[1] for k in kernel.memo] == dirs[-SHARED_KERNEL_CAP:]
         assert kernel(spark, dirs[-1]) is built[-1]
+    finally:
+        clear_shared_kernels()
+        spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_shared_kernel_sees_a_rewritten_fixture(spark, tmp_path, scheme):
+    """Rewriting a kernel's table in the same session is seen by its next
+    call.  A URI that os.stat cannot fingerprint is never memoized, the
+    load_table schema-memo rule."""
+    kernel = SHARED_KERNELS["copurchase_adj"]
+    d = _copy_fixture(tmp_path, ("orders", "lineitem"))
+    path = os.path.join(d, "lineitem.parquet")
+    clear_shared_kernels()
+    try:
+        before = _content(kernel(spark, scheme + d))
+        assert len(kernel.memo) == (0 if scheme else 1)
+        t = pq.read_table(path)
+        pq.write_table(t.slice(0, t.num_rows // 2), path)
+        after = _content(kernel(spark, scheme + d))
+        assert after != before and set(after) <= set(before)
     finally:
         clear_shared_kernels()
         spark.catalog.clearCache()

@@ -192,7 +192,7 @@ def test_kafka_to_firestore_end_to_end(spark, tmp_path):
     )
     from apache_beam_java_firestore_batch_dataflow_spark.streaming.pipeline import (
         kafka_windowed_wordcount,
-        stream_windowed_counts_writer,
+        windowed_count_item,
     )
 
     indir = tmp_path / "msgs"
@@ -225,11 +225,12 @@ def test_kafka_to_firestore_end_to_end(spark, tmp_path):
         stream = kafka_like_stream(
             spark, str(indir), topic="wc", max_files_per_trigger=1
         )
-        writer = stream_windowed_counts_writer(
+        writer = stream_word_counts_writer(
             kafka_windowed_wordcount(stream),
             config,
             fake_client_factory(spool),
             ckpt,
+            to_item=windowed_count_item,
         )
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination(120)
