@@ -31,6 +31,18 @@ from pyspark.sql import functions as F
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..functions.timeutil import epoch_us
 from ..sources.tables import load_table, shared_kernel, spread_scan
+from .text import (
+    _LANGID_ORACLE,
+    TOKENS_SQL,
+    langid_pred_col,
+    quality_bp_expr,
+    quality_bp_sql,
+    quality_raw_features,
+    quality_raw_features_sql,
+    row_pairs,
+    tokens_col,
+    word_grams,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 from ..registry import registrar
@@ -314,26 +326,19 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, the final per-doc sizes) sit directly on the tokenize +
     gram + array_distinct projection with NO exchange between — so
     ReusedExchange cannot share it and each consumer re-ran the
-    corpus's heaviest string kernel.  The r12 persist calibration's
-    "work an exchange cannot carry" case; A/B at sf0.1 (r15, min-of-3,
-    quiet host, clearCache per rep): 9.7 s -> 1.3 s.  Released by the
+    corpus's heaviest string kernel: work an exchange cannot carry.
+    A/B at sf0.1 (min-of-3, quiet host, clearCache per rep): 9.7 s ->
+    1.3 s.  Released by the
     caller's clearCache (the bench/oracle harness pattern).  At the
     100 TB design point MEMORY_AND_DISK materializes the gram arrays
     once instead of recomputing them threefold — if storage is the
     binding constraint, drop the persist and accept the recompute.
     """
-    from .text import tokens_col
-
     docs = load_table(spark, sf_dir, "documents")
     tokd = docs.select("doc_id", tokens_col(F.col("text")).alias("t"))
-    grams = F.when(
-        F.size("t") >= DECONTAM_K,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - (DECONTAM_K - 1)),
-            lambda i: F.concat_ws(" ", F.slice("t", i, DECONTAM_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    gsets = tokd.select("doc_id", F.array_distinct(grams).alias("gs")).persist()
+    gsets = tokd.select(
+        "doc_id", F.array_distinct(word_grams("t", DECONTAM_K)).alias("gs")
+    ).persist()
     eval_grams = (
         gsets.filter(F.col("doc_id") % 10 == 7)
         .select(F.explode("gs").alias("g"))
@@ -450,8 +455,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Generate`` over the scan), slice and re-join tokens in-row.  Zero
     exchanges at any corpus size; output rows ≈ input tokens / stride.
     """
-    from .text import tokens_col
-
     docs = load_table(spark, sf_dir, "documents")
     tokd = docs.select("doc_id", tokens_col(F.col("text")).alias("t")).filter(
         F.size("t") > 0
@@ -1379,45 +1382,31 @@ def q_mix_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     to find mirrored/syndicated sources (high containment) before
     weighting the mixture.
 
-    Scale shape: gram sets build narrowly in-row; the distinct
-    (source, gram) census is ONE combiner-friendly distinct (rows ~
-    corpus tokens, the same envelope as the decontamination pass); the
-    self-join on the gram string fans out C(sources_with_gram, 2) <=
-    C(|sources|, 2) per gram — bounded by the SOURCE count (a few
+    Scale shape: grams build narrowly in-row; each gram's source SET is
+    ONE collect_set aggregation over the gram stream (rows ~ corpus
+    tokens, the same envelope as the decontamination pass); source
+    pairs are generated in-row from that sorted set, C(sources_with_gram,
+    2) <= C(|sources|, 2) per gram — bounded by the SOURCE count (a few
     hundred in practice), never by corpus rows.  Output is the
     O(|sources|^2) sparse grid (pairs sharing >= 1 gram).
     """
-    from .text import tokens_col
-
-    # r17: the tokenize + 5-gram build runs inside the scan stage —
-    # spread the narrow projection when the scan is unsplittable
-    # (no-op at scale; doc_id is the high-cardinality spread key).
+    # The tokenize + 5-gram build runs inside the scan stage, so the
+    # narrow projection is spread when the scan is unsplittable (no-op
+    # at scale; doc_id is the high-cardinality spread key).
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"),
         spark, sf_dir, "documents", key="doc_id",
     )
     tokd = docs.select("source", tokens_col(F.col("text")).alias("t"))
-    grams = F.when(
-        F.size("t") >= DECONTAM_K,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - (DECONTAM_K - 1)),
-            lambda i: F.concat_ws(" ", F.slice("t", i, DECONTAM_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # r17 (the q_assoc_pairs_lift basket shape): per-gram source SETS
-    # come from ONE collect_set aggregation over the raw gram stream
-    # (dedup inside the agg — the old corpus-wide distinct exchange
-    # disappears), and source pairs are generated IN-ROW from each
-    # gram's sorted source list instead of a gram self-join — fan-out
-    # still C(sources_with_gram, 2) per gram, but with one exchange of
-    # the gram stream total where the old plan paid distinct + two
-    # join-side shuffles.  Value-identical (oracle-proven both SFs);
-    # isolated: med 1.38 -> 1.23 s, min 1.11 -> 1.05 s (with the scan
-    # spread below) — the residual is the gram-census exchange itself
-    # (5-grams are nearly unique, so the basket frame is ~the gram
-    # stream; the structural win is 3 gram-stream exchanges -> 2).
+    # Baskets (the q_assoc_pairs_lift shape): dedup happens inside the
+    # collect_set agg and pairs are generated in-row, so the gram stream
+    # crosses one exchange where a distinct + gram self-join pays three.
+    # Isolated at sf0.1: med 1.38 -> 1.23 s, min 1.11 -> 1.05 s (with
+    # the scan spread above); the residual is the gram-census exchange
+    # itself (5-grams are nearly unique, so the basket frame is ~the
+    # gram stream).
     baskets = (
-        tokd.select("source", F.explode(grams).alias("g"))
+        tokd.select("source", F.explode(word_grams("t", DECONTAM_K)).alias("g"))
         .groupBy("g")
         .agg(F.array_sort(F.collect_set("source")).alias("ss"))
         .persist()  # two consumers: sizes + the pair explosion;
@@ -1430,17 +1419,7 @@ def q_mix_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_grams"))
     )
     pair_arrays = baskets.select(
-        F.flatten(
-            F.transform(
-                F.col("ss"),
-                lambda a, i: F.transform(
-                    F.slice(F.col("ss"), i + 2, F.size("ss")),
-                    lambda b: F.struct(
-                        a.alias("source_a"), b.alias("source_b")
-                    ),
-                ),
-            )
-        ).alias("ps")
+        row_pairs("ss", "source_a", "source_b", F.size("ss")).alias("ps")
     )
     shared = (
         pair_arrays.select(F.explode("ps").alias("p"))
@@ -1537,11 +1516,9 @@ def q_mix_unigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     C(sources_with_word, 2)-ish, bounded by |sources|², never corpus
     rows; totals and the vocab size ride one-row/dimension broadcasts
     onto the O(|sources|²) grid."""
-    from .text import tokens_col
-
-    # r17: tokenize + explode + the (source, w) partial census ran
-    # inside the ONE-task scan stage; spread the narrow projection
-    # (no-op at any real layout).
+    # Tokenize + explode + the (source, w) partial census run inside the
+    # scan stage, so the narrow projection is spread when the scan is a
+    # single task (no-op at any real layout).
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"),
         spark, sf_dir, "documents", key="doc_id",
@@ -1672,12 +1649,10 @@ def q_mix_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (doc, word), never pairwise; totals are a one-row broadcast;
     the final top-{DSIR_TOP} is TakeOrderedAndProject, O(k) per
     partition.  Nothing exceeds O(corpus tokens)."""
-    from .text import tokens_col
-
     docs = spread_scan(
         load_table(spark, sf_dir, "documents"), spark, sf_dir,
         "documents", key="doc_id",
-    )  # r16: word-census partials run inside the (unsplittable) scan
+    )  # the word-census partials run inside the (unsplittable) scan
     toks = docs.select(
         "doc_id", "source", F.explode(tokens_col(F.col("text"))).alias("w")
     )
@@ -1948,8 +1923,6 @@ CONTAM_BLOOM_K = 5
 def _contam_grams_sql() -> str:
     """CTE body: per-document distinct {CONTAM_K}-token grams plus split
     membership (DuckDB twin of the in-row gram build below)."""
-    from .text import TOKENS_SQL
-
     return f"""
       SELECT doc_id, source, split,
              unnest(list_distinct(
@@ -1999,8 +1972,6 @@ def contaminated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _contam_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, split, g)``: each document's distinct {CONTAM_K}-grams."""
-    from .text import tokens_col
-
     # The 13-gram build + Bloom probe are fused into the scan stage;
     # spread the narrow (doc_id, text) projection when the scan is
     # unsplittable (no-op at scale).
@@ -2013,16 +1984,8 @@ def _contam_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_col(F.col("doc_id")).alias("split"),
         tokens_col(F.col("text")).alias("t"),
     )
-    gram_arr = F.when(
-        F.size("t") >= CONTAM_K,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - (CONTAM_K - 1)),
-            lambda i: F.concat_ws(" ", F.slice("t", i, CONTAM_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return tokd.select(
-        "doc_id", "split", F.explode(F.array_distinct(gram_arr)).alias("g")
-    )
+    grams = F.array_distinct(word_grams("t", CONTAM_K))
+    return tokd.select("doc_id", "split", F.explode(grams).alias("g"))
 
 
 @shared_kernel("contamination_eval_grams", ("documents",))
@@ -2170,7 +2133,6 @@ def _funnel_oracle() -> str:
     # assembled in a function so the (large) minhash CTE is composed
     # exactly once, at registration time
     from .dedup import _MINHASH_ORACLE
-    from .text import _LANGID_ORACLE, quality_bp_sql, quality_raw_features_sql
 
     stage_selects = "\n    UNION ALL\n".join(
         f"""    SELECT source, '{name}' AS stage, CAST({rank} AS INT) AS stage_rank,
@@ -2255,11 +2217,6 @@ def q_curation_funnel_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     the waterfall is monotone per source on both engines.
     """
     from .dedup import minhash_pairs
-    from .text import (
-        langid_pred_col,
-        quality_bp_expr,
-        quality_raw_features,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     n_tokens, stop_hits, n_punct = quality_raw_features()
@@ -2490,8 +2447,6 @@ _PACK_TOKENS_ORACLE = f"""
 
 
 def _pack_tokens_oracle() -> str:
-    from .text import TOKENS_SQL
-
     return _PACK_TOKENS_ORACLE.format(tokens=TOKENS_SQL)
 
 
@@ -2518,8 +2473,6 @@ def q_pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     Heaps-law prefix windows): sources are the parallelism unit; a
     pathological single-source corpus would pre-shard the stream.
     """
-    from .text import tokens_col
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",

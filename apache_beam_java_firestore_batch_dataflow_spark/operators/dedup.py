@@ -35,7 +35,16 @@ from ..functions.hashing import (
 )
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..sources.tables import load_table, shared_kernel
-from .text import TOKENS_SQL, tokens_col
+from .text import (
+    TOKENS_SQL,
+    _winnow_arrays_sql,
+    char_gram_set,
+    normalized_text,
+    row_pairs,
+    tokens_col,
+    winnow_fingerprint_arrays,
+    word_grams,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 from ..registry import registrar
@@ -80,9 +89,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (near-unique-key) reduce side.
     """
     docs = _docs(spark, sf_dir)
-    normalized = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return (
-        docs.select("doc_id", F.md5(normalized).alias("fp"))
+        docs.select("doc_id", F.md5(normalized_text(F.col("text"))).alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
         .select("doc_id", "n_copies")
@@ -97,23 +105,13 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shingle_sets_df(docs: DataFrame) -> DataFrame:
     """(doc_id, shs): the DISTINCT SHINGLE_K-token shingle set per doc,
     as one array row — computed narrowly (``array_distinct`` inside the
-    row), so building the sets costs ZERO shuffles at any scale.
-
-    The token array is materialized by a projection *before* the shingle
-    lambda: expressions referenced inside a higher-order-function lambda
-    are re-evaluated per element, so shingling directly off the tokenize
-    expression costs O(positions) full tokenizations per row (~9x slower,
-    measured at sf0.1).
-    """
+    row), so building the sets costs ZERO shuffles at any scale.  The
+    token array is projected before the shingle lambda, as the gram
+    primitives in ``text`` require (~9x slower otherwise)."""
     tokd = docs.select("doc_id", tokens_col(F.col("text")).alias("t"))
-    shingle_arr = F.when(
-        F.size("t") >= SHINGLE_K,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - (SHINGLE_K - 1)),
-            lambda i: F.concat_ws(" ", F.slice("t", i, SHINGLE_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return tokd.select("doc_id", F.array_distinct(shingle_arr).alias("shs"))
+    return tokd.select(
+        "doc_id", F.array_distinct(word_grams("t", SHINGLE_K)).alias("shs")
+    )
 
 
 def shingles_df(docs: DataFrame) -> DataFrame:
@@ -794,14 +792,13 @@ def _ngram_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import spread_scan
 
     docs = _docs(spark, sf_dir)
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    # r16: the gram build below is a heavy per-row kernel fused into the
-    # scan stage; spread the narrow (doc_id, norm) projection when the
+    # The gram build below is a heavy per-row kernel fused into the scan
+    # stage; the narrow (doc_id, norm) projection is spread when the
     # scan is unsplittable (no-op at scale), so the gram build AND the
     # persisted gset blocks (three downstream consumers) are parallel.
     d = spread_scan(
-        docs.select("doc_id", norm.alias("norm")), spark, sf_dir,
-        "documents", key="doc_id",
+        docs.select("doc_id", normalized_text(F.col("text")).alias("norm")),
+        spark, sf_dir, "documents", key="doc_id",
     )
     # Per-doc DISTINCT gram sets computed NARROWLY (array_distinct inside
     # the row, before any explode): the set semantics the pipeline needs,
@@ -809,34 +806,17 @@ def _ngram_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full (doc, gram) stream (~500 rows/doc), which profiling showed was
     # the pipeline's dominant cost.  Persisted: three consumers (postings
     # explode + both verification join sides).
-    gram_arr = F.when(
-        F.length("norm") >= NGRAM_N,
-        F.expr(
-            f"array_distinct(transform(sequence(1, length(norm) - {NGRAM_N - 1}), "
-            f"i -> substring(norm, i, {NGRAM_N})))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    gsets = d.select("doc_id", gram_arr.alias("gs")).persist()
+    gsets = d.select("doc_id", char_gram_set("norm", NGRAM_N).alias("gs")).persist()
     grams = gsets.select("doc_id", F.explode("gs").alias("g"))
     # Candidate pairs straight from the rare-gram postings lists: a gram
     # kept by the DF filter has 2..DF_MAX docs, so its pair set is at most
     # C(DF_MAX, 2) — emit them from one groupBy(collect_list) instead of a
     # postings self-join (one shuffle of the gram set, not three).
-    docs_arr = F.array_sort(F.collect_list("doc_id"))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda d, i: F.transform(
-                F.slice(F.col("docs"), i + 2, DF_MAX),
-                lambda e: F.struct(d.alias("doc_a"), e.alias("doc_b")),
-            ),
-        )
-    )
     cand = (
         grams.groupBy("g")
-        .agg(docs_arr.alias("docs"))
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .filter((F.size("docs") >= 2) & (F.size("docs") <= DF_MAX))
-        .select(F.explode(pair_structs).alias("p"))
+        .select(F.explode(row_pairs("docs", "doc_a", "doc_b", DF_MAX)).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )
@@ -1068,8 +1048,6 @@ WINNOW_SIM_MIN = 0.2  # fingerprint-set Jaccard threshold
 
 
 def _winnow_pairs_oracle() -> str:
-    from .text import _winnow_arrays_sql
-
     return f"""
     WITH w AS ({_winnow_arrays_sql()}),
     fp AS (SELECT doc_id, unnest(fps) AS f FROM w),
@@ -1113,8 +1091,6 @@ def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df > FP_DF_MAX) cannot generate candidates, which is what kills
     the head-term pair explosion on web-scale corpora.
     """
-    from .text import winnow_fingerprint_arrays
-
     w = winnow_fingerprint_arrays(spark, sf_dir).persist()
     fp = w.select("doc_id", F.explode("fps").alias("f"))
     rare = (
@@ -1124,7 +1100,7 @@ def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("f")
     )
     # not persisted: the winnow arrays above are already cached and the
-    # posting rebuild rides a reused exchange (A/B r12: persist 4.93 s
+    # posting rebuild rides a reused exchange (A/B: persist 4.93 s
     # vs 4.27 s without — materializing the postings costs more)
     rare_fp = fp.join(rare, "f")
     a = rare_fp.alias("a")
@@ -1792,15 +1768,10 @@ def q_dedup_paragraph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice("t", F.col("start"), PARA_TOKENS).alias("ck"),
         )
     )
-    sh_arr = F.when(
-        F.size("ck") >= SHINGLE_K,
-        F.transform(
-            F.sequence(F.lit(1), F.size("ck") - (SHINGLE_K - 1)),
-            lambda i: F.concat_ws(" ", F.slice("ck", i, SHINGLE_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     psh = (
-        paras.select("cid", F.explode(F.array_distinct(sh_arr)).alias("sh"))
+        paras.select(
+            "cid", F.explode(F.array_distinct(word_grams("ck", SHINGLE_K))).alias("sh")
+        )
         .persist()
     )
     sigs = minhash_signatures_from(

@@ -37,6 +37,7 @@ from ..functions.numeric import (
     stable_sum_sql,
 )
 from ..sources.tables import load_table
+from .text import row_pairs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -2113,20 +2114,16 @@ def q_assoc_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw (order × part) stream is never self-joined in the engine."""
     # baskets feeds the order count, the pair explosion AND the item
     # census.  Deliberately NOT persisted: ReusedExchange already shares
-    # the basket shuffle across the consumers, and an A/B (r12,
-    # min-of-3 at sf0.1) measured persist at 3.94 s vs 2.08 s without —
+    # the basket shuffle across the consumers, and an A/B (min-of-3 at
+    # sf0.1) measured persist at 3.94 s vs 2.08 s without —
     # materializing the wide basket arrays costs more than the reused
     # exchange saves.
-    # r17 (VERDICT r16 item 5): two structural fixes, value-identical
-    # (oracle-proven both SFs).  (1) The raw (l_orderkey, l_partkey)
-    # projection rides the unsplittable-input spread — the partial
-    # distinct/collect ran inside the ONE-task scan stage.  (2) The
-    # per-order dedup is collect_set INSIDE the basket agg instead of a
-    # corpus-wide distinct BEFORE it — one exchange of the raw pairs
-    # replaces distinct's exchange + the basket re-shuffle, and the item
-    # census (orders containing a part = per-order-distinct by
-    # construction) now explodes the basket arrays instead of re-reading
-    # the distinct frame.  3 shuffles of the fact stream -> 2.
+    # The raw (l_orderkey, l_partkey) projection rides the
+    # unsplittable-input spread, so the partial collect does not run
+    # inside a ONE-task scan stage.  The per-order dedup is collect_set
+    # INSIDE the basket agg rather than a corpus-wide distinct before
+    # it, and the item census (orders containing a part) explodes the
+    # basket arrays: 2 shuffles of the fact stream, not 3.
     # Decomposed (isolated min-of-3): op-distinct 0.56 s, +baskets
     # 0.29 s, +pair explode/agg 0.60 s — the pair stage is the
     # intrinsic cost (in-row C(basket,2) generation, bounded by the
@@ -2146,15 +2143,7 @@ def q_assoc_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     pair_arrays = baskets.select(
-        F.flatten(
-            F.transform(
-                F.col("parts"),
-                lambda a, i: F.transform(
-                    F.slice(F.col("parts"), i + 2, F.size("parts")),
-                    lambda b: F.struct(a.alias("part_a"), b.alias("part_b")),
-                ),
-            )
-        ).alias("ps")
+        row_pairs("parts", "part_a", "part_b", F.size("parts")).alias("ps")
     )
     pairs = (
         pair_arrays.select(F.explode("ps").alias("p"))

@@ -631,11 +631,12 @@ def cosine_threshold_pairs(
     on the registered τ=0.35 form below."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from ..sources.tables import spread_scan
 
-    # r16: the norm + 2x32-way block replication below are fused into
-    # the scan stage; spread the narrow projection when the scan is
+    # The norm + 2x32-way block replication below are fused into the
+    # scan stage, so the narrow projection is spread when the scan is
     # unsplittable (no-op at scale).
     v = with_norm(
         spread_scan(
@@ -684,19 +685,27 @@ def cosine_threshold_pairs(
         na = lpdf["vnorm"].to_numpy(dtype=np.float64)
         nb = rpdf["vnorm"].to_numpy(dtype=np.float64)
         sims = _pairwise_sims(A, na, B, nb)
-        diagonal = int(pdf["ba"].iat[0]) == int(pdf["bb"].iat[0])
-        if diagonal:
+        # NaN passes: Spark and DuckDB both compare NaN above every
+        # number, so the oracle's `>= tau` keeps a NaN pair.
+        keep = (sims >= tau) | np.isnan(sims)
+        if int(pdf["ba"].iat[0]) == int(pdf["bb"].iat[0]):
             # both sides are the same block: keep each unordered pair once
-            keep = (ids_a[:, None] < ids_b[None, :]) & (sims >= tau)
-        else:
-            # disjoint blocks: every (a, b) is unique; order ids on output
-            keep = sims >= tau
+            keep &= ids_a[:, None] < ids_b[None, :]
+        # across disjoint blocks every (a, b) is unique; order ids on output
         ai, bi = np.nonzero(keep)
         lo = np.minimum(ids_a[ai], ids_b[bi])
         hi = np.maximum(ids_a[ai], ids_b[bi])
-        return pd.DataFrame({"vec_a": lo, "vec_b": hi, "sim": sims[ai, bi]})
+        return pd.DataFrame(
+            {
+                "vec_a": lo,
+                "vec_b": hi,
+                # Arrow-backed, as in _knn_batch: a numpy NaN would
+                # reach Spark as NULL.
+                "sim": pd.arrays.ArrowExtensionArray(pa.array(sims[ai, bi])),
+            }
+        )
 
-    # r16: pin the grouped-map's exchange width.  AQE sizes post-shuffle
+    # Pin the grouped-map's exchange width.  AQE sizes post-shuffle
     # partitions by BYTES; the block-pair kernel's cost is per
     # group/row, so letting the exchange coalesce serializes the
     # N(N+1)/2 numpy kernels onto a handful of tasks.  The repartition

@@ -58,6 +58,75 @@ def tokens_sql(col_expr: str = "text") -> str:
 TOKENS_SQL = tokens_sql()
 
 
+# Gram primitives over a tokenized or normalized row.  Each is a narrow
+# in-row expression (no shuffle at any scale).  Pass array and string
+# inputs as PROJECTED columns, not as the expressions that compute them:
+# a higher-order-function lambda re-evaluates whatever it references per
+# element, so gramming straight off ``tokens_col`` costs one full
+# tokenization per position (~9x slower, measured at sf0.1).
+
+def normalized_text(text: Column) -> Column:
+    """Lower-cased, trimmed text with each whitespace run collapsed to
+    one space — the canonical pre-dedup normalization."""
+    return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
+
+
+def word_grams(tokens: Column | str, k: int) -> Column:
+    """The ``k``-token windows of ``tokens`` in order, repeats kept, each
+    joined by one space; empty when there are fewer than ``k`` tokens."""
+    return F.when(
+        F.size(tokens) >= k,
+        F.transform(
+            F.sequence(F.lit(1), F.size(tokens) - (k - 1)),
+            lambda i: F.concat_ws(" ", F.slice(tokens, i, k)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _word_bigrams(tokens: Column | str) -> Column:
+    """Adjacent-token pairs of ``tokens`` as ``struct(w1, w2)``; empty
+    when there are fewer than 2 tokens."""
+    return F.when(
+        F.size(tokens) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(tokens) - 1),
+            lambda i: F.struct(
+                F.element_at(tokens, i).alias("w1"),
+                F.element_at(tokens, i + 1).alias("w2"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+
+
+def char_gram_set(col: str, n: int) -> Column:
+    """The distinct character ``n``-grams of the string column named
+    ``col``; empty when it is shorter than ``n``."""
+    return F.when(
+        F.length(col) >= n,
+        F.expr(
+            f"array_distinct(transform(sequence(1, length({col}) - {n - 1}), "
+            f"i -> substring({col}, i, {n})))"
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def row_pairs(arr: Column | str, a: str, b: str, length: Column | int) -> Column:
+    """Every ``(x, y)`` with ``x`` before ``y`` in the array ``arr``, as
+    ``struct(a, b)`` — on a sorted array, exactly the pairs with
+    ``x < y``.  ``length`` caps how many later elements each element
+    pairs with: a blocking bound the caller has already filtered the
+    array size to, or ``F.size(arr)`` for all of them."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, length),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+
+
 @register(
     "q_wordcount_documents",
     oracle=rf"""
@@ -316,9 +385,10 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized-content fingerprint (lower, collapse whitespace, md5) +
     cluster size — the first stage of exact dedup."""
     docs = _docs(spark, sf_dir)
-    normalized = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return (
-        docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
+        docs.select(
+            "doc_id", F.md5(normalized_text(F.col("text"))).alias("fingerprint")
+        )
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -348,6 +418,8 @@ def q_text_bigrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     toks = tokens_col(F.col("text"))
     d = docs.select(toks.alias("toks"))
+    # Indexed, not word_grams' slice form: one slice array per gram
+    # measured 0.98 -> 1.18 s (median, isolated, sf0.1).
     bigrams = F.when(
         F.size("toks") >= 2,
         F.transform(
@@ -426,6 +498,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entirely narrow (tokenize → gram list → distinct count per row): NO
     shuffle at any scale; whole-stage codegen end to end."""
     docs = _docs(spark, sf_dir)
+    # Indexed, not word_grams' slice form: one slice array per gram
+    # measured 0.94 -> 1.10 s (median, isolated, sf0.1).
     grams = F.expr(
         "CASE WHEN size(toks) >= 3 THEN "
         "  transform(sequence(0, size(toks) - 3), "
@@ -724,16 +798,16 @@ def winnow_fingerprint_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import spread_scan
 
     docs = _docs(spark, sf_dir)
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    # r16: the per-character-gram hashing below is the most expensive
-    # map kernel in the suite, and on an unsplittable input (one row
-    # group) it all runs in ONE scan task.  spread_scan parallelizes the
+    # The per-character-gram hashing below is the most expensive map
+    # kernel in the suite, and on an unsplittable input (one row group)
+    # it all runs in ONE scan task.  spread_scan parallelizes the
     # narrow (doc_id, t) projection when — and only when — the scan has
     # fewer data-bearing splits than cores (measured at sf0.1:
     # 3.87 s -> 0.83 s); at any real corpus layout it is a no-op and the
     # kernel stays a pure map stage over the scan.
     d = spread_scan(
-        docs.select("doc_id", norm.alias("t")), spark, sf_dir, "documents",
+        docs.select("doc_id", normalized_text(F.col("text")).alias("t")),
+        spark, sf_dir, "documents",
         key="doc_id",
     )
     n_grams = F.greatest(F.length("t") - F.lit(WINNOW_K - 1), F.lit(0))
@@ -1097,8 +1171,8 @@ def q_doc_similarity_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum deterministic (decimal accumulators — a single wi² can exceed
     int64); floats appear only at the final normalize-and-round,
     identically on both engines.
-    r16: both branch roots (token explode, gram-array build) run inside
-    the scan stage — spread the scan when it is unsplittable (no-op at
+    Both branch roots (token explode, gram-array build) run inside the
+    scan stage, so the scan is spread when it is unsplittable (no-op at
     scale).
     """
     from ..sources.tables import spread_scan
@@ -1154,14 +1228,6 @@ def q_doc_similarity_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    gram_arr = F.when(
-        F.length("norm") >= 5,
-        F.expr(
-            "array_distinct(transform(sequence(1, length(norm) - 4), "
-            "i -> substring(norm, i, 5)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     # The COMPACT array-form frame is what persists: one row per doc
     # with its distinct-gram array — the expensive part (regexp
     # normalize + transform + array_distinct over kilochar strings) runs
@@ -1169,12 +1235,12 @@ def q_doc_similarity_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded stream (measured 2.5s to materialize at sf0.1 vs ~0.1s
     # for this form).
     gram_arrays = docs.select(
-        "doc_id", norm.alias("norm")
-    ).select("doc_id", gram_arr.alias("gs")).persist()
+        "doc_id", normalized_text(F.col("text")).alias("norm")
+    ).select("doc_id", char_gram_set("norm", 5).alias("gs")).persist()
     grams = gram_arrays.select("doc_id", F.explode("gs").alias("g"))
-    # Candidate generation is TWO passes over the cached arrays
-    # (VERDICT r5 item 7 — the single-pass postings agg shuffled every
-    # (doc, gram) row, rare or not):
+    # Candidate generation is TWO passes over the cached arrays, because
+    # a single-pass postings agg shuffles every (doc, gram) row, rare or
+    # not:
     #   1. a combiner-friendly count() keyed on gram (shuffle volume =
     #      distinct grams per partition, not the gram stream) finds the
     #      rare 2..DF_MAX band;
@@ -1194,21 +1260,15 @@ def q_doc_similarity_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = grams.filter(
         bloom_member(F.col("g"), bloom_words, TFIDF_BLOOM_M, TFIDF_BLOOM_K)
     )
-    docs_arr = F.array_sort(F.collect_list("doc_id"))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda d, i: F.transform(
-                F.slice(F.col("docs"), i + 2, TFIDF_SIM_DF_MAX),
-                lambda e: F.struct(d.alias("doc_a"), e.alias("doc_b")),
-            ),
-        )
-    )
     cand = (
         pruned.groupBy("g")
-        .agg(docs_arr.alias("docs"))
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .filter((F.size("docs") >= 2) & (F.size("docs") <= TFIDF_SIM_DF_MAX))
-        .select(F.explode(pair_structs).alias("p"))
+        .select(
+            F.explode(
+                row_pairs("docs", "doc_a", "doc_b", TFIDF_SIM_DF_MAX)
+            ).alias("p")
+        )
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )
@@ -1578,7 +1638,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 arithmetic — ``round(double, 6)`` diverged between engines
     when a doc's true average sat exactly on a half boundary
     (-67.76659/20 at sf0.1; Spark rounds the exact binary double,
-    DuckDB rounds via a double multiply — r13 sweep finding).
+    DuckDB rounds via a double multiply).
     Scale shape: bigram extraction is a narrow in-row transform +
     explode; three combiner aggregations (doc-bigram, corpus-bigram,
     left-unigram); the vocabulary size is a one-row broadcast; scoring
@@ -1589,17 +1649,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokd = docs.select(
         "doc_id", tokens_col(F.lower(F.col("text"))).alias("t")
     )
-    pairs = F.when(
-        F.size("t") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - 1),
-            lambda i: F.struct(
-                F.element_at("t", i.cast("int")).alias("w1"),
-                F.element_at("t", (i + 1).cast("int")).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    bi = tokd.select("doc_id", F.explode(pairs).alias("p")).select(
+    bi = tokd.select("doc_id", F.explode(_word_bigrams("t")).alias("p")).select(
         "doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
     doc_bi = bi.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
@@ -1705,18 +1755,12 @@ def q_text_novelty_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ONE left join keyed on the gram — at 100 TB both sides
     hash-partition on the gram key; no broadcast grows with the corpus
     and no pair space exists at all.  Counts are exact integers; the
-    one ratio is an exact ``round_ratio`` (r14 parity idiom)."""
+    one ratio is an exact ``round_ratio``, so both engines round the
+    same value."""
     docs = _docs(spark, sf_dir)
     tokd = docs.select("doc_id", tokens_col(F.col("text")).alias("t"))
-    sh_arr = F.when(
-        F.size("t") >= NOVELTY_K,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - (NOVELTY_K - 1)),
-            lambda i: F.concat_ws(" ", F.slice("t", i, NOVELTY_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     g = tokd.select(
-        "doc_id", F.explode(F.array_distinct(sh_arr)).alias("sh")
+        "doc_id", F.explode(F.array_distinct(word_grams("t", NOVELTY_K))).alias("sh")
     )
     ref = (
         g.filter(F.col("doc_id") % NOVELTY_MOD == 0)
@@ -1793,6 +1837,60 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_TOP = 32  # merge-table prefix reported
 
+
+def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(tok, cnt)``: the lowercase corpus vocabulary of tokens longer
+    than one letter, with corpus frequencies — the representation every
+    BPE round counts pairs over."""
+    return (
+        _docs(spark, sf_dir)
+        .select(
+            F.explode(
+                F.filter(
+                    F.split(F.lower(F.col("text")), TOKENIZER_PATTERN),
+                    lambda t: F.length(t) > 1,
+                )
+            ).alias("tok")
+        )
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _bpe_pair_census(vocab: DataFrame) -> DataFrame:
+    """``(pair, n)``: adjacent-character pair counts over the DISTINCT
+    vocabulary, each weighted by its token's corpus frequency — the
+    Zipf cut (a pair explodes once per distinct token, never per raw
+    token).  Tokens shorter than 2 (a merge can shrink one) have none."""
+    return (
+        vocab.filter(F.length("tok") > 1)
+        .select(
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.length("tok") - 1),
+                    lambda i: F.substr(F.col("tok"), i, F.lit(2)),
+                )
+            ).alias("pair"),
+            "cnt",
+        )
+        .groupBy("pair")
+        .agg(F.sum("cnt").alias("n"))
+    )
+
+
+def _top_merges(census: DataFrame) -> DataFrame:
+    """The top ``BPE_TOP`` rows of a pair census as the merge table
+    ``(merge_rank, pair, n)``; ties break on the pair string.  The rank
+    window runs on those rows only, never on a global sort."""
+    top = census.orderBy(F.desc("n"), F.asc("pair")).limit(BPE_TOP)
+    w = Window.orderBy(F.desc("n"), F.asc("pair"))
+    return top.select(
+        F.row_number().over(w).cast("int").alias("merge_rank"),
+        "pair",
+        F.col("n").cast("bigint").alias("n"),
+    )
+
+
 _BPE_MERGE_ORACLE = rf"""
     WITH toks AS (
       SELECT unnest(list_filter(
@@ -1827,9 +1925,9 @@ def q_text_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency.  Tokenize + one combiner agg gives (tok, cnt) over
     O(vocab) groups; only then do pairs explode, so the pair-explode
     volume drops from total-corpus-characters to distinct-vocab-
-    characters — a Zipf-law ~10-100× cut on natural text (VERDICT r6
-    item 5; on the fixture's small synthetic vocabulary the measured
-    cut is 949k → 107 exploded pair rows at sf0.1).  The pair
+    characters — a Zipf-law ~10-100× cut on natural text (on the
+    fixture's small synthetic vocabulary the measured cut is 949k → 107
+    exploded pair rows at sf0.1).  The pair
     count is then ONE weighted combiner agg over ≤ alphabet² groups,
     the top-{BPE_TOP} a `TakeOrderedAndProject` per-partition heap,
     and the merge_rank window runs on {BPE_TOP} rows only — never a
@@ -1838,42 +1936,7 @@ def q_text_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     same census over the re-segmented vocab (the loop shape of
     `kmeans()`), which is exactly the representation (vocab word →
     freq) Sennrich et al.'s reference implementation iterates on."""
-    docs = _docs(spark, sf_dir)
-    vocab = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), TOKENIZER_PATTERN),
-                    lambda t: F.length(t) > 1,
-                )
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    pairs = vocab.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("tok") - 1),
-                lambda i: F.substr(F.col("tok"), i, F.lit(2)),
-            )
-        ).alias("pair"),
-        "cnt",
-    )
-    top = (
-        pairs.groupBy("pair")
-        .agg(F.sum("cnt").alias("n"))
-        .orderBy(F.desc("n"), F.asc("pair"))
-        .limit(BPE_TOP)
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("n"), F.asc("pair"))
-    return top.select(
-        F.row_number().over(w).cast("int").alias("merge_rank"),
-        "pair",
-        F.col("n").cast("bigint").alias("n"),
-    )
+    return _top_merges(_bpe_pair_census(_bpe_vocab(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -2001,54 +2064,20 @@ def q_text_bpe_apply_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     in BOTH engines — the same greedy-leftmost convention real BPE
     uses, so 'aaa' under merge 'aa' becomes ('aa')'a' in all three code
     paths.  Scale: the census operates on the DISTINCT vocabulary (the
-    r7 Zipf cut), the winning pair is a one-row broadcast (never
+    Zipf cut), the winning pair is a one-row broadcast (never
     collected), and each round is two combiner aggs — k merge rounds =
     the `kmeans()` checkpoint loop."""
-    docs = _docs(spark, sf_dir)
-    vocab = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), TOKENIZER_PATTERN),
-                    lambda t: F.length(t) > 1,
-                )
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-    def pair_census(v: DataFrame) -> DataFrame:
-        return (
-            v.filter(F.length("tok") > 1)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.length("tok") - 1),
-                        lambda i: F.substr(F.col("tok"), i, F.lit(2)),
-                    )
-                ).alias("pair"),
-                "cnt",
-            )
-            .groupBy("pair")
-            .agg(F.sum("cnt").alias("n"))
-        )
-
-    top1 = pair_census(vocab).orderBy(F.desc("n"), F.asc("pair")).limit(1).select(
-        F.col("pair").alias("mpair")
+    vocab = _bpe_vocab(spark, sf_dir)
+    top1 = (
+        _bpe_pair_census(vocab)
+        .orderBy(F.desc("n"), F.asc("pair"))
+        .limit(1)
+        .select(F.col("pair").alias("mpair"))
     )
     vocab2 = vocab.join(F.broadcast(top1)).select(
         F.expr("replace(tok, mpair, '0')").alias("tok"), "cnt"
     )
-    top = pair_census(vocab2).orderBy(F.desc("n"), F.asc("pair")).limit(BPE_TOP)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("n"), F.asc("pair"))
-    return top.select(
-        F.row_number().over(w).cast("int").alias("merge_rank"),
-        "pair",
-        F.col("n").cast("bigint").alias("n"),
-    )
+    return _top_merges(_bpe_pair_census(vocab2))
 
 
 # ---------------------------------------------------------------------------
@@ -2066,26 +2095,6 @@ BPE_TRAIN_K = 4  # rounds for the registered/tested variant
 BPE_SYM_BASE = 0xE000
 
 
-def _bpe_pair_census(vocab: DataFrame) -> DataFrame:
-    """Weighted adjacent-pair counts over the DISTINCT vocabulary (the
-    r7 Zipf cut: explode distinct tokens, weight by corpus frequency —
-    never the raw token stream)."""
-    return (
-        vocab.filter(F.length("tok") > 1)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("tok") - 1),
-                    lambda i: F.substr(F.col("tok"), i, F.lit(2)),
-                )
-            ).alias("pair"),
-            "cnt",
-        )
-        .groupBy("pair")
-        .agg(F.sum("cnt").alias("n"))
-    )
-
-
 def bpe_train(
     vocab: DataFrame, k: int = BPE_TRAIN_K, checkpoint_every: int | None = None
 ) -> DataFrame:
@@ -2094,37 +2103,28 @@ def bpe_train(
     al. 2016's loop (census pairs -> take the most frequent -> merge it
     everywhere -> recount), the step `q_text_bpe_merge` and
     `q_text_bpe_apply_step` each demonstrate once, iterated to a
-    training run (VERDICT r7 item 6).
+    training run.
 
     Loop discipline (the ``pagerank(k)`` / ``kmeans()`` shape): each
-    round's winning pair is a ONE-ROW frame, eagerly localCheckpoint-ed
-    — that action is what materializes the round (and the vocabulary
-    cache feeding it), and checkpointing it cuts the census subtree out
-    of every later round's lineage.  Each vocabulary generation is
-    persisted (the census and the merge join both consume it); because
-    rounds materialize eagerly, generations older than the previous one
-    are fully consumed and released IN the loop — cached storage stays
-    <= 2 x O(vocab) however deep the run.  ``checkpoint_every`` (deep
+    round's winning pair is ONE bounded row, collected — that action is
+    what materializes the round (and the vocabulary cache feeding it),
+    and the pair rides the next round's ``replace`` as a literal.  Each
+    vocabulary generation is persisted (the next census reads it);
+    because rounds materialize eagerly, generations older than the
+    previous one are fully consumed and released IN the loop — cached
+    storage stays <= 2 x O(vocab) however deep the run.  ``checkpoint_every`` (deep
     runs) additionally checkpoints the vocabulary itself every N rounds,
     truncating plan depth the same way pagerank does.  Ties break on
     (count desc, pair asc) — byte order agrees between Spark and DuckDB
     (both compare binary UTF-8) — so the merge table is deterministic.
 
-    Scale shape: every round is two combiner aggs over O(vocab) rows +
-    a one-row broadcast join; nothing corpus-sized crosses a round
-    boundary, and the driver never sees a pair string."""
-    # r17 (VERDICT r16 item 4): each round's winner is ONE bounded row —
-    # collect it (the ivf-centroid / pq-seed-codebook precedent for O(1)
-    # driver state) instead of localCheckpoint(eager) + broadcast join.
-    # That halves the per-round job count (the census collect IS the
-    # round's materializing action), removes k checkpoint jobs and k
-    # broadcast builds, and lets the merge pair ride the next round's
-    # replace as a LITERAL — the join existed only to attach a value the
-    # driver now holds.  The merge SEQUENCE is unchanged: the identical
-    # census plan, the identical (n desc, pair asc) total order, per
-    # round (gated bit-exact vs the pure-Python reference in
-    # test_round8_ops).  Same-harness A/B min-of-5: build 1.58 -> 1.36 s
-    # (+ action flat at ~0.02 s via the VALUES relation below).  The
+    Scale shape: every round is one census (two combiner aggs over
+    O(vocab) rows) and a one-row collect; nothing corpus-sized crosses
+    a round boundary or reaches the driver."""
+    # Collecting the one-row winner, rather than localCheckpoint +
+    # broadcast join, is one job per round instead of two and needs no
+    # broadcast build (A/B min-of-5: build 1.58 -> 1.36 s; the action
+    # stays ~0.02 s through the VALUES relation below).  The
     # remaining eager cost is the vocabulary census + k SEQUENTIAL
     # census jobs — round i+1's vocab depends on round i's winner, so
     # the per-round job floor (~0.25 s scheduling + codegen of each
@@ -2243,24 +2243,11 @@ def q_text_bpe_train_k4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     See `bpe_train` for the loop and cache discipline; this entry runs
     it at k={BPE_TRAIN_K} on the `q_text_bpe_merge` vocabulary census."""
-    # r17 A/B: spreading the census scan was tried and REVERTED — the
-    # whole tokenize pass is ~0.18 s single-task at sf0.1, so the
-    # (doc_id, text) exchange cost more than the parallel census saved
-    # (build ~2.0 s with spread vs ~1.0 s without, measured min-of-5).
-    docs = _docs(spark, sf_dir)
-    vocab = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), TOKENIZER_PATTERN),
-                    lambda t: F.length(t) > 1,
-                )
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return bpe_train(vocab, k=BPE_TRAIN_K)
+    # The census scan is not spread: the whole tokenize pass is ~0.18 s
+    # single-task at sf0.1, so the (doc_id, text) exchange costs more
+    # than a parallel census saves (build ~2.0 s with spread vs ~1.0 s
+    # without, measured min-of-5).
+    return bpe_train(_bpe_vocab(spark, sf_dir), k=BPE_TRAIN_K)
 
 
 # ---------------------------------------------------------------------------
@@ -2395,18 +2382,8 @@ def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = d.select(F.explode("toks").alias("tok")).groupBy("tok").agg(
         F.count(F.lit(1)).alias("c")
     )
-    bigrams = F.when(
-        F.size("toks") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - 1),
-            lambda i: F.struct(
-                F.element_at(F.col("toks"), i).alias("w1"),
-                F.element_at(F.col("toks"), i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     bi = (
-        d.select(F.explode(bigrams).alias("p"))
+        d.select(F.explode(_word_bigrams("toks")).alias("p"))
         .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cb"))
@@ -3336,23 +3313,15 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.tables import spread_scan
 
-    # r16: the trigram transform + Generate run inside the scan stage —
-    # spread the scan when it is unsplittable (no-op at scale).
+    # The trigram transform + Generate run inside the scan stage, so the
+    # scan is spread when it is unsplittable (no-op at scale).
     docs = spread_scan(
         _docs(spark, sf_dir), spark, sf_dir, "documents", key="doc_id"
     )
     tokd = docs.select("source", tokens_col(F.col("text")).alias("t"))
-    gram_arr = F.when(
-        F.size("t") >= OOV_N,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - (OOV_N - 1)),
-            lambda i: F.concat_ws(" ", F.slice("t", i, OOV_N)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = tokd.select("source", F.explode(gram_arr).alias("g"))
-    # r17 A/B, tried and REVERTED (§2.3 aggregate-before-shuffle): a
-    # (source, g, c) census to collapse the two gram passes into one
-    # measured FLAT-to-worse (1.36 -> 1.44 s min isolated) — trigrams
+    grams = tokd.select("source", F.explode(word_grams("t", OOV_N)).alias("g"))
+    # Two gram passes, not one (source, g, c) census: the census shape
+    # measured flat-to-worse (1.36 -> 1.44 s min isolated) — trigrams
     # are nearly unique per source here (206k distinct of 260k rows),
     # so the census shuffles ~the whole stream and its agg costs more
     # than the second 0.4 s map-side pass it saves.  The two-pass

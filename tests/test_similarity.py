@@ -1,25 +1,28 @@
 """The exact-kNN prune of ``operators/similarity.py``: its contract on
 plain numpy arrays (no Spark), its agreement with the two prunes it
 replaced, and NaN similarities end to end through the three kernels
-that use it."""
+that use it and through the cosine-threshold pair join."""
 
 from __future__ import annotations
 
 import math
 import os
 
+import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
+    _EMB_DEDUP_ORACLE,
     _UNIT_MARGIN,
     QUERY_MOD,
     _knn_batch,
     _knn_exact_pairs_vectorized,
     _knn_prune,
     _sim_units,
+    q_dedup_embedding_cosine,
     q_knn_bruteforce,
     q_knn_bruteforce_cogrouped,
     q_knn_bruteforce_numpy,
@@ -170,3 +173,21 @@ def test_nan_sims_rank_first_in_every_exact_knn_kernel(spark, tmp_path):
         first = {r.query_id: r.neighbor_id for r in rows if r.rank == 1}
         assert first and set(first.values()) == {nan_id}, knn.__name__
         assert len(first) == len({r.query_id for r in rows})
+
+
+def test_nan_pairs_pass_the_cosine_threshold_as_nan(spark, tmp_path):
+    """Spark and DuckDB both compare NaN above every number, so the
+    oracle's ``>= 0.35`` keeps every pair with the NaN vector.  The
+    block-pair kernel must keep the same pairs and report their cosine
+    as NaN, not NULL."""
+    d, nan_id = _nan_fixture(tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet'"
+    )
+    want = {(a, b) for a, b, _ in con.execute(_EMB_DEDUP_ORACLE).fetchall()}
+    rows = q_dedup_embedding_cosine(spark, d).collect()
+    assert {(r.vec_a, r.vec_b) for r in rows} == want
+    nan_rows = [r for r in rows if nan_id in (r.vec_a, r.vec_b)]
+    assert nan_rows
+    assert all(r.cosine is not None and math.isnan(r.cosine) for r in nan_rows)
