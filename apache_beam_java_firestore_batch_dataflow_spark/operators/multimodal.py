@@ -9,8 +9,9 @@ real thing a 100 TB multimodal corpus needs:
   width/height/sample-rate metadata) that stays fully declarative —
   oracle-checked against DuckDB;
 * decode / feature-extract stages as per-document kernels run by one
-  Arrow-batched ``mapInPandas`` runner (:func:`map_docs`) with an
-  explicit output schema — the exact shape a real decoder
+  ``mapInArrow`` runner (:func:`map_docs`, built on
+  ``functions/arrow.py``'s batch boundary, so a NaN feature stays NaN)
+  with an explicit output schema — the exact shape a real decoder
   (PIL/ffmpeg/torchcodec) would plug into.  All three modalities are
   decoded for real with one strict pure-python parser per container
   format (no codec library needed for these uncompressed formats):
@@ -27,7 +28,7 @@ real thing a 100 TB multimodal corpus needs:
 Scale notes: payload bytes never pass through a shuffle — the manifest
 carries only metadata; decode is a narrow per-partition map whose
 parallelism is the scan's split count (``spark.sql.files.maxPartitionBytes``),
-and because the runner emits one frame per input Arrow batch,
+and because the runner emits one batch per input Arrow batch,
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds every kernel's
 memory.
 """
@@ -36,10 +37,11 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrow import arrow_schema, py_values, to_batch
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -53,27 +55,27 @@ MODALITIES = ("image", "audio", "video")
 
 
 def doc_kernel(
-    fn: Callable[..., Iterable[tuple]], schema: str
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """The ``mapInPandas`` body that :func:`map_docs` runs.
+    fn: Callable[..., Iterable[tuple]], schema: pa.Schema
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """The ``mapInArrow`` body that :func:`map_docs` runs.
 
-    ``fn`` is called with one input row's values in column order and
-    returns that row's output tuples — any number of them, so 1→1, 1→N
-    and 1→0 kernels all fit.  Every input Arrow batch yields exactly one
-    frame whose columns are named by the flat DDL ``schema``.  The frame
-    is ``object``-typed so Python ints reach Arrow exactly (never through
-    float64) and ``None`` becomes NULL.
+    ``fn`` is called with one input row's values in column order (Python
+    objects, via ``py_values``) and returns that row's output tuples —
+    any number of them, so 1→1, 1→N and 1→0 kernels all fit.  Every
+    input batch yields exactly one ``to_batch`` batch of the Arrow
+    ``schema``: Python ints reach Arrow exactly, a float NaN stays NaN
+    and only ``None`` becomes NULL.
     """
-    columns = [field.split()[0] for field in schema.split(",")]
+    empty = [()] * len(schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = [
                 out
-                for row in pdf.itertuples(index=False, name=None)
+                for row in zip(*(py_values(c) for c in batch.columns))
                 for out in fn(*row)
             ]
-            yield pd.DataFrame(rows, columns=columns, dtype=object)
+            yield to_batch(list(zip(*rows)) or empty, schema)
 
     return run
 
@@ -81,9 +83,10 @@ def doc_kernel(
 def map_docs(
     df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
 ) -> DataFrame:
-    """Run the per-document kernel ``fn`` over ``df``'s Arrow batches;
-    see :func:`doc_kernel` for the contract."""
-    return df.mapInPandas(doc_kernel(fn, schema), schema=schema)
+    """Run the per-document kernel ``fn`` over ``df``'s Arrow batches,
+    emitting rows of the DDL ``schema``; see :func:`doc_kernel` for the
+    contract."""
+    return df.mapInArrow(doc_kernel(fn, arrow_schema(schema)), schema=schema)
 
 
 def multimodal_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,7 +143,7 @@ def q_multimodal_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decode / feature extraction (Pandas-UDF slow path, deliberately)
+# Decode / feature extraction: per-document Python kernels run by map_docs
 # ---------------------------------------------------------------------------
 
 DECODE_SCHEMA = (
@@ -348,7 +351,7 @@ def sample_frames(mm: DataFrame) -> DataFrame:
 @register(
     "q_multimodal_frame_sample",
     # documents.text is ASCII in the fixtures, so character substr equals
-    # the byte slicing the pandas stage performs on the UTF-8 payload.
+    # the byte slicing the Python kernel performs on the UTF-8 payload.
     oracle=f"""
     SELECT doc_id,
            CAST(i - 1 AS INT) AS frame_idx,
@@ -364,7 +367,7 @@ def sample_frames(mm: DataFrame) -> DataFrame:
 )
 def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over video payloads; oracle reproduces the byte
-    slicing + md5 per frame in SQL, proving the 1→N mapInPandas stage."""
+    slicing + md5 per frame in SQL, proving the 1→N mapInArrow stage."""
     return sample_frames(multimodal_table(spark, sf_dir))
 
 
@@ -403,7 +406,7 @@ DECODE_PPM_SCHEMA = (
 )
 def q_multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL decode: synthesize a binary P6 PPM per document, parse it back
-    with the pure-python decoder inside ``mapInPandas``, emit per-image
+    with the pure-python decoder inside ``mapInArrow``, emit per-image
     integer-exact features.  The payload (header + raster) round-trips
     through a genuine parser — magic, header tokenization, maxval,
     raster bounds — and the DuckDB oracle recomputes the same features
@@ -597,7 +600,7 @@ DECODE_WAV_SCHEMA = (
 def q_multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode: synthesize a RIFF/WAVE PCM file per document,
     parse it back with the pure-python chunk-walking decoder inside
-    ``mapInPandas``, emit per-file integer-exact features (rate,
+    ``mapInArrow``, emit per-file integer-exact features (rate,
     channels, frames, peak amplitude, abs-sum, energy).  Payload bytes
     never shuffle; decode parallelism is the scan's split count."""
 
@@ -751,7 +754,7 @@ DECODE_Y4M_SCHEMA = (
 def q_multimodal_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video decode: synthesize a YUV4MPEG2 stream per document,
     parse it back (stream header, FRAME markers, raw C444 planes) inside
-    ``mapInPandas``, emit per-stream integer-exact features.  Closes the
+    ``mapInArrow``, emit per-stream integer-exact features.  Closes the
     last modality stub — image/audio/video all have genuine parsers."""
 
     return map_docs(
@@ -846,7 +849,7 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     what a real image-dedup pipeline runs after swapping the decoder.
 
     Scale shape mirrors q_dedup_simhash exactly: hashing is a
-    zero-shuffle mapInPandas over the payload scan (bytes never
+    zero-shuffle mapInArrow over the payload scan (bytes never
     shuffle; only 12-bit hashes do); pairing blocks on the three 4-bit
     nibbles — a pair within the Hamming bound must share a nibble
     (pigeonhole), so three keyed equi-joins generate candidates, never
@@ -1813,7 +1816,7 @@ def q_multimodal_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the numerator provably non-negative, so Spark ``div`` ==
     DuckDB ``//``.
 
-    Scale shape: one decode pass in `mapInPandas`; <= 256 histogram
+    Scale shape: one decode pass in `mapInArrow`; <= 256 histogram
     rows per image leave the scan; the per-image agg is map-side
     combined.  At 100 TB of images the only cost is the decode scan
     itself (the RMS-gain envelope)."""
@@ -1917,7 +1920,7 @@ def q_multimodal_image_colorfulness(spark: SparkSession, sf_dir: str) -> DataFra
     ×2 on yb2).  The oracle replays the raster synthesis positionally
     and rebuilds pixels from (position div 3, position mod 3).
 
-    Scale shape: one decode pass in `mapInPandas`, five integers per
+    Scale shape: one decode pass in `mapInArrow`, five integers per
     image leave the scan — bytes never shuffle; the metric is a
     post-scan projection (the RMS-gain envelope)."""
     import numpy as np
@@ -2102,7 +2105,7 @@ def q_multimodal_image_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte and takes the Laplacian via four coordinate self-joins of the
     tiny per-image grid.
 
-    Scale shape: one decode pass in `mapInPandas`; the Laplacian is a
+    Scale shape: one decode pass in `mapInArrow`; the Laplacian is a
     local stencil evaluated INSIDE the kernel (numpy slicing, no
     shuffle of pixels ever); three integers per image leave the scan
     and the result is already per-image — no post-agg at all.  At

@@ -40,6 +40,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrow import apply_groups, emb_matrix, map_batches
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..functions.vectors import dot, dot_sql, hyperplane_signs, norm, norm_sql
 from ..registry import registrar
@@ -158,20 +159,22 @@ def _knn_prune(score, ids, q_ids, k: int, margin: float):
     return (score >= kth_score - margin) & ~self_pair
 
 
-def _vec_arrays(pdf):
+def _vec_arrays(batch):
     """(ids, embedding matrix, norms) of a ``vec_id, embedding, vnorm``
-    pandas batch."""
-    import numpy as np
-
+    Arrow batch or table."""
     return (
-        pdf["vec_id"].to_numpy(dtype=np.int64),
-        np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]),
-        pdf["vnorm"].to_numpy(dtype=np.float64),
+        batch.column("vec_id").to_numpy(zero_copy_only=False),
+        emb_matrix(batch.column("embedding")),
+        batch.column("vnorm").to_numpy(zero_copy_only=False),
     )
 
 
+_KNN_SCHEMA = "query_id long, neighbor_id long, sim double"
+
+
 def _knn_batch(ids, x, xn, q_ids, q_mat, q_norm, k: int, rounded: bool):
-    """One batch's pruned ``query_id, neighbor_id, sim`` candidates.
+    """One batch's pruned ``query_id, neighbor_id, sim`` candidates, as
+    numpy columns by name.
 
     ``rounded``: the final window ranks by the 6-dp rounded sim, so the
     sims are one BLAS matmul and the prune runs on rounded units with
@@ -179,8 +182,6 @@ def _knn_batch(ids, x, xn, q_ids, q_mat, q_norm, k: int, rounded: bool):
     sims replay the oracle's sequential fold bit-identically
     (``_pairwise_sims``) and the prune is exact on them."""
     import numpy as np
-    import pandas as pd
-    import pyarrow as pa
 
     if rounded:
         sims = (x @ q_mat.T) / np.outer(xn, q_norm)  # batch × queries
@@ -189,15 +190,7 @@ def _knn_batch(ids, x, xn, q_ids, q_mat, q_norm, k: int, rounded: bool):
         sims = _pairwise_sims(x, xn, q_mat, q_norm)
         keep = _knn_prune(sims, ids, q_ids, k, 0)
     rows, cols = np.nonzero(keep)
-    return pd.DataFrame(
-        {
-            "query_id": q_ids[cols],
-            "neighbor_id": ids[rows],
-            # Arrow-backed: Spark's pandas conversion turns a numpy NaN
-            # into NULL (which sorts last); this column keeps it NaN.
-            "sim": pd.arrays.ArrowExtensionArray(pa.array(sims[rows, cols])),
-        }
-    )
+    return {"query_id": q_ids[cols], "neighbor_id": ids[rows], "sim": sims[rows, cols]}
 
 
 def _broadcast_knn(spark: SparkSession, v: DataFrame, rounded: bool) -> DataFrame:
@@ -206,25 +199,14 @@ def _broadcast_knn(spark: SparkSession, v: DataFrame, rounded: bool) -> DataFram
     (<= ``N_QUERIES`` rows, whatever the corpus size) and broadcast, and
     each Arrow batch of the corpus scan runs ``_knn_batch`` — one scan,
     no shuffle, only the pruned rows leave the executors."""
-    import numpy as np
+    q = _query_set(v, N_QUERIES).toArrow()
+    q_arrays = (q["query_id"].to_numpy(), emb_matrix(q["q_emb"]), q["q_norm"].to_numpy())
+    bq = spark.sparkContext.broadcast(q_arrays)
 
-    qrows = _query_set(v, N_QUERIES).collect()
-    bq = spark.sparkContext.broadcast(
-        (
-            np.array([r["query_id"] for r in qrows], dtype=np.int64),
-            np.stack([np.asarray(r["q_emb"], dtype=np.float64) for r in qrows]),
-            np.array([r["q_norm"] for r in qrows], dtype=np.float64),
-        )
-    )
+    def knn_batches(batch):
+        return _knn_batch(*_vec_arrays(batch), *bq.value, KNN_K, rounded)
 
-    def knn_batches(batches):
-        for pdf in batches:
-            if not pdf.empty:
-                yield _knn_batch(*_vec_arrays(pdf), *bq.value, KNN_K, rounded)
-
-    return v.mapInPandas(
-        knn_batches, schema="query_id long, neighbor_id long, sim double"
-    )
+    return map_batches(v, knn_batches, _KNN_SCHEMA)
 
 
 _KNN_ORACLE = f"""
@@ -407,7 +389,7 @@ def q_knn_bruteforce_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-K, Arrow/numpy fast path.
 
     Same semantics as ``q_knn_bruteforce`` but the pair math runs as one
-    BLAS matmul per Arrow batch inside ``mapInPandas`` (queries shipped
+    BLAS matmul per Arrow batch inside ``mapInArrow`` (queries shipped
     as a broadcast matrix), with a per-batch top-K so only K·batches
     rows per query ever leave the executors — the merge is a cheap
     window over that reduced set.  This is the 100 TB-shaped plan: one
@@ -630,8 +612,7 @@ def cosine_threshold_pairs(
     Block-pair replication, kernel memory, and determinism are documented
     on the registered τ=0.35 form below."""
     import numpy as np
-    import pandas as pd
-    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ..sources.tables import spread_scan
 
@@ -669,41 +650,26 @@ def cosine_threshold_pairs(
         "vnorm",
     )
 
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = pdf[pdf["side"] == 0]
-        rpdf = pdf[pdf["side"] == 1]
-        if lpdf.empty or rpdf.empty:
-            return pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "sim": pd.Series(dtype="float64")}
-            )
-        ids_a = lpdf["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = rpdf["vec_id"].to_numpy(dtype=np.int64)
-        A = np.stack([np.asarray(e, dtype=np.float64) for e in lpdf["embedding"]])
-        B = np.stack([np.asarray(e, dtype=np.float64) for e in rpdf["embedding"]])
-        na = lpdf["vnorm"].to_numpy(dtype=np.float64)
-        nb = rpdf["vnorm"].to_numpy(dtype=np.float64)
+    def block_pairs(table):
+        side = table.column("side")
+        lt = table.filter(pc.equal(side, 0))
+        rt = table.filter(pc.equal(side, 1))
+        if not (lt.num_rows and rt.num_rows):
+            return [(), (), ()]
+        ids_a, A, na = _vec_arrays(lt)
+        ids_b, B, nb = _vec_arrays(rt)
         sims = _pairwise_sims(A, na, B, nb)
         # NaN passes: Spark and DuckDB both compare NaN above every
         # number, so the oracle's `>= tau` keeps a NaN pair.
         keep = (sims >= tau) | np.isnan(sims)
-        if int(pdf["ba"].iat[0]) == int(pdf["bb"].iat[0]):
+        if table.column("ba")[0] == table.column("bb")[0]:
             # both sides are the same block: keep each unordered pair once
             keep &= ids_a[:, None] < ids_b[None, :]
         # across disjoint blocks every (a, b) is unique; order ids on output
         ai, bi = np.nonzero(keep)
         lo = np.minimum(ids_a[ai], ids_b[bi])
         hi = np.maximum(ids_a[ai], ids_b[bi])
-        return pd.DataFrame(
-            {
-                "vec_a": lo,
-                "vec_b": hi,
-                # Arrow-backed, as in _knn_batch: a numpy NaN would
-                # reach Spark as NULL.
-                "sim": pd.arrays.ArrowExtensionArray(pa.array(sims[ai, bi])),
-            }
-        )
+        return lo, hi, sims[ai, bi]
 
     # Pin the grouped-map's exchange width.  AQE sizes post-shuffle
     # partitions by BYTES; the block-pair kernel's cost is per
@@ -714,12 +680,8 @@ def cosine_threshold_pairs(
         spark.conf.get("spark.sql.shuffle.partitions",
                        str(spark.sparkContext.defaultParallelism))
     )
-    return (
-        left.unionAll(right)
-        .repartition(n_parts, "ba", "bb")
-        .groupBy("ba", "bb")
-        .applyInPandas(block_pairs, schema="vec_a long, vec_b long, sim double")
-    )
+    blocks = left.unionAll(right).repartition(n_parts, "ba", "bb").groupBy("ba", "bb")
+    return apply_groups(blocks, block_pairs, "vec_a long, vec_b long, sim double")
 
 
 # Semantic-graph edge threshold shared by the WHOLE graph family
@@ -1354,7 +1316,7 @@ def q_embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     D*(D+1)/2 (i, j) pairs — a 2080x row blowup at D=64 that turns a
     100 TB scan into 200 PB of shuffle input.  Here each Arrow batch
     collapses to ONE D x D partial via an integer matmul inside
-    ``mapInPandas`` (classic map-side combine, like the batched sink's
+    ``mapInArrow`` (classic map-side combine, like the batched sink's
     500-write amortization, sinks/firestore.py); the shuffle then
     carries #batches * 2080 tiny rows and the final agg reduces them per
     (i, j) key.  That is also why this beats a Pandas-UDF-per-pair: the
@@ -1368,30 +1330,16 @@ def q_embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's hugeint arithmetic at any parallelism.
     """
     import numpy as np
-    import pandas as pd
 
     v = _vecs_spread(spark, sf_dir).select("embedding")
 
-    def gram_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Q = np.floor(E * GRAM_SCALE + 0.5).astype(np.int64)
-            G = Q.T @ Q
-            iu, ju = np.triu_indices(Q.shape[1])
-            yield pd.DataFrame(
-                {
-                    "i": iu.astype(np.int32),
-                    "j": ju.astype(np.int32),
-                    "partial": G[iu, ju],
-                    "n_batch": np.full(len(iu), len(pdf), dtype=np.int64),
-                }
-            )
+    def gram_batches(batch):
+        Q = _pq_np_units(batch.column("embedding"))
+        G = Q.T @ Q
+        iu, ju = np.triu_indices(Q.shape[1])
+        return iu, ju, G[iu, ju], np.full(len(iu), batch.num_rows)
 
-    partial = v.mapInPandas(
-        gram_batches, schema="i int, j int, partial long, n_batch long"
-    )
+    partial = map_batches(v, gram_batches, "i int, j int, partial long, n_batch long")
     # Accumulate as decimal (exact at any scale), project as bigint: the
     # totals fit int64 far beyond bench scale (|unit| <= ~3e4, so ~1e9
     # per product — int64 holds ~9e9 such rows per (i, j) cell), and a
@@ -1466,36 +1414,33 @@ _PQ_ORACLE = f"""
 """
 
 
-def _pq_np_units(arrs):
-    """Vectorized GRAM_SCALE fixed-point quantization of a batch of raw
-    embedding arrays -> int64 [N, DIM].  floor(float64(e) * GRAM_SCALE
-    + 0.5) in numpy is the bit-identical IEEE sequence of the former
-    Catalyst projection (floor(cast(e as double) * scale + 0.5)) and of
-    the oracle's `_PQ_UNITS_SQL` — the `q_embedding_gram_matrix` kernel
-    precedent.  Moved INSIDE the Arrow kernels in r16: the per-element
-    interpreted `F.transform` lambda used to run 3x per PQ leg (scan
-    projection + seed-codebook TakeOrdered + query collect) and was the
-    variance-heavy interpreted hot path of the q_ann_pq family."""
+def _pq_np_units(emb):
+    """GRAM_SCALE fixed-point units (int64 [N, DIM]) of an Arrow
+    ``embedding`` column.  floor(float64(e) * GRAM_SCALE + 0.5) in numpy
+    is the bit-identical IEEE sequence of the Catalyst projection
+    floor(cast(e as double) * scale + 0.5) and of the oracle's
+    `_PQ_UNITS_SQL`; the Gram matrix quantizes the same way.  It runs
+    inside the Arrow kernels and on the driver's bounded collects: an
+    interpreted per-element `F.transform` lambda would run 3x per PQ leg
+    (scan projection, seed-codebook TakeOrdered, query collect) on the
+    family's hot path."""
     import numpy as np
 
-    x = np.stack([np.asarray(e, dtype=np.float64) for e in arrs])
-    return np.floor(x * GRAM_SCALE + 0.5).astype(np.int64)
+    return np.floor(emb_matrix(emb) * GRAM_SCALE + 0.5).astype(np.int64)
 
 
 def _pq_seed_codebook(u: DataFrame):
     """Deterministic seed codebook: the PQ_K lowest vec_ids' unit
     subvectors, as cb[k, m, d] int64 — an O(1) collect (raw embeddings,
     quantized driver-side by the same IEEE expression)."""
-    cb_rows = u.orderBy("vec_id").limit(PQ_K).collect()
-    return _pq_np_units([r["embedding"] for r in cb_rows]).reshape(
-        PQ_K, PQ_M, PQ_SUB_D
-    )
+    cb_rows = u.orderBy("vec_id").limit(PQ_K).toArrow()
+    return _pq_np_units(cb_rows["embedding"]).reshape(PQ_K, PQ_M, PQ_SUB_D)
 
 
 def _pq_lloyd_refine(u: DataFrame, cb):
     """One k-means (Lloyd) step per subspace over the seed codebook.
 
-    Distributed shape: a mapInPandas pass emits per-batch partial
+    Distributed shape: a mapInArrow pass emits per-batch partial
     (subspace, codeword, dim) sums + member counts (<= PQ_M*PQ_K*PQ_SUB_D
     = 1024 rows per batch, constants), one keyed agg folds them, and the
     driver collects exactly those <= 1024 rows — corpus-size independent,
@@ -1510,43 +1455,28 @@ def _pq_lloyd_refine(u: DataFrame, cb):
     import math
 
     import numpy as np
-    import pandas as pd
 
-    def partials(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = _pq_np_units(pdf["embedding"]).reshape(
-                len(pdf), PQ_M, PQ_SUB_D
-            )
-            d_bkm = ((x[:, None, :, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
-            codes = d_bkm.argmin(axis=1)  # first-min tie-break, as encode
-            s = np.zeros((PQ_M, PQ_K, PQ_SUB_D), dtype=np.int64)
-            n = np.zeros((PQ_M, PQ_K), dtype=np.int64)
-            for m in range(PQ_M):  # PQ_M=8 iterations of vector ops
-                np.add.at(s[m], codes[:, m], x[:, m, :])
-                np.add.at(n[m], codes[:, m], 1)
-            # Emit every dim of every NON-EMPTY cluster: filtering on
-            # membership counts only.  Filtering on s + n != 0 (the first
-            # cut) silently dropped any (m, c, d) cell whose signed
-            # dim-sum equals -count (reachable: units are signed), making
-            # the refined centroid batch-partitioning-dependent.
-            mi, ci, di = np.nonzero(
-                np.broadcast_to(n[:, :, None] != 0, s.shape)
-            )
-            yield pd.DataFrame(
-                {
-                    "m": mi.astype(np.int32),
-                    "c": ci.astype(np.int32),
-                    "d": di.astype(np.int32),
-                    "s": s[mi, ci, di],
-                    "n": n[mi, ci],
-                }
-            )
+    def partials(batch):
+        x = _pq_np_units(batch.column("embedding")).reshape(
+            batch.num_rows, PQ_M, PQ_SUB_D
+        )
+        d_bkm = ((x[:, None, :, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
+        codes = d_bkm.argmin(axis=1)  # first-min tie-break, as encode
+        s = np.zeros((PQ_M, PQ_K, PQ_SUB_D), dtype=np.int64)
+        n = np.zeros((PQ_M, PQ_K), dtype=np.int64)
+        for m in range(PQ_M):  # PQ_M=8 iterations of vector ops
+            np.add.at(s[m], codes[:, m], x[:, m, :])
+            np.add.at(n[m], codes[:, m], 1)
+        # Emit every dim of every NON-EMPTY cluster: filtering on
+        # membership counts only.  Filtering on s + n != 0 (the first
+        # cut) silently dropped any (m, c, d) cell whose signed
+        # dim-sum equals -count (reachable: units are signed), making
+        # the refined centroid batch-partitioning-dependent.
+        mi, ci, di = np.nonzero(np.broadcast_to(n[:, :, None] != 0, s.shape))
+        return mi, ci, di, s[mi, ci, di], n[mi, ci]
 
     agg = (
-        u.select("embedding")
-        .mapInPandas(partials, schema="m int, c int, d int, s long, n long")
+        map_batches(u.select("embedding"), partials, "m int, c int, d int, s long, n long")
         .groupBy("m", "c", "d")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .collect()
@@ -1564,7 +1494,7 @@ def _pq_lloyd_refine(u: DataFrame, cb):
 def pq_trained_codebook(spark: SparkSession, sf_dir: str):
     """Memoized seed+one-Lloyd-step PQ codebook (cb[k, m, d] int64).
 
-    The Lloyd refinement is a full-corpus mapInPandas pass; memoized, it
+    The Lloyd refinement is a full-corpus mapInArrow pass; memoized, it
     runs once per session and fixture instead of at every
     q_ann_pq_trained construction.  The codebook is a
     PQ_K x PQ_M x PQ_SUB_D int64 array (~16 KiB of driver state).
@@ -1579,13 +1509,10 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str, trained: bool = False):
 
     One Arrow-batched numpy kernel does quantize + encode + ADC +
     per-batch top-k pruning in a single zero-shuffle pass over the
-    corpus scan (the GRAM_SCALE quantization moved from an interpreted
-    per-element Catalyst ``transform`` into the kernel in r16 — see
-    ``_pq_np_units``; the
-    ``q_embedding_gram_matrix`` pattern — VERDICT r4 flagged the former
-    Catalyst expression-tree version as the slowest headline query; the
-    kernel replaces per-row `F.aggregate` interpretation with three
-    BLAS-shaped array ops per batch).  Used by the plain top-k
+    corpus scan (the GRAM_SCALE quantization runs in the kernel, see
+    ``_pq_np_units``; the ``q_embedding_gram_matrix`` pattern: three
+    BLAS-shaped array ops per batch instead of an interpreted per-row
+    Catalyst `F.aggregate` tree, which was the slowest headline query).  Used by the plain top-k
     (q_ann_pq) and the two-stage exact rerank (q_ann_pq_rerank).
 
     Driver-side state is corpus-size independent: the codebook is PQ_K
@@ -1604,7 +1531,6 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str, trained: bool = False):
     appears, so no `_UNIT_MARGIN`-style guard is needed.
     """
     import numpy as np
-    import pandas as pd
 
     u = _vecs_spread(spark, sf_dir).select("vec_id", "embedding")
     # trained path reads the session-memoized codebook (retrains only on
@@ -1614,11 +1540,11 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str, trained: bool = False):
         u.filter(F.col("vec_id") % QUERY_MOD == 0)
         .orderBy("vec_id")
         .limit(N_QUERIES)
-        .collect()
+        .toArrow()
     )  # bounded query set — the documented N_QUERIES limitation
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    qmat = _pq_np_units([r["embedding"] for r in q_rows]).reshape(
-        len(q_rows), PQ_M, PQ_SUB_D
+    q_ids = q_rows["vec_id"].to_numpy()
+    qmat = _pq_np_units(q_rows["embedding"]).reshape(
+        q_rows.num_rows, PQ_M, PQ_SUB_D
     )
     # The ADC trick: precompute PER QUERY the PQ_M x PQ_K table of
     # subspace distances to every codeword (128 ints/query, once), so
@@ -1633,40 +1559,29 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str, trained: bool = False):
     keep = max(PQ_SHORTLIST, ANN_K)
     sentinel = np.iinfo(np.int64).max
 
-    def adc_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = _pq_np_units(pdf["embedding"]).reshape(
-                len(pdf), PQ_M, PQ_SUB_D
-            )
-            # encode: nearest codeword per subspace; np.argmin returns
-            # the FIRST minimum — lowest codeword id on ties, matching
-            # the oracle's row_number() ORDER BY dist, c.
-            d_bkm = ((x[:, None, :, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
-            codes = d_bkm.argmin(axis=1)  # [B, M]
-            # ADC lookup: scores[q, b] = sum_m dtab[q, m, codes[b, m]]
-            scores = dtab[:, np.arange(PQ_M)[None, :], codes].sum(axis=2)
-            self_mask = q_ids[:, None] == ids[None, :]
-            scores[self_mask] = sentinel
-            if scores.shape[1] > keep:
-                kth = np.partition(scores, keep - 1, axis=1)[:, keep - 1]
-                emit = (scores <= kth[:, None]) & ~self_mask
-            else:
-                emit = ~self_mask
-            qi, bi = np.nonzero(emit)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[qi],
-                    "neighbor_id": ids[bi],
-                    "adc_units": scores[qi, bi],
-                }
-            )
+    def adc_batches(batch):
+        ids = batch.column("vec_id").to_numpy()
+        x = _pq_np_units(batch.column("embedding")).reshape(
+            batch.num_rows, PQ_M, PQ_SUB_D
+        )
+        # encode: nearest codeword per subspace; np.argmin returns
+        # the FIRST minimum — lowest codeword id on ties, matching
+        # the oracle's row_number() ORDER BY dist, c.
+        d_bkm = ((x[:, None, :, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
+        codes = d_bkm.argmin(axis=1)  # [B, M]
+        # ADC lookup: scores[q, b] = sum_m dtab[q, m, codes[b, m]]
+        scores = dtab[:, np.arange(PQ_M)[None, :], codes].sum(axis=2)
+        self_mask = q_ids[:, None] == ids[None, :]
+        scores[self_mask] = sentinel
+        if scores.shape[1] > keep:
+            kth = np.partition(scores, keep - 1, axis=1)[:, keep - 1]
+            emit = (scores <= kth[:, None]) & ~self_mask
+        else:
+            emit = ~self_mask
+        qi, bi = np.nonzero(emit)
+        return q_ids[qi], ids[bi], scores[qi, bi]
 
-    scored = u.mapInPandas(
-        adc_batches, schema="query_id long, neighbor_id long, adc_units long"
-    )
+    scored = map_batches(u, adc_batches, "query_id long, neighbor_id long, adc_units long")
     return u, scored
 
 
@@ -1984,11 +1899,9 @@ def q_knn_bruteforce_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, so the result is bit-identical to the single-node oracle.
     Nothing is collected or broadcast at any corpus or query size.
     """
-    import pandas as pd
-
     # Two independent scans: deriving both cogroup children from ONE
     # DataFrame makes DeduplicateRelations re-alias the right child's
-    # columns, and the kernel then receives a pandas frame without the
+    # columns, and the kernel then receives a table without the
     # original names (observed KeyError: 'vec_id' on Spark 4.1).
     v = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
     v2 = with_norm(_vecs_spread(spark, sf_dir)).select("vec_id", "embedding", "vnorm")
@@ -2002,24 +1915,13 @@ def q_knn_bruteforce_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_repl = v2.withColumn("cb", (F.col("vec_id") % KNN_CB).cast("int")) \
         .withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(KNN_QB - 1))))
 
-    def block_kernel(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "sim": pd.Series(dtype="float64")}
-            )
-        return _knn_batch(
-            *_vec_arrays(cpdf), *_vec_arrays(qpdf), KNN_K, rounded=True
-        )
+    def block_kernel(qt, ct):
+        if not (qt.num_rows and ct.num_rows):
+            return [(), (), ()]
+        return _knn_batch(*_vec_arrays(ct), *_vec_arrays(qt), KNN_K, rounded=True)
 
-    partial = (
-        q_repl.groupby("qb", "cb")
-        .cogroup(c_repl.groupby("qb", "cb"))
-        .applyInPandas(
-            block_kernel, schema="query_id long, neighbor_id long, sim double"
-        )
-    )
+    blocks = q_repl.groupby("qb", "cb").cogroup(c_repl.groupby("qb", "cb"))
+    partial = apply_groups(blocks, block_kernel, _KNN_SCHEMA)
     rounded = F.round("sim", 6)
     return _top_per_query(partial, KNN_K, rounded.desc()).select(
         "query_id",
@@ -2658,22 +2560,18 @@ def _hamming_sig_frame(spark: SparkSession, sf_dir: str, sig_kernel) -> DataFram
     against that boundary.  Signatures are 8 bytes/vector, so the
     checkpointed state is ~0.2% of the corpus footprint.
 
-    r17 (VERDICT r16 item 1): the r16 `_vecs_spread` here was a measured
-    LOSS and is reverted — the sig kernel is one cheap numpy pass (the
-    512x-compression point of 1-bit), so locally the spread's exchange +
-    32-task mapInPandas + wide checkpoint cost more than the kernel
-    gained (bench rank 0.41->0.69 s, rerank 0.71->1.19 s; isolated A/B
-    this round, together with the rerank-side un-spread below: rank
-    action 0.67->0.44 s med, rerank 1.40->0.65 s med, builds
-    flat-to-better after the revert), and every consumer then
-    iterated a 2000-row checkpoint at 32-task width.  At any real
-    layout the spread is a no-op, so the revert changes nothing at
-    scale."""
-    return (
-        _vecs(spark, sf_dir)
-        .mapInPandas(sig_kernel, schema="vec_id long, sig long")
-        .localCheckpoint(eager=True)
-    )
+    The input is the bare scan, not ``_vecs_spread``: the sig kernel is
+    one cheap numpy pass (the 512x-compression point of 1-bit), so on a
+    one-row-group fixture a spread's exchange + 32-task kernel + wide
+    checkpoint cost more than the kernel gains, and every consumer then
+    iterates a 2000-row checkpoint at 32-task width.  Measured: adding
+    the spread moved the bench's rank leg 0.41 -> 0.69 s and rerank
+    0.71 -> 1.19 s; removing it again (isolated A/B, together with the
+    rerank-side reads) moved the rank action 0.67 -> 0.44 s median and
+    rerank 1.40 -> 0.65 s, builds flat-to-better.  At any real layout the spread is a no-op,
+    so the bare scan changes nothing at scale."""
+    sigs = map_batches(_vecs(spark, sf_dir), sig_kernel, "vec_id long, sig long")
+    return sigs.localCheckpoint(eager=True)
 
 
 @register("q_ann_hamming_rank", oracle=_HAMMING_ORACLE)
@@ -2701,35 +2599,23 @@ def q_ann_hamming_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ham_sig_kernel():
+    """The per-batch ``vec_id, sig`` kernel of ``_hamming_sig_frame``."""
     import numpy as np
-    import pandas as pd
 
     signs = hyperplane_signs(HAM_PLANES, DIM)
     S = np.asarray(signs, dtype=np.float64)  # HAM_PLANES × DIM, constant
+    weights = np.int64(1) << np.arange(HAM_PLANES, dtype=np.int64)
 
-    def sig_kernel(batches):
+    def sig_kernel(batch):
         # per-plane projections with the oracle's sequential dim fold
         # (see _pairwise_sims): vectorized across rows, bit-identical
         # at the sign boundary
-        weights = np.int64(1) << np.arange(HAM_PLANES, dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame(
-                    {"vec_id": pd.Series(dtype="int64"),
-                     "sig": pd.Series(dtype="int64")}
-                )
-                continue
-            X = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            P = np.zeros((X.shape[0], HAM_PLANES), dtype=np.float64)
-            for i in range(X.shape[1]):
-                P += X[:, i : i + 1] * S[None, :, i]
-            bits = (P > 0).astype(np.int64)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                 "sig": bits @ weights}
-            )
+        X = emb_matrix(batch.column("embedding"))
+        P = np.zeros((X.shape[0], HAM_PLANES), dtype=np.float64)
+        for i in range(X.shape[1]):
+            P += X[:, i : i + 1] * S[None, :, i]
+        bits = (P > 0).astype(np.int64)
+        return batch.column("vec_id").to_numpy(), bits @ weights
 
     return sig_kernel
 

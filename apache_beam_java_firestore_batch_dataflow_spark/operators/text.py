@@ -73,12 +73,15 @@ def normalized_text(text: Column) -> Column:
 
 def word_grams(tokens: Column | str, k: int) -> Column:
     """The ``k``-token windows of ``tokens`` in order, repeats kept, each
-    joined by one space; empty when there are fewer than ``k`` tokens."""
+    joined by one space; empty when there are fewer than ``k`` tokens.
+    Each gram joins ``k`` 0-based ``tokens[i + j]`` terms: a ``slice``
+    array per gram, or ``element_at`` terms at k = 13, measured slower."""
+    t = F.col(tokens) if isinstance(tokens, str) else tokens
     return F.when(
-        F.size(tokens) >= k,
+        F.size(t) >= k,
         F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tokens, i, k)),
+            F.sequence(F.lit(0), F.size(t) - k),
+            lambda i: F.concat_ws(" ", *(t[i + j if j else i] for j in range(k))),
         ),
     ).otherwise(F.array().cast("array<string>"))
 
@@ -418,19 +421,8 @@ def q_text_bigrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     toks = tokens_col(F.col("text"))
     d = docs.select(toks.alias("toks"))
-    # Indexed, not word_grams' slice form: one slice array per gram
-    # measured 0.98 -> 1.18 s (median, isolated, sf0.1).
-    bigrams = F.when(
-        F.size("toks") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(F.col("toks"), i), F.element_at(F.col("toks"), i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        d.select(F.explode(bigrams).alias("bigram"))
+        d.select(F.explode(word_grams("toks", 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
@@ -498,17 +490,9 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entirely narrow (tokenize → gram list → distinct count per row): NO
     shuffle at any scale; whole-stage codegen end to end."""
     docs = _docs(spark, sf_dir)
-    # Indexed, not word_grams' slice form: one slice array per gram
-    # measured 0.94 -> 1.10 s (median, isolated, sf0.1).
-    grams = F.expr(
-        "CASE WHEN size(toks) >= 3 THEN "
-        "  transform(sequence(0, size(toks) - 3), "
-        "            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) "
-        "ELSE slice(toks, 1, 0) END"
-    )
     return (
         docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
-        .select("doc_id", grams.alias("grams"))
+        .select("doc_id", word_grams("toks", 3).alias("grams"))
         .select(
             "doc_id",
             F.size("grams").cast("bigint").alias("n_grams"),

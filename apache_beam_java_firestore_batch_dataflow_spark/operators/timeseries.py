@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrow import apply_groups, arrow_schema, py_values, to_batch
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..functions.timeutil import epoch_us
 from ..sources.tables import load_table
@@ -1617,43 +1618,45 @@ def q_events_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (the EWMA linear-fold trick does not apply), so the fold
     runs in Python: one shuffle keyed on user_id, a per-user sequential
     kernel whose state is two integers, group size bounded by one
-    user's history (the sessionize bound).  r16 boundary fix (guide-of-
-    record: per-group grouped-map overhead is per-GROUP, not per-row):
-    the former ``groupBy(user_id).applyInPandas`` paid ~3 ms of Arrow
-    framing per user (measured: a 1500-group identity grouped-map costs
-    4.25 s at sf0.1) and let AQE coalesce the 2.4 MB exchange to ~1
-    task — sizing a PYTHON stage by bytes when its cost is per-row.
-    Now: ONE explicit hash repartition on user_id (the same single
+    user's history (the sessionize bound).  Not a grouped map:
+    grouped-map overhead is per GROUP, ~3 ms of Arrow framing per user
+    (measured: a 1500-group identity grouped-map costs 4.25 s at
+    sf0.1), and AQE would coalesce the 2.4 MB exchange to ~1 task —
+    sizing a PYTHON stage by bytes when its cost is per-row.  Instead:
+    ONE explicit hash repartition on user_id (the same single
     shuffle the groupBy planned, partition count pinned so byte-based
     coalescing cannot serialize the interpreter work) and ONE
-    mapInPandas over each partition, folding every complete user group
-    inside the task (hash partitioning guarantees group completeness).
+    ``mapInArrow`` over each partition, folding every complete user
+    group inside the task (hash partitioning guarantees group
+    completeness).
     The recursion itself is unchanged, exact int64 micro-token
     arithmetic on Python ints.  The DuckDB oracle replays the identical
     recursion as a recursive CTE (the engine-parity rule for coupled
     folds); the trajectory stays bit-exact."""
     from collections.abc import Iterator
 
-    import pandas as pd
+    import pyarrow as pa
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", epoch_us("ts").alias("t")
     )
+    ddl = "user_id long, event_id long, allowed boolean, tokens_after_ut long"
+    schema = arrow_schema(ddl)
 
-    def fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
+    def fold_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        part = [b for b in batches if b.num_rows]
+        if not part:
             return
         # One partition = many complete user groups (hash-partitioned);
         # a user's rows can span Arrow batches, so concatenate the
         # task's batches (bounded by the task's shuffle input — the
         # same order of memory the sort/agg machinery holds) and walk
         # users in sorted order.
-        pdf = pd.concat(pdfs, ignore_index=True).sort_values(
-            ["user_id", "t", "event_id"]
+        tbl = pa.Table.from_batches(part).sort_by(
+            [("user_id", "ascending"), ("t", "ascending"), ("event_id", "ascending")]
         )
-        users = pdf["user_id"].to_numpy()
-        ts = pdf["t"].tolist()  # Python ints: exact int64 arithmetic
+        users = tbl["user_id"].to_numpy()
+        ts = py_values(tbl["t"])  # Python ints: exact int64 arithmetic
         n = len(ts)
         allowed = [False] * n
         after = [0] * n
@@ -1674,36 +1677,22 @@ def q_events_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             allowed[i] = ok
             after[i] = tokens
             prev_t = t
-        yield pd.DataFrame(
-            {
-                "user_id": pdf["user_id"].to_numpy(),
-                "event_id": pdf["event_id"].to_numpy(),
-                "allowed": allowed,
-                "tokens_after_ut": after,
-            }
-        )
+        yield to_batch([users, tbl["event_id"].to_numpy(), allowed, after], schema)
 
     # Partition count: the session's configured shuffle width (the
     # deployment-scaled knob; local default = core count) — pinned
     # explicitly so AQE's byte-based coalescing cannot shrink it.
-    # MEMORY ENVELOPE (ADVICE r16): fold_partition concatenates its
-    # whole shuffle partition into one pandas frame (hash-partitioned
-    # input is NOT sorted, so group-at-a-time streaming would need a
-    # sort first), making Python-worker memory O(events / n_parts) ×
-    # ~3 int64 columns — NOT O(one user group) as under the old
-    # grouped-map.  Deployments must size n_parts (this knob) so a
-    # partition of the three 8-byte columns fits the worker:
-    # partitions ≈ total_events × 24 B / (a few hundred MB) is the
-    # floor; a skewed user count per partition raises it.  At the
-    # local default (32) the fixture partition is ~75 KB.
+    # MEMORY ENVELOPE: fold_partition holds its whole shuffle partition
+    # as one Arrow table (hash-partitioned input is NOT sorted), so
+    # Python-worker memory is O(events / n_parts) × three int64 columns,
+    # not O(one user group).  Size n_parts so a partition fits the
+    # worker: ≈ total_events × 24 B / (a few hundred MB) at least, more
+    # under user skew.  At the local default (32) it is ~75 KB.
     n_parts = int(
         spark.conf.get("spark.sql.shuffle.partitions",
                        str(spark.sparkContext.defaultParallelism))
     )
-    return ev.repartition(n_parts, "user_id").mapInPandas(
-        fold_partition,
-        schema="user_id long, event_id long, allowed boolean, tokens_after_ut long",
-    )
+    return ev.repartition(n_parts, "user_id").mapInArrow(fold_partition, schema=ddl)
 
 
 # ---------------------------------------------------------------------------
@@ -2296,7 +2285,6 @@ def q_events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     way (property-tested against the O(L²) definition); tau_b6 stays
     the identical single-double JVM expression, so the DuckDB
     pair-join oracle hash-matches unchanged."""
-    import pandas as pd
     ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.select(
@@ -2328,35 +2316,23 @@ def q_events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.c").alias("x"),
         F.col("b.c").alias("y"),
     )
-    def kt_counts(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > KT_MAX_GROUP_ROWS:
+    def kt_counts(table):
+        pair = (table["type_a"][0].as_py(), table["type_b"][0].as_py())
+        if table.num_rows > KT_MAX_GROUP_ROWS:
             raise ValueError(
-                f"kendall group ({pdf['type_a'].iloc[0]}, "
-                f"{pdf['type_b'].iloc[0]}) has {len(pdf)} aligned rows "
+                f"kendall group {pair} has {table.num_rows} aligned rows "
                 f"> KT_MAX_GROUP_ROWS={KT_MAX_GROUP_ROWS}; re-bucket the "
                 "series to a coarser grain before correlating"
             )
-        n0, nc, nd, tx, ty = _kendall_knight(
-            pdf["x"].to_numpy(), pdf["y"].to_numpy()
-        )
-        return pd.DataFrame(
-            {
-                "type_a": [pdf["type_a"].iloc[0]],
-                "type_b": [pdf["type_b"].iloc[0]],
-                "n0": [n0],
-                "nc": [nc],
-                "nd": [nd],
-                "tx": [tx],
-                "ty": [ty],
-            }
-        )
+        counts = _kendall_knight(table["x"].to_numpy(), table["y"].to_numpy())
+        return [[v] for v in (*pair, *counts)]
 
     # n0 = 0 (single-hour grid) produced no row under the pair-join
     # formulation and produces none in the SQL oracle — keep parity.
-    pp = aligned.groupBy("type_a", "type_b").applyInPandas(
+    pp = apply_groups(
+        aligned.groupBy("type_a", "type_b"),
         kt_counts,
-        schema="type_a string, type_b string, n0 long, nc long, "
-        "nd long, tx long, ty long",
+        "type_a string, type_b string, n0 long, nc long, nd long, tx long, ty long",
     ).filter(F.col("n0") > 0)
     den = (F.col("n0") - F.col("tx")).cast("double") * (
         F.col("n0") - F.col("ty")

@@ -10,7 +10,9 @@ a shuffle join fails CI, not the 100 TB run.
 
 from __future__ import annotations
 
+import hashlib
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -20,6 +22,46 @@ def plan_text(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), mode
     )
+
+
+# Parts of the formatted plan text that differ between two builds of the
+# same query: per-session counters (expression, exchange-plan, RDD and
+# lambda-variable ids), JVM object identity hashes, the random suffix of
+# a ``mkdtemp`` directory, and the Python function names of kernel nodes
+# (a kernel's name is not its plan).
+_DIGEST_SUBS = (
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id]"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"\b(lambda [a-z]+)_\d+"), r"\1"),
+    (re.compile(r"(\w)@[0-9a-f]+\b"), r"\1@"),
+    (re.compile(r"(/tmp/[\w.-]*?[-_])[a-z0-9_]{8}/"), r"\1*/"),
+)
+_NODE = re.compile(r"^(?=\(\d+\) )", re.M)
+_PY_NODE = re.compile(r"\(\d+\) \w*(?:InPandas|InArrow|EvalPython)")
+_PY_CALL = re.compile(r"(?:\w+|<lambda>)(\([^()]*\)#)")
+
+
+class PlanDigest(NamedTuple):
+    text: str
+    sha: str
+
+
+def plan_digest(df: DataFrame) -> PlanDigest:
+    """``plan_text(df, "formatted")`` with everything that varies between
+    two builds of the same query normalized away (see ``_DIGEST_SUBS``;
+    a Python kernel call prints as ``<py>(...)``), plus the SHA-256 of
+    that text: equal digests mean the same plan."""
+    text = plan_text(df, "formatted")
+    for pat, rep in _DIGEST_SUBS:
+        text = pat.sub(rep, text)
+    # The node details follow the tree, one "(n) Name" section per node;
+    # in a Python node's section every ``name(args)#`` call is a kernel.
+    text = "".join(
+        _PY_CALL.sub(r"<py>\1", sec) if _PY_NODE.match(sec) else sec
+        for sec in _NODE.split(text)
+    )
+    return PlanDigest(text, hashlib.sha256(text.encode()).hexdigest())
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

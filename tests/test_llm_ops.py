@@ -11,6 +11,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from apache_beam_java_firestore_batch_dataflow_spark.functions.arrow import (
+    arrow_schema,
+    emb_matrix,
+)
 from apache_beam_java_firestore_batch_dataflow_spark.functions.hashing import (
     H2_SALT,
     HEX_DIGITS,
@@ -168,11 +172,14 @@ def test_multimodal_decode_plumbing(spark):
         assert r.byte_entropy_bp == ent
 
 
-def test_doc_kernel_runner_contract():
-    """The per-document runner, driven without Spark: one output frame per
-    input frame, 1→N and 1→0 kernels, exact ints above 2**53, None as
-    null, and schema-named columns even for an empty batch."""
-    import pandas as pd
+def test_doc_kernel_runner_contract(spark):
+    """The per-document runner on Arrow batches: one output batch per
+    input batch, 1→N and 1→0 kernels, exact ints above 2**53 both ways
+    (a nullable int input column included), None as null, a NaN kernel
+    value kept NaN (end to end through Spark too), and the declared
+    schema even for an empty batch."""
+    import math
+
     import pyarrow as pa
 
     big = 2**53 + 1
@@ -181,20 +188,85 @@ def test_doc_kernel_runner_contract():
         for k in range(n):
             yield doc_id, k, big if k == 0 else None
 
-    run = doc_kernel(fan_out, "doc_id long, k int, big long")
+    schema = arrow_schema("doc_id long, k int, big long")
+    run = doc_kernel(fan_out, schema)
     batches = [
-        pd.DataFrame({"doc_id": [7, 8], "n": [3, 0]}),
-        pd.DataFrame({"doc_id": [9], "n": [1]}),
-        pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "n": []}),
+        pa.record_batch({"doc_id": [7, 8], "n": [3, 0]}),
+        pa.record_batch({"doc_id": [9], "n": [1]}),
+        pa.record_batch({"doc_id": pa.array([], pa.int64()), "n": pa.array([], pa.int64())}),
     ]
     out = list(run(iter(batches)))
     assert len(out) == len(batches)
-    assert all(list(o.columns) == ["doc_id", "k", "big"] for o in out)
-    assert out[0].values.tolist() == [[7, 0, big], [7, 1, None], [7, 2, None]]
-    assert out[1].values.tolist() == [[9, 0, big]]
-    assert out[2].empty
-    arr = pa.Array.from_pandas(out[0]["big"], type=pa.int64())
-    assert arr.to_pylist() == [big, None, None]
+    assert all(o.schema == schema for o in out)
+    assert out[0].to_pylist() == [
+        {"doc_id": 7, "k": 0, "big": big},
+        {"doc_id": 7, "k": 1, "big": None},
+        {"doc_id": 7, "k": 2, "big": None},
+    ]
+    assert [tuple(r.values()) for r in out[1].to_pylist()] == [(9, 0, big)]
+    assert out[2].num_rows == 0
+
+    # a nullable int64 input column reaches the kernel exactly: numpy
+    # would read it as float64 and round 2**53 + 1
+    seen = []
+    echo = doc_kernel(lambda v: seen.append(v) or [(v,)], arrow_schema("v long"))
+    (got,) = echo(iter([pa.record_batch({"v": pa.array([big, None], pa.int64())})]))
+    assert seen == [big, None]
+    assert got.column(0).to_pylist() == [big, None]
+
+    # a NaN feature is a value, not NULL: in the generator and in Spark
+    nan_ddl = "id long, f double"
+    nan = doc_kernel(lambda i: [(i, float("nan"))], arrow_schema(nan_ddl))
+    (b,) = nan(iter([pa.record_batch({"id": [1]})]))
+    assert b.column("f").null_count == 0 and math.isnan(b.column("f")[0].as_py())
+    rows = multimodal.map_docs(spark.range(3), lambda i: [(i, float("nan"))], nan_ddl)
+    fs = [r["f"] for r in rows.collect()]
+    assert len(fs) == 3 and all(f is not None and math.isnan(f) for f in fs), fs
+
+
+def test_emb_matrix_decodes_and_rejects_malformed_rows():
+    """emb_matrix decodes a list<float> column (sliced, chunked) to the
+    float64 matrix the per-row np.stack gave, and raises on a NULL row
+    or rows of different lengths."""
+    import pyarrow as pa
+
+    rows = [[0.1, -2.5, 3.0], [4.25, 1e-3, -0.0], [7.0, 8.0, 9.5]]
+    col = pa.array(rows, pa.list_(pa.float32()))
+    want = np.stack([np.asarray(r, dtype=np.float32).astype(np.float64) for r in rows])
+    assert np.array_equal(emb_matrix(col), want)
+    assert np.array_equal(emb_matrix(col.slice(1)), want[1:])
+    assert np.array_equal(emb_matrix(pa.chunked_array([col[:1], col[1:]])), want)
+    assert emb_matrix(col.slice(0, 0)).shape[0] == 0
+    with pytest.raises(ValueError, match="ragged"):
+        emb_matrix(pa.array([[1.0, 2.0], [3.0]], pa.list_(pa.float32())))
+    with pytest.raises(ValueError, match="NULL"):
+        emb_matrix(pa.array([[1.0, 2.0], None], pa.list_(pa.float32())))
+
+
+def test_python_kernels_cross_one_arrow_boundary():
+    """Every operator kernel goes through functions/arrow.py: pandas
+    transports (``*InPandas(``) only in udfs.py, whose pandas UDFs are
+    the feature; no hand-written ArrowExtensionArray NaN patch; no
+    pandas import in the kernel modules."""
+    import os
+    import re
+
+    ops = os.path.dirname(multimodal.__file__)
+    offenders = []
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(ops, fname)) as fh:
+            src = fh.read()
+        if "InPandas(" in src and fname != "udfs.py":
+            offenders.append(f"{fname}: InPandas(")
+        if "ArrowExtensionArray" in src:
+            offenders.append(f"{fname}: ArrowExtensionArray")
+        if fname in ("multimodal.py", "similarity.py", "timeseries.py") and re.search(
+            r"^\s*(import pandas|from pandas)", src, re.M
+        ):
+            offenders.append(f"{fname}: imports pandas")
+    assert not offenders, offenders
 
 
 def test_real_decoder_dispatch():

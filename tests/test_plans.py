@@ -18,6 +18,8 @@ from apache_beam_java_firestore_batch_dataflow_spark.plans.explain import (
     codegen_stats,
     num_broadcast_joins,
     num_shuffles,
+    plan_digest,
+    plan_text,
     pushed_filters,
     read_schemas,
 )
@@ -189,7 +191,7 @@ def test_window_analytics_single_exchange(spark, sf_dir):
 
 
 def test_multimodal_decodes_never_shuffle(spark, sf_dir):
-    """Audio/video synth+decode are narrow mapInPandas chains over the
+    """Audio/video synth+decode are narrow mapInArrow chains over the
     scan — payload bytes must never cross an exchange."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators import multimodal
 
@@ -423,7 +425,7 @@ def test_boilerplate_chunks_all_stages_keyed(spark, sf_dir):
 
 def test_gram_matrix_single_reduce_shuffle(spark, sf_dir):
     """The Gram matrix collapses each batch to one D x D partial inside
-    mapInPandas; the only exchange is the tiny (i, j)-keyed final
+    mapInArrow; the only exchange is the tiny (i, j)-keyed final
     reduce — never a D^2 row explosion of the corpus."""
     df = similarity.QUERIES["q_embedding_gram_matrix"](spark, sf_dir)
     # one (i, j)-keyed reduce + at most the r16 unsplittable-input
@@ -440,7 +442,7 @@ def test_pq_encode_inlines_codebook_and_joins_nothing(spark, sf_dir):
     and the only shuffle is the per-query top-k window."""
     df = similarity.QUERIES["q_ann_pq"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan   # the fused encode+ADC kernel
+    assert "MapInArrow" in plan   # the fused encode+ADC kernel
     assert "Join" not in plan      # no broadcast/cartesian/equi join at all
     # window partitioning + at most the r16 unsplittable-input spread
     assert num_shuffles(df) <= 2
@@ -517,11 +519,11 @@ def test_incremental_ingest_screen_all_keyed(spark, sf_dir):
 
 def test_knn_cogrouped_no_broadcast_no_cartesian(spark, sf_dir):
     """The unbounded-query kNN must be a pure cogroup plan: block keys
-    carry both sides (FlatMapCoGroupsInPandas), nothing broadcasts and
+    carry both sides (FlatMapCoGroupsInArrow), nothing broadcasts and
     nothing is cartesian — queries can be arbitrarily many."""
     df = similarity.QUERIES["q_knn_bruteforce_cogrouped"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastExchange" not in plan
 
@@ -534,7 +536,7 @@ def test_ewma_single_shuffle_no_window(spark, sf_dir):
     df = timeseries.QUERIES["q_events_ewma"](spark, sf_dir)
     assert num_shuffles(df) == 1
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan and "InPandas" not in plan
+    assert "Window" not in plan and "InPandas" not in plan and "InArrow" not in plan
 
 
 def test_weighted_sample_is_global_topk(spark, sf_dir):
@@ -587,7 +589,7 @@ def test_phash_no_pair_explosion_and_kernel_hashing(spark, sf_dir):
 
     df = multimodal.QUERIES["q_multimodal_phash_pairs"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -597,7 +599,7 @@ def test_pq_trained_same_shape_as_seeded(spark, sf_dir):
     corpus pass is still one join-free Arrow kernel + one window."""
     df = similarity.QUERIES["q_ann_pq_trained"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
     assert num_shuffles(df) <= 2  # window + conditional r16 spread
 
@@ -694,7 +696,7 @@ def test_scene_cuts_zero_shuffle_kernel(spark, sf_dir):
     df = multimodal.QUERIES["q_multimodal_scene_cuts"](spark, sf_dir)
     assert num_shuffles(df) == 0
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
 
 
@@ -892,7 +894,7 @@ def test_zonemap_single_aggregation(spark, sf_dir):
 
 def test_hamming_signatures_one_kernel_pass(spark, sf_dir):
     """1-bit retrieval: signatures come from ONE Arrow kernel over the
-    scan (a single MapInPandas), the query set broadcasts, and ranking
+    scan (a single MapInArrow), the query set broadcasts, and ranking
     is the usual window top-k — no second corpus pass."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators import similarity as sim
 
@@ -901,8 +903,8 @@ def test_hamming_signatures_one_kernel_pass(spark, sf_dir):
     # ADVICE r6: the signature frame is localCheckpoint-ed, so BOTH
     # consumers (broadcast query side + probe side) scan the
     # materialized RDD — the kernel itself ran exactly once, and the
-    # final plan contains NO MapInPandas node at all.
-    assert plan.count("MapInPandas") == 0, plan
+    # final plan contains NO MapInArrow node at all.
+    assert plan.count("MapInArrow") == 0, plan
     assert "Scan ExistingRDD" in plan
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
@@ -1152,7 +1154,7 @@ def test_image_blur_has_no_post_scan_exchange(spark, sf_dir):
 
 def test_kendall_concordance_is_grouped_kernel_not_pair_join(spark, sf_dir):
     """Knight upgrade (r12): concordance must run as ONE grouped Arrow
-    kernel over the aligned series — exactly one FlatMapGroupsInPandas
+    kernel over the aligned series — exactly one FlatMapGroupsInArrow
     and NO hour-pair self-join (live plan: type-grid cross + grid-fill
     left join + series alignment = at most 3 joins; the old O(L²)
     formulation added a fourth).  The hourly rollup is cached (three
@@ -1161,7 +1163,7 @@ def test_kendall_concordance_is_grouped_kernel_not_pair_join(spark, sf_dir):
 
     df = timeseries.QUERIES["q_events_kendall_tau"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("FlatMapGroupsInArrow") == 1
     live = plan.split("InMemoryRelation")[0]
     # ADVICE r12: count NAMED equi-join nodes (raw "Join" substring
     # counting also matched unrelated node renames across Spark
@@ -1245,3 +1247,24 @@ def test_codegen_cache_holds_a_repeated_query_set(spark, sf_dir):
     first = one_pass()
     second = one_pass()
     assert second <= CODEGEN_REUSE_COLD_CLASSES // 10, (first, second)
+
+
+def test_plan_digest_is_stable_across_builds_and_sees_a_filter(spark, sf_dir):
+    """Two builds of one registered query in one session differ in
+    expression, exchange, RDD and lambda ids, but digest equal: a JVM
+    plan, a Python kernel, a localCheckpoint and higher-order lambdas.
+    One added filter changes the digest."""
+    queries = __spark_entry__.queries()
+    for name in (
+        "q1_pricing_summary",
+        "q_knn_bruteforce_numpy",
+        "q_ann_hamming_rank",
+        "q_text_repetition",
+    ):
+        a, b = (queries[name](spark, sf_dir) for _ in range(2))
+        assert plan_text(a) != plan_text(b), name
+        assert plan_digest(a) == plan_digest(b), name
+    df = queries["q1_pricing_summary"](spark, sf_dir)
+    filtered = df.filter(F.col(df.columns[0]).isNotNull())
+    assert plan_digest(filtered).sha != plan_digest(df).sha
+    spark.catalog.clearCache()

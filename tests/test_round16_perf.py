@@ -2,7 +2,7 @@
 
 Each test pins one of the r16 performance fixes so it cannot silently
 regress: the scale-adaptive unsplittable-input spread, the HLL-sketch
-aggregation split, the token-bucket mapInPandas fold (including the
+aggregation split, the token-bucket mapInArrow fold (including the
 group-spans-arrow-batches path the fixture alone never exercises), the
 grouped-map exchange-width pin, and the HITS lineage truncation.
 """
@@ -119,7 +119,7 @@ def test_sketch_values_unchanged_by_split(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# token bucket: mapInPandas fold, including groups spanning Arrow batches
+# token bucket: mapInArrow fold, including groups spanning Arrow batches
 # ---------------------------------------------------------------------------
 
 
@@ -153,7 +153,7 @@ def test_token_bucket_groups_spanning_arrow_batches(spark, sf_dir):
 
 def test_token_bucket_single_pinned_shuffle(spark, sf_dir):
     """One hash repartition on user_id (width pinned against AQE's
-    byte-based coalescing) feeding one MapInPandas — no grouped-map
+    byte-based coalescing) feeding one MapInArrow — no grouped-map
     node, no second exchange."""
     from apache_beam_java_firestore_batch_dataflow_spark.operators.timeseries import (
         q_events_token_bucket,
@@ -166,8 +166,8 @@ def test_token_bucket_single_pinned_shuffle(spark, sf_dir):
     df = q_events_token_bucket(spark, sf_dir)
     assert num_shuffles(df) == 1
     txt = plan_text(df)
-    assert "MapInPandas" in txt
-    assert "FlatMapGroupsInPandas" not in txt
+    assert "MapInArrow" in txt
+    assert "FlatMapGroupsInArrow" not in txt
     assert "hashpartitioning(user_id" in txt
 
 

@@ -80,7 +80,7 @@ def test_prune_accepts_ids_beyond_1e12():
             ids, x, np.linalg.norm(x, axis=1), ids[::10], q_mat,
             np.linalg.norm(q_mat, axis=1), 3, rounded=True,
         )
-        assert len(out) >= 3 * len(q_mat)
+        assert len(out["query_id"]) >= 3 * len(q_mat)
         assert not (out["query_id"] == out["neighbor_id"]).any()
         assert set(out["neighbor_id"] - offset) <= set(base)
 
