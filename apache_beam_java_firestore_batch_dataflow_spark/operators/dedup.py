@@ -33,6 +33,7 @@ from ..functions.hashing import (
     minhash_term,
     minhash_term_sql,
 )
+from ..functions.lineage import Generations
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..sources.tables import load_table, shared_kernel
 from .text import (
@@ -357,6 +358,36 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def undirected(edges: DataFrame) -> DataFrame:
+    """``edges`` (``src``, ``dst``) plus every reversed arc: both arcs of
+    each undirected edge."""
+    return edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _min_label_round(
+    arcs: DataFrame, labels: DataFrame, flag_change: bool = False
+) -> DataFrame:
+    """One min-label round: every vertex takes the least of its own label
+    and its neighbors' over ``arcs`` (both directions present).  Reads
+    ``labels`` twice (the left join keeps every vertex, the neighbor
+    minimum re-derives from it).  ``flag_change`` adds ``chg`` (1 where
+    the label dropped), so convergence is one combiner agg over the
+    round's own rows rather than a second new-vs-old join."""
+    neighbor_min = (
+        arcs.join(labels, arcs["src"] == labels["doc_id"])
+        .select(F.col("dst").alias("doc_id"), "cluster_id")
+        .groupBy("doc_id")
+        .agg(F.min("cluster_id").alias("nbr_min"))
+    )
+    nbr = F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
+    flag = [(nbr < F.col("cluster_id")).cast("int").alias("chg")] if flag_change else []
+    return labels.join(neighbor_min, "doc_id", "left").select(
+        "doc_id", F.least(F.col("cluster_id"), nbr).alias("cluster_id"), *flag
+    )
+
+
 def connected_components(
     vertices: DataFrame, edges: DataFrame, max_iter: int = 20,
 ) -> DataFrame:
@@ -370,77 +401,25 @@ def connected_components(
     row data).  This is the standard large-graph
     CC-by-label-propagation.
 
-    Two r10 reworks of the round body (VERDICT r9 item 6 — the CC loop,
-    not the edge kernel, dominated q_graph_components_semantic's eager
-    build; together 5.9 s → 3.3 s on the sf0.1 semantic graph):
-
-    - The convergence flag rides ON the update row (the old label is
-      already present from the left join), so "did anything change" is
-      one combiner agg over the frame each round materializes anyway —
-      NOT a second shuffle join of new-vs-old labels.
-    - The label frame is ``localCheckpoint(eager)``-ed EVERY round
-      instead of persisted (checkpoint materializes the same O(nodes)
-      bytes a persist would, so storage cost is identical), because
-      cutting lineage each round keeps re-analysis/AQE planning of the
-      next round's plan constant-size.  Measured faster than both
-      per-3-rounds checkpointing and 2-rounds-per-action unrolling
-      (4.7 s), whose intra-group double-consumption outweighed the
-      saved action.  A 100 TB run keeps the same shape; on a real
-      cluster prefer reliable ``checkpoint()`` to survive executor
-      loss during long iterations.
-
-    Block reclamation (ADVICE r10; reworked closing r11):
-    ``DataFrame.unpersist()`` is a no-op on a checkpointed frame (its
-    blocks bypass the cache manager), so each superseded round's
-    O(nodes) blocks are freed EXPLICITLY by unpersisting the PREVIOUS
-    round's internal checkpointed RDD (``queryExecution.toRdd()`` — the
-    exact object ``localCheckpoint`` persisted) once the new round is
-    materialized — long-diameter graphs hold at most two generations
-    instead of O(rounds).  The first implementation diffed the JVM
-    persistent-RDD registry around the checkpoint call instead; that
-    sweep was unsound — round 1's diff also captured the ``both`` edge
-    cache (and would capture ANY concurrently persisted RDD), so round
-    2 unpersisted the edge frame and every later round re-ran the
-    doubled-edge union.  The direct RDD handle cannot touch anything
-    but the superseded generation.  The final round's blocks back the
-    returned frame and are reclaimed by GC after the caller drops it.
+    Every generation, the initial vertex labels included, is truncated
+    (``functions/lineage``): a checkpoint stores the same O(nodes) bytes
+    a persist would, and cutting lineage each round keeps the analysis
+    and AQE planning of the next round constant-size.  That measured
+    faster than checkpointing every third round and than unrolling two
+    rounds per action (together with the change flag: 5.9 s -> 3.3 s
+    eager build of q_graph_components_semantic at sf0.1; unrolling,
+    4.7 s).  Generation 0 is truncated too: lazily persisted and read
+    twice in round 1, it cost an extra AQE query-stage job in some
+    builds and not others.  At most two generations stay held.
     """
-    both = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    both = both.persist()
-    handle = vertices.select("doc_id", F.col("doc_id").alias("cluster_id")).persist()
-    labels = handle
-    prev_ckpt_rdd = None
+    both = undirected(edges).persist()
+    gens = Generations()
+    labels = gens.truncate(
+        vertices.select("doc_id", F.col("doc_id").alias("cluster_id"))
+    )
     for _ in range(max_iter):
-        neighbor_min = (
-            both.join(labels, both["src"] == labels["doc_id"])
-            .select(F.col("dst").alias("doc_id"), "cluster_id")
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        stepped = labels.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(
-                F.col("cluster_id"),
-                F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-            ).alias("cluster_id"),
-            (
-                F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                < F.col("cluster_id")
-            ).cast("int").alias("chg"),
-        ).localCheckpoint(eager=True)
-        # the exact JVM RDD localCheckpoint persisted: the returned
-        # frame's plan is LogicalRDD(<checkpointed rdd>), so its .rdd()
-        # IS the persisted object (toRdd() would be a fresh derivation
-        # over it and unpersisting that would free nothing)
-        ckpt_rdd = stepped._jdf.queryExecution().logical().rdd()
+        stepped = gens.truncate(_min_label_round(both, labels, flag_change=True))
         changed = stepped.agg(F.sum("chg")).first()[0] or 0
-        handle.unpersist()  # round 1 frees the initial vertices persist
-        # the new round is materialized, so the previous round's
-        # checkpoint blocks are dead — free them now, not at GC time
-        if prev_ckpt_rdd is not None:
-            prev_ckpt_rdd.unpersist(False)
-        prev_ckpt_rdd = ckpt_rdd
-        handle = stepped
         # narrow projection of the checkpointed frame — no copy
         labels = stepped.select("doc_id", "cluster_id")
         if changed == 0:
@@ -481,10 +460,7 @@ LABEL_PROP_K = 3  # fixed rounds for the bench-able bounded variant
 
 
 def propagate_min_label(
-    vertices: DataFrame,
-    edges: DataFrame,
-    iterations: int = LABEL_PROP_K,
-    checkpoint_every: int | None = None,
+    vertices: DataFrame, edges: DataFrame, iterations: int = LABEL_PROP_K,
 ) -> DataFrame:
     """Exactly ``iterations`` rounds of min-label propagation, unrolled
     into ONE declarative plan (no driver-side convergence reads).
@@ -498,66 +474,22 @@ def propagate_min_label(
     which is control flow, not dataflow).  Edges are persisted once so
     the k joins don't re-derive the pair pipeline.
 
-    Cache discipline (ADVICE r6): in the lazy one-job shape every
-    generation's persist is still REFERENCED by the final plan (round
-    i+1 consumes round i twice — dropping a mid-chain cache before the
-    action re-inlines both branches and restores the 2^k blowup), so
-    generations can only be released from the OLD end: after the loop,
-    all but the newest two are unpersisted — at the default ``k == 3``
-    that drops only generation 0 (the bare vertex projection), so the
-    bounded re-inline costs one extra scan and cached storage is
-    <= 2 x O(vertices) per invocation instead of k+1.  That one-extra-
-    scan bound holds ONLY for k <= 3: each dropped generation is
-    consumed twice by its successor, so a chain of d dropped
-    generations re-inlines ~2^d times (ADVICE r7).  Deeper runs
-    therefore AUTO-ENABLE ``checkpoint_every``: the label frame is
-    localCheckpoint(eager)-ed every N rounds (the ``graph.pagerank`` /
-    ``kmeans`` discipline), which truncates lineage, lets EVERY tracked
-    persist release immediately, and bounds the dropped-chain depth at
-    N <= 3 where the re-inline is one extra scan again.
+    Each round reads its label generation twice, so every generation is
+    held (``functions/lineage``): unheld, the final plan carries 2^k
+    copies of the label chain (~7 s of redundant recompute at k=3,
+    sf0.1).  In the lazy one-job shape every held generation is still
+    read by the final plan, so generations are released only from the
+    old end after the loop; at k=3 that drops generation 0 (the bare
+    vertex projection) for one extra scan.  Deeper runs truncate on the
+    lineage cadence.
     """
-    if checkpoint_every is None and iterations > LABEL_PROP_K:
-        # ADVICE r7: without a checkpoint, iterations > 3 leave a
-        # dropped-cache chain whose re-inline grows ~2^(k-2); the
-        # eager-checkpoint regime is strictly better past k=3.
-        checkpoint_every = LABEL_PROP_K
-    both = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    both = undirected(edges).persist()
     labels = vertices.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    cached_gens: list[DataFrame] = []
+    gens = Generations()
     for i in range(iterations):
-        # Each round consumes `labels` TWICE (the left-join keeps every
-        # vertex; neighbor_min re-derives from the same frame).  Without
-        # a persist the round-i subplan is inlined into BOTH branches of
-        # round i+1, so the final plan holds 2^k copies of the label
-        # chain — measured ~7s of redundant recompute at k=3/sf0.1.
-        # persist() is lazy (no driver action, still ONE submitted job);
-        # the cache materializes mid-job and both branches share it.
-        labels = labels.persist()
-        cached_gens.append(labels)
-        neighbor_min = (
-            both.join(labels, both["src"] == labels["doc_id"])
-            .select(F.col("dst").alias("doc_id"), "cluster_id")
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        labels = labels.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(
-                F.col("cluster_id"),
-                F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-            ).alias("cluster_id"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            # Eager checkpoint: lineage is cut, so no future plan
-            # references the tracked caches — release them all now.
-            labels = labels.localCheckpoint(eager=True)
-            for g in cached_gens:
-                g.unpersist(blocking=False)
-            cached_gens.clear()
-    for g in cached_gens[:-2]:
-        g.unpersist(blocking=False)
+        labels = _min_label_round(both, gens.hold(labels))
+        labels = gens.on_cadence(labels, i, iterations)
+    gens.release()
     return labels
 
 

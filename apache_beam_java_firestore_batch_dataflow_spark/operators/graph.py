@@ -33,8 +33,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.lineage import Generations
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..sources.tables import load_table, shared_kernel
+from .dedup import connected_components, undirected
 from .similarity import SEM_GRAPH_TAU, semantic_edges
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -129,28 +131,21 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s") * 2 + 1).alias("dst"),
     )
     # arcs feed degree + one join per iteration (3+ plan branches), but
-    # every branch is now a narrow projection + union over the memoized
+    # every branch is a narrow projection + union over the memoized
     # checkpoint blocks — no join or shuffle left to re-run per branch
-    return half.unionAll(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    return undirected(half)
 
 
-def pagerank(e: DataFrame, k: int, checkpoint_every: int = 4) -> DataFrame:
+def pagerank(e: DataFrame, k: int) -> DataFrame:
     """k damped PageRank iterations over an arc table ``(src, dst)``
     (both arcs of each undirected edge present), integer fixed-point —
-    the general loop form behind ``q_graph_pagerank``'s registered k=2
-    (VERDICT r6 item 8).
+    the general loop form behind ``q_graph_pagerank``'s registered k=2.
 
-    Lineage discipline: each iteration consumes the previous rank frame
-    in one join, so the unchecked plan grows linearly in k and the
-    optimizer re-analyzes the whole chain every round (and any frame
-    consumed twice would double it — the label-prop 2^k lesson).  Every
-    ``checkpoint_every`` rounds the rank frame is localCheckpoint(eager)
-    — the ``kmeans()`` discipline: plan depth stays O(checkpoint_every),
-    executor lineage is truncated so a 100-iteration run neither
-    re-plans nor re-computes from the source scan, and the materialized
-    state is O(nodes), not O(arcs).
+    Each iteration reads the previous rank frame in one join, so the
+    rank frame is truncated on the lineage cadence
+    (``functions/lineage``): plan depth stays bounded, a 100-iteration
+    run neither re-plans nor re-computes from the source scan, and the
+    materialized state is O(nodes), not O(arcs).
 
     Determinism: identical micro-unit integer arithmetic as the k=2
     query — bit-identical ranks under any partitioning, join order, or
@@ -164,6 +159,7 @@ def pagerank(e: DataFrame, k: int, checkpoint_every: int = 4) -> DataFrame:
     ranks = deg.join(F.broadcast(n)).select(
         "node", "outdeg", F.expr(f"{PR_SCALE} div n_nodes").alias("ru")
     )
+    gens = Generations()
     for i in range(k):
         contrib = (
             e.join(ranks, e.src == ranks.node)
@@ -185,8 +181,7 @@ def pagerank(e: DataFrame, k: int, checkpoint_every: int = 4) -> DataFrame:
                 ).alias("ru"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < k:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = gens.on_cadence(ranks, i, k)
     return ranks
 
 
@@ -207,8 +202,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per iteration the arc table shuffles once on src (join)
     and once on dst (aggregate) — both keyed, both map-side combined;
     the rank table is O(nodes) and AQE will broadcast it when nodes ≪
-    arcs.  k iterations = k·2 shuffles, plan depth linear (for large k,
-    checkpoint the rank table the way `kmeans()` does).  No dangling
+    arcs.  k iterations = k·2 shuffles; `pagerank()` truncates the
+    rank table's lineage for large k.  No dangling
     handling is needed: the graph is stored as both arcs of each
     undirected edge, so out-degree ≥ 1 for every node present.
     """
@@ -411,8 +406,6 @@ def q_graph_components_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence check — iterations = component diameter.  Edges come
     from the shared block-pair kernel, checkpointed once.  The size
     profile is one extra combiner agg on O(nodes) label rows."""
-    from .dedup import connected_components
-
     vecs = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id")
     )
@@ -439,10 +432,7 @@ KCORE_ROUNDS = 2
 
 
 def kcore_peel(
-    arcs: DataFrame,
-    k: int = KCORE_K,
-    rounds: int = KCORE_ROUNDS,
-    checkpoint_every: int | None = None,
+    arcs: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS
 ) -> DataFrame:
     """``rounds`` synchronized peels toward the k-core: each round drops
     every node whose CURRENT degree is below ``k`` (and all its arcs),
@@ -454,15 +444,13 @@ def kcore_peel(
 
     Expects BOTH arcs of each undirected edge, so out-degree == degree
     and one ``groupBy(src)`` per round is the whole degree pass.  Each
-    round consumes its arc frame three times (degree + both semi-join
-    sides), so every generation persists (the label-prop 3-branch
-    lesson); generations release from the old end after the action,
-    and ``checkpoint_every`` switches deep runs to the eager
-    truncated-lineage regime."""
-    cached: list[DataFrame] = []
+    round reads its arc frame three times (degree + both semi-join
+    sides), so every generation is held (``functions/lineage``) and
+    released from the old end after the loop; deeper runs truncate on
+    the lineage cadence."""
+    gens = Generations()
     for i in range(rounds):
-        arcs = arcs.persist()
-        cached.append(arcs)
+        arcs = gens.hold(arcs)
         keep = (
             arcs.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
@@ -472,13 +460,8 @@ def kcore_peel(
         arcs = arcs.join(keep, "src", "left_semi").join(
             keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         ).select("src", "dst")
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            arcs = arcs.localCheckpoint(eager=True)
-            for g in cached:
-                g.unpersist(blocking=False)
-            cached.clear()
-    for g in cached[:-2]:
-        g.unpersist(blocking=False)
+        arcs = gens.on_cadence(arcs, i, rounds)
+    gens.release()
     return arcs.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("residual_degree")
     ).select(F.col("src").alias("node"), "residual_degree")
@@ -683,54 +666,44 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per half-round ONE arc join + one combiner agg keyed
     on the receiving side (the `pagerank()` cost envelope) plus a
     one-row broadcast for the normalizer — never a collected scalar;
-    score frames are O(nodes).  k rounds = 2k keyed shuffles; for
-    large k apply the checkpoint_every discipline (the loop here is
-    {HITS_ROUNDS} rounds, under the >3 auto-checkpoint bound)."""
+    score frames are O(nodes).  k rounds = 2k keyed shuffles."""
     # 2 plan branches per round, each a narrow projection over the
     # memoized co-purchase checkpoint blocks (copurchase_adj)
     e = copurchase_adj(spark, sf_dir).select(
         (F.col("c") * 2).alias("src"),
         (F.col("s") * 2 + 1).alias("dst"),
     )
-    deg = {
-        "src": e.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("deg")
-        ),
-        "dst": e.groupBy(F.col("dst").alias("node")).agg(
-            F.count(F.lit(1)).alias("deg")
-        ),
-    }
-    nc = deg["src"].agg(F.count(F.lit(1)).alias("n"))
-    hub = deg["src"].join(F.broadcast(nc)).select(
+    hubs = e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    nc = hubs.agg(F.count(F.lit(1)).alias("n"))
+    hub = hubs.join(F.broadcast(nc)).select(
         "node", F.expr(f"{HITS_SCALE} div n").alias("hu")
     )
+    gens = Generations()
 
     def half_round(scores: DataFrame, col: str, join_on: str, out: str):
         """One HITS half-round: push `col` along arcs joined on
         `join_on` (src for hub→authority, dst for authority→hub),
         sum per receiver, L1-renormalize via a one-row broadcast.
 
-        r16 lineage fix: each half-round consumes the previous round's
-        scores TWICE (the raw push and the normalizer), so an
-        un-truncated plan doubles the whole history subtree per
-        half-round — the final 2-round plan carried 412 Exchange nodes
-        (committed in plans/r16/) and planning/scheduling dominated the
-        leg.  The O(nodes) ``raw`` frame now localCheckpoints (the same
-        truncation discipline pagerank/triangles already use; exact
-        integer values, so results are bit-identical), which ALSO lets
-        the normalizer be the oracle's own Σraw one-row aggregate over
-        the checkpointed frame instead of the former score·outdeg
-        identity join against the degree table (that join existed only
-        to avoid consuming un-materialized lineage twice)."""
+        The raw push and the normalizer both read the O(nodes) ``raw``
+        frame, so it is truncated every half-round
+        (``functions/lineage``): un-truncated, the plan doubles its
+        history per half-round (the 2-round plan carried 412 Exchange
+        nodes).  Exact integers, so results are bit-identical; the
+        normalizer is the oracle's own Σraw one-row aggregate.  The
+        newest two generations back the returned hub and authority
+        scores; older ones are freed."""
         recv = "dst" if join_on == "src" else "src"
-        raw = (
+        raw = gens.truncate(
             e.join(scores, F.col(join_on) == scores.node)
             .groupBy(F.col(recv).alias("node"))
             .agg(F.sum(col).alias("raw"))
-        ).localCheckpoint(eager=True)
-        # DECIMAL(38,0) accumulator (r14 overflow audit): Σraw ≤
-        # HITS_SCALE·|nodes| here, but keep the wide type so the rescale
-        # product raw*SCALE never outgrows int64 at any node count
+        )
+        # DECIMAL(38,0) accumulator: Σraw ≤ HITS_SCALE·|nodes| here, but
+        # keep the wide type so the rescale product raw*SCALE never
+        # outgrows int64 at any node count
         s = raw.agg(F.sum(F.col("raw").cast("decimal(38,0)")).alias("s"))
         return raw.join(F.broadcast(s)).select(
             "node",
@@ -1007,9 +980,7 @@ def q_graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = semantic_edges(spark, sf_dir, tau=TRI_TAU).select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )
-    both = pairs.unionAll(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    both = undirected(pairs).persist()
     seeds = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % BFS_SEED_MOD == 0)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrow import apply_groups, emb_matrix, map_batches
+from ..functions.lineage import Generations
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..functions.vectors import dot, dot_sql, hyperplane_signs, norm, norm_sql
 from ..registry import registrar
@@ -1093,7 +1094,6 @@ def kmeans(
     k: int = KMEANS_K,
     max_iter: int = 10,
     tol: float = 1e-4,
-    checkpoint_every: int = 3,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Full Lloyd iteration loop: ``q_kmeans_one_step``'s assign/update
     shape repeated to convergence.  Returns ``(assignment, centroids,
@@ -1108,9 +1108,9 @@ def kmeans(
     * the convergence check reduces to ONE driver-side scalar (max
       centroid shift), the same bounded pattern as
       ``connected_components``'s convergence count;
-    * ``localCheckpoint`` every ``checkpoint_every`` iterations
-      truncates the per-iteration plan nesting (lineage otherwise grows
-      linearly with iterations and re-derives every prior assignment).
+    * the centroid frame is truncated on the lineage cadence
+      (``functions/lineage``): lineage otherwise grows linearly with
+      iterations and re-derives every prior assignment.
 
     Component means use the order-independent decimal accumulation from
     the centroid queries, so results are invariant to partitioning —
@@ -1140,6 +1140,7 @@ def kmeans(
     dec = F.round(F.col("x"), 6).cast("decimal(30,6)")
     n_iter = 0
     assign = None
+    gens = Generations()
     for it in range(1, max_iter + 1):
         n_iter = it
         pairs = v.crossJoin(F.broadcast(cent)).select(
@@ -1168,8 +1169,7 @@ def kmeans(
                 ).alias("cv")
             )
         )
-        if it % checkpoint_every == 0:
-            new_cent = new_cent.localCheckpoint(eager=True)
+        new_cent = gens.on_cadence(new_cent, it - 1, max_iter)
         # max centroid shift: k-row join, one scalar to the driver
         shift_fold = F.aggregate(
             F.zip_with("cv", "old_cv", lambda x, y: (x - y) * (x - y)),

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.bloom import bloom_build, bloom_member
+from ..functions.lineage import Generations
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..sources.tables import load_table
 from .wordcount import TOKENIZER_PATTERN
@@ -2079,9 +2080,7 @@ BPE_TRAIN_K = 4  # rounds for the registered/tested variant
 BPE_SYM_BASE = 0xE000
 
 
-def bpe_train(
-    vocab: DataFrame, k: int = BPE_TRAIN_K, checkpoint_every: int | None = None
-) -> DataFrame:
+def bpe_train(vocab: DataFrame, k: int = BPE_TRAIN_K) -> DataFrame:
     """Train ``k`` BPE merges over a ``(tok, cnt)`` vocabulary frame and
     return the learned merge table ``(round, pair, n)`` — Sennrich et
     al. 2016's loop (census pairs -> take the most frequent -> merge it
@@ -2089,16 +2088,14 @@ def bpe_train(
     `q_text_bpe_apply_step` each demonstrate once, iterated to a
     training run.
 
-    Loop discipline (the ``pagerank(k)`` / ``kmeans()`` shape): each
-    round's winning pair is ONE bounded row, collected — that action is
-    what materializes the round (and the vocabulary cache feeding it),
-    and the pair rides the next round's ``replace`` as a literal.  Each
-    vocabulary generation is persisted (the next census reads it);
-    because rounds materialize eagerly, generations older than the
-    previous one are fully consumed and released IN the loop — cached
-    storage stays <= 2 x O(vocab) however deep the run.  ``checkpoint_every`` (deep
-    runs) additionally checkpoints the vocabulary itself every N rounds,
-    truncating plan depth the same way pagerank does.  Ties break on
+    Each round's winning pair is ONE bounded row, collected — that
+    action is what materializes the round (and the vocabulary generation
+    feeding it), and the pair rides the next round's ``replace`` as a
+    literal.  Each vocabulary generation is held (``functions/lineage``);
+    because rounds materialize eagerly, older generations are fully
+    consumed and released IN the loop — cached storage stays <= 2 x
+    O(vocab) however deep the run — and deep runs truncate the
+    vocabulary's plan on the lineage cadence.  Ties break on
     (count desc, pair asc) — byte order agrees between Spark and DuckDB
     (both compare binary UTF-8) — so the merge table is deterministic.
 
@@ -2116,40 +2113,32 @@ def bpe_train(
     # changing the algorithm.
     spark = vocab.sparkSession
     winners: list[tuple[int, str, int]] = []
-    cached: list[DataFrame] = []
+    gens = Generations()
     for i in range(k):
-        vocab = vocab.persist()
-        cached.append(vocab)
+        vocab = gens.hold(vocab)
         rows = (
             _bpe_pair_census(vocab)
             .orderBy(F.desc("n"), F.asc("pair"))
             .limit(1)
             .collect()
         )
-        if not rows:
-            # pairs exhausted: no merge this round; an empty winner made
-            # every later generation empty under the old join form too
+        if rows:
+            pair, n = rows[0]["pair"], int(rows[0]["n"])
+            winners.append((i + 1, pair, n))
+            vocab = vocab.select(
+                F.replace(
+                    F.col("tok"), F.lit(pair), F.lit(chr(BPE_SYM_BASE + i))
+                ).alias("tok"),
+                "cnt",
+            )
+        else:
+            # pairs exhausted: no merge this round, and every later
+            # generation is empty
             vocab = vocab.filter(F.lit(False))
-            continue
-        pair, n = rows[0]["pair"], int(rows[0]["n"])
-        winners.append((i + 1, pair, n))
-        vocab = vocab.select(
-            F.replace(
-                F.col("tok"), F.lit(pair), F.lit(chr(BPE_SYM_BASE + i))
-            ).alias("tok"),
-            "cnt",
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=True)
-            for g in cached:
-                g.unpersist(blocking=False)
-            cached.clear()
-        elif len(cached) > 2:
-            # the census collect consumed generation i fully, so the
-            # i-2 generation has no remaining lazy consumer — release.
-            cached.pop(0).unpersist(blocking=False)
-    for g in cached[:-2]:
-        g.unpersist(blocking=False)
+        vocab = gens.on_cadence(vocab, i, k)
+        # the census collect consumed generation i fully, so the i-2
+        # generation has no remaining lazy consumer
+        gens.release()
     # JVM VALUES relation, not createDataFrame(list): the latter routes
     # through a parallelized Python RDD, so every downstream action
     # would pay a ~0.2 s Python-worker stage for 4 rows.  A caller's

@@ -27,12 +27,16 @@ def plan_text(df: DataFrame, mode: str = "formatted") -> str:
 # Parts of the formatted plan text that differ between two builds of the
 # same query: per-session counters (expression, exchange-plan, RDD and
 # lambda-variable ids), JVM object identity hashes, the random suffix of
-# a ``mkdtemp`` directory, and the Python function names of kernel nodes
-# (a kernel's name is not its plan).
+# a ``mkdtemp`` directory, the Python function names of kernel nodes (a
+# kernel's name is not its plan), and an RDD's creation call site (from
+# Python that is a JVM reflection frame, printed as
+# ``NativeMethodAccessorImpl.java:0`` until the JVM replaces a reflective
+# call used ~15 times with a generated accessor, ``<unknown>:0``).
 _DIGEST_SUBS = (
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id]"),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"(RDD\[\] at \w+ at )\S+:\d+"), r"\1*"),
     (re.compile(r"\b(lambda [a-z]+)_\d+"), r"\1"),
     (re.compile(r"(\w)@[0-9a-f]+\b"), r"\1@"),
     (re.compile(r"(/tmp/[\w.-]*?[-_])[a-z0-9_]{8}/"), r"\1*/"),

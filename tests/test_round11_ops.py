@@ -236,58 +236,6 @@ def test_graph_family_shares_edge_frame(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# connected_components block reclamation
-# ---------------------------------------------------------------------------
-
-
-def test_connected_components_frees_superseded_checkpoints(spark):
-    """A 10-vertex chain runs ~9 rounds; without explicit reclamation
-    every round's localCheckpoint blocks would linger in the JVM
-    persistent-RDD registry.  After the run at most two generations
-    (the returned frame's + the in-flight diff) may remain."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
-        connected_components,
-    )
-
-    n = 10
-    vertices = spark.createDataFrame(
-        [(i,) for i in range(1, n + 1)], "doc_id long"
-    )
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], "src long, dst long"
-    )
-    # an unrelated persisted frame must SURVIVE the run: the first
-    # (registry-diff) reclamation implementation would have swept any
-    # RDD that happened to materialize during round 1 — including the
-    # loop's own edge cache (closing-r11 review finding).  Track the
-    # bystander by ITS OWN registry ids rather than asserting the whole
-    # registry is unchanged — ContextCleaner asynchronously unpersists
-    # earlier tests' GC'd frames in the shared session, so a global
-    # `before - after == set()` assertion is racy (observed flake).
-    pre = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    bystander = spark.range(100).persist()
-    bystander.count()
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    bystander_ids = before - pre
-    assert bystander_ids, "bystander frame failed to persist"
-    labels = connected_components(vertices, edges)
-    got = {r.doc_id: r.cluster_id for r in labels.collect()}
-    assert got == {i: 1 for i in range(1, n + 1)}
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    leaked = len(after - before)
-    assert leaked <= 2, (
-        f"{leaked} checkpoint generations left behind (expected <= 2: "
-        "the returned frame's blocks only)"
-    )
-    assert bystander_ids <= after, (
-        "reclamation unpersisted the bystander's blocks: "
-        f"{sorted(bystander_ids - after)}"
-    )
-    bystander.unpersist()
-    spark.catalog.clearCache()
-
-
-# ---------------------------------------------------------------------------
 # q_ann_hard_negatives
 # ---------------------------------------------------------------------------
 

@@ -365,15 +365,14 @@ def test_theil_sen_matches_python_replay(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_hits_matches_python_replay(spark, sf_dir):
-    """Bit-exact pure-Python replay of the 2-round L1-normalized
-    integer HITS fixed point over the distinct purchase edges."""
+def hits_replay(sf_dir: str) -> dict[tuple[int, bool], int]:
+    """Pure-Python replay of the L1-normalized integer HITS fixed point
+    over the distinct purchase edges: (node, is_supplier) -> units."""
     from collections import defaultdict
 
     from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
         HITS_ROUNDS,
         HITS_SCALE,
-        q_graph_hits,
     )
 
     orders = pq.read_table(
@@ -402,14 +401,23 @@ def test_hits_matches_python_replay(spark, sf_dir):
             raw[c] += auth[s]
         tot = sum(raw.values())
         hub = {c: (r * HITS_SCALE) // tot for c, r in raw.items()}
-    expected = {(c, False): u for c, u in hub.items()} | {
+    return {(c, False): u for c, u in hub.items()} | {
         (s, True): u for s, u in auth.items()
     }
+
+
+def test_hits_matches_python_replay(spark, sf_dir):
+    """Bit-exact pure-Python replay of the 2-round L1-normalized
+    integer HITS fixed point over the distinct purchase edges."""
+    from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import (
+        q_graph_hits,
+    )
+
     got = {
         (r.node, r.is_supplier): r.score_units
         for r in q_graph_hits(spark, sf_dir).collect()
     }
-    assert got == expected
+    assert got == hits_replay(sf_dir)
     spark.catalog.clearCache()
 
 
