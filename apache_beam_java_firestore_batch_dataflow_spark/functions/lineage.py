@@ -13,7 +13,8 @@ that in check with one :class:`Generations` per invocation:
   ``localCheckpoint``, and :meth:`Generations.on_cadence` does so every
   :data:`CHECKPOINT_EVERY` rounds, never after the final one;
 * :meth:`Generations.release` frees generations from the old end,
-  keeping the newest two; a truncation also frees every persisted
+  keeping the newest two and always the newest checkpoint, which every
+  later generation reads; a truncation also frees every persisted
   generation, since no later plan reads past the cut.
 
 ``DataFrame.unpersist()`` is a no-op on a checkpointed frame (its blocks
@@ -59,7 +60,8 @@ class Generations:
         """``df`` eagerly local-checkpointed and tracked.  No later plan
         reads past the cut, so every persisted generation is released (a
         returned frame still reading one recomputes it; only a checkpoint
-        cannot be recomputed), and checkpoints beyond the newest two."""
+        cannot be recomputed), and older checkpoints down to the newest
+        two."""
         df = df.localCheckpoint(eager=True)
         for g in self._held:
             if isinstance(g, DataFrame):
@@ -81,6 +83,12 @@ class Generations:
         return df
 
     def release(self) -> None:
-        """Free all but the newest :data:`KEEP` generations."""
+        """Free all but the newest :data:`KEEP` generations, oldest first,
+        but never the newest checkpoint: the generations held after it
+        are lazy plans over its blocks (a dropped persist is recomputed
+        from them, a freed checkpoint cannot be)."""
         while len(self._held) > KEEP:
-            self._held.pop(0).unpersist(False)
+            # checkpoints precede persists, so held[0] is the newest
+            # checkpoint exactly when a persist follows it
+            is_ckpt = [not isinstance(g, DataFrame) for g in self._held[:2]]
+            self._held.pop(int(is_ckpt[0] and not is_ckpt[1])).unpersist(False)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from functools import partial
 from typing import Callable, NamedTuple
 
 import pytest
@@ -40,6 +41,12 @@ class Case(NamedTuple):
     check: Callable  # (collected rows per frame) -> None; asserts
     max_joins: int  # per returned frame, analyzed plan
     extra: int = 0  # non-generation RDDs the returned plan still reads
+
+
+def _after_cut(rounds: int) -> int:
+    """Rounds a loop of ``rounds`` runs after its last truncation (a loop
+    truncates every CHECKPOINT_EVERY rounds, never after the final one)."""
+    return rounds - CHECKPOINT_EVERY * ((rounds - 1) // CHECKPOINT_EVERY)
 
 
 def _n_df_caches(spark) -> int:
@@ -78,7 +85,7 @@ def _pagerank(spark, sf_dir) -> Case:
                 max_joins=3 * CHECKPOINT_EVERY + 1)
 
 
-def _kcore(spark, sf_dir) -> Case:
+def _kcore(spark, sf_dir, rounds) -> Case:
     from apache_beam_java_firestore_batch_dataflow_spark.operators.graph import kcore_peel
 
     # triangle 1-2-3 is the 2-core; the chain 3-4-5 peels off by round 2
@@ -88,10 +95,11 @@ def _kcore(spark, sf_dir) -> Case:
     def check(rows):
         assert {r.node: r.residual_degree for r in rows[0]} == {1: 2, 2: 2, 3: 2}
 
-    # each round reads its arcs three times, so an uncut analyzed plan
-    # grows 3^rounds; after the last cut one round remains
-    return Case(lambda: (kcore_peel(arcs, k=2, rounds=2 * CHECKPOINT_EVERY + 1),),
-                check, max_joins=2)
+    # each round reads its arcs three times and adds two joins, so the
+    # analyzed plan (caches are not substituted there) holds 3^r - 1
+    # joins for the r rounds since the last cut
+    return Case(lambda: (kcore_peel(arcs, k=2, rounds=rounds),),
+                check, max_joins=3 ** _after_cut(rounds) - 1)
 
 
 def _hits(spark, sf_dir) -> Case:
@@ -132,7 +140,7 @@ def _connected_components(spark, sf_dir) -> Case:
     return Case(lambda: (connected_components(vertices, edges),), check, max_joins=0)
 
 
-def _propagate_min_label(spark, sf_dir) -> Case:
+def _propagate_min_label(spark, sf_dir, iterations) -> Case:
     from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
         propagate_min_label,
     )
@@ -147,18 +155,23 @@ def _propagate_min_label(spark, sf_dir) -> Case:
     assert _n_df_caches(spark) <= 3
     spark.catalog.clearCache()
 
+    after = _after_cut(iterations)
+
     def check(rows):
         assert {r.doc_id: r.cluster_id for r in rows[0]} == lazy
-        # every label persist released at a cut; only the edge frame
-        # remains a DataFrame cache (formerly iterations=3 with
-        # checkpoint_every=1)
-        assert _n_df_caches(spark) <= 1
+        # every label persist before the last cut was released there;
+        # the edge frame and, past one round after the cut, the newest
+        # held generation remain DataFrame caches (formerly iterations=3
+        # with checkpoint_every=1)
+        assert _n_df_caches(spark) <= 1 + (after > 1)
 
-    # two truncations (rounds 4, 8); each round reads its labels twice,
-    # and after the last cut one round (2 joins) remains
+    # each round reads its labels twice and adds two joins: 2^(r+1) - 2
+    # joins for the r rounds since the last cut.  With r > 1 the held
+    # generations after the cut read the newest checkpoint, which must
+    # outlive the loop.
     return Case(
-        lambda: (propagate_min_label(vertices, edges, iterations=2 * CHECKPOINT_EVERY + 1),),
-        check, max_joins=2, extra=1,
+        lambda: (propagate_min_label(vertices, edges, iterations=iterations),),
+        check, max_joins=2 ** (after + 1) - 2, extra=1,
     )
 
 
@@ -233,12 +246,24 @@ def _kmeans(spark, sf_dir) -> Case:
     return Case(run, check, max_joins=CHECKPOINT_EVERY)
 
 
+# Deep runs: one round after the last cut, and (the _2c / _2c-1 cases)
+# three or four rounds after it, where held lazy generations read the
+# newest checkpoint when the loop returns.
 CASES = {
     "pagerank": _pagerank,
-    "kcore_peel": _kcore,
+    "kcore_peel": partial(_kcore, rounds=2 * CHECKPOINT_EVERY + 1),
+    "kcore_peel_2c-1": partial(_kcore, rounds=2 * CHECKPOINT_EVERY - 1),
     "q_graph_hits": _hits,
     "connected_components": _connected_components,
-    "propagate_min_label": _propagate_min_label,
+    "propagate_min_label": partial(
+        _propagate_min_label, iterations=2 * CHECKPOINT_EVERY + 1
+    ),
+    "propagate_min_label_2c-1": partial(
+        _propagate_min_label, iterations=2 * CHECKPOINT_EVERY - 1
+    ),
+    "propagate_min_label_2c": partial(
+        _propagate_min_label, iterations=2 * CHECKPOINT_EVERY
+    ),
     "propagate_min_label_chain": _propagate_min_label_chain,
     "bpe_train": _bpe_train,
     "kmeans": _kmeans,
