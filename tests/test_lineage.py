@@ -246,9 +246,9 @@ def _kmeans(spark, sf_dir) -> Case:
     return Case(run, check, max_joins=CHECKPOINT_EVERY)
 
 
-# Deep runs: one round after the last cut, and (the _2c / _2c-1 cases)
-# three or four rounds after it, where held lazy generations read the
-# newest checkpoint when the loop returns.
+# Deep runs, c = CHECKPOINT_EVERY: 2c+1 rounds leave one round after the
+# last cut; 2c-1 and 2c leave three and four, so the loop returns while
+# its held lazy generations still read the newest checkpoint.
 CASES = {
     "pagerank": _pagerank,
     "kcore_peel": partial(_kcore, rounds=2 * CHECKPOINT_EVERY + 1),
