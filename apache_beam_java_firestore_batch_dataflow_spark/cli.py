@@ -33,7 +33,13 @@ def run_pipeline(
     config: PipelineConfig,
     client_factory: Callable[[], object] | None = None,
 ) -> None:
-    """Build the lazy plan and execute it with the selected sink strategy."""
+    """Build the lazy plan and execute it with the selected sink strategy.
+    The sink configuration is validated first, before the input is read."""
+    sink_config = FirestoreSinkConfig(
+        project_id=config.output_google_cloud_project,
+        collection_path=config.collection_path,
+        max_batch_size=config.firestore_max_batch_size,
+    )
     if client_factory is None:
         spool = tempfile.mkdtemp(prefix="firestore-spool-")
         logger.info("no Firestore client configured; spooling writes to %s", spool)
@@ -41,11 +47,6 @@ def run_pipeline(
 
     lines = read_lines(spark, config.input_file)
     counts = word_count_pipeline(lines)
-    sink_config = FirestoreSinkConfig(
-        project_id=config.output_google_cloud_project,
-        collection_path=config.collection_path,
-        max_batch_size=config.firestore_max_batch_size,
-    )
     WRITERS[config.implementation](counts, sink_config, client_factory)
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_ratio, round_ratio_sql
+from ..functions.scan import prefix_scan
 from ..functions.timeutil import epoch_us
 from ..sources.tables import load_table, shared_kernel, spread_scan
 from .text import (
@@ -121,6 +122,29 @@ def q_sample_stratified_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Batch sessionization (gap > 30 min starts a new session)
 # ---------------------------------------------------------------------------
 
+# A silence longer than this (30 minutes, in µs) starts a user's next session.
+_SESSION_GAP_US = 1_800_000_000
+
+
+def _sessionized(events: DataFrame) -> DataFrame:
+    """``events`` plus ``is_new`` (1 on a user's first event and after
+    each silence over 30 minutes) and ``session_no``, its running sum.
+    Tie-broken by event_id so the lag order is total and
+    engine-independent.  One shuffle on user_id serves both windows and
+    any later per-session groupBy."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap_us = epoch_us("ts") - epoch_us(F.lag("ts").over(w))
+    return events.withColumn(
+        "is_new",
+        F.when(gap_us.isNull() | (gap_us > _SESSION_GAP_US), 1).otherwise(0),
+    ).withColumn(
+        "session_no",
+        F.sum("is_new").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
+
+
 @register(
     "q_sessionize_gaps",
     oracle="""
@@ -152,23 +176,11 @@ def q_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     session; one row per session with bounds and totals.
 
     The batch twin of streaming ``session_window`` (streaming/windows.py):
-    lag → boundary flag → running sum = session number, then a normal
-    groupBy.  One shuffle on user_id; the window sort and the session
-    aggregation reuse that partitioning.  Tie-broken by event_id so the
-    lag order is total and engine-independent."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    gap_us = epoch_us("ts") - epoch_us(F.lag("ts").over(w))
-    flagged = events.withColumn(
-        "is_new",
-        F.when(gap_us.isNull() | (gap_us > 1_800_000_000), 1).otherwise(0),
-    )
-    sessions = flagged.withColumn("session_no", F.sum("is_new").over(run))
+    lag → boundary flag → running sum = session number
+    (:func:`_sessionized`), then a normal groupBy that reuses the
+    user_id partitioning."""
     return (
-        sessions.groupBy(
+        _sessionized(load_table(spark, sf_dir, "events")).groupBy(
             "user_id", F.col("session_no").cast("bigint").alias("session_no")
         )
         .agg(
@@ -911,9 +923,10 @@ _CONCURRENCY_ORACLE = """
 """
 
 
-# Fixed time-shard width for the concurrency running sum: one day of
-# microseconds.  The fixture spans ~30 days, so the sharded plan and
-# its stitch genuinely execute multi-shard even at sf0.001.
+# Fixed time-shard width for the boundary-timeline prefix scans
+# (functions/scan.py): one day of microseconds.  The fixture spans ~30
+# days, so the sharded scan and its stitch run multi-shard even at
+# sf0.001; at 100 TB a year of hourly shards stitches through ~9k rows.
 _CONC_SHARD_US = 86_400_000_000
 
 
@@ -926,36 +939,18 @@ def q_sessions_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each session interval emits (+1 at start, −1 at end); per-instant
     NET changes come from one combiner agg (which also makes the order
-    total — no tie rule needed).  The running sum is SHARDED BY TIME
-    RANGE (VERDICT r6 item 4): each fixed-width time shard
-    (``unix_micros(ts) div {_CONC_SHARD_US}`` — deterministic) runs its
-    own partitioned running sum, and the per-shard NET TOTAL comes out
-    of the SAME shard-partitioned exchange as a full-frame window sum
-    (VERDICT r7 item 4 — no second groupBy round-trip over the
-    boundaries).  One row per shard (row_number()==1, again the same
-    exchange) feeds the tiny exclusive-prefix stitch window, whose
-    offsets join back broadcast — so no task ever sees more than one
-    shard of boundaries.  At 100 TB a year of hourly shards stitches
-    through ~9k rows while the data-sized window work stays fully
-    parallel.  A session's end instant counts as already freed only at
-    the NEXT boundary (net at e sums its −1 with any +1 at the same
-    instant)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap_us = epoch_us("ts") - epoch_us(F.lag("ts").over(w))
+    total — no tie rule needed).  The running sum over instants is the
+    sharded prefix scan of functions/scan.py over day-wide time shards
+    (``_CONC_SHARD_US``).  A session's end instant counts as already
+    freed only at the NEXT boundary (net at e sums its −1 with any +1 at
+    the same instant)."""
     sessions = (
-        ev.withColumn(
-            "is_new",
-            F.when(gap_us.isNull() | (gap_us > 1_800_000_000), 1).otherwise(0),
-        )
-        .withColumn("session_no", F.sum("is_new").over(run))
+        _sessionized(load_table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_no")
         .agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
     )
-    # r17: both boundary deltas from ONE in-row explode — the union's
-    # two branches each re-ran the sessionization agg above the reused
-    # exchange (guide §2.4 duplicated-subtree check).  Identical rows.
+    # Both boundary deltas from one in-row explode: a union's two
+    # branches would each re-run the sessionization agg.
     deltas = sessions.select(
         F.explode(
             F.array(
@@ -967,37 +962,10 @@ def q_sessions_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     net = deltas.groupBy("ts").agg(F.sum("d").alias("net")).withColumn(
         "shard", (epoch_us("ts") / _CONC_SHARD_US).cast("bigint")
     )
-    w_ord = Window.partitionBy("shard").orderBy("ts")
-    w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # Full-frame shard total: same partition spec as w_run, so it is
-    # computed inside the same exchange — no groupBy("shard") pass.
-    w_all = Window.partitionBy("shard")
-    ranked = net.select(
+    return prefix_scan(net, "shard", ["ts"], {"net": "concurrent"}).select(
         "ts",
-        "shard",
-        "net",
-        F.sum("net").over(w_run).alias("running"),
-        F.sum("net").over(w_all).alias("shard_total"),
-        F.row_number().over(w_ord).alias("rn"),
-    )
-    # Stitch: exclusive prefix sum over one row per shard.  This window
-    # is deliberately unpartitioned — its frame is O(#shards), bounded
-    # by data width / _CONC_SHARD_US, never by row count (plan guard:
-    # tests/test_plans.py::test_sessions_concurrency_windows_are_partitioned
-    # whitelists shard-ordered windows and bans unpartitioned ts-ordered
-    # ones).
-    w_off = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = ranked.filter(F.col("rn") == 1).select(
-        "shard",
-        F.coalesce(F.sum("shard_total").over(w_off), F.lit(0)).alias("offset"),
-    )
-    return (
-        ranked.join(F.broadcast(offsets), "shard")
-        .select(
-            "ts",
-            F.col("net").cast("bigint").alias("net"),
-            (F.col("offset") + F.col("running")).cast("bigint").alias("concurrent"),
-        )
+        F.col("net").cast("bigint").alias("net"),
+        F.col("concurrent").cast("bigint").alias("concurrent"),
     )
 
 
@@ -1147,29 +1115,20 @@ def q_sessions_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ends-<-s query point) and end row (k=1, also the starts-<=-e
     query point); ordering by (t, k) makes the tie semantics exact
     (an end AT s does not count as before; a start AT e does count as
-    <=).  The timeline runs the fixed-width time-shard + O(#shards)
-    stitch (the `q_sessions_concurrency` pattern, carrying TWO running
-    sums through one exchange), and one conditional agg per interval
-    recombines the two query points — no pair is ever materialized."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap_us = epoch_us("ts") - epoch_us(F.lag("ts").over(w))
+    <=).  Both exclusive running sums share one sharded prefix scan
+    (functions/scan.py) on `q_sessions_concurrency`'s day-wide time
+    shards, and one conditional agg per interval recombines the two
+    query points — no pair is ever materialized."""
     intervals = (
-        ev.withColumn(
-            "is_new",
-            F.when(gap_us.isNull() | (gap_us > 1_800_000_000), 1).otherwise(0),
-        )
-        .withColumn("session_no", F.sum("is_new").over(run))
+        _sessionized(load_table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_no")
         .agg(
             epoch_us(F.min("ts")).alias("s"),
             epoch_us(F.max("ts")).alias("e"),
         )
     )
-    # r17: both boundary rows from ONE in-row explode — the union's two
-    # branches each re-ran the sessionization agg above the reused
-    # exchange (guide §2.4 duplicated-subtree check).  Identical rows.
+    # Both boundary rows from one in-row explode: a union's two branches
+    # would each re-run the sessionization agg.
     pts = (
         intervals.select(
             "user_id",
@@ -1194,36 +1153,18 @@ def q_sessions_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "session_no", "b.t", "b.k", "b.is_start", "b.is_end")
         .withColumn("shard", (F.col("t") / _CONC_SHARD_US).cast("bigint"))
     )
-    w_ord = Window.partitionBy("shard").orderBy("t", "k", "user_id", "session_no")
-    w_run = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.partitionBy("shard")
-    ranked = pts.select(
+    counted = prefix_scan(
+        pts,
+        "shard",
+        ["t", "k", "user_id", "session_no"],
+        {"is_end": "ends_before", "is_start": "starts_upto"},
+        inclusive=False,
+    )
+    scored = counted.select(
         "user_id",
         "session_no",
-        "shard",
-        "k",
-        F.coalesce(F.sum("is_end").over(w_run), F.lit(0)).alias("run_e"),
-        F.coalesce(F.sum("is_start").over(w_run), F.lit(0)).alias("run_s"),
-        F.sum("is_end").over(w_all).alias("tot_e"),
-        F.sum("is_start").over(w_all).alias("tot_s"),
-        F.row_number().over(w_ord).alias("rn"),
-    )
-    # O(#shards) stitch: exclusive prefix of BOTH per-shard totals.
-    w_off = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = ranked.filter(F.col("rn") == 1).select(
-        "shard",
-        F.coalesce(F.sum("tot_e").over(w_off), F.lit(0)).alias("off_e"),
-        F.coalesce(F.sum("tot_s").over(w_off), F.lit(0)).alias("off_s"),
-    )
-    scored = ranked.join(F.broadcast(offsets), "shard").select(
-        "user_id",
-        "session_no",
-        F.when(F.col("k") == 0, F.col("off_e") + F.col("run_e")).alias(
-            "ends_before"
-        ),
-        F.when(F.col("k") == 1, F.col("off_s") + F.col("run_s")).alias(
-            "starts_upto"
-        ),
+        F.when(F.col("k") == 0, F.col("ends_before")).alias("ends_before"),
+        F.when(F.col("k") == 1, F.col("starts_upto")).alias("starts_upto"),
     )
     return scored.groupBy(
         "user_id", F.col("session_no").cast("bigint").alias("session_no")
@@ -1749,8 +1690,8 @@ def q_mix_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sessions_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily bounce rate: the share of gap-based sessions (same >30-min
-    silence rule and event_id tie-break as ``q_sessionize_gaps``) that
+    """Daily bounce rate: the share of gap-based sessions
+    (:func:`_sessionized`, as in ``q_sessionize_gaps``) that
     contain exactly one event, bucketed by the session's start day —
     the engagement-quality headline a product analytics stack reports,
     and the aggregate consumer of the sessionization operator (build
@@ -1767,14 +1708,7 @@ def q_sessions_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates O(sessions) rows by day.  Nothing exceeds the events
     scan + one keyed shuffle."""
     events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap_us = epoch_us("ts") - epoch_us(F.lag("ts").over(w))
-    flagged = events.select("user_id", "ts", "event_id").withColumn(
-        "is_new",
-        F.when(gap_us.isNull() | (gap_us > 1_800_000_000), 1).otherwise(0),
-    )
-    sessions = flagged.withColumn("session_no", F.sum("is_new").over(run))
+    sessions = _sessionized(events.select("user_id", "ts", "event_id"))
     per_session = sessions.groupBy("user_id", "session_no").agg(
         F.date_trunc("day", F.min("ts")).cast("date").alias("day"),
         F.count(F.lit(1)).alias("n_events"),

@@ -36,6 +36,7 @@ from ..functions.numeric import (
     stable_sum,
     stable_sum_sql,
 )
+from ..functions.scan import prefix_scan, stitch
 from ..sources.tables import load_table
 from .text import row_pairs
 
@@ -2934,8 +2935,8 @@ def q_audit_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing ids.  (The fixture feed deterministically drops 3% of keys
     so the coalescing logic actually runs — see the oracle comment.)
 
-    Sharded by key range (VERDICT r6 item 4): gap detection is
-    embarrassingly range-parallel, so the lead() runs per FIXED-WIDTH
+    Sharded by key range: gap detection is embarrassingly
+    range-parallel, so the lead() runs per FIXED-WIDTH
     key shard (``k div {_SEQ_SHARD_W}`` — deterministic, data-
     independent), and only the shard BOUNDARIES are stitched by a
     second pass over the per-shard (min, max) aggregate — O(n / W)
@@ -2963,12 +2964,8 @@ def q_audit_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = keys.groupBy("shard").agg(
         F.min("k").alias("min_k"), F.max("k").alias("max_k")
     )
-    # Deliberately unpartitioned: the stitch frame is O(#shards) —
-    # bounded by key-range / shard width, never by row count — so the
-    # single-partition execution is the design, not an accident
-    # (tests/test_plans.py::test_sequence_gaps_windows_are_partitioned
-    # whitelists shard-ordered windows and bans unpartitioned k-ordered
-    # ones).
+    # Not functions/scan.py: this stitch pairs adjacent shard bounds
+    # (lead), it takes no prefix.  Its O(#shards) frame is unpartitioned.
     w_sh = Window.orderBy("shard")
     cross = (
         bounds.select("max_k", F.lead("min_k").over(w_sh).alias("nxt_min"))
@@ -3180,7 +3177,7 @@ def q_window_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Weighted median via range-sharded prefix sums (the stitch pattern)
+# Weighted median via a range-sharded prefix sum
 # ---------------------------------------------------------------------------
 
 # Fixed price-range shard width for the weighted-median cumulative scan:
@@ -3217,22 +3214,20 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative weight reaches half the total (2·cw >= W in exact
     decimals — no float boundary).
 
-    Scale shape: the cumulative scan is the r7 SHARD-AND-STITCH
-    pattern, not a per-flag total order (3 flags would mean 3
-    data-sized window partitions): distinct (flag, price) weights come
-    from ONE combiner agg; each fixed price-range shard
-    (``price div {_WMED_SHARD}``) runs a partitioned running sum;
-    per-shard totals take an exclusive prefix in an O(#shards) stitch
-    window; offsets broadcast back.  The median pick is then a filter +
-    one tiny agg.  Bit-identical to the oracle's global window because
-    every sum is exact decimal."""
-    # r17 A/B, tried and REVERTED: spreading the (flag, price, qty)
-    # projection measured ~2.5x WORSE same-window (spread 3.9-4.7 s vs
-    # 1.6-2.1 s) — the census reduces 600k rows to ~120k (flag, price)
-    # keys, so the extra exchange of the raw projection costs more than
-    # the parallel partial agg saves, and pw's three consumers then
-    # re-read a wider frame.  The single-task partial agg is the
-    # cheaper local shape; at any real layout the scan is already wide.
+    Scale shape: distinct (flag, price) weights come from ONE combiner
+    agg, and the cumulative weight per flag is the sharded prefix scan
+    of functions/scan.py over ``price div {_WMED_SHARD}`` shards, not a
+    per-flag total order (3 flags would mean 3 data-sized window
+    partitions).  The median pick is then a filter + one tiny agg.
+    Bit-identical to the oracle's global window because every sum is
+    exact decimal."""
+    # Tried and reverted: spreading the (flag, price, qty) projection
+    # measured ~2.5x WORSE same-window (spread 3.9-4.7 s vs 1.6-2.1 s)
+    # — the census reduces 600k rows to ~120k (flag, price) keys, so the
+    # extra exchange of the raw projection costs more than the parallel
+    # partial agg saves, and pw's consumers then re-read a wider frame.
+    # The single-task partial agg is the cheaper local shape; at any
+    # real layout the scan is already wide.
     pw = (
         _t(spark, sf_dir, "lineitem")
         .groupBy(
@@ -3242,26 +3237,9 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("l_quantity").alias("w"))
         .withColumn("shard", F.expr(f"CAST(price AS BIGINT) div {_WMED_SHARD}"))
     )
-    w_in = Window.partitionBy("flag", "shard").orderBy("price").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_off = Window.partitionBy("flag").orderBy("shard").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        pw.groupBy("flag", "shard")
-        .agg(F.sum("w").alias("sw"))
-        .select(
-            "flag",
-            "shard",
-            F.coalesce(F.sum("sw").over(w_off), F.lit(0)).alias("off"),
-        )
-    )
     totals = pw.groupBy("flag").agg(F.sum("w").alias("total"))
-    cum = (
-        pw.join(F.broadcast(offsets), ["flag", "shard"])
-        .withColumn("cw", F.col("off") + F.sum("w").over(w_in))
-        .join(F.broadcast(totals), "flag")
+    cum = prefix_scan(pw, "shard", ["price"], {"w": "cw"}, by=["flag"]).join(
+        F.broadcast(totals), "flag"
     )
     return (
         cum.filter(2 * F.col("cw") >= F.col("total"))
@@ -3312,9 +3290,8 @@ def q_layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the inventory is O(files) METADATA rows (the zone-map
     discipline — one combiner agg over the scan builds it), so the
     prefix-sum window runs on file counts, not data; at 100 TB with
-    ~1M files this is still a single-task-friendly frame, and the
-    same shard-and-stitch as `q_agg_weighted_median` applies beyond
-    that."""
+    ~1M files this is still a single-task-friendly frame, and
+    functions/scan.py's sharded prefix scan applies beyond that."""
     li = _t(spark, sf_dir, "lineitem")
     mk = li.agg((F.max("l_orderkey") + 1).alias("mk"))
     files = (
@@ -3555,12 +3532,11 @@ def q_agg_gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole Lorenz curve in one number).
 
     The sorted-rank formula ``G = 2·Σ i·x_(i) / (n·Σx) − (n+1)/n``
-    needs a GLOBAL ascending rank — computed 100×-safe with the
-    fixed-width VALUE-shard pattern: each cents-range shard ranks its
-    own rows (partitioned window), per-shard (count, Σx, Σ local_i·x)
-    come out of the same exchange, an O(#shards) stitch gives each
-    shard its rank offset, and ``Σ i·x = Σ_s (offset_s·Σx_s +
-    Σ local_i·x_s)`` — algebra instead of a single-partition sort.
+    needs a GLOBAL ascending rank.  Each fixed-width cents-range shard
+    ranks its own rows (partitioned window) and sums (count, Σx,
+    Σ local_i·x); the stitch of functions/scan.py gives each shard its
+    rank offset, and ``Σ i·x = Σ_s (offset_s·Σx_s + Σ local_i·x_s)`` —
+    algebra instead of a single-partition sort.
     Ranks within ties are interchangeable (equal x ⇒ i·x invariant), so
     the tiebreak only pins determinism.  Sums accumulate exactly
     (bigint/decimal); ONE double expression at the end, mirrored
@@ -3583,14 +3559,8 @@ def q_agg_gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").cast("decimal(38,0)").alias("sx"),
         F.sum(F.col("li").cast("decimal(38,0)") * F.col("cents")).alias("lix"),
     )
-    # O(#shards) stitch: exclusive prefix count = each shard's rank offset.
-    w_off = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-    stitched = per_shard.select(
-        "c",
-        "sx",
-        "lix",
-        F.coalesce(F.sum("c").over(w_off), F.lit(0)).alias("cnt_off"),
-    )
+    # exclusive prefix count = each shard's rank offset
+    stitched = stitch(per_shard, "shard", {"c": "cnt_off"})
     agg = stitched.agg(
         F.sum("c").cast("bigint").alias("n"),
         F.sum("sx").cast("double").alias("sx"),

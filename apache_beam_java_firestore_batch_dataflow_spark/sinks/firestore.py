@@ -63,8 +63,12 @@ class FirestoreSinkConfig:
     def __post_init__(self) -> None:
         if not self.project_id:
             raise ValueError("project_id is required")  # @Validation.Required parity
-        if self.max_batch_size < 1:
-            raise ValueError("max_batch_size must be >= 1")
+        if not 1 <= self.max_batch_size <= DEFAULT_MAX_BATCH_SIZE:
+            # Firestore rejects a larger commit, so refuse it before any job runs
+            raise ValueError(
+                f"max_batch_size must be in [1, {DEFAULT_MAX_BATCH_SIZE}], "
+                f"got {self.max_batch_size}"
+            )
 
 
 def collection_path_for_input(input_file: str) -> str:
@@ -246,7 +250,7 @@ def write_word_counts_batch(
     one-client-per-``foreachPartition`` call).
     """
     collection = config.collection_path
-    batch_size = min(config.max_batch_size, DEFAULT_MAX_BATCH_SIZE)
+    batch_size = config.max_batch_size
 
     def write_partition(rows: Iterable) -> None:
         client = client_factory()

@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.scan import prefix_scan
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -411,43 +412,21 @@ def q_stream_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     `numRowsDroppedByWatermark` run in
     tests/test_streaming.py::test_lateness_audit_bounds_streaming_watermark_drops.
 
-    The running maximum is a prefix scan in arrival order — the same
-    total-order problem as `q_sessions_concurrency`'s running sum, and
-    it gets the same 100×-safe plan: fixed-width event_id shards
-    ({_LATE_SHARD_IDS} ids) each run a partitioned exclusive running
-    max; per-shard maxima come out of the SAME exchange (full-frame
-    window max + row_number()==1), stitch through an O(#shards)
-    exclusive prefix-max window, and broadcast back.  All lateness
-    arithmetic is exact integer microseconds."""
-    from pyspark.sql import Window
-
+    The running maximum is an exclusive prefix max in arrival order,
+    run by the sharded scan of functions/scan.py over fixed-width
+    event_id shards ({_LATE_SHARD_IDS} ids: two shards at sf0.01, 13 at
+    sf0.1).  All lateness arithmetic is exact integer microseconds."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
         (F.col("event_id") / _LATE_SHARD_IDS).cast("bigint").alias("shard"),
     )
-    w_ord = Window.partitionBy("shard").orderBy("event_id")
-    w_run = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.partitionBy("shard")
-    ranked = ev.select(
-        "event_type",
-        "shard",
-        "t",
-        F.max("t").over(w_run).alias("intra_max"),
-        F.max("t").over(w_all).alias("shard_max"),
-        F.row_number().over(w_ord).alias("rn"),
+    scanned = prefix_scan(
+        ev, "shard", ["event_id"], {"t": "pmax"}, how="max", inclusive=False
     )
-    # O(#shards) stitch: exclusive prefix max of shard maxima.
-    w_off = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = ranked.filter(F.col("rn") == 1).select(
-        "shard", F.max("shard_max").over(w_off).alias("prev_max")
-    )
-    horizon = F.greatest(
-        F.coalesce(F.col("intra_max"), F.lit(None).cast("bigint")),
-        F.col("prev_max"),
-    ) - F.lit(WATERMARK_DELAY_S * 1_000_000)
-    scored = ranked.join(F.broadcast(offsets), "shard").select(
+    horizon = F.col("pmax") - F.lit(WATERMARK_DELAY_S * 1_000_000)
+    scored = scanned.select(
         "event_type",
         F.when(F.col("t") < horizon, horizon - F.col("t")).alias("late_us"),
     )

@@ -21,6 +21,9 @@ Expression ids are normalized away, but Spark orders a few operators by
 hashing them (e.g. the ``Expand`` of several distinct aggregates), so a
 query built after different earlier queries can print a reordered plan.
 Name such a query alone to rebuild it in a fresh process on both sides.
+``q_graph_hits`` runs 26 or 27 construction jobs across full runs for a
+cause not yet found (8 warm builds in one session read 26 every time),
+so a ±1 construction-job difference there is not by itself a change.
 """
 
 from __future__ import annotations

@@ -73,7 +73,7 @@ def test_sessionize_deterministic_under_tied_timestamps(spark):
     """Two events with identical (user_id, ts) where the earlier-by-id row
     opens a session: the running-sum window orders by (ts, event_id), so
     session assignment of the tied rows is total-ordered and stable
-    (ADVICE scenario — fixtures have no such ties, so pin it here)."""
+    (the fixtures have no such ties, so pin it here)."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
@@ -88,19 +88,8 @@ def test_sessionize_deterministic_under_tied_timestamps(spark):
         rows, "user_id long, event_id long, ts timestamp, event_type string, value double"
     )
 
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    # the same window logic q_sessionize_gaps uses (pinned ordering)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    flagged = df.withColumn(
-        "is_new", F.when(gap_us.isNull() | (gap_us > 1_800_000_000), 1).otherwise(0)
-    )
-    sessions = flagged.withColumn("session_no", F.sum("is_new").over(run))
+    # the sessionizer every session query routes through
+    sessions = curation._sessionized(df)
     got = {
         (r.event_id): r.session_no for r in sessions.select("event_id", "session_no").collect()
     }

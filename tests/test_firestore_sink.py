@@ -56,6 +56,28 @@ def test_batch_sink_chunks_respect_limit(spark, tmp_path):
     assert max(b["batch_size"] for b in batches) == 25
 
 
+def test_sink_config_rejects_a_batch_firestore_would_refuse():
+    assert make_sink_config(DEFAULT_MAX_BATCH_SIZE).max_batch_size == 500
+    for bad in (0, DEFAULT_MAX_BATCH_SIZE + 1):
+        with pytest.raises(ValueError, match="max_batch_size"):
+            make_sink_config(bad)
+
+
+def test_cli_rejects_an_oversize_batch_before_reading_input(spark, tmp_path):
+    """``--firestore-max-batch-size 1000`` fails up front instead of
+    running at 500: the missing input file is never opened."""
+    from apache_beam_java_firestore_batch_dataflow_spark.cli import run_pipeline
+
+    config = PipelineConfig(
+        implementation="batch",
+        input_file=str(tmp_path / "missing.txt"),
+        output_google_cloud_project="test-project",
+        firestore_max_batch_size=1000,
+    )
+    with pytest.raises(ValueError, match="max_batch_size"):
+        run_pipeline(spark, config, fake_client_factory(str(tmp_path)))
+
+
 def test_batch_sink_is_idempotent_upsert(spark, tmp_path):
     """Task retries are safe: doc id = word, set() = overwrite
     (sink consistency semantics, SURVEY.md §2)."""

@@ -3,6 +3,7 @@ must be visible in the physical plan, not just asserted in docstrings."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__
@@ -968,51 +969,77 @@ def _window_specs(df):
     return plan, re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
 
 
-def _unpartitioned_over(specs, col_prefix):
-    """Specs whose FIRST element is an ordering over ``col_prefix`` —
-    i.e. a window with no partition expressions running a total order
-    over that (data-sized) column.  Catalyst constant-folds a lit(0)
-    partition spec away, so the bounded stitch windows (ordered by
-    ``shard``, O(#shards) rows) legitimately print unpartitioned; the
-    guard targets exactly the data-sized order columns."""
-    bad = []
-    for s in specs:
-        head = s.split(",")[0].strip()
-        if head.startswith(col_prefix) and ("ASC" in head or "DESC" in head):
-            bad.append(s)
-    return bad
+def _partition_keys(spec):
+    """A window spec's partition columns (names without expression ids):
+    the elements before its first sort order or frame."""
+    keys = []
+    for part in spec.split(","):
+        part = part.strip()
+        if "ASC" in part or "DESC" in part or part.startswith("specifiedwindowframe"):
+            break
+        keys.append(part.split("#")[0])
+    return keys
 
 
-def test_sequence_gaps_windows_are_partitioned(spark, sf_dir):
-    """VERDICT r6 item 4: the sequence audit must not run its
-    data-sized window (total order over distinct keys ``k``) in ONE
-    partition.  The intra-shard lead must partition by the fixed
-    key-range shard; only the O(#shards) stitch window (ordered by
-    ``shard``) may be partitionless."""
-    df = relational.QUERIES["q_audit_sequence_gaps"](spark, sf_dir)
+# Every sharded ordered scan: the data-sized column its order leads
+# with, the group keys its shard windows partition by ahead of
+# ``shard``, and whether its offsets join back broadcast.
+_SHARDED_SCANS = [
+    ("q_audit_sequence_gaps", "k#", [], False),
+    ("q_sessions_concurrency", "ts#", [], True),
+    ("q_sessions_overlap_counts", "t#", [], True),
+    ("q_stream_lateness_audit", "event_id#", [], True),
+    ("q_agg_gini_customer_revenue", "cents#", [], False),
+    ("q_agg_weighted_median", "price#", ["flag"], True),
+]
+
+
+@pytest.mark.parametrize(
+    "query, order_col, by, broadcast", _SHARDED_SCANS, ids=[c[0] for c in _SHARDED_SCANS]
+)
+def test_sharded_scan_windows_are_partitioned(spark, sf_dir, query, order_col, by, broadcast):
+    """A sharded ordered scan never runs its data-sized window in one
+    partition: no window spec leads with the data-sized order column
+    (as an unpartitioned order or as a partition key), one window
+    partitions by exactly the group keys and ``shard``, and only the
+    O(#shards) stitch, ordered by ``shard``, may be partitionless."""
+    df = __spark_entry__.queries()[query](spark, sf_dir)
     plan, specs = _window_specs(df)
     assert specs, plan
-    bad = _unpartitioned_over(specs, "k#")
-    assert not bad, f"data-sized unpartitioned window(s): {bad}"
-    # the intra-shard window partitions by shard (partition expr leads
-    # the spec, before any ASC/DESC sort spec)
-    assert any(s.split(",")[0].strip().startswith("shard#") for s in specs), specs
+    bad = [s for s in specs if s.split(",")[0].strip().startswith(order_col)]
+    assert not bad, f"data-sized window(s) led by {order_col}: {bad}"
+    assert [*by, "shard"] in [_partition_keys(s) for s in specs], specs
+    if broadcast:
+        assert "BroadcastHashJoin" in plan
 
 
-def test_sessions_concurrency_windows_are_partitioned(spark, sf_dir):
-    """Same guard for the concurrency profile: the data-sized running
-    sum (ordered by ``ts``) must partition by time shard; only the
-    O(#shards) offset stitch (ordered by ``shard``) may be
-    partitionless, and the offsets must join back broadcast."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import curation
+def test_shard_ordered_windows_have_one_owner():
+    """Outside functions/scan.py, only q_audit_sequence_gaps' lead()
+    stitch orders a window by ``shard``: every prefix over shards goes
+    through the scan owner."""
+    import ast
+    import pathlib
 
-    df = curation.QUERIES["q_sessions_concurrency"](spark, sf_dir)
-    plan, specs = _window_specs(df)
-    assert specs, plan
-    bad = _unpartitioned_over(specs, "ts#")
-    assert not bad, f"data-sized unpartitioned window(s): {bad}"
-    assert any(s.split(",")[0].strip().startswith("shard#") for s in specs), specs
-    assert "BroadcastHashJoin" in plan
+    pkg = pathlib.Path(relational.__file__).parents[1]
+    sites = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "functions/scan.py":
+            continue
+        for fn in ast.parse(path.read_text()).body:
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "orderBy"
+                    and any(
+                        isinstance(c, ast.Constant) and c.value == "shard"
+                        for a in node.args
+                        for c in ast.walk(a)
+                    )
+                ):
+                    sites.add((rel, getattr(fn, "name", None)))
+    assert sites == {("operators/relational.py", "q_audit_sequence_gaps")}, sites
 
 
 def test_bpe_merge_censuses_vocab_before_pair_explode(spark, sf_dir):
@@ -1027,49 +1054,6 @@ def test_bpe_merge_censuses_vocab_before_pair_explode(spark, sf_dir):
     # census agg keyed by tok, pair agg keyed by pair
     assert plan.count("HashAggregate") >= 4  # partial+final for each of 2 aggs
     assert "tok#" in plan and "pair#" in plan
-
-
-def test_lateness_audit_windows_are_partitioned(spark, sf_dir):
-    """The running event-time max (ordered by event_id, data-sized) must
-    partition by the fixed-width event_id shard; only the O(#shards)
-    prefix-max stitch (ordered by ``shard``) may be partitionless, and
-    the offsets must join back broadcast."""
-    from apache_beam_java_firestore_batch_dataflow_spark.streaming import windows as sw
-
-    df = sw.QUERIES["q_stream_lateness_audit"](spark, sf_dir)
-    plan, specs = _window_specs(df)
-    assert specs, plan
-    bad = _unpartitioned_over(specs, "event_id#")
-    assert not bad, f"data-sized unpartitioned window(s): {bad}"
-    assert any(s.split(",")[0].strip().startswith("shard#") for s in specs), specs
-    assert "BroadcastHashJoin" in plan
-
-
-def test_gini_windows_are_partitioned(spark, sf_dir):
-    """The global rank scan (ordered by cents, data-sized) must
-    partition by the fixed-width value shard; only the O(#shards)
-    offset stitch may be partitionless."""
-    df = relational.QUERIES["q_agg_gini_customer_revenue"](spark, sf_dir)
-    plan, specs = _window_specs(df)
-    assert specs, plan
-    bad = _unpartitioned_over(specs, "cents#")
-    assert not bad, f"data-sized unpartitioned window(s): {bad}"
-    assert any(s.split(",")[0].strip().startswith("shard#") for s in specs), specs
-
-
-def test_overlap_counts_windows_are_partitioned(spark, sf_dir):
-    """The merged boundary timeline (ordered by t, data-sized) must
-    partition by the time shard; only the O(#shards) two-sum stitch may
-    be partitionless, and the offsets must join back broadcast."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import curation
-
-    df = curation.QUERIES["q_sessions_overlap_counts"](spark, sf_dir)
-    plan, specs = _window_specs(df)
-    assert specs, plan
-    bad = _unpartitioned_over(specs, "t#")
-    assert not bad, f"data-sized unpartitioned window(s): {bad}"
-    assert any(s.split(",")[0].strip().startswith("shard#") for s in specs), specs
-    assert "BroadcastHashJoin" in plan
 
 
 def test_heavy_hitters_uses_window_group_limit(spark, sf_dir):
