@@ -6,14 +6,21 @@ task holding every row.  :func:`prefix_scan` runs it as Blelloch's
 two-phase scan ("Prefix Sums and Their Applications", 1990) instead:
 
 1. each fixed-width shard runs its own partitioned running window, and
-   the shard's total comes out of the same exchange (a full-frame
-   window; ``row_number() == 1`` keeps one row per shard);
+   one combiner aggregate gives every shard's total;
 2. :func:`stitch` takes the exclusive prefix of the shard totals in one
    window partitioned only by the group keys.  It sees one row per
    shard, so its size is the order key's range over the shard width,
    never the row count;
 3. the offsets join back broadcast and combine with each row's local
    value: ``offset + local`` for ``sum``, ``greatest`` for ``max``.
+
+The totals come from a groupBy, not from a full-frame window beside the
+running one: the two sides of the join are planned apart and do not
+share that window's exchange, so a window total re-shuffles and
+re-sorts every row, where the combiner aggregate's partial aggregation
+shuffles one row per shard per task.  At sf0.1 (local[4], warm, 5
+alternating process pairs) the window form took q_agg_weighted_median
+from 3.26 to 3.98 s; the groupBy form runs it at 2.77 s against 2.65 s.
 
 The caller owns the shard column and its width.  The shard must be a
 monotone function of the order's leading key (``key div WIDTH``), and
@@ -68,24 +75,16 @@ def prefix_scan(
     agg = _AGG[how]
     keys = [*by, shard]
     names = list(values.values())
-    w_ord = Window.partitionBy(*keys).orderBy(*order)
-    w_run = w_ord.rowsBetween(
+    w_run = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow if inclusive else -1
     )
-    w_all = Window.partitionBy(*keys)
-    ranked = df.select(
-        "*",
-        *(agg(v).over(w_run).alias(f"_run_{n}") for v, n in values.items()),
-        *(agg(v).over(w_all).alias(f"_tot_{n}") for v, n in values.items()),
-        F.row_number().over(w_ord).alias("_rn"),
+    running = df.select(
+        "*", *(agg(v).over(w_run).alias(f"_run_{n}") for v, n in values.items())
     )
-    offsets = stitch(
-        ranked.filter(F.col("_rn") == 1).select(*keys, *(f"_tot_{n}" for n in names)),
-        shard,
-        {f"_tot_{n}": f"_off_{n}" for n in names},
-        how,
-        by,
-    ).select(*keys, *(f"_off_{n}" for n in names))
+    totals = df.groupBy(*keys).agg(
+        *(agg(v).alias(f"_tot_{n}") for v, n in values.items())
+    )
+    offsets = stitch(totals, shard, {f"_tot_{n}": f"_off_{n}" for n in names}, how, by)
 
     def combined(n: str):
         run, off = F.col(f"_run_{n}"), F.col(f"_off_{n}")
@@ -93,6 +92,6 @@ def prefix_scan(
             return F.greatest(run, off)  # NULL only while both are
         return off + (run if inclusive else F.coalesce(run, F.lit(0)))
 
-    return ranked.join(F.broadcast(offsets), keys).select(
+    return running.join(F.broadcast(offsets), keys).select(
         *df.columns, *(combined(n).alias(n) for n in names)
     )
