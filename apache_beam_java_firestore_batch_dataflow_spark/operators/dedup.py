@@ -35,7 +35,14 @@ from ..functions.hashing import (
 )
 from ..functions.lineage import Generations
 from ..functions.numeric import round_ratio, round_ratio_sql
-from ..sources.tables import load_table, shared_kernel
+from ..functions.setjoin import (
+    UNION,
+    block_pairs,
+    jaccard_at_least,
+    rounded_jaccard,
+    verify_sets,
+)
+from ..sources.tables import load_table, shared_kernel, spread_scan
 from .text import (
     TOKENS_SQL,
     _winnow_arrays_sql,
@@ -115,11 +122,21 @@ def shingle_sets_df(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh): exploded distinct shingles — a narrow explode of
-    :func:`shingle_sets_df`; the old explode+``distinct()`` exchange is
-    gone (per-doc dedup already happened inside the row)."""
-    return shingle_sets_df(docs).select("doc_id", F.explode("shs").alias("sh"))
+def doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted :func:`shingle_sets_df` of ``documents``.
+
+    The narrow (doc_id, text) projection is spread when the scan is
+    unsplittable (a no-op at scale): tokenizing, shingling, the persisted
+    set blocks and the signature hashing above them otherwise all run in
+    one scan task.  The sets persist because the signatures and both
+    verification sides read them, so tokenization runs once.  At cluster
+    scale this would be MEMORY_AND_DISK or a checkpoint to durable
+    storage."""
+    docs = spread_scan(
+        _docs(spark, sf_dir).select("doc_id", "text"), spark, sf_dir,
+        "documents", key="doc_id",
+    )
+    return shingle_sets_df(docs).persist()
 
 
 SHINGLES_SQL = rf"""
@@ -134,13 +151,10 @@ SHINGLES_SQL = rf"""
 """
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, m0..m31): MinHash signature from one explode + one agg."""
-    return minhash_signatures_from(shingles_df(docs))
-
-
-def minhash_signatures_from(shingles: DataFrame) -> DataFrame:
-    """Signatures from a precomputed (doc_id, sh) shingle set.
+def minhash_signatures_from(sets: DataFrame, id: str = "doc_id") -> DataFrame:
+    """(id, m0..m31): the MinHash signature of each (id, shs) shingle
+    set, from one narrow explode and one aggregation.  An empty set has
+    no signature.
 
     Double hashing (functions/hashing.py): two md5 base hashes per
     shingle, 32 derived minwise hashes — constant per-shingle cost
@@ -148,8 +162,9 @@ def minhash_signatures_from(shingles: DataFrame) -> DataFrame:
     """
     from ..functions.hashing import H2_SALT
 
+    shingles = sets.select(id, F.explode("shs").alias("sh"))
     hashed = shingles.select(
-        "doc_id",
+        id,
         h56(F.col("sh")).alias("h1"),
         h56(F.col("sh"), salt=H2_SALT).alias("h2"),
     )
@@ -157,7 +172,7 @@ def minhash_signatures_from(shingles: DataFrame) -> DataFrame:
         F.min(minhash_term(F.col("h1"), F.col("h2"), i)).alias(f"m{i}")
         for i in range(NUM_HASHES)
     ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    return hashed.groupBy(id).agg(*aggs)
 
 
 def _signatures_sql() -> str:
@@ -175,8 +190,8 @@ def _signatures_sql() -> str:
     """
 
 
-def band_hashes(signatures: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_hash): one row per band."""
+def band_hashes(signatures: DataFrame, id: str = "doc_id") -> DataFrame:
+    """(id, band_idx, band_hash): one row per band."""
     bands = F.array(
         *[
             F.struct(
@@ -194,9 +209,17 @@ def band_hashes(signatures: DataFrame) -> DataFrame:
             for b in range(BANDS)
         ]
     )
-    return signatures.select("doc_id", F.explode(bands).alias("band")).select(
-        "doc_id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_hash").alias("band_hash")
+    return signatures.select(id, F.explode(bands).alias("band")).select(
+        id, F.col("band.band_idx").alias("band_idx"), F.col("band.band_hash").alias("band_hash")
     )
+
+
+def minhash_bands(sets: DataFrame, id: str = "doc_id") -> DataFrame:
+    """The MinHash front end: (id, band_idx, band_hash) for each (id,
+    shs) shingle set, persisted.  Both sides of a banded join read it;
+    without the persist the signature aggregation, the dominant corpus
+    pass, runs once per side."""
+    return band_hashes(minhash_signatures_from(sets, id), id).persist()
 
 
 def _bands_sql() -> str:
@@ -250,76 +273,18 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates + exact Jaccard verification.
 
     Pipeline: shingle (narrow) → signature (1 agg) → band join (equi) →
-    shingle-join verification on *candidates only*.  No stage touches the
-    n² pair space; every join is a hash shuffle on a high-cardinality key.
+    in-row shingle-set verification on *candidates only*
+    (``functions/setjoin``).  No stage touches the n² pair space; every
+    join is a hash shuffle on a high-cardinality key.
     """
-    from ..sources.tables import spread_scan
-
-    # r16: spread the narrow (doc_id, text) projection when the scan is
-    # unsplittable (no-op at scale) — tokenize+shingle, the persisted
-    # gset blocks, and the signature md5 hashing above them otherwise
-    # all run in ONE scan task.
-    docs = spread_scan(
-        _docs(spark, sf_dir).select("doc_id", "text"), spark, sf_dir,
-        "documents", key="doc_id",
-    )
-    # The per-doc shingle SET (one array row per doc, built with zero
-    # shuffles) feeds three consumers: the signature explode and both
-    # sides of candidate verification.  Persist it so tokenization runs
-    # once.  At cluster scale this would be MEMORY_AND_DISK or a
-    # checkpoint to durable storage.
-    shs = shingle_sets_df(docs).persist()
-    sigs = minhash_signatures_from(
-        shs.select("doc_id", F.explode("shs").alias("sh"))
-    )
-    # Both sides of the banded self-join consume the band frame; without
-    # the persist the signature aggregation — the query's dominant
-    # corpus-pass shuffle — runs once per side.
-    bands = band_hashes(sigs).persist()
-
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-    # Verification: per-pair JVM set intersect over the two shingle
-    # arrays — two equi-joins on doc id instead of shuffling
-    # |pairs| × |shingles per doc| exploded rows (same counts: the
-    # arrays are distinct per doc).
-    sa = shs.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    sb = shs.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).alias("n_common"),
-            F.size("shs_a").alias("n_sh_a"),
-            F.size("shs_b").alias("n_sh_b"),
-        )
-    )
-    jaccard = F.col("n_common") * 1.0 / (
-        F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")
-    )
-    # filter on the raw ratio (identical IEEE divide+compare both
-    # engines); output via exact integer rounding (r15 audit
-    # name-resolution find — the round-div hid behind the local)
-    return verified.filter(jaccard >= JACCARD_MIN).select(
+    shs = doc_shingle_sets(spark, sf_dir)
+    cand = block_pairs(minhash_bands(shs), ["band_idx", "band_hash"], "doc_id")
+    verified = verify_sets(cand, shs, "doc_id", "shs")
+    return verified.filter(jaccard_at_least(JACCARD_MIN)).select(
         "doc_a",
         "doc_b",
         F.col("n_common").cast("bigint").alias("n_common"),
-        round_ratio(
-            "n_common", "(n_sh_a + n_sh_b - n_common)", 6
-        ).alias("jaccard"),
+        rounded_jaccard().alias("jaccard"),
     )
 
 
@@ -657,6 +622,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("block_idx").alias("block_idx_b"),
         F.col("block_val").alias("block_val_b"),
     )
+    # not functions/setjoin.block_pairs: the pair carries both signatures
+    # through the join, so the verify step needs no second lookup
     cand = (
         a.join(
             b,
@@ -723,10 +690,10 @@ _NGRAM_ORACLE = f"""
 def _ngram_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared candidate+verify pipeline for the n-gram pair family:
     rare-gram postings candidates, in-row array-intersect verification.
-    Returns (doc_a, doc_b, n_common, n_g_a, n_g_b) — Jaccard and
-    containment are different FILTERS over the same verified frame."""
-    from ..sources.tables import spread_scan
-
+    Returns verify_sets' (doc_a, doc_b, n_common, n_a, n_b) — Jaccard and
+    containment are different FILTERS over the same verified frame.
+    Candidates come from the ``row_pairs`` postings form, not
+    ``block_pairs``: one groupBy per gram emits its pairs in-row."""
     docs = _docs(spark, sf_dir)
     # The gram build below is a heavy per-row kernel fused into the scan
     # stage; the narrow (doc_id, norm) projection is spread when the
@@ -756,25 +723,7 @@ def _ngram_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )
-    # Verification: join each candidate pair to the two docs' (distinct)
-    # gram ARRAYS and intersect JVM-side per row.  This replaces the
-    # (pair × gram) exploded shuffle — whose volume is |pairs|·|grams per
-    # doc| rows — with two equi-joins on doc id carrying one array row
-    # per doc, plus a narrow hash-set intersect per pair.  Counts are
-    # identical (grams are distinct per doc).
-    ga = gsets.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("gs_a"))
-    gb = gsets.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gs_b"))
-    return (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("gs_a", "gs_b")).alias("n_common"),
-            F.size("gs_a").alias("n_g_a"),
-            F.size("gs_b").alias("n_g_b"),
-        )
-    )
+    return verify_sets(cand, gsets, "doc_id", "gs")
 
 
 @register("q_dedup_ngram_jaccard", oracle=_NGRAM_ORACLE)
@@ -787,15 +736,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal; unique grams pair nothing).
     """
     verified = _ngram_verified_pairs(spark, sf_dir)
-    jac = F.col("n_common") * 1.0 / (
-        F.col("n_g_a") + F.col("n_g_b") - F.col("n_common")
-    )
-    return verified.filter(jac >= JACCARD_MIN).select(
-        "doc_a",
-        "doc_b",
-        round_ratio("n_common", "(n_g_a + n_g_b - n_common)", 6).alias(
-            "jaccard"
-        ),
+    return verified.filter(jaccard_at_least(JACCARD_MIN)).select(
+        "doc_a", "doc_b", rounded_jaccard().alias("jaccard")
     )
 
 
@@ -852,14 +794,12 @@ def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherited: per-gram fan-out ≤ C(DF_MAX, 2), no pair explosion, no
     (pair × gram) shuffle."""
     verified = _ngram_verified_pairs(spark, sf_dir)
-    contain = F.col("n_common") * 1.0 / F.least(F.col("n_g_a"), F.col("n_g_b"))
+    contain = F.col("n_common") * 1.0 / F.least(F.col("n_a"), F.col("n_b"))
     return verified.filter(contain >= CONTAIN_MIN).select(
         "doc_a",
         "doc_b",
-        round_ratio("n_common", "least(n_g_a, n_g_b)", 6).alias("containment"),
-        round_ratio("n_common", "(n_g_a + n_g_b - n_common)", 6).alias(
-            "jaccard"
-        ),
+        round_ratio("n_common", "least(n_a, n_b)", 6).alias("containment"),
+        rounded_jaccard().alias("jaccard"),
     )
 
 
@@ -923,10 +863,8 @@ def q_dedup_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (only chunks crossing the threshold); Spark's AQE broadcasts it when
     it fits, and the plan stays a keyed equi-join either way.
     """
-    from ..sources.tables import spread_scan
-
-    # r16: chunking + census partials run inside the scan stage —
-    # spread the scan when it is unsplittable (no-op at scale)
+    # chunking + census partials run inside the scan stage — spread the
+    # scan when it is unsplittable (no-op at scale)
     docs = spread_scan(
         _docs(spark, sf_dir), spark, sf_dir, "documents", key="doc_id"
     )
@@ -1036,43 +974,15 @@ def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("f")
     )
     # not persisted: the winnow arrays above are already cached and the
-    # posting rebuild rides a reused exchange (A/B: persist 4.93 s
-    # vs 4.27 s without — materializing the postings costs more)
-    rare_fp = fp.join(rare, "f")
-    a = rare_fp.alias("a")
-    b = rare_fp.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.f") == F.col("b.f"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    wa = w.select(F.col("doc_id").alias("doc_a"), F.col("fps").alias("fps_a"),
-                  F.col("n_fp").alias("n_a"))
-    wb = w.select(F.col("doc_id").alias("doc_b"), F.col("fps").alias("fps_b"),
-                  F.col("n_fp").alias("n_b"))
-    verified = (
-        cand.join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("fps_a", "fps_b")).alias("n_common"),
-            "n_a",
-            "n_b",
-        )
-    )
-    overlap = F.col("n_common") * 1.0 / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
-    return verified.filter(overlap >= WINNOW_SIM_MIN).select(
+    # posting rebuild rides a reused exchange (persist 4.93 s vs 4.27 s
+    # without — materializing the postings costs more)
+    cand = block_pairs(fp.join(rare, "f"), ["f"], "doc_id")
+    verified = verify_sets(cand, w, "doc_id", "fps")
+    return verified.filter(jaccard_at_least(WINNOW_SIM_MIN)).select(
         "doc_a",
         "doc_b",
         F.col("n_common").cast("bigint").alias("n_common"),
-        round_ratio("n_common", "(n_a + n_b - n_common)", 6).alias("overlap"),
+        rounded_jaccard().alias("overlap"),
     )
 
 
@@ -1123,68 +1033,36 @@ def q_dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs are ever generated (new-vs-new duplicates are settled by the
     batch's own run of q_dedup_exact/minhash, not this screen).
     """
-    # r17: two fixes the sibling q_dedup_minhash_lsh already carries —
-    # the tokenize/shingle/signature kernel rides the unsplittable-
-    # input spread (it ran in ONE scan task), and the band frame is
-    # persisted (new-batch and corpus filters are two consumers; the
-    # signature aggregation — the dominant corpus pass — otherwise
-    # runs once per side).  Same-window A/B: med 1.51 -> 0.52 s,
-    # min 0.99 -> 0.45 s.
-    from ..sources.tables import spread_scan
-
-    docs = spread_scan(
-        _docs(spark, sf_dir).select("doc_id", "text"), spark, sf_dir,
-        "documents", key="doc_id",
-    )
-    shs = shingle_sets_df(docs).persist()
-    bands = band_hashes(minhash_signatures_from(
-        shs.select("doc_id", F.explode("shs").alias("sh"))
-    )).persist()
+    # The spread scan and the band persist (new-batch and corpus filters
+    # are two consumers) took this query from 1.51 to 0.52 s median
+    # (0.99 -> 0.45 s min) in a same-window A/B.
+    shs = doc_shingle_sets(spark, sf_dir)
+    bands = minhash_bands(shs)
     is_new = F.col("doc_id") % INGEST_MOD == 0
-    new_bands = bands.filter(is_new)
-    corpus_bands = bands.filter(~is_new)
+    # Not block_pairs: the two sides are different slices of the index,
+    # so the pair is (new, corpus) with no a < b order.
     cand = (
-        new_bands.alias("n")
+        bands.filter(is_new).alias("n")
         .join(
-            corpus_bands.alias("c"),
+            bands.filter(~is_new).alias("c"),
             (F.col("n.band_idx") == F.col("c.band_idx"))
             & (F.col("n.band_hash") == F.col("c.band_hash")),
         )
-        .select(
-            F.col("n.doc_id").alias("new_doc"),
-            F.col("c.doc_id").alias("corpus_doc"),
-        )
+        .select(F.col("n.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = shs.select(F.col("doc_id").alias("new_doc"), F.col("shs").alias("shs_a"))
-    sb = shs.select(
-        F.col("doc_id").alias("corpus_doc"), F.col("shs").alias("shs_b")
-    )
-    verified = (
-        cand.join(sa, "new_doc")
-        .join(sb, "corpus_doc")
-        .select(
-            "new_doc",
-            "corpus_doc",
-            F.size(F.array_intersect("shs_a", "shs_b")).alias("n_common"),
-            F.size("shs_a").alias("n_a"),
-            F.size("shs_b").alias("n_b"),
-        )
-    )
-    jac = F.col("n_common") * 1.0 / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
     matches = (
-        verified.filter(jac >= JACCARD_MIN)
-        .groupBy("new_doc")
+        verify_sets(cand, shs, "doc_id", "shs")
+        .filter(jaccard_at_least(JACCARD_MIN))
+        .groupBy("doc_a")
         .agg(
             F.count(F.lit(1)).alias("n_matches"),
-            F.min("corpus_doc").alias("best_match"),
+            F.min("doc_b").alias("best_match"),
         )
     )
-    newdocs = docs.filter(is_new).select("doc_id")
+    newdocs = _docs(spark, sf_dir).filter(is_new).select("doc_id")
     out = newdocs.join(
-        matches.withColumnRenamed("new_doc", "doc_id"), "doc_id", "left"
+        matches.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left"
     )
     return out.select(
         "doc_id",
@@ -1320,35 +1198,21 @@ def q_dedup_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signature-agreement Jaccard ESTIMATE (agreeing slots /
     NUM_HASHES — what the sketch believes) against the EXACT shingle
     Jaccard (what the data says), with the absolute error — the dedup
-    family's quality axis, the sketch-side twin of ``q_ann_recall``
-    (VERDICT r4/r5: every approximation should carry a measured-quality
-    query, not just a correctness oracle).
+    family's quality axis, the sketch-side twin of ``q_ann_recall``:
+    an approximation carries a measured-quality query, not just a
+    correctness oracle.
 
     Scale shape: candidates come from the banded equi-join (never n²);
     the estimate joins the two 32-column signature rows per pair and
-    folds agreement IN-ROW; exact Jaccard reuses the shingle-join
+    folds agreement IN-ROW; exact Jaccard is the in-row shingle-set
     verification on candidates only.  Everything downstream of
     candidates is O(pairs)."""
-    docs = _docs(spark, sf_dir)
-    shs = shingle_sets_df(docs).persist()
-    # four consumers (both band sides + the sig_a/sig_b agreement
-    # probes) — persist so the signature aggregation runs once
-    sigs = minhash_signatures_from(
-        shs.select("doc_id", F.explode("shs").alias("sh"))
-    ).persist()
-    bands = band_hashes(sigs)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    shs = doc_shingle_sets(spark, sf_dir)
+    # Not minhash_bands: the agreement probes read the signatures too, so
+    # the signatures persist (the aggregation runs once for four
+    # consumers) and the bands re-explode narrowly from them.
+    sigs = minhash_signatures_from(shs).persist()
+    cand = block_pairs(band_hashes(sigs), ["band_idx", "band_hash"], "doc_id")
     sig_arr = F.array(*[F.col(f"m{i}") for i in range(NUM_HASHES)])
     sa = sigs.select(F.col("doc_id").alias("doc_a"), sig_arr.alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), sig_arr.alias("sig_b"))
@@ -1357,32 +1221,23 @@ def q_dedup_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
         )
     )
-    wa = shs.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    wb = shs.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
-    n_common = F.size(F.array_intersect("shs_a", "shs_b"))
-    # exact integer rounding (r15: these ratios hid behind local
-    # variables until the audit's name-resolution pass; est, exact and
-    # their difference are all integer ratios, so the r14 round_ratio
-    # idiom applies directly — abs_err = |n_agree·union − n_common·K|
-    # / (K·union), magnitudes <= ~1e7, comfortably int64)
-    union = "(size(shs_a) + size(shs_b) - n_common)"
+    # est, exact and their difference are integer ratios, rounded exactly:
+    # abs_err = |n_agree·union − n_common·K| / (K·union), magnitudes
+    # <= ~1e7, comfortably int64
     return (
-        cand.join(sa, "doc_a")
+        verify_sets(cand, shs, "doc_id", "shs")
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
-        .select("doc_a", "doc_b", n_agree.alias("n_agree"))
-        .join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .select("doc_a", "doc_b", "n_agree", n_common.alias("n_common"),
-                "shs_a", "shs_b")
+        .select("doc_a", "doc_b", n_agree.alias("n_agree"), "n_common", "n_a", "n_b")
         .select(
             "doc_a",
             "doc_b",
             F.col("n_agree").cast("int").alias("n_agree"),
             round_ratio("n_agree", str(NUM_HASHES), 6).alias("est_jaccard"),
-            round_ratio("n_common", union, 6).alias("exact_jaccard"),
+            rounded_jaccard().alias("exact_jaccard"),
             round_ratio(
-                f"abs(n_agree * {union} - n_common * {NUM_HASHES})",
-                f"({NUM_HASHES} * {union})",
+                f"abs(n_agree * {UNION} - n_common * {NUM_HASHES})",
+                f"({NUM_HASHES} * {UNION})",
                 6,
             ).alias("abs_err"),
         )
@@ -1674,15 +1529,15 @@ def q_dedup_paragraph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraphs (~tokens/{PARA_TOKENS}): shingle sets build narrowly
     in-row, signatures are ONE combiner agg, candidates come from the
     band equi-join (collisions ~ near-dup pairs, never n²), and
-    verification joins shingles on CANDIDATES only.  Paragraph ids
-    pack as ``doc_id * {PARA_ID_MOD} + para_idx`` (documented bound:
-    docs under {PARA_ID_MOD}x{PARA_TOKENS} tokens), so the whole band
-    machinery is reused unchanged on a single sortable key.
+    verification intersects the two paragraphs' shingle arrays in-row
+    on CANDIDATES only.  Paragraph ids pack as ``doc_id *
+    {PARA_ID_MOD} + para_idx`` (documented bound: docs under
+    {PARA_ID_MOD}x{PARA_TOKENS} tokens), so the whole band machinery is
+    reused unchanged on a single sortable key.
 
-    Cache lifetime: the exploded paragraph-shingle frame feeds four
-    consumers (signatures, both verify sides, sizes) and persists;
-    released by the caller's ``clearCache`` (the
-    q_graph_jaccard_neighbors convention).
+    Cache lifetime: the per-paragraph shingle sets (signatures and both
+    verify sides read them) and the band frame persist until the
+    caller's ``spark.catalog.clearCache()``.
     """
     docs = _docs(spark, sf_dir)
     tokd = docs.select("doc_id", tokens_col(F.col("text")).alias("t")).filter(
@@ -1704,55 +1559,20 @@ def q_dedup_paragraph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice("t", F.col("start"), PARA_TOKENS).alias("ck"),
         )
     )
-    psh = (
-        paras.select(
-            "cid", F.explode(F.array_distinct(word_grams("ck", SHINGLE_K))).alias("sh")
-        )
-        .persist()
-    )
-    sigs = minhash_signatures_from(
-        psh.select(F.col("cid").alias("doc_id"), "sh")
-    ).withColumnRenamed("doc_id", "cid")
-    bands = band_hashes(sigs.withColumnRenamed("cid", "doc_id")).select(
-        F.col("doc_id").alias("cid"), "band_idx", "band_hash"
-    ).persist()  # both self-join sides; one signature pass, not two
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.cid") < F.col("b.cid")),
-        )
-        .select(F.col("a.cid").alias("ca"), F.col("b.cid").alias("cb"))
-        .distinct()
-    )
-    sa = psh.select(F.col("cid").alias("ca"), "sh")
-    sb = psh.select(F.col("cid").alias("cb"), "sh")
-    inter = (
-        cand.join(sa, "ca")
-        .join(sb, ["cb", "sh"])
-        .groupBy("ca", "cb")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = psh.groupBy("cid").agg(F.count(F.lit(1)).alias("n_sh"))
-    za = sizes.select(F.col("cid").alias("ca"), F.col("n_sh").alias("n_a"))
-    zb = sizes.select(F.col("cid").alias("cb"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common") * 1.0 / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    psh = paras.select(
+        "cid", F.array_distinct(word_grams("ck", SHINGLE_K)).alias("shs")
+    ).persist()
+    cand = block_pairs(minhash_bands(psh, "cid"), ["band_idx", "band_hash"], "cid")
     return (
-        inter.join(za, "ca")
-        .join(zb, "cb")
-        .filter(jac >= PARA_JACC_MIN)
+        verify_sets(cand, psh, "cid", "shs")
+        .filter(jaccard_at_least(PARA_JACC_MIN))
         .select(
-            F.expr(f"ca div {PARA_ID_MOD}").cast("bigint").alias("doc_a"),
-            F.expr(f"ca % {PARA_ID_MOD}").cast("bigint").alias("para_a"),
-            F.expr(f"cb div {PARA_ID_MOD}").cast("bigint").alias("doc_b"),
-            F.expr(f"cb % {PARA_ID_MOD}").cast("bigint").alias("para_b"),
+            F.expr(f"cid_a div {PARA_ID_MOD}").cast("bigint").alias("doc_a"),
+            F.expr(f"cid_a % {PARA_ID_MOD}").cast("bigint").alias("para_a"),
+            F.expr(f"cid_b div {PARA_ID_MOD}").cast("bigint").alias("doc_b"),
+            F.expr(f"cid_b % {PARA_ID_MOD}").cast("bigint").alias("para_b"),
             F.col("n_common").cast("bigint").alias("n_common"),
-            round_ratio("n_common", "(n_a + n_b - n_common)", 6).alias(
-                "jaccard6"
-            ),
+            rounded_jaccard().alias("jaccard6"),
         )
     )
 
@@ -1761,28 +1581,14 @@ def q_dedup_paragraph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-split near-dup leakage audit (train/val/test contamination)
 # ---------------------------------------------------------------------------
 
-def _split_sql(col: str) -> str:
-    """The canonical split assignment from curation.py (closing-r11
-    review: previously a verbatim re-implementation here — a change to
-    the hash idiom in ONE copy would silently bucket leakage under
-    splits no document belongs to)."""
+def _split_leakage_oracle() -> str:
+    # imported here: curation's module-level oracles import this module
     from .curation import split_sql
 
-    return split_sql(col)
-
-
-def _split_col(c: F.Column) -> F.Column:
-    """Spark twin — same canonical definition."""
-    from .curation import split_col
-
-    return split_col(c)
-
-
-def _split_leakage_oracle() -> str:
     return f"""
     WITH pairs AS ({_MINHASH_ORACLE}),
     tagged AS (
-      SELECT {_split_sql('doc_a')} AS sa, {_split_sql('doc_b')} AS sb
+      SELECT {split_sql('doc_a')} AS sa, {split_sql('doc_b')} AS sb
       FROM pairs
     ),
     grid AS (
@@ -1814,10 +1620,12 @@ def q_dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unordered split pairs).  ``is_leak=1`` rows are the contamination;
     at 100 TB the same plan holds because nothing here touches row
     text beyond what the LSH kernel already shuffles."""
+    from .curation import split_col
+
     pairs = minhash_pairs(spark, sf_dir)
     tagged = pairs.select(
-        _split_col(F.col("doc_a")).alias("sa"),
-        _split_col(F.col("doc_b")).alias("sb"),
+        split_col(F.col("doc_a")).alias("sa"),
+        split_col(F.col("doc_b")).alias("sb"),
     )
     grid = (
         tagged.select(
@@ -2017,9 +1825,7 @@ def q_dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (doc_a, doc_b, n_spans, max_span_tokens).
     """
-    from ..sources.tables import spread_scan
-
-    # r16: the postings stage (one md5 per token position over a ~300
+    # The postings stage (one md5 per token position over a ~300
     # char gram string) is the suite's heaviest scan-fused kernel;
     # spread the narrow (doc_id, text) projection when the scan is
     # unsplittable (no-op at scale).
@@ -2059,7 +1865,7 @@ def exact_substring_pairs(
     )
     # df-cap pre-filter: census gram doc-frequency (map-combined, keyed
     # on gh — the join's own key) and anti-join the heavy set.  No
-    # explicit broadcast hint (r14 ADVICE item 3): the heavy set is
+    # explicit broadcast hint: the heavy set is
     # SMALL in ordinary corpora (only grams in > df_cap docs) and AQE
     # then broadcasts it at runtime so the kill happens map-side — but
     # a corpus with MANY distinct mega-templates (each > df_cap docs)
@@ -2074,6 +1880,8 @@ def exact_substring_pairs(
         .select("gh")
     )
     kept = postings.join(heavy, "gh", "left_anti")
+    # not functions/setjoin.block_pairs: each shared gram is its own row,
+    # carrying both positions, so the pairs must not be distinct
     a = kept.alias("a")
     b = kept.alias("b")
     cand = a.join(

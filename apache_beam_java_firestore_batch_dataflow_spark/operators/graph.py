@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.lineage import Generations
 from ..functions.numeric import round_ratio, round_ratio_sql
+from ..functions.setjoin import block_pairs, rounded_jaccard, verify_sets
 from ..sources.tables import load_table, shared_kernel
 from .dedup import connected_components, undirected
 from .similarity import SEM_GRAPH_TAU, semantic_edges
@@ -780,45 +781,42 @@ _JACC_ORACLE = f"""
 """
 
 
-def jaccard_stage_counts(spark: SparkSession, sf_dir: str) -> dict:
-    """Stage-count census for the Jaccard scaling leg (r16, VERDICT r15
-    item 6).  The r15 scaling profile measured candidate pairs growing
-    x100.9 on 10x data while runtime stayed postings-linear (2.7x) — a
-    fixture degree shift, argued in prose.  This census publishes the
-    counts in the bench artifact AND asserts the blocking contract
-    mechanically: distinct candidate pairs can never exceed the exact
-    sum of C(df, 2) over df-capped customers (fan-out <=
-    C(JACC_DF_MAX, 2) per customer), so a super-linear blow-up at a
-    future SF fails the bench run instead of surviving as narrative.
-
-    Stages mirror q_graph_jaccard_neighbors' own frames (same memoized
-    ``copurchase_adj``, same rare census, same candidate self-join); the
-    per-row df*(df-1) term is bounded by JACC_DF_MAX^2 = 1600, so the
-    int64 census sum holds to ~5e15 capped customers."""
-    adj = copurchase_adj(spark, sf_dir)
-    arcs = adj.count()
+def _rare_candidates(adj: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(rare, cand)``: the customers with at most JACC_DF_MAX suppliers,
+    with that degree as ``df``, and the distinct supplier pairs
+    ``(s_a, s_b)`` they block.  q_graph_jaccard_neighbors and its census
+    both read it, so the census counts the operator's own candidates."""
     rare = (
         adj.groupBy("c")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") <= JACC_DF_MAX)
     )
+    return rare, block_pairs(adj.join(rare.select("c"), "c"), ["c"], "s")
+
+
+def jaccard_stage_counts(spark: SparkSession, sf_dir: str) -> dict:
+    """Stage-count census for the Jaccard scaling leg.  A scaling profile
+    measured candidate pairs growing x100.9 on 10x data while runtime
+    stayed postings-linear (2.7x), a fixture degree shift.  This census
+    publishes the counts in the bench artifact AND asserts the blocking
+    contract mechanically: distinct candidate pairs can never exceed the
+    exact sum of C(df, 2) over df-capped customers (fan-out <=
+    C(JACC_DF_MAX, 2) per customer), so a super-linear blow-up at a
+    future SF fails the bench run instead of surviving as narrative.
+
+    The frames are q_graph_jaccard_neighbors' own (same memoized
+    ``copurchase_adj``, same :func:`_rare_candidates`); the per-row
+    df*(df-1) term is bounded by JACC_DF_MAX^2 = 1600, so the int64
+    census sum holds to ~5e15 capped customers."""
+    adj = copurchase_adj(spark, sf_dir)
+    arcs = adj.count()
+    rare, cand = _rare_candidates(adj)
     bound_row = rare.agg(
         F.count(F.lit(1)).alias("rare_customers"),
         F.sum(F.expr("df * (df - 1)")).alias("twice_bound"),
     ).collect()[0]
     pair_bound = int(bound_row["twice_bound"] or 0) // 2
-    rare_adj = adj.join(rare.select("c"), "c")
-    a = rare_adj.alias("a")
-    b = rare_adj.alias("b")
-    cand_n = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("s_a"), F.col("b.s").alias("s_b"))
-        .distinct()
-        .count()
-    )
+    cand_n = cand.count()
     if cand_n > pair_bound:
         raise ValueError(
             f"jaccard blocking contract violated at {sf_dir}: "
@@ -862,58 +860,23 @@ def q_graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     manager); a genuinely cold rebuild requires
     ``clear_shared_kernels()``."""
     adj = copurchase_adj(spark, sf_dir)
-    nbrs = adj.groupBy("s").agg(
-        F.array_sort(F.collect_list("c")).alias("cs"),
-        F.count(F.lit(1)).alias("deg"),
-    )
-    rare = adj.groupBy("c").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= JACC_DF_MAX
-    ).select("c")
-    # not persisted: both self-join sides are narrow re-reads of the
-    # memoized checkpoint + a reused census exchange (A/B r12: persist
-    # 5.00 s vs 4.85 s — materialization buys nothing here)
-    rare_adj = adj.join(rare, "c")
-    a = rare_adj.alias("a")
-    b = rare_adj.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("s_a"), F.col("b.s").alias("s_b"))
-        .distinct()
-    )
-    na = nbrs.select(
-        F.col("s").alias("s_a"), F.col("cs").alias("cs_a"),
-        F.col("deg").alias("deg_a"),
-    )
-    nb = nbrs.select(
-        F.col("s").alias("s_b"), F.col("cs").alias("cs_b"),
-        F.col("deg").alias("deg_b"),
-    )
-    scored = (
-        cand.join(na, "s_a")
-        .join(nb, "s_b")
+    nbrs = adj.groupBy("s").agg(F.array_sort(F.collect_list("c")).alias("cs"))
+    # the rare adjacency is not persisted: both self-join sides are
+    # narrow re-reads of the memoized checkpoint + a reused census
+    # exchange (persist 5.00 s vs 4.85 s — materialization buys nothing)
+    _, cand = _rare_candidates(adj)
+    # exact integer rounding — the ROWSET itself depends on the rounded
+    # value via the top-K order, so a boundary flip would not just
+    # perturb a column, it would swap membership
+    return (
+        verify_sets(cand, nbrs, "s", "cs")
         .select(
             "s_a",
             "s_b",
-            F.size(F.array_intersect("cs_a", "cs_b")).alias("inter"),
-            "deg_a",
-            "deg_b",
-        )
-    )
-    # exact integer rounding (r14 parity idiom) — the ROWSET itself
-    # depends on the rounded value via the top-K order, so a boundary
-    # flip would not just perturb a column, it would swap membership
-    jacc = round_ratio("inter", "(deg_a + deg_b - inter)", 6)
-    return (
-        scored.select(
-            "s_a",
-            "s_b",
-            F.col("inter").cast("bigint").alias("n_shared"),
-            F.col("deg_a").cast("bigint").alias("deg_a"),
-            F.col("deg_b").cast("bigint").alias("deg_b"),
-            jacc.alias("jaccard6"),
+            F.col("n_common").cast("bigint").alias("n_shared"),
+            F.col("n_a").cast("bigint").alias("deg_a"),
+            F.col("n_b").cast("bigint").alias("deg_b"),
+            rounded_jaccard().alias("jaccard6"),
         )
         .orderBy(F.col("jaccard6").desc(), "s_a", "s_b")
         .limit(JACC_TOP_K)
@@ -1077,8 +1040,9 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # not persisted: both self-join sides are narrow re-reads of the
-    # memoized checkpoint + a reused census exchange (A/B r12: persist
-    # 1.59 s vs 1.28 s without)
+    # memoized checkpoint + a reused census exchange (persist 1.59 s vs
+    # 1.28 s without).  Not block_pairs: the pairs are a weighted
+    # aggregate over every shared customer, not a distinct pair set.
     wadj = adj.join(wdf, "c")
     a = wadj.alias("a")
     b = wadj.alias("b")

@@ -1245,6 +1245,8 @@ def q_doc_similarity_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = grams.filter(
         bloom_member(F.col("g"), bloom_words, TFIDF_BLOOM_M, TFIDF_BLOOM_K)
     )
+    # in-row postings pairs (row_pairs), not functions/setjoin.block_pairs:
+    # one groupBy per gram emits its pairs without a postings self-join
     cand = (
         pruned.groupBy("g")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))

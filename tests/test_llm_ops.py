@@ -23,9 +23,10 @@ from apache_beam_java_firestore_batch_dataflow_spark.functions.hashing import (
 from apache_beam_java_firestore_batch_dataflow_spark.operators.dedup import (
     NUM_HASHES,
     SHINGLE_K,
-    minhash_signatures,
+    minhash_bands,
+    minhash_signatures_from,
     q_dedup_exact,
-    shingles_df,
+    shingle_sets_df,
     simhash_signatures,
 )
 from apache_beam_java_firestore_batch_dataflow_spark.operators import multimodal
@@ -79,10 +80,14 @@ TEXTS = [
 ]
 
 
+def signatures(spark, texts):
+    return minhash_signatures_from(shingle_sets_df(docs_df(spark, texts)))
+
+
 def test_minhash_signature_matches_python_oracle(spark):
     sigs = {
         r["doc_id"]: [r[f"m{i}"] for i in range(NUM_HASHES)]
-        for r in minhash_signatures(docs_df(spark, TEXTS)).collect()
+        for r in signatures(spark, TEXTS).collect()
     }
     for doc_id in (0, 1, 2):
         assert sigs[doc_id] == py_minhash(TEXTS[doc_id]), doc_id
@@ -91,7 +96,7 @@ def test_minhash_signature_matches_python_oracle(spark):
 def test_minhash_near_dup_signatures_agree_mostly(spark):
     sigs = {
         r["doc_id"]: [r[f"m{i}"] for i in range(NUM_HASHES)]
-        for r in minhash_signatures(docs_df(spark, TEXTS)).collect()
+        for r in signatures(spark, TEXTS).collect()
     }
     agree_near = sum(a == b for a, b in zip(sigs[0], sigs[1]))
     agree_far = sum(a == b for a, b in zip(sigs[0], sigs[2]))
@@ -101,11 +106,20 @@ def test_minhash_near_dup_signatures_agree_mostly(spark):
 
 
 def test_shingles_distinct_and_correct(spark):
-    got = {
-        (r.doc_id, r.sh)
-        for r in shingles_df(docs_df(spark, TEXTS[:1])).collect()
-    }
-    assert got == {(0, s) for s in py_shingles(TEXTS[0])}
+    rows = shingle_sets_df(docs_df(spark, TEXTS[:1])).collect()
+    assert [r.doc_id for r in rows] == [0]
+    assert len(rows[0].shs) == len(set(rows[0].shs))
+    assert set(rows[0].shs) == py_shingles(TEXTS[0])
+
+
+def test_minhash_bands_block_exact_duplicates_together(spark):
+    bands = minhash_bands(shingle_sets_df(docs_df(spark, TEXTS)))
+    by_doc: dict[int, set] = {}
+    for r in bands.collect():
+        by_doc.setdefault(r.doc_id, set()).add((r.band_idx, r.band_hash))
+    assert by_doc[0] == by_doc[3]  # exact dup -> every band collides
+    assert len(by_doc[0]) == 8 and not by_doc[0] & by_doc[2]
+    bands.unpersist()
 
 
 def test_simhash_near_dup_hamming(spark):

@@ -3,6 +3,9 @@ must be visible in the physical plan, not just asserted in docstrings."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -210,17 +213,6 @@ def test_quantize_int8_zero_shuffle(spark, sf_dir):
     assert num_shuffles(df) == 0
     txt = plan_text(df)
     assert "BatchEvalPython" not in txt and "ArrowEvalPython" not in txt
-
-
-def test_decontaminate_no_pair_explosion(spark, sf_dir):
-    """The overlap join must stay an equi-join on the gram key — never a
-    nested-loop/cartesian pairing of train x eval documents."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import curation
-    from apache_beam_java_firestore_batch_dataflow_spark.plans.explain import plan_text
-
-    txt = plan_text(curation.QUERIES["q_decontaminate_overlap"](spark, sf_dir))
-    assert "CartesianProduct" not in txt
-    assert "BroadcastNestedLoopJoin" not in txt
 
 
 def test_pii_redact_zero_shuffle(spark, sf_dir):
@@ -462,18 +454,6 @@ def test_string_agg_ordered_broadcasts_dimension(spark, sf_dir):
     assert num_broadcast_joins(df) == 1
 
 
-def test_winnow_pairs_no_pair_explosion(spark, sf_dir):
-    """Pair matching goes through rare-fingerprint postings: every join
-    is keyed (fingerprint or doc id) — no cartesian/nested-loop stage,
-    mirroring the rare-gram Jaccard family's bound."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import dedup
-
-    df = dedup.QUERIES["q_dedup_winnow_pairs"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_funnel_stages_all_keyed_on_user(spark, sf_dir):
     """Every funnel stage is a filtered agg + user_id equi-join — no
     cartesian stage, and the event_type filters reach the scan."""
@@ -583,18 +563,6 @@ def test_tfidf_similarity_no_pair_explosion(spark, sf_dir):
     assert "getbit" in plan, plan
 
 
-def test_phash_no_pair_explosion_and_kernel_hashing(spark, sf_dir):
-    """Image near-dup: hashing is one Arrow kernel over the payload scan
-    (bytes never shuffle); pairing is nibble-block equi-joins only."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import multimodal
-
-    df = multimodal.QUERIES["q_multimodal_phash_pairs"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_pq_trained_same_shape_as_seeded(spark, sf_dir):
     """Training must not change the serving plan: the trained query's
     corpus pass is still one join-free Arrow kernel + one window."""
@@ -651,18 +619,6 @@ def test_semantic_dedup_cell_blocked(spark, sf_dir):
     assert plan.count("InMemoryTableScan") >= 3
     live = plan.split("InMemoryRelation")[0]
     assert "BroadcastNestedLoopJoin" not in live
-
-
-def test_minhash_est_error_no_pair_explosion(spark, sf_dir):
-    """Estimator calibration reuses the banded candidate join; signature
-    agreement folds in-row (zip_with) — no (pair x hash-slot) explode,
-    no cartesian pair space."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import dedup
-
-    df = dedup.QUERIES["q_dedup_minhash_est_error"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_novelty_keyed_join_only(spark, sf_dir):
@@ -856,20 +812,6 @@ def test_scd2_single_window_exchange(spark, sf_dir):
     df = relational.QUERIES["q_scd2_priority_history"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_er_fuzzy_no_cartesian(spark, sf_dir):
-    """Entity resolution: candidates come from the blocked equi-join;
-    levenshtein runs post-join in codegen — no cartesian, no
-    nested-loop, no Python."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import dedup
-
-    df = dedup.QUERIES["q_er_fuzzy_blocked"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "levenshtein" in plan
-    assert "PythonUDF" not in plan
 
 
 def test_gapfill_grid_generated_in_row(spark, sf_dir):
@@ -1252,3 +1194,72 @@ def test_plan_digest_is_stable_across_builds_and_sees_a_filter(spark, sf_dir):
     filtered = df.filter(F.col(df.columns[0]).isNotNull())
     assert plan_digest(filtered).sha != plan_digest(df).sha
     spark.catalog.clearCache()
+
+
+def _keyed_on(column: str):
+    """A per-case check: no join or exchange of the plan is keyed on
+    ``column``."""
+
+    def check(plan: str) -> None:
+        keyed = [
+            line for line in plan.splitlines()
+            if ("Join [" in line or "Exchange hashpartitioning(" in line)
+            and re.search(rf"\b{column}#\d+", line)
+        ]
+        assert not keyed, keyed
+
+    return check
+
+
+def _contains(*needles: str, absent: tuple[str, ...] = ()):
+    def check(plan: str) -> None:
+        for n in needles:
+            assert n in plan, n
+        for n in absent:
+            assert n not in plan, n
+
+    return check
+
+
+# Every blocked pair query: candidates come from keyed equi-joins only.
+# Extras: image hashing is one Arrow kernel over the payload scan; entity
+# resolution runs levenshtein post-join in codegen, not Python; paragraph
+# verification is in-row, never a (pair x shingle) join.
+PAIR_QUERIES = {
+    "q_decontaminate_overlap": None,
+    "q_dedup_winnow_pairs": None,
+    "q_dedup_minhash_est_error": None,
+    "q_multimodal_phash_pairs": _contains("MapInArrow"),
+    "q_er_fuzzy_blocked": _contains("levenshtein", absent=("PythonUDF",)),
+    "q_dedup_paragraph_pairs": _keyed_on("sh"),
+    "q_dedup_minhash_lsh": None,
+    "q_dedup_incremental_ingest": None,
+    "q_dedup_ngram_jaccard": None,
+    "q_dedup_containment_pairs": None,
+    "q_graph_jaccard_neighbors": None,
+}
+
+
+@pytest.mark.parametrize("query", list(PAIR_QUERIES))
+def test_no_pair_explosion(spark, sf_dir, query):
+    """No cartesian or nested-loop pairing anywhere in the plan."""
+    df = __spark_entry__.queries()[query](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    if PAIR_QUERIES[query]:
+        PAIR_QUERIES[query](plan)
+    spark.catalog.clearCache()
+
+
+def test_set_intersection_has_one_owner():
+    """Pair verification by in-row set intersection lives only in
+    functions/setjoin.py."""
+    root = pathlib.Path(__spark_entry__.__file__).parent / (
+        "apache_beam_java_firestore_batch_dataflow_spark"
+    )
+    users = sorted(
+        str(p.relative_to(root)) for p in root.rglob("*.py")
+        if "array_intersect(" in p.read_text()
+    )
+    assert users == ["functions/setjoin.py"], users

@@ -219,20 +219,6 @@ def test_paragraph_pairs_sound_and_nonempty(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_paragraph_pairs_no_pair_explosion(spark, sf_dir):
-    """Candidates must come from the band equi-join only: no
-    cartesian/nested-loop stage anywhere in the chunk + MinHash + verify
-    pipeline (the q_dedup_minhash_lsh plan discipline at paragraph
-    granularity)."""
-    from apache_beam_java_firestore_batch_dataflow_spark.operators import dedup
-    from apache_beam_java_firestore_batch_dataflow_spark.plans.explain import plan_text
-
-    txt = plan_text(dedup.QUERIES["q_dedup_paragraph_pairs"](spark, sf_dir))
-    assert "CartesianProduct" not in txt
-    assert "BroadcastNestedLoopJoin" not in txt
-    spark.catalog.clearCache()
-
-
 # ---------------------------------------------------------------------------
 # q_graph_bfs_khop
 # ---------------------------------------------------------------------------
